@@ -106,6 +106,19 @@ object Bench {
     // triangle-list memo (memo_hits flags the coupling in the artifact)
     "graph_ktruss_updated")
 
+  /** SPARK_GRAFT_RETRIAL_CAP, when set: recorded in the results JSON and
+    * warned to stderr, like SPARK_GRAFT_EXTRA_CONF — a run whose re-trial
+    * set was changed must be distinguishable from a canonical artifact.
+    */
+  val retrialCapOverride: Option[Double] =
+    sys.env.get("SPARK_GRAFT_RETRIAL_CAP").flatMap(_.toDoubleOption)
+
+  /** `"retrial_cap":x` JSON fragment (empty string without an override,
+    * which is the canonical case).
+    */
+  def retrialCapJson(cap: Option[Double]): String =
+    cap.fold("")(c => s""","retrial_cap":$c""")
+
   /** First-trial seconds above which a query is not re-trialed. History:
     * raised 20 → 40 in r5 (`graph_pagerank_conv`'s cold trial carried
     * 3-10 s of JIT warmup and sat just above the old ceiling, so the
@@ -122,9 +135,7 @@ object Bench {
     * SPARK_GRAFT_RETRIAL_CAP) still bounds wall-clock on genuinely huge
     * workloads, which amortize their own warmup.
     */
-  val RetrialCeiling: Double =
-    sys.env.get("SPARK_GRAFT_RETRIAL_CAP").flatMap(_.toDoubleOption)
-      .getOrElse(150.0)
+  val RetrialCeiling: Double = retrialCapOverride.getOrElse(150.0)
 
   /** bench-query → reference results-JSON metric (make_graphs.py charts). */
   private val refMetricOf = Map(
@@ -275,7 +286,7 @@ object Bench {
         m.map { case (k, v) => "\"" + k + "\":" + v }
           .mkString(""","memo_hits":{""", ",", "}")
     }
-    s"""{"metric":"total","value":$total,"unit":"sec","failed":$failed,"trials":$trials$rjson$mjson$extraConfJson$extra,"queries":$qjson,"sf":"$sfDir"}"""
+    s"""{"metric":"total","value":$total,"unit":"sec","failed":$failed,"trials":$trials$rjson$mjson$extraConfJson${retrialCapJson(retrialCapOverride)}$extra,"queries":$qjson,"sf":"$sfDir"}"""
   }
 
   /** Good-host probe calibration in seconds (the LargeTierSweep probe —
@@ -296,6 +307,12 @@ object Bench {
     * become the round's baseline.
     */
   val ProbeAbortFactor = 1.5
+
+  /** Task waves the fixed 32-task host probe runs in at `cpus` cores: a
+    * partial last wave costs a whole wave, so 24–31 cores take two.
+    */
+  def probeWavesAt(cpus: Int): Double =
+    math.max(1.0, math.ceil(32.0 / cpus.max(1)))
 
   /** Per-query session-memo hit counts observed by [[runSuite]] (max across
     * trials) — see the memo-hit note there.
@@ -431,6 +448,10 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpusStr = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = sparkAt(cpusStr)
+    retrialCapOverride.foreach { c =>
+      System.err.println("[bench] WARN: SPARK_GRAFT_RETRIAL_CAP override " +
+        s"active (recorded in results json): $c s")
+    }
     // optional args: run only the named queries (dev iteration)
     val toRun = if (args.nonEmpty) args.toSeq else headline
     // host-health probe (r13, judge item #3): warm once, measure once.
@@ -442,8 +463,7 @@ object Bench {
     // measurement fix: the r14 c8 artifact probed 2.39 s vs the raw
     // 1.74 s gate and was flagged degraded on a window whose per-core
     // throughput was actually ABOVE calibration).
-    val probeWaves =
-      math.max(1.0, 32.0 / cpusStr.toIntOption.getOrElse(32).max(1))
+    val probeWaves = probeWavesAt(cpusStr.toIntOption.getOrElse(32))
     val calib = ProbeCalibration * probeWaves
     graft.tools.LargeTierSweep.probeSec(spark)
     val probe = graft.tools.LargeTierSweep.probeSec(spark)

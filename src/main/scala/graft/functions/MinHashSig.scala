@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
@@ -18,17 +18,20 @@ import org.apache.spark.unsafe.types.UTF8String
   * keeping a running minimum per permutation. Duplicate windows cannot
   * change a minimum, so the set-semantics of shingle-based MinHash hold
   * without materializing a distinct shingle set.
+  *
+  * The windows come from [[ShingleWindows]]: two byte-offset cursors walk
+  * the string once and each window is hashed in place, so a document costs
+  * time linear in its bytes and allocates nothing per window. A truncated
+  * multi-byte tail is clamped at `numBytes`: the signature reads no byte
+  * past the end of the string.
   */
 object MinHashImpl {
   def sig(s: UTF8String, k: Int, n: Int): ArrayData = {
-    val len = s.numChars()
-    val nWin = math.max(len - k + 1, 1)
     val out = Array.fill(n)(Long.MaxValue)
-    var w = 0
-    while (w < nWin) {
-      val win = s.substring(w, math.min(w + k, len))
-      val h1 = XXH64.hashUnsafeBytes(win.getBaseObject, win.getBaseOffset, win.numBytes, 42L)
-      val h2 = XXH64.hashUnsafeBytes(win.getBaseObject, win.getBaseOffset, win.numBytes, 7L)
+    val win = new ShingleWindows(s, k)
+    while (win.next()) {
+      val h1 = win.hash(42L)
+      val h2 = win.hash(7L)
       var i = 0
       var h = h1
       while (i < n) {
@@ -36,7 +39,6 @@ object MinHashImpl {
         h += h2
         i += 1
       }
-      w += 1
     }
     new GenericArrayData(out)
   }

@@ -29,17 +29,15 @@ object Dedup {
   //   P(miss | j=0.8)  ≈ 0.17%  (contract threshold)
   //   P(miss | j=0.93) ≈ 3e-10  (the planted near-dup range)
 
-  /** Distinct k-character shingles of a string column, as array<string>.
-    * The per-row `array_distinct` is quadratic in the ~|text| shingles of a
-    * document, but on the short-document corpora this serves it measures
-    * faster than the explode-then-distinct shuffle (3.5 s vs 5.2 s at
-    * sf0.1) — for book-length documents flip [[shingleRowsOf]] to
-    * explode + distinct.
+  /** Distinct k-character shingles of a string column, as array<string>
+    * in first-occurrence order: every k-char window, or the whole text when
+    * it is shorter than k. One codegen projection per document
+    * ([[graft.functions.ShingleSet]]): a single walk over the text's bytes
+    * locates every window, so the cost is linear in the document's length
+    * however long it is. A null text has no shingle array (null).
     */
   def shingles(text: Column, k: Int = ShingleSize): Column =
-    array_distinct(transform(
-      sequence(lit(1), greatest(length(text) - (k - 1), lit(1))),
-      i => text.substr(i, lit(k))))
+    graft.functions.ShingleSetFn.shingleSet(text, k)
 
   /** Exploded (doc_id, sh) shingle table of a (doc_id, text) corpus,
     * distinct per doc (zero shuffle: distinctness comes from the per-row

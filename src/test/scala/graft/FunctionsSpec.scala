@@ -1,12 +1,57 @@
 package graft
 
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StringType
+import org.apache.spark.unsafe.Platform
+import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.functions.{ArrayDot, MinHashSigFn}
+import graft.functions.{ArrayDot, MinHashImpl, MinHashSigFn, ShingleSetFn, ShingleSetImpl}
 
 class FunctionsSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
+
+  /** Reference MinHash: one `substring` per window (walks from byte 0 each
+    * time, so quadratic), kept here only to pin the kernel's output.
+    */
+  private def substringSig(s: UTF8String, k: Int, n: Int): Seq[Long] = {
+    val len = s.numChars()
+    val out = Array.fill(n)(Long.MaxValue)
+    (0 until math.max(len - k + 1, 1)).foreach { w =>
+      val win = s.substring(w, math.min(w + k, len))
+      val h1 = XXH64.hashUnsafeBytes(win.getBaseObject, win.getBaseOffset, win.numBytes, 42L)
+      val h2 = XXH64.hashUnsafeBytes(win.getBaseObject, win.getBaseOffset, win.numBytes, 7L)
+      (0 until n).foreach(i => out(i) = math.min(out(i), h1 + i * h2))
+    }
+    out.toSeq
+  }
+
+  /** Reference shingle set: the Column formulation the kernel replaced. */
+  private def substrShingles(text: Column, k: Int): Column =
+    array_distinct(transform(
+      sequence(lit(1), greatest(length(text) - (k - 1), lit(1))),
+      i => text.substr(i, lit(k))))
+
+  /** Texts covering the window edge cases plus ~200 generated documents
+    * mixing 1- to 4-byte UTF-8 characters and repeated words.
+    */
+  private lazy val windowTexts: Seq[String] = {
+    val fixed = Seq("the quick brown fox jumps over the lazy dog",
+      "", "a", "abcd", "abcde", "abcdef",
+      "é", "éèêëà", "ñandú ñandú ñandú", "€€€€", "a€b€c€d€", "𝄞", "𝄞😀𝄞😀𝄞😀",
+      "mixed ascii é € 😀 text", "aaaaaaaaaaaa", "abcabcabcabcabc", "ab" * 40)
+    val rng = new scala.util.Random(17)
+    val pool = "abcde fghij".map(_.toString) ++ Seq("é", "ß", "€", "中", "😀", "𝄞")
+    val words = Seq("lorem", "ipsum", "dolor", "ünïcode", "数据", "🙂🙃")
+    val generated = (0 until 200).map { i =>
+      val n = rng.nextInt(120)
+      if (i % 2 == 0) Seq.fill(n)(pool(rng.nextInt(pool.size))).mkString
+      else Seq.fill(n / 4)(words(rng.nextInt(words.size))).mkString(" ")
+    }
+    fixed ++ generated
+  }
 
   test("array_dot matches the HOF formulation and handles nulls") {
     import spark.implicits._
@@ -143,5 +188,57 @@ class FunctionsSpec extends AnyFunSuite {
     expected.foreach { case (id, e) =>
       assert(got(id) == e, s"doc $id: kernel ${got(id)} != explode $e")
     }
+  }
+
+  test("minhash_sig and shingle_set match their substring references on multi-byte text") {
+    import spark.implicits._
+    val df = windowTexts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
+      .toDF("doc_id", "text")
+    Seq(1, 3, 5).foreach { k =>
+      val rows = df.select(col("doc_id"),
+          MinHashSigFn.minhashSig(col("text"), k, 16).as("sig"),
+          ShingleSetFn.shingleSet(col("text"), k).as("sh"),
+          substrShingles(col("text"), k).as("ref_sh"))
+        .collect().map(r => r.getLong(0) -> r).toMap
+      windowTexts.zipWithIndex.foreach { case (t, i) =>
+        val u = UTF8String.fromString(t)
+        val ref = substringSig(u, k, 16)
+        // generated code and the Impl called directly: bit-identical
+        assert(rows(i.toLong).getSeq[Long](1) == ref, s"sig k=$k on '$t'")
+        assert(MinHashImpl.sig(u, k, 16).toLongArray().toSeq == ref,
+          s"direct sig k=$k on '$t'")
+        // same distinct shingles in the same first-occurrence order
+        val refSh = rows(i.toLong).getSeq[String](3)
+        assert(rows(i.toLong).getSeq[String](2) == refSh, s"shingles k=$k on '$t'")
+        assert(ShingleSetImpl.shingles(u, k).toArray[UTF8String](StringType)
+          .map(_.toString).toSeq == refSh,
+          s"direct shingles k=$k on '$t'")
+      }
+    }
+    // first-occurrence order and distinctness, spelled out
+    val rep = Seq((0L, "abcabcab")).toDF("doc_id", "text")
+      .select(ShingleSetFn.shingleSet(col("text"), 3)).head().getSeq[String](0)
+    assert(rep == Seq("abc", "bca", "cab"))
+  }
+
+  test("text kernels read no byte past numBytes on a truncated multi-byte tail") {
+    // 8 bytes "abcdefg" + a lone 0xE2 lead byte (claims a 3-byte char),
+    // followed in memory by bytes that are NOT part of the string
+    def at(tail: Byte): UTF8String = {
+      val mem = "abcdefg".getBytes("UTF-8") ++ Array(0xE2.toByte) ++ Array.fill(8)(tail)
+      UTF8String.fromAddress(mem, Platform.BYTE_ARRAY_OFFSET, 8)
+    }
+    val (a, b) = (at('x'.toByte), at('y'.toByte))
+    // the substring reference copies 2 bytes past the end: it DOES see them
+    assert(substringSig(a, 5, 16) != substringSig(b, 5, 16))
+    assert(MinHashImpl.sig(a, 5, 16).toLongArray().toSeq ==
+      MinHashImpl.sig(b, 5, 16).toLongArray().toSeq)
+    def shingleBytes(s: UTF8String) =
+      ShingleSetImpl.shingles(s, 5).toArray[UTF8String](StringType)
+        .map(_.getBytes.toSeq).toSeq
+    assert(shingleBytes(a) == shingleBytes(b))
+    // the last window is clamped at the end of the string
+    assert(shingleBytes(a).last == "defg".getBytes("UTF-8").toSeq :+ 0xE2.toByte)
+    assert(shingleBytes(a).size == 4)
   }
 }
