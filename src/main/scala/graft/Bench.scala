@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions.{col, lit, pmod, sum, xxhash64}
 
 /** Benchmark main: runs the headline queries at SPARK_GRAFT_SF_DIR and
   * prints one JSON line. Verify-only by design (registered in
@@ -289,7 +290,18 @@ object Bench {
     s"""{"metric":"total","value":$total,"unit":"sec","failed":$failed,"trials":$trials$rjson$mjson$extraConfJson${retrialCapJson(retrialCapOverride)}$extra,"queries":$qjson,"sf":"$sfDir"}"""
   }
 
-  /** Good-host probe calibration in seconds (the LargeTierSweep probe —
+  /** Fixed host-health probe: hash-reduce 2^30 longs across 32 tasks —
+    * pure CPU+scheduler, no disk, ~deterministic work; sensitive to the
+    * same host contention that swings the single-shot queries.
+    */
+  def probeSec(spark: SparkSession): Double = {
+    val t0 = System.nanoTime()
+    spark.range(0L, 1L << 30, 1L, 32)
+      .select(sum(pmod(xxhash64(col("id")), lit(1000000L)))).head()
+    (System.nanoTime() - t0) / 1e9
+  }
+
+  /** Good-host probe calibration in seconds ([[probeSec]] —
     * 2^30 xxhash64 folds over 32 tasks — measured ~1.16 s on the r11/r12
     * healthy windows and recorded in SURVEY §6). Override with
     * SPARK_GRAFT_PROBE_CALIB when re-baselining on different hardware.
@@ -465,8 +477,8 @@ object Bench {
     // throughput was actually ABOVE calibration).
     val probeWaves = probeWavesAt(cpusStr.toIntOption.getOrElse(32))
     val calib = ProbeCalibration * probeWaves
-    graft.tools.LargeTierSweep.probeSec(spark)
-    val probe = graft.tools.LargeTierSweep.probeSec(spark)
+    probeSec(spark)
+    val probe = probeSec(spark)
     val degraded = probe > calib * ProbeAbortFactor
     System.err.println(f"[bench] host probe $probe%.2f s " +
       f"(calibration $calib%.2f s" +
@@ -522,7 +534,7 @@ object Bench {
     // START probe yet two inflated 21-33% MID-RUN — the start sample
     // alone cannot see a window that degrades during the suite); the
     // canonical/degraded decision uses BOTH samples
-    val probeEnd = graft.tools.LargeTierSweep.probeSec(spark)
+    val probeEnd = probeSec(spark)
     val degradedEnd = degraded ||
       probeEnd > calib * ProbeAbortFactor
     System.err.println(f"[bench] host probe at end $probeEnd%.2f s" +

@@ -80,26 +80,15 @@ object RmatTier {
         f"pr $prSec%.1f / update ${rate}%.0f act/s (total $total%.1f)"
   }
 
-  /** Per-workload acceptance bars for SELECTING among same-session runs of
-    * a tier (never asserted): ≤2× the best same-class DISTRIBUTED
-    * comparator published in the reference's results/ for that tier —
-    * giraph at large: build 20.4 s, sv 47.6 s, sssp 29.6 s, update
-    * 280 k act/s (`results/2013.06.26.15.20.00.giraph.large`) — plus the
-    * r7-accepted pr compute-floor receipt (≤450 s, tools/PrLargeAb). The
-    * r8 artifact-selection policy picked the best COMPLETE run by TOTAL,
-    * which committed a cold-build run while its sibling met every bar at
-    * once; bars-met-first (tie-break by total) selects the run a
-    * same-class comparison actually wants.
+  /** The run a multi-run session reports: the median by total (the lower
+    * median for an even count). A best-of-N pick would publish the
+    * luckiest window; the median, with the min/median/max totals in the
+    * run file's session note, reports the spread as well.
     */
-  def barsMet(r: TierRun): Int = r.tier match {
-    case "large" => Seq(r.buildSec <= 40.8, r.svSec <= 95.0,
-      r.ssspSec <= 59.2, r.prSec <= 450.0, r.rate >= 280000.0).count(identity)
-    case _ => 0
+  def medianRun(runs: Seq[TierRun]): TierRun = {
+    require(runs.nonEmpty, "medianRun needs at least one run")
+    runs.sortBy(_.total).apply((runs.size - 1) / 2)
   }
-
-  /** Among same-session complete runs: most bars met, then lowest total. */
-  def selectRun(runs: Seq[TierRun]): TierRun =
-    runs.maxBy(r => (barsMet(r), -r.total))
 
   /** Run the five reference workloads for one tier; returns the per-metric
     * seconds (update as actions/sec) and writes the reference-format run
@@ -108,12 +97,12 @@ object RmatTier {
   def run(spark: SparkSession, tier: String, dataDir: String,
       runJson: Option[String]): Seq[(String, Double)] = {
     val r = runFull(spark, tier, dataDir)
-    runJson.foreach(p => writeRunJson(spark, p, Seq(r), r))
+    runJson.foreach(p => writeRunJson(spark, p, Seq(r)))
     r.metrics
   }
 
   /** One complete tier run, no artifact write (BenchSweep collects several
-    * and writes the [[selectRun]] winner).
+    * and writes the [[medianRun]]).
     */
   def runFull(spark: SparkSession, tier: String,
       dataDir: String): TierRun = {
@@ -195,7 +184,7 @@ object RmatTier {
     // hash-partitioned on the merge key — the relational analog of the
     // reference engines updating their native indexed graph (STINGER's
     // CSR) — so the timed merge exchanges only the action delta
-    // (tools/UpdateLargeAb A/B: 7.5 s vs 14.3 s at SCALE 24).
+    // (SURVEY.md §7 A/B: 7.5 s vs 14.3 s at SCALE 24).
     // TIMED BEFORE pr (r8): pr's ~100 GB-class shuffle spill evicts the
     // page-cache copy of the caches update re-reads — the pinned cause of
     // r7's 190.8 k act/s artifact row when the same session's isolated
@@ -210,7 +199,7 @@ object RmatTier {
     base.unpersist()
     System.err.println(f"[bench] rmat_update rate: $naActual actions / $updSec%.2f s = $rate%.0f act/s")
     // pr: PageRank.converged prefers the CSR + broadcast-vector state
-    // path below PageRank.CsrDenseMaxId (r11 — tools/PrLargeAb at SCALE
+    // path below PageRank.CsrDenseMaxId (r11 — SURVEY.md §6 at SCALE
     // 24, same session: conv-csr 159.2 s / ZERO shuffle bytes vs
     // conv-cheby 640.3 s / 12.3 GB; the per-iteration cost was the
     // 530M-row probe+agg, not shuffle). Its |V|-double broadcast is the
@@ -237,11 +226,12 @@ object RmatTier {
       nv, ne, naActual, warmSec)
   }
 
-  /** Write the reference-format run file for `chosen`, noting every run of
-    * the session and the selection policy (bars-met first, then total).
+  /** Write the reference-format run file for the session's [[medianRun]],
+    * noting every run of the session and the selection rule.
     */
   def writeRunJson(spark: SparkSession, path: String,
-      session: Seq[TierRun], chosen: TierRun): Unit = {
+      session: Seq[TierRun]): Unit = {
+    val chosen = medianRun(session)
     val scale = tiers(chosen.tier)._1
     val (memKb, memHow) = graft.core.Mem.reportKb()
     val pkg = "graft-spark"
@@ -250,17 +240,6 @@ object RmatTier {
       "update" -> chosen.rate).map { case (m, v) =>
       s""""$m": {"name": "$pkg", "time": $v}"""
     }
-    val sessionNote =
-      if (session.size <= 1) "single run"
-      else {
-        val runs = session.zipWithIndex.map { case (r, i) =>
-          val mark = if (r eq chosen) " [CHOSEN]" else ""
-          s"run ${i + 1} = ${r.summary}$mark"
-        }.mkString("; ")
-        s"${session.size} back-to-back runs in ONE session, selected by " +
-          s"most per-workload same-class bars met (${barsMet(chosen)}/5) " +
-          s"then lowest total; $runs"
-      }
     // cross-round / cross-engine comparisons that want a COLD definition
     // of build: first run of the session (coldest JIT) plus that run's
     // untimed warm scan (the disk read a cold build would have paid)
@@ -280,7 +259,7 @@ object RmatTier {
          |    "mem": "$memHow at end of the session, whole JVM (driver+executors: local mode is one process, like the single-node reference engines); covers every run of the session",
          |    "build": "raw edge list from parquet to the weighted symmetrized adjacency cache; input pages warmed untimed before the timer (the reference harness reads the freshly generated graph, so its builds rode warm OS caches too)",
          |    "build_cold": "first run of the session's build + that run's untimed warm-scan seconds (= the disk read a cold build pays); use this for comparisons against rounds before the warm policy (r9+)",
-         |    "session": "$sessionNote"
+         |    "session": "${sessionNote(session)}"
          |  },
          |  "results": {
          |    ${metrics.mkString(",\n    ")}
@@ -292,4 +271,22 @@ object RmatTier {
     java.nio.file.Files.writeString(out, json)
     System.err.println(s"[bench] reference-format run json → $out")
   }
+
+  /** The run file's session note: the selection rule, the min/median/max
+    * total and every run of the session, the reported one marked.
+    */
+  def sessionNote(session: Seq[TierRun]): String =
+    if (session.size <= 1) "single run"
+    else {
+      val chosen = medianRun(session)
+      val totals = session.map(_.total).sorted
+      val runs = session.zipWithIndex.map { case (r, i) =>
+        val mark = if (r eq chosen) " [MEDIAN]" else ""
+        s"run ${i + 1} = ${r.summary}$mark"
+      }.mkString("; ")
+      s"${session.size} back-to-back runs in ONE session, reported run = " +
+        "the median by total (lower median for an even count); total " +
+        f"min ${totals.head}%.1f / median ${chosen.total}%.1f / max " +
+        f"${totals.last}%.1f s; $runs"
+    }
 }

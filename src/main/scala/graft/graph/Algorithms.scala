@@ -135,7 +135,6 @@ object ConnectedComponents {
     val edges = g.cachedUndirected
     val spark = edges.sparkSession
     import spark.implicits._
-    val prof = sys.env.contains("GRAFT_CC_PROF")
     val (blocksOpt, shared) = Csr.cachedOrBuild(g, PageRank.CsrDenseMaxId)
     blocksOpt.map { blocks =>
       val csr = blocks.rdd
@@ -147,7 +146,6 @@ object ConnectedComponents {
       var changed = 1L
       var round = 0
       while (changed > 0 && round < maxIter) {
-        val t0 = System.nanoTime()
         val bcL = sc.broadcast(lbl)
         val ups = csr.map { case (vsA, offA, nbrA) =>
           val l = bcL.value
@@ -190,8 +188,6 @@ object ConnectedComponents {
           }
         }
         round += 1
-        if (prof) System.err.println(
-          f"[cc] csr round $round%-3d ${(System.nanoTime() - t0) / 1e9}%6.2f s changed=$changed")
       }
       if (changed > 0) throw new IllegalStateException(
         s"ConnectedComponents.csr: fixpoint not reached after $maxIter " +
@@ -226,33 +222,25 @@ object ConnectedComponents {
     // being re-sorted by a sort-merge join every heavy round
     def shj(df: DataFrame) =
       if (broadcastVertices) df else df.hint("SHUFFLE_HASH")
-    val prof = sys.env.contains("GRAFT_CC_PROF")
-    def t[A](tag: => String)(f: => A): A = {
-      val t0 = System.nanoTime()
-      val r = f
-      if (prof) System.err.println(
-        f"[cc] $tag ${(System.nanoTime() - t0) / 1e9}%7.2f s")
-      r
-    }
     val edges = g.cachedUndirected
     // round 1 without an edge join: initial labels are the ids themselves,
     // so the first heard-min per vertex is min(src) over its SMALLER
     // neighbors (an uphill label can never improve a vertex whose label
     // starts at its own id — the prefilter halves the scanned volume) —
     // one map-side-combined aggregate over the edge cache
-    var frontier = t("seed")(edges.filter(col("src") < col("dst"))
+    var frontier = edges.filter(col("src") < col("dst"))
       .groupBy(col("dst").as("id"))
       .agg(min(col("src")).as("component"))
-      .localCheckpoint(true))
+      .localCheckpoint(true)
     var nFront = frontier.count()
     // initial label table with the seed improvements already folded in
     // (the loop's invariant: `labels` reflects every frontier it has seen)
-    var labels = t("labels0")(edges.select(col("src").as("id"))
+    var labels = edges.select(col("src").as("id"))
       .distinct()
       .join(frontier.select(col("id").as("fid"), col("component")),
         col("id") === col("fid"), "left")
       .select(col("id"), coalesce(col("component"), col("id")).as("component"))
-      .localCheckpoint(true))
+      .localCheckpoint(true)
     val nv = labels.count()
     // tail once the frontier is a small fraction of |V| AND broadcastable.
     // The tail rounds broadcast the frontier/candidate tables by
@@ -272,7 +260,6 @@ object ConnectedComponents {
     var pending: DataFrame = null
     var i = 1
     while (nFront > 0 && i < maxIter) {
-      if (prof) System.err.println(s"[cc] round $i frontier=$nFront")
       if (nFront > tailT) {
         // HEAVY round: one fused |V|-row update join (least + changed
         // flag), then one pointer jump (hash-to-min style): component ←
@@ -286,24 +273,24 @@ object ConnectedComponents {
           .filter(col("component") < col("dst"))
           .select(col("dst"), col("component"))
           .groupBy(col("dst").as("id")).agg(min(col("component")).as("cand"))
-        val upd = t(s"upd   $i")(labels
+        val upd = labels
           .join(shj(cand), Seq("id"), "left")
           .select(col("id"),
             least(col("component"),
               coalesce(col("cand"), col("component"))).as("component"),
             (coalesce(col("cand"), lit(Long.MaxValue)) <
               col("component")).as("chg"))
-          .localCheckpoint(true))
+          .localCheckpoint(true)
         val look = upd.select(col("id").as("lid"), col("component").as("c2"))
-        val jumped = t(s"jump  $i")(upd
+        val jumped = upd
           .join(shj(look), col("component") === col("lid"))
           .select(col("id"), col("c2").as("component"),
             (col("chg") || col("c2") < col("component")).as("chg"))
-          .localCheckpoint(true))
+          .localCheckpoint(true)
         labels = jumped.select(col("id"), col("component"))
         frontier = jumped.filter(col("chg"))
           .select(col("id"), col("component"))
-        nFront = t(s"count $i")(frontier.count())
+        nFront = frontier.count()
       } else {
         // TAIL round: the |V| tables are only PROBED — the broadcast
         // frontier drives a map-side edge probe, the broadcast candidate
@@ -316,25 +303,25 @@ object ConnectedComponents {
           pending = Seq.empty[(Long, Long)].toDF("id", "component")
             .localCheckpoint(true)
         }
-        val cand = t(s"cand  $i")(edges
+        val cand = edges
           .join(broadcast(frontier), edges("src") === frontier("id"))
           .filter(col("component") < col("dst"))
           .select(col("dst"), col("component"))
           .groupBy(col("dst").as("id")).agg(min(col("component")).as("cand"))
-          .localCheckpoint(true))
+          .localCheckpoint(true)
         // the frontier is ≤ tailT, but its candidate fan-out (distinct
         // neighborhood) need not be — gate the probe-side broadcast on
         // the actual count (free on the fresh checkpoint)
         val candB =
           if (cand.count() <= tailCap) broadcast(cand) else cand
-        val improved = t(s"impr  $i")(labels
+        val improved = labels
           .join(candB, Seq("id"))
           .join(pending.select(col("id"), col("component").as("pend")),
             Seq("id"), "left")
           .filter(col("cand") <
             least(col("component"), coalesce(col("pend"), col("component"))))
           .select(col("id"), col("cand").as("component"))
-          .localCheckpoint(true))
+          .localCheckpoint(true)
         frontier = improved
         pending = pending.union(improved)
           .groupBy(col("id")).agg(min(col("component")).as("component"))
@@ -346,64 +333,19 @@ object ConnectedComponents {
     if (pending != null) {
       // fold the tail overlay into the label table — ONE |V| rewrite for
       // the whole tail phase
-      labels = t("fold")(labels
+      labels = labels
         .join(pending.select(col("id").as("pid"), col("component").as("pc")),
           col("id") === col("pid"), "left")
         .select(col("id"),
           least(col("component"), coalesce(col("pc"), col("component")))
             .as("component"))
-        .localCheckpoint(true))
+        .localCheckpoint(true)
     }
     if (nFront > 0)
       System.err.println(s"[graft] WARN ConnectedComponents: fixpoint not " +
         s"reached after $maxIter rounds — labels may be non-minimal " +
         "(raise maxIter for high-diameter graphs)")
     // edges cache is shared across algorithms (Graph.cachedUndirected) — no unpersist
-    labels
-  }
-
-  /** The dense (non-frontier) formulation — every round joins the FULL
-    * label state against the edges and takes the min over self ∪ heard.
-    * Kept as the equivalence reference for [[run]]: same per-round labels,
-    * same fixpoint (see the object scaladoc for the argument), but pays the
-    * |E|×state join even when almost no labels still change. Tests assert
-    * `classic` ≡ `apply` on planted, path, R-MAT, and TPC-H graphs.
-    */
-  def classic(g: Graph, maxIter: Int = 50,
-      broadcastVertices: Boolean = true): DataFrame = {
-    def bc(df: DataFrame) = if (broadcastVertices) broadcast(df) else df
-    val edges = g.cachedUndirected
-    var labels = edges.select(col("src").as("id"))
-      .distinct()
-      .withColumn("component", col("id"))
-      .localCheckpoint(true)
-    // convergence sentinel: Σ labels is strictly decreasing until fixpoint.
-    // Decimal(38) aggregation — a Long sum can wrap at billion-scale vertex
-    // ids, and two wrapped sums aliasing would declare convergence early.
-    // (Null sum = empty label table — converged trivially.)
-    def labelSum(df: DataFrame): java.math.BigDecimal = {
-      val d = df.agg(sum(col("component").cast("decimal(38,0)"))).head().getDecimal(0)
-      if (d == null) java.math.BigDecimal.ZERO else d
-    }
-    var lastSum = labelSum(labels)
-    var converged = false
-    var i = 0
-    while (!converged && i < maxIter) {
-      val heard = edges.join(bc(labels), edges("src") === labels("id"))
-        .select(col("dst").as("id"), col("component"))
-      val next = labels.select(col("id"), col("component"))
-        .union(heard)
-        .groupBy(col("id")).agg(min(col("component")).as("component"))
-        .localCheckpoint(true)
-      val s = labelSum(next)
-      converged = s.compareTo(lastSum) == 0
-      lastSum = s
-      labels = next
-      i += 1
-    }
-    if (!converged)
-      System.err.println(s"[graft] WARN ConnectedComponents.classic: " +
-        s"fixpoint not reached after $maxIter rounds")
     labels
   }
 
@@ -1006,11 +948,13 @@ object PageRank {
       broadcastVertices: Boolean = true): DataFrame =
     run(g, iterations, tol = 0.0, broadcastVertices)._1
 
-  /** Tolerance-converged variant: stops when the un-propagated residual
-    * mass Σ|e| < tol (the reference converges on epsilon=1e-8 total delta,
-    * App.scala:164). Since r5 this runs the FRONTIER/DELTA formulation
-    * ([[convergedDelta]]) — the dense power iteration survives as
-    * [[convergedDense]], equivalence-tested.
+  /** Tolerance-converged variant: stops when Σ|x_{k+1} − x_k| < tol (the
+    * reference converges on epsilon=1e-8 total delta, App.scala:164).
+    * Dispatches to the driver-vector CSR path ([[convergedCsr]]) when ids
+    * are dense and below [[CsrDenseMaxId]], then to the long-id CSR path
+    * ([[CsrLongPaths.pagerank]]), and otherwise to the Chebyshev join
+    * formulation ([[convergedCheby]]). The dense power iteration survives
+    * as [[convergedDense]], the equivalence reference for all three.
     */
   def converged(g: Graph, tol: Double = 1e-8, maxIter: Int = 100,
       broadcastVertices: Boolean = true): DataFrame =
@@ -1039,17 +983,13 @@ object PageRank {
     * both state paths.
     */
   def convergedCheby(g: Graph, tol: Double = 1e-8, maxIter: Int = 100,
-      broadcastVertices: Boolean = true,
-      ckptEvery: Int = sys.env.get("GRAFT_PR_CKPT_EVERY")
-        .flatMap(_.toIntOption).filter(_ >= 1).getOrElse(1)): DataFrame = {
-    require(ckptEvery >= 1, s"ckptEvery must be >= 1, got $ckptEvery")
+      broadcastVertices: Boolean = true): DataFrame = {
     // the |V|-row update join always hash-joins the message side: on the
     // shuffle path a sort-merge join would re-SORT the state every round,
     // and on the broadcast path at 16M+ vertices the planner's SMJ
     // default would do the same (the messages are far too big to
     // auto-broadcast there; at small |V| SHJ and BHJ are both trivial)
     def shj(df: DataFrame) = df.hint("SHUFFLE_HASH")
-    val prof = sys.env.contains("GRAFT_PR_PROF")
     val edges = g.cachedUndirected
     val degrees = edges.groupBy(col("src").as("id"))
       .agg(count(lit(1)).as("outdeg"))
@@ -1071,15 +1011,7 @@ object PageRank {
     var omega = 1.0
     var delta = Double.MaxValue
     var i = 0
-    // double-buffered state (A/B knob): eager-checkpoint every Nth round;
-    // the lazy intermediates materialize inside the next eager round's one
-    // job, trading (N−1) per-round barriers for N-deep lineage. Superseded
-    // checkpoints drop only after an eager materialization proves no
-    // future reader needs them (a lazy successor still re-reads its
-    // parent's blocks).
-    var pendingDrop = List.empty[DataFrame]
     while (i < maxIter && delta > tol) {
-      val it0 = System.nanoTime()
       omega =
         if (i == 0) 1.0
         else if (i == 1) 1.0 / (1.0 - Damping * Damping / 2.0)
@@ -1094,7 +1026,6 @@ object PageRank {
       // up to 4 full iterations — ~1 minute at the large tier
       val checkDelta = (i + 1) % DeltaEvery == 0 || i + 1 == maxIter ||
         delta <= tol * 1e3
-      val eager = checkDelta || (i + 1) % ckptEvery == 0
       val next = state
         .select(col("id"), col("outdeg"), col("x").as("xp_new"),
           col("xp"))
@@ -1104,22 +1035,15 @@ object PageRank {
               lit(Damping) * coalesce(col("msg"), lit(0.0)) - col("xp")) +
             col("xp")).as("x"),
           col("xp_new").as("xp"))
-        .localCheckpoint(eager = eager)
+        .localCheckpoint(true)
       if (checkDelta) {
         delta = next.agg(sum(abs(col("x") - col("xp")))).head().getDouble(0)
       }
-      // superseded rounds drop only once an EAGER materialization fences
-      // them off; a lazy successor still reads its parent's blocks
-      pendingDrop ::= state
-      if (eager) {
-        pendingDrop.foreach(graft.core.Checkpoints.drop)
-        pendingDrop = Nil
-      }
+      // the eager checkpoint above has materialized, so no reader needs
+      // the superseded round's blocks
+      graft.core.Checkpoints.drop(state)
       state = next
       i += 1
-      if (prof) System.err.println(
-        f"[prc] iter $i%-3d ${(System.nanoTime() - it0) / 1e9}%6.3f s  " +
-          f"omega=$omega%.4f delta<=$delta%.3e")
     }
     if (delta > tol)
       System.err.println(s"[graft] WARN PageRank.cheby: Σ|Δx|=$delta still " +
@@ -1182,7 +1106,6 @@ object PageRank {
     val edges = g.cachedUndirected
     val spark = edges.sparkSession
     import spark.implicits._
-    val prof = sys.env.contains("GRAFT_PR_PROF")
     val degrees = edges.groupBy(col("src").as("id"))
       .agg(count(lit(1)).as("outdeg"))
       .persist(StorageLevel.MEMORY_AND_DISK)
@@ -1218,12 +1141,9 @@ object PageRank {
     // pay it once; gate already passed above, and the bounds the degrees
     // aggregate just computed are threaded through so a fresh build skips
     // its own min/max pass over the edge cache (r11 ADVICE)
-    val t0 = System.nanoTime()
     val (blocksOpt, csrShared) = Csr.cachedOrBuild(g, CsrDenseMaxId,
       knownIdBounds = Some((stats.getLong(1), stats.getLong(2))))
     val csr = blocksOpt.get.rdd
-    if (prof) System.err.println(
-      f"[prx] csr build ${(System.nanoTime() - t0) / 1e9}%6.2f s")
     val teleport = (1.0 - Damping) / nv
     val x = new Array[Double](n)
     val xp = new Array[Double](n)
@@ -1239,7 +1159,6 @@ object PageRank {
     var delta = Double.MaxValue
     var i = 0
     while (i < maxIter && delta > tol) {
-      val it0 = System.nanoTime()
       omega =
         if (i == 0) 1.0
         else if (i == 1) 1.0 / (1.0 - Damping * Damping / 2.0)
@@ -1282,9 +1201,6 @@ object PageRank {
       }
       delta = dsum
       i += 1
-      if (prof) System.err.println(
-        f"[prx] iter $i%-3d ${(System.nanoTime() - it0) / 1e9}%6.3f s  " +
-          f"omega=$omega%.4f delta=$delta%.3e")
     }
     if (delta > tol)
       System.err.println(s"[graft] WARN PageRank.csr: Σ|Δx|=$delta still " +
@@ -1310,142 +1226,11 @@ object PageRank {
   /** The dense synchronous power iteration (pre-r6 `converged`): every
     * iteration joins the FULL edge set and rewrites the FULL rank state,
     * even when almost no rank still moves materially. Kept as the
-    * equivalence reference for [[convergedDelta]].
+    * equivalence reference for [[converged]]'s three paths.
     */
   def convergedDense(g: Graph, tol: Double = 1e-8, maxIter: Int = 100,
       broadcastVertices: Boolean = true): DataFrame =
     run(g, maxIter, tol, broadcastVertices)._1
-
-  /** Frontier/delta PageRank — synchronous residual push (Gauss-Southwell
-    * family: Andersen, Chung & Lang 2006 forward push; GraphLab's
-    * delta-PageRank): maintain the settled rank `r` and the un-propagated
-    * residual `e` per vertex, with r* = (I − dPᵀ)⁻¹·teleport the unique
-    * fixpoint. Init r = 0, e = (1−d)/n. Each round, only vertices whose
-    * |e| exceeds an adaptive threshold θ = [[DeltaThetaFrac]]·Σ|e|/n push:
-    * they fold e into r and send d·e/outdeg to their neighbors' residuals.
-    * Rounds where most mass has settled touch only the frontier's
-    * out-edges — the contribution shuffle and state-update join shrink
-    * with the frontier instead of staying |E| and |V| forever, which is
-    * the entire cost of the dense formulation's late iterations. At the
-    * billion-edge tier (broadcastVertices = false) AQE sees the shrinking
-    * frontier's runtime stats and flips the edge⋈frontier join to a
-    * broadcast probe on its own — the same mechanism the CC tail uses
-    * explicitly.
-    *
-    * Convergence: each round the pushed mass contracts by the damping d
-    * and the un-pushed mass is ≤ n·θ = [[DeltaThetaFrac]]·Σ|e|, so Σ|e|
-    * contracts by ≥ (1 − DeltaThetaFrac)·d + DeltaThetaFrac per round —
-    * geometric, marginally slower than dense's d. The returned ranks fold
-    * the terminal residual in (r + e), which dense's last iteration does
-    * implicitly. Equivalence vs [[convergedDense]] is property-tested to
-    * |Δ| ≤ 1e-6·n-scale on planted, R-MAT, and TPC-H graphs.
-    */
-  def convergedDelta(g: Graph, tol: Double = 1e-8, maxIter: Int = 100,
-      broadcastVertices: Boolean = true): DataFrame =
-    deltaWithTheta(g, sys.env.get("GRAFT_PR_THETA").map(_.toDouble)
-      .getOrElse(DeltaThetaFrac), tol, maxIter, broadcastVertices)
-
-  /** [[convergedDelta]] with the threshold fraction explicit (A/B'd in
-    * `tools/PrDeltaAb`).
-    */
-  def deltaWithTheta(g: Graph, thetaFrac: Double, tol: Double = 1e-8,
-      maxIter: Int = 100, broadcastVertices: Boolean = true): DataFrame = {
-    var frac = thetaFrac
-    def bc(df: DataFrame) = if (broadcastVertices) broadcast(df) else df
-    // on the shuffle-state path a sort-merge join would re-SORT the edge
-    // cache every round — hash-join the (smaller) frontier/message side
-    // instead (the same hint that took the large-tier update merge
-    // 14.3 -> 10.4 s)
-    def shj(df: DataFrame) =
-      if (broadcastVertices) df else df.hint("SHUFFLE_HASH")
-    val prof = sys.env.contains("GRAFT_PR_PROF")
-    val edges = g.cachedUndirected
-    val degrees = edges.groupBy(col("src").as("id"))
-      .agg(count(lit(1)).as("outdeg"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val nv = degrees.count().toDouble
-    if (nv == 0.0) {
-      degrees.unpersist()
-      val spark = edges.sparkSession
-      import spark.implicits._
-      return Seq.empty[(Long, Double)].toDF("id", "pr")
-    }
-    var state = degrees
-      .select(col("id"), col("outdeg"), lit(0.0).as("r"),
-        lit((1.0 - Damping) / nv).as("e"))
-      .localCheckpoint(true)
-    var sumE = 1.0 - Damping
-    // residual-mass contraction per round, re-estimated at each measured
-    // checkpoint; used to extrapolate theta geometrically between
-    // measurements so the scalar Sigma|e| job runs every DeltaEvery
-    // rounds, not every round (the dense path's amortization)
-    var contraction = Damping + frac * (1.0 - Damping)
-    var i = 0
-    while (i < maxIter && sumE > tol) {
-      val it0 = System.nanoTime()
-      val theta = frac * sumE * math.pow(contraction,
-        (i % DeltaEvery).toDouble) / nv
-      val front = state.filter(abs(col("e")) > theta)
-      if (prof) {
-        val nf = front.count()
-        System.err.println(f"[prd] round ${i + 1}%-3d frontier=$nf%,d " +
-          f"theta=$theta%.3e")
-      }
-      // push: only the frontier's out-edges produce messages — the one
-      // shuffle per round is frontier-sized, not |E|-sized
-      val msgs = edges
-        .join(shj(bc(front.select(col("id").as("fid"), col("e").as("fe"),
-            col("outdeg").as("fdeg")))),
-          col("src") === col("fid"))
-        .select(col("dst"),
-          (lit(Damping) * col("fe") / col("fdeg")).as("contrib"))
-        .groupBy(col("dst")).agg(sum(col("contrib")).as("msg"))
-      val pushed = abs(col("e")) > theta
-      val next = state
-        .join(shj(msgs), col("id") === col("dst"), "left")
-        .select(col("id"), col("outdeg"),
-          (col("r") + when(pushed, col("e")).otherwise(lit(0.0))).as("r"),
-          (when(pushed, lit(0.0)).otherwise(col("e")) +
-            coalesce(col("msg"), lit(0.0))).as("e"))
-        .localCheckpoint(true)
-      graft.core.Checkpoints.drop(state)
-      state = next
-      i += 1
-      if (i % DeltaEvery == 0 || i == maxIter) {
-        val measured = state.agg(sum(abs(col("e")))).head().getDouble(0)
-        if (measured > 0 && sumE > 0) {
-          val c = math.pow(measured / sumE, 1.0 / DeltaEvery)
-          if (c > 0 && c < 1) contraction = c
-          else if (measured >= sumE && frac > 1e-6) {
-            // stall: nothing cleared the threshold (e.g. exactly-uniform
-            // residuals where |e| == theta for every vertex) — halve the
-            // fraction so the frontier can never stay empty forever
-            frac /= 2
-            if (prof) System.err.println(f"[prd] stall: frac -> $frac%.4f")
-          }
-        }
-        sumE = measured
-      }
-      if (prof) System.err.println(
-        f"[prd] round $i%-3d ${(System.nanoTime() - it0) / 1e9}%6.3f s  " +
-          f"sumE<=$sumE%.3e")
-    }
-    if (sumE > tol)
-      System.err.println(s"[graft] WARN PageRank.delta: Sigma|e|=$sumE still " +
-        s"above tol=$tol after $maxIter rounds (the reference caps at the " +
-        "same maxIter — result matches its capped semantics)")
-    degrees.unpersist()
-    // fold the terminal residual: r + e is one implicit final iteration
-    state.select(col("id"), round(col("r") + col("e"), 8).as("pr"))
-  }
-
-  /** Fraction of the mean residual below which a vertex sits out a delta
-    * round: θ = DeltaThetaFrac·Σ|e|/n. Un-pushed mass per round is bounded
-    * by DeltaThetaFrac·Σ|e|, keeping the contraction factor within a few
-    * percent of dense's damping while letting settled vertices (the vast
-    * majority of late rounds on skewed graphs) stop producing work.
-    */
-  val DeltaThetaFrac = 0.05
 
   /** One PageRank message round: msg(u) = Σ_{v∈N(u)} rank_v/outdeg_v,
     * returned as (dst, msg).
@@ -1483,13 +1268,6 @@ object PageRank {
     // [[convergedCheby]]'s shj note: SMJ would re-sort the state every
     // round on either state path)
     def shj(df: DataFrame) = df.hint("SHUFFLE_HASH")
-    val prof = sys.env.contains("GRAFT_PR_PROF")
-    val gcBeans = java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
-    def gcMs: Long = {
-      var t = 0L
-      gcBeans.forEach(b => t += b.getCollectionTime)
-      t
-    }
     val edges = g.cachedUndirected
     val degrees = edges.groupBy(col("src").as("id"))
       .agg(count(lit(1)).as("outdeg"))
@@ -1515,8 +1293,6 @@ object PageRank {
     var i = 0
     var delta = Double.MaxValue
     while (i < maxIter && (tol == 0.0 || delta > tol)) {
-      val it0 = System.nanoTime()
-      val gc0 = if (prof) gcMs else 0L
       // broadcast path: zero |E|-row exchange (see [[msgRound]]); shuffle
       // path: probe-side SHJ + map-side-combined contribution aggregate
       val contribs = msgRound(edges, state, "pr", broadcastVertices)
@@ -1539,9 +1315,6 @@ object PageRank {
       cp = next
       state = next.select(col("id"), col("outdeg"), col("pr"))
       i += 1
-      if (prof) System.err.println(
-        f"[pr] iter $i%-3d ${(System.nanoTime() - it0) / 1e9}%6.3f s  " +
-          f"gc+${gcMs - gc0}%4d ms  storage=${edges.sparkSession.sparkContext.getRDDStorageInfo.length}%3d rdds")
     }
     if (tol > 0.0 && delta > tol)
       System.err.println(s"[graft] WARN PageRank: Σ|Δpr|=$delta still above " +
@@ -2016,7 +1789,6 @@ object Coreness {
       maxIter: Int): Option[(DataFrame, Int, Boolean)] = {
     val spark = g.cachedUndirected.sparkSession
     import spark.implicits._
-    val prof = sys.env.contains("GRAFT_CORENESS_PROF")
     val (blocksOpt, shared) = Csr.cachedOrBuild(g, PageRank.CsrDenseMaxId)
     blocksOpt.map { blocks =>
       val csr = blocks.rdd
@@ -2036,7 +1808,6 @@ object Coreness {
       var changed = 1L
       var i = 0
       while (changed > 0 && i < maxIter) {
-        val it0 = System.nanoTime()
         val bcE = sc.broadcast(est)
         val ups = csr.map { case (vsA, offA, nbrA) =>
           val e = bcE.value
@@ -2085,8 +1856,6 @@ object Coreness {
           }
         }
         i += 1
-        if (prof) System.err.println(
-          f"[coreness] csr round $i%-3d ${(System.nanoTime() - it0) / 1e9}%6.2f s  changed=$changed%,d")
       }
       if (changed > 0) throw new IllegalStateException(
         s"Coreness: h-iteration did not converge within $maxIter rounds — " +
@@ -2123,19 +1892,14 @@ object Coreness {
       .agg(count(lit(1)).as("est")).localCheckpoint(true)
     var changed = est.limit(1).count() // 0 on an empty graph
     var i = 0
-    val prof = sys.env.contains("GRAFT_CORENESS_PROF")
     while (changed > 0 && i < maxIter) {
-      val it0 = System.nanoTime()
-      val nxt = hPassDefault(sym, bc(est)).localCheckpoint(eager = false)
+      val nxt = hPass(sym, bc(est)).localCheckpoint(eager = false)
       // the change count materializes the round's lazy checkpoint
       changed = nxt.join(est.select(col("id"), col("est").as("prev")),
           Seq("id"))
         .filter(col("est") =!= col("prev")).count()
       est = nxt
       i += 1
-      if (prof) System.err.println(
-        f"[coreness] round $i%-3d ${(System.nanoTime() - it0) / 1e9}%6.2f s" +
-          f"  changed=$changed%,d")
     }
     if (changed > 0) throw new IllegalStateException(
       s"Coreness: h-iteration did not converge within $maxIter rounds — " +
@@ -2165,19 +1929,10 @@ object Coreness {
     * distinct DEGREE values among neighbors). Hub skew dissolves into the
     * hash aggregation instead of one giant sorted partition run. Shared
     * by the batch iteration and X26's full/scoped drain rounds;
-    * equivalence to [[hPassWindow]] (the reference formulation the DuckDB
-    * oracle mirrors) is spec-asserted per round and at the fixpoint.
+    * equivalence to the row_number window formulation the DuckDB oracle
+    * mirrors ([[unrolledSql]]; a test-scope reference) is spec-asserted
+    * per round and at the fixpoint.
     */
-  /** A/B dispatch seam (r13, r12 verdict item #3: the
-    * `stream_coreness_incremental` 2.0× swing needed attribution on a
-    * clean window): `GRAFT_HPASS=window` flips every batch/drain h-round
-    * to the retired window formulation. Dev-only — the default is always
-    * the counting pass.
-    */
-  def hPassDefault(sym: DataFrame, est: DataFrame): DataFrame =
-    if (sys.env.get("GRAFT_HPASS").contains("window")) hPassWindow(sym, est)
-    else hPass(sym, est)
-
   def hPass(sym: DataFrame, est: DataFrame): DataFrame = {
     val pairs = sym
       .join(est.select(col("id").as("dst"), col("est")), Seq("dst"))
@@ -2198,23 +1953,6 @@ object Coreness {
                 acc.getField("cum") + x.getField("k"))).as("h"))
         },
         acc => acc.getField("h")).as("est"))
-  }
-
-  /** The row_number window formulation of the h-pass — the shape the
-    * DuckDB oracle unrolls ([[unrolledSql]]) and [[hPass]]'s equivalence
-    * reference: h(v) = max over neighbors ranked by est desc of
-    * least(rank, est). Its per-round cost is the \|2E\|-row sort the
-    * counting pass exists to avoid; kept public for the specs.
-    */
-  def hPassWindow(sym: DataFrame, est: DataFrame): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("src")).orderBy(col("est").desc)
-    sym
-      .join(est.select(col("id").as("dst"), col("est")), Seq("dst"))
-      .select(col("src"), col("est"))
-      .withColumn("rn", row_number().over(w))
-      .groupBy(col("src").as("id"))
-      .agg(max(least(col("rn"), col("est").cast("bigint"))).as("est"))
   }
 
   /** DuckDB oracle: `rounds` unrolled h-operator steps (idempotent past
@@ -2321,14 +2059,6 @@ object MaximalIndependentSet {
     var koCount = 0L
     var n = state.count()
     var i = 0
-    val prof = sys.env.contains("GRAFT_MIS_PROF")
-    def t[A](tag: => String)(f: => A): A = {
-      val t0 = System.nanoTime()
-      val r = f
-      if (prof) System.err.println(
-        f"[mis] $tag%-16s ${(System.nanoTime() - t0) / 1e9}%7.2f s")
-      r
-    }
     // partition target for this round's checkpoints: proportional to the
     // undecided count so tiny late rounds run 2-task jobs, not 32
     def parts: Int = math.max(2, math.min(
@@ -2348,33 +2078,33 @@ object MaximalIndependentSet {
         .join(bc(withPri.select(col("id").as("nid"), col("pri").as("npri"))),
           col("src") === col("nid"))
         .groupBy(col("dst")).agg(min(col("npri")).as("minp"))
-      val sel = t(s"sel   $saltPrefix$i")(withPri
+      val sel = withPri
         .join(nbrMin, col("id") === col("dst"), "left")
         .filter(col("minp").isNull || col("pri") < col("minp"))
         .select(col("id"))
-        .coalesce(parts).localCheckpoint(true))
+        .coalesce(parts).localCheckpoint(true)
       misParts ::= sel
       // neighbors of selected vertices — DISJOINT from sel (md5 priorities
       // are distinct, so two adjacent vertices can never both be strict
       // minima of each other), so the state anti-join below needs no
       // cross-dedup between the two removed sets
-      val nbrsD = t(s"nbrs  $saltPrefix$i")(und
+      val nbrsD = und
         .join(bc(sel.select(col("id").as("sid"))),
           col("src") === col("sid"))
         .select(col("dst").as("id")).distinct()
-        .coalesce(parts).localCheckpoint(true))
+        .coalesce(parts).localCheckpoint(true)
       koParts ::= nbrsD
       koCount += nbrsD.count()
-      state = t(s"state $saltPrefix$i")(state
+      state = state
         .join(sel.union(nbrsD), Seq("id"), "left_anti")
         .select(col("id"))
-        .coalesce(parts).localCheckpoint(true))
-      und = t(s"und   $saltPrefix$i")(und
+        .coalesce(parts).localCheckpoint(true)
+      und = und
         .join(bc(state.select(col("id").as("ks"))),
           col("src") === col("ks"), "left_semi")
         .join(bc(state.select(col("id").as("kd"))),
           col("dst") === col("kd"), "left_semi")
-        .coalesce(parts).localCheckpoint(true))
+        .coalesce(parts).localCheckpoint(true)
       n = state.count()
       i += 1
     }
@@ -2467,21 +2197,20 @@ object GraphColoring {
     */
   val OracleColorCap = 64
 
-  /** @param lazyRoundState r10: the round's three derived frames (sel, u,
-    *   undU) are LAZY localCheckpoints materialized together by the
-    *   round's one remaining-count job — 2 jobs/round instead of 5. Only
-    *   `tent` stays eager: it feeds two broadcast probes, and a broadcast
-    *   over an un-materialized lazy checkpoint recomputes the chain once
-    *   per build (the confirmed X24/r8 trigger — the r8 lazy-chain
-    *   rejection tested exactly that shape; this one never broadcasts an
-    *   unmaterialized frame: u is materialized by its own count before
-    *   its three broadcast consumers run). `false` = the pre-r10 shape,
-    *   kept for A/B (tools/ColoringAb).
+  /** Round state (r10): the round's three derived frames (sel, u, undU)
+    * are LAZY localCheckpoints materialized together by the round's one
+    * remaining-count job — 2 jobs/round instead of the eager shape's 5
+    * (A/B receipt: PLANS.md, graph coloring). Only `tent` stays eager: it
+    * feeds two broadcast probes, and a broadcast over an un-materialized
+    * lazy checkpoint recomputes the chain once per build (the confirmed
+    * X24/r8 trigger — the r8 lazy-chain rejection tested exactly that
+    * shape; this one never broadcasts an unmaterialized frame: u is
+    * materialized by its own count before its three broadcast consumers
+    * run).
     */
   def apply(g: Graph, maxIter: Int = 40,
       broadcastVertices: Boolean = true,
-      oracleRounds: Option[Int] = None,
-      lazyRoundState: Boolean = true): DataFrame = {
+      oracleRounds: Option[Int] = None): DataFrame = {
     def bc(df: DataFrame) = if (broadcastVertices) broadcast(df) else df
     val spark = g.edges.sparkSession
     import spark.implicits._
@@ -2515,14 +2244,12 @@ object GraphColoring {
     var colored = Seq.empty[(Long, Long)].toDF("id", "color")
       .localCheckpoint(true)
     var i = 0
-    val prof = sys.env.contains("GRAFT_MIS_PROF")
     def parts: Int = math.max(2, math.min(
       spark.sparkContext.defaultParallelism, (n / 20000L).toInt + 1))
     // round-state checkpoint: lazy ones persist inside the count job
     def ckptRound(df: DataFrame): DataFrame =
-      df.coalesce(parts).localCheckpoint(!lazyRoundState)
+      df.coalesce(parts).localCheckpoint(false)
     while (n > 0 && i < maxIter) {
-      val roundT0 = System.nanoTime()
       // 1. tentative color for EVERY uncolored vertex: mex over its
       // colored neighbors — mex(used) = min(sequence(0, max(used)+1) \u2216
       // used), exact integer set algebra, deterministic, hash-oracle-safe
@@ -2579,10 +2306,7 @@ object GraphColoring {
           col("dst") === col("kd"), "left_semi"))
       // materializes this round's sel and u checkpoints (and, through
       // conf's probe side, the PREVIOUS round's lazy undU) in ONE job
-      val n0 = n
       n = u.count()
-      if (prof) System.err.println(f"[coloring] round $i uncolored=$n0 " +
-        f"-> $n  ${(System.nanoTime() - roundT0) / 1e9}%6.2f s")
       i += 1
     }
     if (n > 0)

@@ -14,7 +14,7 @@ import org.apache.spark.storage.StorageLevel
   * 54.8 s CSR vs ~45 min join). Each kernel is the algorithm-for-algorithm
   * mirror of its Int twin — identical schedules, identical update rules,
   * identical outputs (equivalence-tested on chunk-boundary fixtures and
-  * in the forced-above-gate tier receipt `tools/CsrLongTier`) — with all
+  * in the forced-above-gate SCALE-24 tier run receipted in PLANS.md) — with all
   * driver/broadcast state as [[Chunked]] vectors so nothing indexes past
   * the 2^31 JVM array bound and no broadcast block crosses 2 GiB.
   *
@@ -37,7 +37,6 @@ object CsrLongPaths {
     val edges = g.cachedUndirected
     val spark = edges.sparkSession
     import spark.implicits._
-    val prof = sys.env.contains("GRAFT_CC_PROF")
     val (blocksOpt, shared) = CsrLong.cachedOrBuild(g)
     blocksOpt.map { blocks =>
       val csr = blocks.rdd
@@ -50,7 +49,6 @@ object CsrLongPaths {
       var changed = 1L
       var round = 0
       while (changed > 0 && round < maxIter) {
-        val t0 = System.nanoTime()
         val bcL = sc.broadcast(lbl)
         val ups = csr.map { case (vsA, offA, nbrA) =>
           val l = bcL.value
@@ -104,8 +102,6 @@ object CsrLongPaths {
           }
         }
         round += 1
-        if (prof) System.err.println(
-          f"[cc] csrL round $round%-3d ${(System.nanoTime() - t0) / 1e9}%6.2f s changed=$changed")
       }
       if (changed > 0) throw new IllegalStateException(
         s"ConnectedComponents.csrLong: fixpoint not reached after $maxIter" +
@@ -232,7 +228,6 @@ object CsrLongPaths {
   def coreness(g: Graph, maxIter: Int): Option[(DataFrame, Int, Boolean)] = {
     val spark = g.cachedUndirected.sparkSession
     import spark.implicits._
-    val prof = sys.env.contains("GRAFT_CORENESS_PROF")
     val (blocksOpt, shared) = CsrLong.cachedOrBuild(g)
     blocksOpt.map { blocks =>
       val csr = blocks.rdd
@@ -254,7 +249,6 @@ object CsrLongPaths {
       var changed = 1L
       var i = 0
       while (changed > 0 && i < maxIter) {
-        val it0 = System.nanoTime()
         val bcE = sc.broadcast(est)
         val ups = csr.map { case (vsA, offA, nbrA) =>
           val e = bcE.value
@@ -309,8 +303,6 @@ object CsrLongPaths {
           }
         }
         i += 1
-        if (prof) System.err.println(
-          f"[coreness] csrL round $i%-3d ${(System.nanoTime() - it0) / 1e9}%6.2f s  changed=$changed%,d")
       }
       if (changed > 0) throw new IllegalStateException(
         s"Coreness.csrLong: h-iteration did not converge within $maxIter " +
@@ -342,7 +334,6 @@ object CsrLongPaths {
     val edges = g.cachedUndirected
     val spark = edges.sparkSession
     import spark.implicits._
-    val prof = sys.env.contains("GRAFT_PR_PROF")
     val damping = PageRank.Damping
     val degrees = edges.groupBy(col("src").as("id"))
       .agg(count(lit(1)).as("outdeg"))
@@ -374,12 +365,9 @@ object CsrLongPaths {
           outdeg((ids(k) >>> B).toInt)((ids(k) & M).toInt) = ds(k); k += 1
         }
       }
-    val t0 = System.nanoTime()
     val (blocksOpt, csrShared) = CsrLong.cachedOrBuild(g,
       knownIdBounds = Some((stats.getLong(1), stats.getLong(2))))
     val csr = blocksOpt.get.rdd
-    if (prof) System.err.println(
-      f"[prx] csrL build ${(System.nanoTime() - t0) / 1e9}%6.2f s")
     val teleport = (1.0 - damping) / nv
     val x = Chunked.allocDouble(n)
     val xp = Chunked.allocDouble(n)
@@ -411,7 +399,6 @@ object CsrLongPaths {
     var delta = Double.MaxValue
     var i = 0
     while (i < maxIter && delta > tol) {
-      val it0 = System.nanoTime()
       omega =
         if (i == 0) 1.0
         else if (i == 1) 1.0 / (1.0 - damping * damping / 2.0)
@@ -463,9 +450,6 @@ object CsrLongPaths {
       }
       delta = dsum
       i += 1
-      if (prof) System.err.println(
-        f"[prx] csrL iter $i%-3d ${(System.nanoTime() - it0) / 1e9}%6.3f s  " +
-          f"omega=$omega%.4f delta=$delta%.3e")
     }
     if (delta > tol)
       System.err.println(s"[graft] WARN PageRank.csrLong: Σ|Δx|=$delta " +

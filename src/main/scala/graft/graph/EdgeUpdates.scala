@@ -226,7 +226,7 @@ object EdgeUpdates {
 
   /** [[applyAnnotated]] with the plan choice explicit — tests assert the
     * broadcast-delta path ≡ the full-outer merge. Measured at SCALE 24
-    * (133M-edge base, 1M actions, local[32], tools/UpdateLargeAb):
+    * (133M-edge base, 1M actions, local[32], receipts in SURVEY.md §7):
     * sort-merge 14.3 s, +SHUFFLE_HASH hint 10.4 s, broadcast-delta 37 s
     * (a local exchange is cheap; the delta's two base scans + two 1M-row
     * broadcasts are not), and with the base pre-partitioned on (src, dst)

@@ -207,9 +207,10 @@ object Triangles {
 
   /** @param wedgeThreshold dropped-set size at or below which the peel
     *   finishes with the serial local tail (gated by
-    *   [[LocalTailMaxPairs]]); 50000 chosen by the tools/KtrussAb sweep
-    *   (sf0.1: 5.0-5.8 s vs 6.7-6.9 at 5000 vs 10.1-10.9 never-local;
-    *   ≥200k is jitter-indistinguishable from 50k). 0 disables the tail.
+    *   [[LocalTailMaxPairs]]); 50000 chosen by the r11 threshold sweep
+    *   (PLANS.md, graph_ktruss serial tail; sf0.1: 5.0-5.8 s vs 6.7-6.9
+    *   at 5000 vs 10.1-10.9 never-local; ≥200k is jitter-indistinguishable
+    *   from 50k). 0 disables the tail.
     */
   def kTrussFrom(triangleList: DataFrame, k: Int = 5,
       maxIter: Int = 30, oracleRounds: Option[Int] = None,
@@ -219,24 +220,15 @@ object Triangles {
         struct(col("u2").as("u"), col("v2").as("v")),
         struct(col("u3").as("u"), col("v3").as("v")))).as("e"))
       .select(col("e.u").as("u"), col("e.v").as("v"))
-    val prof = sys.env.contains("GRAFT_KTRUSS_PROF")
-    def timed[T](label: String)(f: => T): T = {
-      val t0 = System.nanoTime()
-      val r = f
-      if (prof) System.err.println(
-        f"[ktruss] $label%-18s ${(System.nanoTime() - t0) / 1e9}%7.2f s")
-      r
-    }
-    var tri = timed("triangle list")(
-      triangleList.localCheckpoint(true))
+    var tri = triangleList.localCheckpoint(true)
     // full support computed ONCE; every later round maintains it by
     // DECREMENT — per-round work scales with the triangles removed that
     // round, not the surviving list (re-aggregating the full list per
     // round tripled the suite cost of this query at sf0.1)
-    var sup = timed("initial support")(pairs(tri)
+    var sup = pairs(tri)
       .groupBy(col("u"), col("v"))
       .agg(org.apache.spark.sql.functions.count(lit(1)).as("support"))
-      .localCheckpoint(true))
+      .localCheckpoint(true)
     var converged = false
     var liveN = -1L
     var i = 0
@@ -246,23 +238,22 @@ object Triangles {
       // materialization per round (the count below is the only action)
       val dropped = sup.filter(col("support") < k - 2)
         .select(col("u"), col("v"))
-      val nDropped = timed(s"  count $i")(dropped.count())
-      if (prof) System.err.println(s"[ktruss] round $i dropped $nDropped")
+      val nDropped = dropped.count()
       if (nDropped == 0) converged = true
       else if (nDropped <= wedgeThreshold && {
           // the live set only shrinks — one count decides the gate
           if (liveN < 0) liveN = sup.count(); liveN <= LocalTailMaxPairs
-        }) timed(s"local tail $i") {
+        }) {
         // LOCAL TAIL (r11, replacing the r9 wedge-probe rounds): once the
         // dropped set is thin AND the live pair set fits one task, the
         // remaining cascade is latency-bound, not throughput-bound — the
         // distributed rounds were paying ~1 s of barrier + scan per round
-        // to remove a few hundred edges (bench prof receipts; the wedge
-        // A/B in tools/KtrussAb measured threshold-insensitive 10.5-13 s
-        // however the tail was probed). So finish the peel SERIALLY in a
-        // single mapPartitions task over the coalesced support table:
-        // hash-map adjacency + the textbook queue cascade, processed
-        // LEVEL-synchronously so the observed round depth (for the
+        // to remove a few hundred edges (receipts: PLANS.md, graph_ktruss
+        // serial tail — every distributed tail strategy A/B'd flat at
+        // 10.5-13 s however the tail was probed). So finish the peel
+        // SERIALLY in a single mapPartitions task over the coalesced
+        // support table: hash-map adjacency + the textbook queue cascade,
+        // processed LEVEL-synchronously so the observed round depth (for the
         // oracleRounds guard) is identical to the distributed schedule's.
         // Exactness: any removal order reaches the unique k-truss, and a
         // dying triangle decrements each surviving edge exactly once
@@ -333,7 +324,7 @@ object Triangles {
         i += acc.value.toInt - 1
         converged = true
       }
-      else timed(s"round $i") {
+      else {
         // dropped can be corpus-sized in the first rounds — size-gate
         // the broadcast on the free checkpoint count (checkpointed
         // frames carry no Catalyst stats; the static planner would
@@ -341,7 +332,7 @@ object Triangles {
         val d = if (nDropped <= 2000000L) broadcast(dropped) else dropped
         // one pass over the list marks triangles losing any edge; the
         // marked rows drive the decrements, the rest are the next list
-        val marked = timed(s"  mark $i")(freshStats(tri
+        val marked = freshStats(tri
           .join(d.select(col("u").as("u1"), col("v").as("v1"),
             lit(1).as("m1")), Seq("u1", "v1"), "left")
           .join(d.select(col("u").as("u2"), col("v").as("v2"),
@@ -356,7 +347,7 @@ object Triangles {
           // chain, next round's surviving tri) are materialized by
           // the NEXT dropped-count job — one fewer barrier per round;
           // nothing broadcasts marked, so the r8 lazy-bc trap can't fire
-          .localCheckpoint(eager = false)))
+          .localCheckpoint(eager = false))
         val dec = pairs(marked.filter(col("m")))
           .groupBy(col("u"), col("v"))
           .agg(org.apache.spark.sql.functions.count(lit(1)).as("dec"))
@@ -372,7 +363,7 @@ object Triangles {
         // and each round joins descendants of the previous round's state
         // — the stats digits compound and the driver's BigInteger stats
         // walk grew to 1-2.4 s/round by the peel tail (the S7 pathology;
-        // receipts in tools/KtrussAb + the bench prof)
+        // receipts: PLANS.md, graph_ktruss serial tail)
         sup = freshStats(sup.filter(col("support") >= k - 2)
           .join(dec, Seq("u", "v"), "left")
           .select(col("u"), col("v"),

@@ -220,7 +220,7 @@ object Bpe {
   // specifies is this kernel: the merge table is BROADCAST once, each
   // word is greedily merged by rank, and per-word work is
   // O(symbols × merges-APPLIED) — independent of table size
-  // (tools/BpeAb receipts the flatness at 10k entries).
+  // (results/bpe_ab.json receipts the flatness at 10k entries).
   // ---------------------------------------------------------------------
 
   /** Train the merge table from the corpus itself: the word-frequency

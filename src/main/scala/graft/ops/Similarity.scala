@@ -67,7 +67,8 @@ object Similarity {
     * (approximate by design).
     *
     * Default operating point: picked off the measured recall/scan curve
-    * ([[graft.tools.ProfileAnn]]) to clear recall@5 ≥ 0.9 on the driver
+    * (recall@5 is published per bench run: `results/bench.sf0.1.json`,
+    * `"recall"`) to clear recall@5 ≥ 0.9 on the driver
     * embeddings. Those embeddings are ISOTROPIC (mean pair cosine ≈ 0,
     * top-5 ≈ 0.29), and on isotropic data any partition index's recall ≈
     * its scanned fraction — so the 0.9 bar forces a wide scan here
@@ -837,11 +838,9 @@ object Similarity {
       q.crossJoin(broadcast(corpus.filter(col("node") === 0L)))
         .select(col("query_id"), col("node"),
           cosine(col("qv"), col("v")).as("c"), lit(false).as("expanded")))
-    val prof = sys.env.contains("GRAFT_S7_PROF")
     var hops = 0
     while (nExp > 0 && hops < maxHops) {
       hops += 1
-      val rt0 = System.nanoTime()
       val toExpand = beam
         .filter(!col("expanded") && col("rn") <= beamWidth)
         .select(col("query_id"), col("node"))
@@ -864,10 +863,6 @@ object Similarity {
       val next = rankAndCkpt(merged)
       beam = next._1
       nExp = next._2
-      if (prof) System.err.println(f"[s7] hop $hops%3d " +
-        f"${(System.nanoTime() - rt0) / 1e9}%6.2f s  " +
-        s"nExp=$nExp beam=${beam.count()} " +
-        s"plan=${beam.queryExecution.analyzed.numberedTreeString.length}ch")
     }
     beam.filter(col("node") =!= col("query_id"))
       .select(col("query_id"), col("node").as("neighbor_id"), col("c"))

@@ -1484,17 +1484,9 @@ object EventStream extends Serializable {
       denseCutoff: Double = 0.05,
       stagedDir: Option[String] = None): DataFrame = {
     def bc(df: DataFrame) = if (broadcastVertices) broadcast(df) else df
-    val prof = sys.env.contains("GRAFT_STREAM_PROF")
-    var tP = System.nanoTime()
-    def lap(name: String): Unit = if (prof) {
-      val t = System.nanoTime()
-      System.err.println(f"[xpr] $name%-22s ${(t - tP) / 1e9}%6.2f s")
-      tP = t
-    }
     val d = graft.graph.PageRank.Damping
     val staging = stagedDir.getOrElse(
       stageByChunks(actions, "action_id", batches))
-    lap("staging")
     // shared initial snapshot: edge checkpoint, symmetrized pair view,
     // degree state, |V| (dense-regime cutoff scalar) — maintained under
     // flips by REBINDING, never by mutating the shared frames
@@ -1544,7 +1536,6 @@ object EventStream extends Serializable {
           .localCheckpoint(eager = k == iterations)
       }
     recomputeAllLevels()
-    lap("init state+levels")
     val stream = spark.readStream.schema(actions.schema)
       .option("maxFilesPerTrigger", "1")
       .parquet(staging)
@@ -1553,7 +1544,6 @@ object EventStream extends Serializable {
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val tBatch0 = System.nanoTime()
-        if (prof) tP = tBatch0
         // ONE edge-state pass: presence flips out of the same merge the
         // other incremental maintainers read. LAZY: the nAff count below
         // is the batch's one early materializing job — it persists the
@@ -1561,7 +1551,6 @@ object EventStream extends Serializable {
         // paying three eager barriers (r8 streaming-floor pass)
         val merged = mergeIngestBatch(edgeState, batch, staging)
           .localCheckpoint(eager = false)
-        lap("  b merge-ckpt")
         edgeState = merged.filter(col("weight") > 0L)
           .select(col("src"), col("dst"), col("weight"))
         // lazy: every use is a narrow scan of the checkpointed merge —
@@ -1592,7 +1581,6 @@ object EventStream extends Serializable {
           .select(explode(when(col("a") === col("b"), array(col("a")))
             .otherwise(array(col("a"), col("b")))).as("id"))
           .distinct().localCheckpoint(eager = false)
-        lap("  b dSet-ckpt")
         val degD = und
           .join(bc(dSet.select(col("id").as("did"))),
             col("src") === col("did"))
@@ -1602,14 +1590,12 @@ object EventStream extends Serializable {
         degState = degState
           .join(dSet, Seq("id"), "left_anti")
           .union(degD).localCheckpoint(eager = false)
-        lap("  b deg-ckpt")
         // regime pick per batch (the CC loop's dense/tail switch): an
         // ingest-sized batch recomputes only A_k = D ∪ N(A_{k-1}) rows
         // folded into per-level overlays; a batch whose change set is
         // already a large fraction of |V| (this demo feed) recomputes all
         // levels outright — the overlay bookkeeping would only add work
         val nAff = dSet.count()
-        lap("  b nAff-count")
         if (nAff == 0) { /* no presence flips: every level stands */ }
         else if (nAff > denseCutoff * nvBase) recomputeAllLevels()
         else {
@@ -1653,12 +1639,10 @@ object EventStream extends Serializable {
           .map(_.select(lit(1L).as("one")))
           .reduce(_ union _).count()
         }
-        lap("  b levels")
         batchSecs.foreach(_ += (System.nanoTime() - tBatch0) / 1e9)
       }
       .start()
     q.awaitTermination()
-    lap("stream run")
     val nv = degState.count().toDouble
     lvlView(iterations).select(col("id"),
       round(col("s") / lit(nv), 8).as("pr"))
@@ -3290,7 +3274,7 @@ object EventStream extends Serializable {
           .select(col("id"), least(col("deg"),
             coalesce(col("core0") + lit(insertsB), col("deg"))).as("est"))
           .localCheckpoint(true)
-        nxt = graft.graph.Coreness.hPassDefault(sym, bc(est))
+        nxt = graft.graph.Coreness.hPass(sym, bc(est))
           .localCheckpoint(eager = false)
         changed = nxt.join(est.select(col("id"), col("est").as("prev")),
             Seq("id"))
@@ -3308,7 +3292,7 @@ object EventStream extends Serializable {
         // dense cascade: the scoped probe would broadcast a corpus-scale
         // frontier — run the plain global pass instead
         fullRounds += 1
-        nxt = graft.graph.Coreness.hPassDefault(sym, bc(est))
+        nxt = graft.graph.Coreness.hPass(sym, bc(est))
           .localCheckpoint(eager = false)
         changed = nxt.join(est.select(col("id"), col("est").as("prev")),
             Seq("id"))
@@ -3325,7 +3309,7 @@ object EventStream extends Serializable {
             "left_semi")
           .select(col("src").as("id"))
           .union(changed).distinct().localCheckpoint(true)
-        val newEst = graft.graph.Coreness.hPassDefault(
+        val newEst = graft.graph.Coreness.hPass(
           sym.join(bc(cand.select(col("id").as("src"))), Seq("src"),
             "left_semi"),
           bc(est)).localCheckpoint(eager = false)
@@ -3356,7 +3340,7 @@ object EventStream extends Serializable {
       var m = misses(cold)
       var cr = 0
       while (m > 0 && cr < r) {
-        cold = graft.graph.Coreness.hPassDefault(sym, bc(cold))
+        cold = graft.graph.Coreness.hPass(sym, bc(cold))
           .localCheckpoint(eager = false)
         m = misses(cold) // materializes the round's lazy checkpoint
         cr += 1

@@ -1,0 +1,72 @@
+package graft
+
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
+
+import graft.graph.Graph
+
+/** Reference formulations the specs check the library's graph paths
+  * against. No query runs them, so they live in test scope.
+  */
+object GraphReferences {
+
+  /** The dense (non-frontier) connected-components formulation — every
+    * round joins the FULL label state against the edges and takes the min
+    * over self ∪ heard. Same per-round labels and the same fixpoint as
+    * `ConnectedComponents.apply` (see its object scaladoc for the
+    * argument), but pays the |E|×state join even when almost no labels
+    * still change.
+    */
+  def classicCc(g: Graph, maxIter: Int = 50,
+      broadcastVertices: Boolean = true): DataFrame = {
+    def bc(df: DataFrame) = if (broadcastVertices) broadcast(df) else df
+    val edges = g.cachedUndirected
+    var labels = edges.select(col("src").as("id"))
+      .distinct()
+      .withColumn("component", col("id"))
+      .localCheckpoint(true)
+    // convergence sentinel: Σ labels is strictly decreasing until fixpoint.
+    // Decimal(38) aggregation — a Long sum can wrap at billion-scale vertex
+    // ids, and two wrapped sums aliasing would declare convergence early.
+    // (Null sum = empty label table — converged trivially.)
+    def labelSum(df: DataFrame): java.math.BigDecimal = {
+      val d = df.agg(sum(col("component").cast("decimal(38,0)"))).head().getDecimal(0)
+      if (d == null) java.math.BigDecimal.ZERO else d
+    }
+    var lastSum = labelSum(labels)
+    var converged = false
+    var i = 0
+    while (!converged && i < maxIter) {
+      val heard = edges.join(bc(labels), edges("src") === labels("id"))
+        .select(col("dst").as("id"), col("component"))
+      val next = labels.select(col("id"), col("component"))
+        .union(heard)
+        .groupBy(col("id")).agg(min(col("component")).as("component"))
+        .localCheckpoint(true)
+      val s = labelSum(next)
+      converged = s.compareTo(lastSum) == 0
+      lastSum = s
+      labels = next
+      i += 1
+    }
+    assert(converged, s"classic CC: fixpoint not reached after $maxIter rounds")
+    labels
+  }
+
+  /** The row_number window formulation of the coreness h-pass — the shape
+    * the DuckDB oracle unrolls (`Coreness.unrolledSql`) and
+    * `Coreness.hPass`'s equivalence reference: h(v) = max over neighbors
+    * ranked by est desc of least(rank, est). Its per-round cost is the
+    * |2E|-row sort the counting pass exists to avoid.
+    */
+  def hPassWindow(sym: DataFrame, est: DataFrame): DataFrame = {
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy(col("src")).orderBy(col("est").desc)
+    sym
+      .join(est.select(col("id").as("dst"), col("est")), Seq("dst"))
+      .select(col("src"), col("est"))
+      .withColumn("rn", row_number().over(w))
+      .groupBy(col("src").as("id"))
+      .agg(max(least(col("rn"), col("est").cast("bigint"))).as("est"))
+  }
+}

@@ -191,7 +191,7 @@ class GraphSpec extends AnyFunSuite {
     val rmat = RMat.graph(spark, RMat.Params(scale = 8))
     Seq(planted, path, rmat, Graph.fromTpch(spark, TestSpark.sfTiny)).foreach { g =>
       val a = ConnectedComponents(g)
-      val b = ConnectedComponents.classic(g)
+      val b = GraphReferences.classicCc(g)
       val j1 = ConnectedComponents.joinLabels(g)
       val j2 = ConnectedComponents.joinLabels(g, broadcastVertices = false)
       assert(a.exceptAll(b).count() == 0 && b.exceptAll(a).count() == 0,
@@ -242,13 +242,13 @@ class GraphSpec extends AnyFunSuite {
     assert(ConnectedComponents.csrLabels(g).isEmpty,
       "CSR gate accepted ids above CsrDenseMaxId")
     val a = ConnectedComponents(g)
-    val b = ConnectedComponents.classic(g)
+    val b = GraphReferences.classicCc(g)
     assert(a.exceptAll(b).count() == 0 && b.exceptAll(a).count() == 0)
     // and on the SAME shape with dense ids, the CSR path must agree too
     val gd = mkGraph((1L, 2L), (2L, 3L), (10L, 10L), (20L, 21L))
     val c = ConnectedComponents.csrLabels(gd)
     assert(c.nonEmpty, "CSR gate rejected dense ids")
-    val d = ConnectedComponents.classic(gd)
+    val d = GraphReferences.classicCc(gd)
     assert(c.get.exceptAll(d).count() == 0 && d.exceptAll(c.get).count() == 0)
   }
 
@@ -410,9 +410,10 @@ class GraphSpec extends AnyFunSuite {
       "fromRawEdges symmetrized cache diverged")
   }
 
-  test("delta pagerank equals the dense converged formulation") {
-    // the frontier/delta push must land on the same fixpoint the dense
-    // power iteration reaches, on every graph shape and both state paths
+  test("converged pagerank paths equal the dense formulation") {
+    // the Chebyshev and CSR paths `converged` dispatches to must land on
+    // the same fixpoint the dense power iteration reaches, on every graph
+    // shape and both state paths
     val planted = mkGraph((1L, 2L), (2L, 3L), (10L, 11L), (3L, 1L))
     val rmat = RMat.graph(spark, RMat.Params(scale = 8))
     Seq(planted, rmat, Graph.fromTpch(spark, TestSpark.sfTiny)).foreach { g =>
@@ -420,7 +421,6 @@ class GraphSpec extends AnyFunSuite {
         val b = PageRank.convergedDense(g, broadcastVertices = bcast)
           .withColumnRenamed("pr", "prb").localCheckpoint(true)
         Seq(
-          "delta" -> PageRank.convergedDelta(g, broadcastVertices = bcast),
           "cheby" -> PageRank.convergedCheby(g, broadcastVertices = bcast),
           "csr" -> PageRank.convergedCsr(g)
             .getOrElse(fail("csr path ineligible on a small-id test graph"))
@@ -435,6 +435,22 @@ class GraphSpec extends AnyFunSuite {
             s"$name vs dense diverged: maxDiff=$maxDiff bcast=$bcast")
         }
       }
+    }
+  }
+
+  test("chebyshev pagerank drops every superseded round checkpoint") {
+    // each round checkpoints eagerly and drops its predecessor, so the
+    // whole run leaves only the returned state persisted
+    val g = RMat.graph(spark, RMat.Params(scale = 8))
+    g.cachedUndirected.count()
+    val sc = spark.sparkContext
+    Seq(true, false).foreach { bcast =>
+      val before = sc.getPersistentRDDs.size
+      val pr = PageRank.convergedCheby(g, broadcastVertices = bcast)
+      assert(pr.count() > 0)
+      val grown = sc.getPersistentRDDs.size - before
+      assert(grown <= 1,
+        s"convergedCheby left $grown persisted RDDs (bcast=$bcast)")
     }
   }
 
@@ -794,7 +810,7 @@ class GraphSpec extends AnyFunSuite {
     var moved = 1L
     while (moved > 0 && rounds < 100) {
       val a = Coreness.hPass(sym, est).localCheckpoint(true)
-      val b = Coreness.hPassWindow(sym, est)
+      val b = GraphReferences.hPassWindow(sym, est)
       assert(a.exceptAll(b).count() == 0 && b.exceptAll(a).count() == 0,
         s"counting h-pass diverged from the window h-pass at round $rounds")
       moved = a.join(est.select(col("id"), col("est").as("prev")), Seq("id"))

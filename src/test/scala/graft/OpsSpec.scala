@@ -9,6 +9,12 @@ class OpsSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   val sf = TestSpark.sfTiny
 
+  /** Inert BPE padding: '#' never occurs in the corpus, so '#i' symbols
+    * are never built and the padded pairs can never fire.
+    */
+  def padMerges(merges: Seq[(String, String)], n: Int): Seq[(String, String)] =
+    merges ++ (merges.size until n).map(i => (s"#$i", s"#$i"))
+
   test("dedup_exact groups identical content") {
     val out = Dedup.exact(spark, sf)
     val nDocs = graft.core.Tables.documents(spark, sf).count()
@@ -1192,8 +1198,8 @@ class OpsSpec extends AnyFunSuite {
     System.err.println(f"[test] semdedup recall vs exact: $recall%.3f " +
       s"(${sem.size}/${exact.size} pairs)")
     // floor raised 0.8 → 0.9 in r6 (judge item #8); the r5 operating-point
-    // sweep delivers well above it (ProfileSemDedup at sf0.1: nc=16/na=4
-    // recall 0.978; na=2 was 0.617)
+    // sweep delivers well above it (SURVEY.md §7, SemDeDup operating
+    // point at sf0.1: nc=16/na=4 recall 0.978; na=2 was 0.617)
     assert(recall >= 0.9, f"semantic recall $recall%.3f below floor")
   }
 
@@ -1505,7 +1511,7 @@ class OpsSpec extends AnyFunSuite {
     // a padded 10k-entry table (inert pairs — '#' never occurs in the
     // corpus) must not change a single count: the kernel only probes
     // pairs PRESENT in a word, never scans the table
-    val padded = graft.tools.BpeAb.pad(Bpe.PinnedMergesFull, 10240)
+    val padded = padMerges(Bpe.PinnedMergesFull, 10240)
     val base = Bpe.tokenCountsKernel(docs).select("doc_id", "n_tokens")
     val pad = Bpe.tokenCountsKernel(docs, padded)
       .select("doc_id", "n_tokens")

@@ -12,6 +12,31 @@ import graft.ops.ResultsAnalytics
 class RmatTierSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
+  /** A synthetic run whose total is `total` (all of it in build). */
+  def runOf(total: Double): RmatTier.TierRun =
+    RmatTier.TierRun("large", total, 0.0, 0.0, 0.0, 0.0, 1.0, 1L, 1L, 1L)
+
+  test("tier artifacts report the median run by total, not the best") {
+    val one = Seq(runOf(7.0))
+    assert(RmatTier.medianRun(one) eq one.head)
+    assert(RmatTier.sessionNote(one) == "single run")
+
+    val three = Seq(runOf(300.0), runOf(100.0), runOf(200.0))
+    assert(RmatTier.medianRun(three) eq three(2))
+    val note3 = RmatTier.sessionNote(three)
+    assert(note3.contains("median by total"))
+    assert(note3.contains("min 100.0 / median 200.0 / max 300.0 s"))
+    assert(note3.contains("run 3 = build 200.0") &&
+      note3.indexOf("[MEDIAN]") > note3.indexOf("run 3 ="))
+    assert(note3.split("\\[MEDIAN\\]", -1).length == 2)
+
+    // even count: the lower of the two middle runs
+    val four = Seq(runOf(40.0), runOf(10.0), runOf(30.0), runOf(20.0))
+    assert(RmatTier.medianRun(four) eq four(3))
+    assert(RmatTier.sessionNote(four)
+      .contains("min 10.0 / median 20.0 / max 40.0 s"))
+  }
+
   test("tiny R-MAT tier: five workloads run and chart next to the reference") {
     val tmp = java.nio.file.Files.createTempDirectory("rmat-tier").toString
     val runFile = s"$tmp/run.graft.tiny"

@@ -2,7 +2,7 @@
 # Run a graft main class directly on the compiled classes + Spark jars,
 # bypassing sbt (no target-dir lock, so long benchmarks don't block
 # compilation). Compile first: sbt -batch compile.
-# Usage: SPARK_DRIVER_MEM=64g tools/run_main.sh graft.tools.CcLargeAb 24 frontier
+# Usage: tools/run_main.sh graft.tools.UpdateRateSweep
 set -euo pipefail
 cd "$(dirname "$0")/.."
 ADD_OPENS=""
