@@ -199,7 +199,7 @@ object RmatTier {
     base.unpersist()
     System.err.println(f"[bench] rmat_update rate: $naActual actions / $updSec%.2f s = $rate%.0f act/s")
     // pr: PageRank.converged prefers the CSR + broadcast-vector state
-    // path below PageRank.CsrDenseMaxId (r11 — SURVEY.md §6 at SCALE
+    // path below Csr.MaxVertices vertices (r11 — SURVEY.md §6 at SCALE
     // 24, same session: conv-csr 159.2 s / ZERO shuffle bytes vs
     // conv-cheby 640.3 s / 12.3 GB; the per-iteration cost was the
     // 530M-row probe+agg, not shuffle). Its |V|-double broadcast is the

@@ -104,7 +104,6 @@ object ConnectedComponents {
   private def run(g: Graph, maxIter: Int,
       broadcastVertices: Boolean): DataFrame =
     csrLabels(g, maxIter)
-      .orElse(CsrLongPaths.labels(g, maxIter))
       .getOrElse(joinLabels(g, maxIter, broadcastVertices))
 
   /** Min-label CC over the shared per-partition CSR (graph/Csr.scala) with
@@ -112,33 +111,31 @@ object ConnectedComponents {
     * compression — the r11 sv twin of PageRank.convergedCsr, and the same
     * scale contract: the |E|-row adjacency never leaves the executors;
     * each round broadcasts |V| ints, runs one 32-task min-over-neighbors
-    * pass, collects only the CHANGED (id, label) chunks, then compresses
-    * label chains driver-side (labels are vertex ids, so lbl[v] ≤ v always
-    * and chains chase strictly downhill — one O(|V| α) pass spreads mins
-    * exponentially, the hash-to-min jump without its |V|-row self-join).
+    * pass, collects only the CHANGED (slot, label) chunks, then compresses
+    * label chains driver-side (labels are vertex slots, so lbl[v] ≤ v
+    * always and chains chase strictly downhill — one O(|V| α) pass spreads
+    * mins exponentially, the hash-to-min jump without its |V|-row
+    * self-join).
     *
     * Exactness: a round with zero improvements means lbl[v] ≤ lbl[u]
     * across every edge in BOTH orientations (the cache is symmetrized), so
-    * labels are constant per component; a label is always a member id, and
-    * the constant is ≤ every member id, hence THE min member id — the
+    * labels are constant per component; a label is always a member slot,
+    * and the constant is ≤ every member slot, hence THE min member slot —
+    * whose id is the min member id (slot order is id order), the
     * identical labeling the join path converges to (equivalence-tested on
-    * every graph-shape fixture). Holes in the dense id space keep their
-    * self-label and are never emitted (output iterates the CSR's src
-    * lists, which are partition-unique under the src hash partitioning).
+    * every graph-shape fixture and under offset and hashed id maps).
     *
-    * None (→ join path) when ids are negative/sparse-hashed/absent, above
-    * [[PageRank.CsrDenseMaxId]], or the graph is empty — the dedup pair
-    * graphs (xxhash64 ids) and billion-vertex regime always take the join
-    * formulation, exactly as pr's gate works.
+    * None (→ join path) when the graph is empty or has
+    * [[Csr.MaxVertices]] or more vertices.
     */
   def csrLabels(g: Graph, maxIter: Int = 50): Option[DataFrame] = {
     val edges = g.cachedUndirected
     val spark = edges.sparkSession
     import spark.implicits._
-    val (blocksOpt, shared) = Csr.cachedOrBuild(g, PageRank.CsrDenseMaxId)
+    val (blocksOpt, shared) = Csr.cachedOrBuild(g)
     blocksOpt.map { blocks =>
       val csr = blocks.rdd
-      val n = blocks.nSlots
+      val n = blocks.ids.length
       val sc = spark.sparkContext
       val lbl = new Array[Int](n)
       var v = 0
@@ -195,11 +192,11 @@ object ConnectedComponents {
           "memoized into the label cache; r11 ADVICE — the coreness " +
           "contract). Raise maxIter; the driver-side path compression " +
           "makes >50 rounds unreachable on any real graph.")
-      val bcOut = sc.broadcast(lbl)
+      val bcOut = sc.broadcast((blocks.ids, lbl))
       val out = csr.mapPartitions { it =>
-        val l = bcOut.value
+        val (ids, l) = bcOut.value
         it.flatMap { case (vsA, _, _) =>
-          vsA.iterator.map(v0 => (v0.toLong, l(v0).toLong))
+          vsA.iterator.map(v0 => (ids(v0), ids(l(v0))))
         }
       }.toDF("id", "component").localCheckpoint(true)
       bcOut.destroy()
@@ -209,10 +206,10 @@ object ConnectedComponents {
   }
 
   /** The frontier min-label + pointer-jump join formulation — the
-    * distributed default above [[PageRank.CsrDenseMaxId]] (billion-vertex
-    * regime, hashed/sparse ids) and the equivalence reference for
+    * distributed default at [[Csr.MaxVertices]] vertices and above
+    * (billion-vertex regime) and the equivalence reference for
     * [[csrLabels]] below it. Public so the specs exercise it directly on
-    * dense-id fixtures where `apply` dispatches to the CSR path.
+    * fixtures where `apply` dispatches to the CSR path.
     */
   def joinLabels(g: Graph, maxIter: Int = 50,
       broadcastVertices: Boolean = true): DataFrame = {
@@ -474,19 +471,18 @@ object ShortestPaths {
   private def run(g: Graph, edges: DataFrame, source: Long, maxIter: Int,
       broadcastState: Boolean): DataFrame =
     csrBfs(g, source, maxIter)
-      .orElse(CsrLongPaths.bfs(g, source, maxIter))
       .getOrElse(runJoin(g, edges, source, maxIter, broadcastState))
 
   /** BFS over the shared per-partition CSR (graph/Csr.scala) — the r11
     * sssp/diameter twin of ConnectedComponents.csrLabels, with an even
     * lighter per-round exchange: executors need only a VISITED bitmap
     * (|V|/8 bytes — 1.8 MB at SCALE 24, not the |V|-int state vector) plus
-    * the frontier ids; each partition walks just its frontier vertices'
+    * the frontier slots; each partition walks just its frontier vertices'
     * neighbor lists (src rows are partition-unique and sorted, so a
     * binary search finds each frontier vertex's block) and returns a
     * discovery BITMAP, which the driver ORs into distances and the next
-    * frontier. Per-round driver traffic is bitmap-bounded (~60 MB at the
-    * 2^25 gate ceiling) regardless of how hub-heavy the frontier is; total
+    * frontier. Per-round driver traffic is bitmap-bounded (|V|/8 bytes
+    * per partition) regardless of how hub-heavy the frontier is; total
     * executor work telescopes to Σ deg(reached) = O(|E|) over the whole
     * BFS — the textbook level-synchronous cost, with zero joins, zero
     * aggregates, zero shuffle.
@@ -495,29 +491,28 @@ object ShortestPaths {
     * frontier vertex lists it and no earlier round visited it — the same
     * level sets the join path's anti-join produces; output rows cover
     * exactly the reached vertices (emitted from the partition-unique src
-    * lists). None (→ join path) under the [[PageRank.CsrDenseMaxId]] gate
-    * like the other broadcast-vector paths.
+    * lists). None (→ join path) when the source has no edge (the join
+    * path's seed-only answer needs no adjacency) and under the
+    * [[Csr.MaxVertices]] gate like the other broadcast-vector paths.
     */
   def csrBfs(g: Graph, source: Long, maxIter: Int): Option[DataFrame] = {
     val spark = g.cachedUndirected.sparkSession
     import spark.implicits._
-    if (source < 0L || source >= PageRank.CsrDenseMaxId) return None
-    val (blocksOpt, shared) = Csr.cachedOrBuild(g, PageRank.CsrDenseMaxId)
-    // a source id beyond the edge cache's max slot (edgeless/new vertex)
-    // takes the join path, whose seed-only answer needs no adjacency
-    if (blocksOpt.exists(source >= _.nSlots)) {
+    val (blocksOpt, shared) = Csr.cachedOrBuild(g)
+    val src =
+      blocksOpt.fold(-1)(b => java.util.Arrays.binarySearch(b.ids, source))
+    if (src < 0) {
       if (!shared) blocksOpt.foreach(_.rdd.unpersist(blocking = false))
       return None
     }
     blocksOpt.map { blocks =>
       val csr = blocks.rdd
-      val n = blocks.nSlots
+      val n = blocks.ids.length
       val sc = spark.sparkContext
       val words = (n + 63) >> 6
       val visited = new Array[Long](words)
       val dist = new Array[Int](n)
       java.util.Arrays.fill(dist, -1)
-      val src = source.toInt
       dist(src) = 0
       visited(src >> 6) |= 1L << (src & 63)
       var frontier = Array(src)
@@ -575,12 +570,12 @@ object ShortestPaths {
       // the seed row ships separately: the symmetrized cache lists the
       // source as a src iff it has an edge, but the join path's seed row
       // exists even for an edgeless source — emission must match exactly
-      val bcD = sc.broadcast(dist)
+      val bcD = sc.broadcast((blocks.ids, dist))
       val out = csr.mapPartitions { it =>
-        val ds = bcD.value
+        val (ids, ds) = bcD.value
         it.flatMap { case (vsA, _, _) =>
           vsA.iterator.filter(v0 => v0 != src && ds(v0) >= 0)
-            .map(v0 => (v0.toLong, ds(v0).toLong))
+            .map(v0 => (ids(v0), ds(v0).toLong))
         }
       }.toDF("id", "dist")
         .union(Seq((source, 0L)).toDF("id", "dist"))
@@ -591,9 +586,10 @@ object ShortestPaths {
     }
   }
 
-  /** The frontier join BFS — the distributed default above the CSR gate
-    * and [[csrBfs]]'s equivalence reference (public for the specs, which
-    * must reach it on dense-id fixtures where `apply` dispatches to CSR).
+  /** The frontier join BFS — the distributed default above the
+    * [[Csr.MaxVertices]] gate and [[csrBfs]]'s equivalence reference
+    * (public for the specs, which must reach it on fixtures where `apply`
+    * dispatches to CSR).
     */
   def joinDistances(g: Graph, source: Long, maxIter: Int = 64,
       broadcastState: Boolean = true): DataFrame =
@@ -950,16 +946,14 @@ object PageRank {
 
   /** Tolerance-converged variant: stops when Σ|x_{k+1} − x_k| < tol (the
     * reference converges on epsilon=1e-8 total delta, App.scala:164).
-    * Dispatches to the driver-vector CSR path ([[convergedCsr]]) when ids
-    * are dense and below [[CsrDenseMaxId]], then to the long-id CSR path
-    * ([[CsrLongPaths.pagerank]]), and otherwise to the Chebyshev join
+    * Dispatches to the driver-vector CSR path ([[convergedCsr]]) below
+    * the [[Csr.MaxVertices]] gate and otherwise to the Chebyshev join
     * formulation ([[convergedCheby]]). The dense power iteration survives
-    * as [[convergedDense]], the equivalence reference for all three.
+    * as [[convergedDense]], the equivalence reference for both.
     */
   def converged(g: Graph, tol: Double = 1e-8, maxIter: Int = 100,
       broadcastVertices: Boolean = true): DataFrame =
     convergedCsr(g, tol, maxIter)
-      .orElse(CsrLongPaths.pagerank(g, tol, maxIter))
       .getOrElse(convergedCheby(g, tol, maxIter, broadcastVertices))
 
   /** Chebyshev-accelerated converged PageRank (Golub & Varga 1961
@@ -1052,16 +1046,6 @@ object PageRank {
     state.select(col("id"), round(col("x"), 8).as("pr"))
   }
 
-  /** Vertex-id ceiling for [[convergedCsr]]'s dense rank vector: ids must
-    * index a double array, so the path needs maxId+1 slots (2^25 slots =
-    * 268 MB per vector — the same memory class as the bcswap path's
-    * per-round |V|-row BroadcastExchange, which RmatTier already gates at
-    * 32M vertices on a ≥48 GB heap). Above the ceiling `converged` falls
-    * back to the equivalence-tested join formulations, the same switch a
-    * billion-vertex cluster run flips.
-    */
-  val CsrDenseMaxId: Long = 1L << 25
-
   /** Chebyshev PageRank over a per-partition CSR with the rank state as a
     * broadcast vector — the compute-floor lever for the large R-MAT tier
     * (r7–r10 receipts: per-iteration cost there is the 530M-row
@@ -1089,71 +1073,35 @@ object PageRank {
     * minus the Row overhead. The |E|-row adjacency never leaves the
     * executors (that is the 100 TB-scale invariant); the |V|-vector is
     * the broadcastable-state assumption both paths share, and the
-    * RmatTier-style gate ([[CsrDenseMaxId]]) plus the join-path fallback
-    * keep the billion-vertex story identical to bcswap's. RDD
+    * [[Csr.MaxVertices]] gate plus the join-path fallback keep the
+    * billion-vertex story identical to bcswap's. RDD
     * mapPartitions is justified here the same way the multimodal decoders
     * are: no Catalyst expression can index a broadcast primitive vector,
     * and the kernel is genuinely per-partition imperative.
     *
-    * Returns None when ids are negative or above [[CsrDenseMaxId]]
-    * (caller falls back); arithmetic is msgRound's exactly (sum of
-    * x/outdeg over in-neighbors), with only accumulation order differing
-    * — ulp-level noise under the 8 dp output rounding, equivalence-tested
-    * against [[convergedDense]] like the other state paths.
+    * Returns None when the graph is empty or at the [[Csr.MaxVertices]]
+    * gate (caller falls back); arithmetic is msgRound's exactly (sum of
+    * x/outdeg over in-neighbors, outdeg = the blocks' degree), with only
+    * accumulation order differing — ulp-level noise under the 8 dp output
+    * rounding, equivalence-tested against [[convergedDense]] like the
+    * other state paths. Slot order is id order, so the per-vertex
+    * accumulation order does not depend on the id map.
     */
   def convergedCsr(g: Graph, tol: Double = 1e-8,
       maxIter: Int = 100): Option[DataFrame] = {
-    val edges = g.cachedUndirected
-    val spark = edges.sparkSession
+    val spark = g.cachedUndirected.sparkSession
     import spark.implicits._
-    val degrees = edges.groupBy(col("src").as("id"))
-      .agg(count(lit(1)).as("outdeg"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val stats = degrees
-      .agg(count(lit(1)), min(col("id")), max(col("id"))).head()
-    val nvL = stats.getLong(0)
-    if (nvL == 0L) {
-      degrees.unpersist()
-      return Some(Seq.empty[(Long, Double)].toDF("id", "pr"))
-    }
-    if (stats.getLong(1) < 0L || stats.getLong(2) >= CsrDenseMaxId) {
-      degrees.unpersist()
-      return None
-    }
-    val n = (stats.getLong(2) + 1).toInt
-    val nv = nvL.toDouble
+    val (blocksOpt, csrShared) = Csr.cachedOrBuild(g)
+    if (blocksOpt.isEmpty) return None
+    val blocks = blocksOpt.get
+    val csr = blocks.rdd
+    val outdeg = blocks.degree
+    val n = blocks.ids.length
+    val nv = n.toDouble
     val sc = spark.sparkContext
-    // one-time |V|-row pull of (id, outdeg), chunked as primitive arrays
-    // per partition (no 16.8M-Row transient)
-    val outdeg = new Array[Int](n)
-    degrees.select(col("id").cast("int"), col("outdeg").cast("int"))
-      .as[(Int, Int)].rdd.mapPartitions { it =>
-        val ids = new scala.collection.mutable.ArrayBuilder.ofInt
-        val ds = new scala.collection.mutable.ArrayBuilder.ofInt
-        it.foreach { case (i, d) => ids += i; ds += d }
-        Iterator((ids.result(), ds.result()))
-      }.collect().foreach { case (ids, ds) =>
-        var k = 0
-        while (k < ids.length) { outdeg(ids(k)) = ds(k); k += 1 }
-      }
-    // zero-exchange CSR build, session-shared with the other
-    // broadcast-vector paths (graph/Csr.scala) — the tier run's sv/sssp/pr
-    // pay it once; gate already passed above, and the bounds the degrees
-    // aggregate just computed are threaded through so a fresh build skips
-    // its own min/max pass over the edge cache (r11 ADVICE)
-    val (blocksOpt, csrShared) = Csr.cachedOrBuild(g, CsrDenseMaxId,
-      knownIdBounds = Some((stats.getLong(1), stats.getLong(2))))
-    val csr = blocksOpt.get.rdd
     val teleport = (1.0 - Damping) / nv
-    val x = new Array[Double](n)
-    val xp = new Array[Double](n)
-    locally {
-      var v = 0
-      while (v < n) {
-        if (outdeg(v) > 0) { x(v) = 1.0 / nv; xp(v) = 1.0 / nv }
-        v += 1
-      }
-    }
+    val x = Array.fill(n)(1.0 / nv)
+    val xp = Array.fill(n)(1.0 / nv)
     val contrib = new Array[Double](n)
     var omega = 1.0
     var delta = Double.MaxValue
@@ -1164,11 +1112,7 @@ object PageRank {
         else if (i == 1) 1.0 / (1.0 - Damping * Damping / 2.0)
         else 1.0 / (1.0 - omega * Damping * Damping / 4.0)
       var v = 0
-      while (v < n) {
-        val d = outdeg(v)
-        contrib(v) = if (d > 0) x(v) / d else 0.0
-        v += 1
-      }
+      while (v < n) { contrib(v) = x(v) / outdeg(v); v += 1 }
       val bc = sc.broadcast(contrib)
       val sums = csr.map { case (vsA, offA, nbrA) =>
         val c = bc.value
@@ -1205,21 +1149,22 @@ object PageRank {
     if (delta > tol)
       System.err.println(s"[graft] WARN PageRank.csr: Σ|Δx|=$delta still " +
         s"above tol=$tol after $maxIter iterations")
-    // distribute the final vector through the |V|-row degree table (same
+    // distribute the final vector through the blocks' src slots (same
     // HALF_UP 8 dp rounding as round(x, 8)); materialize before freeing
     // the broadcast and the CSR cache
-    val bcX = sc.broadcast(x)
-    val out = degrees.select(col("id")).as[Long].mapPartitions { it =>
-      val xv = bcX.value
-      it.map { id =>
-        (id, BigDecimal(xv(id.toInt))
-          .setScale(8, scala.math.BigDecimal.RoundingMode.HALF_UP)
-          .toDouble)
+    val bcX = sc.broadcast((blocks.ids, x))
+    val out = csr.mapPartitions { it =>
+      val (ids, xv) = bcX.value
+      it.flatMap { case (vsA, _, _) =>
+        vsA.iterator.map { v0 =>
+          (ids(v0), BigDecimal(xv(v0))
+            .setScale(8, scala.math.BigDecimal.RoundingMode.HALF_UP)
+            .toDouble)
+        }
       }
     }.toDF("id", "pr").localCheckpoint(true)
     bcX.destroy()
     if (!csrShared) csr.unpersist(blocking = false)
-    degrees.unpersist()
     Some(out)
   }
 
@@ -1767,7 +1712,6 @@ object Coreness {
   private def run(g: Graph, maxIter: Int,
       broadcastVertices: Boolean): (DataFrame, Int, Boolean) =
     csrCoreness(g, maxIter)
-      .orElse(CsrLongPaths.coreness(g, maxIter))
       .getOrElse(runJoin(g, maxIter, broadcastVertices))
 
   /** The h-operator iteration over the shared per-partition CSR
@@ -1782,29 +1726,20 @@ object Coreness {
     * collect. The schedule is synchronous like [[hPass]], so the
     * per-round estimates — and therefore the convergence depth the
     * `oracleRounds` contract checks — are identical to the join path's
-    * (equivalence-tested per round count and per final label). Gate and
-    * fallback as the other broadcast-vector paths.
+    * (equivalence-tested per round count and per final label). The
+    * initial estimate is the blocks' degree vector. Gate
+    * ([[Csr.MaxVertices]]) and fallback as the other broadcast-vector
+    * paths.
     */
   def csrCoreness(g: Graph,
       maxIter: Int): Option[(DataFrame, Int, Boolean)] = {
     val spark = g.cachedUndirected.sparkSession
     import spark.implicits._
-    val (blocksOpt, shared) = Csr.cachedOrBuild(g, PageRank.CsrDenseMaxId)
+    val (blocksOpt, shared) = Csr.cachedOrBuild(g)
     blocksOpt.map { blocks =>
       val csr = blocks.rdd
-      val n = blocks.nSlots
       val sc = spark.sparkContext
-      // est0 = degree, read off the CSR offsets (one |V|-bounded collect)
-      val est = new Array[Int](n)
-      csr.map { case (vsA, offA, _) =>
-        val d = new Array[Int](vsA.length)
-        var k = 0
-        while (k < vsA.length) { d(k) = offA(k + 1) - offA(k); k += 1 }
-        (vsA, d)
-      }.collect().foreach { case (vs, d) =>
-        var k = 0
-        while (k < vs.length) { est(vs(k)) = d(k); k += 1 }
-      }
+      val est = blocks.degree.clone()
       var changed = 1L
       var i = 0
       while (changed > 0 && i < maxIter) {
@@ -1861,11 +1796,11 @@ object Coreness {
         s"Coreness: h-iteration did not converge within $maxIter rounds — " +
           "an unconverged estimate must never be returned (or memoized): " +
           "downstream warm starts (X26) assume exact coreness. Raise maxIter.")
-      val bcO = sc.broadcast(est)
+      val bcO = sc.broadcast((blocks.ids, est))
       val out = csr.mapPartitions { it =>
-        val e = bcO.value
+        val (ids, e) = bcO.value
         it.flatMap { case (vsA, _, _) =>
-          vsA.iterator.map(v0 => (v0.toLong, e(v0).toLong))
+          vsA.iterator.map(v0 => (ids(v0), e(v0).toLong))
         }
       }.toDF("id", "coreness").localCheckpoint(true)
       bcO.destroy()
@@ -1874,8 +1809,9 @@ object Coreness {
     }
   }
 
-  /** The join-path h-iteration — the distributed default above the CSR
-    * gate and [[csrCoreness]]'s equivalence reference (public for specs).
+  /** The join-path h-iteration — the distributed default at the
+    * [[Csr.MaxVertices]] gate and above, and [[csrCoreness]]'s equivalence
+    * reference (public for specs).
     * Each round is the sort-free counting [[hPass]] (r12; previously the
     * \|2E\|-row window sort the r11 verdict named as the last scale-killer
     * at the 100× design point).

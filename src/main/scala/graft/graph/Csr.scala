@@ -5,9 +5,10 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
-/** Per-partition CSR blocks over the src-partitioned symmetrized edge
-  * cache — the shared substrate of the broadcast-vector iteration paths
-  * (PageRank.convergedCsr r11, ConnectedComponents.csrLabels r11).
+/** Per-partition CSR blocks over dense vertex slots — the shared
+  * substrate of the broadcast-vector iteration paths
+  * ([[ConnectedComponents.csrLabels]], [[ShortestPaths.csrBfs]],
+  * [[PageRank.convergedCsr]], [[Coreness.csrCoreness]]).
   *
   * `Graph.cachedUndirected` is hash-partitioned on `src` and holds both
   * orientations, so every vertex's full neighbor list lives in exactly one
@@ -16,20 +17,38 @@ import org.apache.spark.storage.StorageLevel
   * pass packs primitive arrays. The |E|-row adjacency never leaves the
   * executors afterwards — each iteration of a consumer broadcasts only a
   * |V|-slot primitive vector and collects |V|-bounded update chunks, the
-  * same memory class as the accepted bcswap BroadcastExchange
-  * (see PageRank.CsrDenseMaxId for the gate rationale).
+  * same memory class as the accepted bcswap BroadcastExchange.
   *
-  * Dense-id gate: slots index primitive arrays, so ids must sit in
-  * [0, maxSlots). Callers fall back to their equivalence-tested join
-  * formulations on None — ad-hoc graphs with hashed/sparse ids (e.g. the
-  * dedup pair graphs keyed by xxhash64) always take the join path.
+  * Vertex slots: every vertex's slot is its rank in the sorted array of
+  * distinct vertex ids ([[Blocks.ids]]), so state vectors are sized by
+  * |V| whatever the id space — sparse, offset or hashed (negative) ids
+  * cost nothing extra (the GraphX edge-partition layout: dense local
+  * indices plus a global-to-local map). Rank order keeps slot order equal
+  * to id order: a min slot is the min id, and every slot-sorted neighbor
+  * list is id-sorted, so consumers' accumulation orders are those of the
+  * id-indexed kernels.
+  *
+  * Gate: |V| < [[MaxVertices]]. Callers fall back to their
+  * equivalence-tested join formulations on None.
   */
 object Csr {
-  /** CSR blocks: one (srcIds, offsets, neighbors) triple per partition;
-    * `nSlots` = maxId + 1. The RDD is persisted; callers unpersist.
+  /** Vertex-count ceiling (exclusive) for the broadcast-vector paths: one
+    * int state vector at 2^28 slots is 1 GiB, one double vector 2 GiB —
+    * per round each consumer broadcasts ONE such vector and collects at
+    * most the same magnitude back, the bcswap BroadcastExchange class
+    * scaled 8×. That fits a 48 GiB-heap driver/executor tier but is the
+    * last power of two that does (2^30 would be 8 GiB per double
+    * broadcast), so above it the join formulations remain the scale path.
+    */
+  val MaxVertices: Long = 1L << 28
+
+  /** CSR blocks: one (srcSlots, offsets, neighborSlots) triple per
+    * partition, src slots ascending and each neighbor list slot-sorted;
+    * `ids(s)` is slot s's vertex id (ascending) and `degree(s)` its
+    * neighbor count. The RDD is persisted; callers unpersist.
     */
   final case class Blocks(rdd: RDD[(Array[Int], Array[Int], Array[Int])],
-      nSlots: Int)
+      ids: Array[Long], degree: Array[Int])
 
   /** Session-lifetime CSR memo for `memoizeAnalytics` graphs — one
     * maintained graph serves several broadcast-vector analytics (the tier
@@ -50,13 +69,9 @@ object Csr {
     * The memo insert is race-safe (r11 ADVICE): the build runs OUTSIDE
     * the map update, `putIfAbsent` decides the winner, and a losing
     * concurrent build unpersists its multi-GB RDD instead of leaking it
-    * for the session. Pass `knownIdBounds` when the caller already
-    * aggregated (min, max) over src — a fresh build then skips its own
-    * bounds pass over the edge cache.
+    * for the session.
     */
-  def cachedOrBuild(g: Graph, maxSlots: Long,
-      knownIdBounds: Option[(Long, Long)] = None)
-      : (Option[Blocks], Boolean) =
+  def cachedOrBuild(g: Graph): (Option[Blocks], Boolean) =
     if (g.memoizeAnalytics) {
       graft.core.SessionCaches.sweep(cache)(_.edges.sparkSession)
       cache.get(g) match {
@@ -64,7 +79,7 @@ object Csr {
           graft.core.SessionCaches.memoHits.incrementAndGet()
           (b, true)
         case None =>
-          val built = buildDense(g.cachedUndirected, maxSlots, knownIdBounds)
+          val built = buildDense(g.cachedUndirected)
           cache.putIfAbsent(g, built) match {
             case Some(winner) =>
               built.foreach(_.rdd.unpersist(blocking = false))
@@ -73,35 +88,33 @@ object Csr {
             case None => (built, true)
           }
       }
-    } else (buildDense(g.cachedUndirected, maxSlots, knownIdBounds), false)
+    } else (buildDense(g.cachedUndirected), false)
 
   /** Drop `g`'s memoized blocks and free their persisted storage. */
   def release(g: Graph): Unit =
     cache.remove(g).flatten.foreach(_.rdd.unpersist(blocking = false))
 
-  /** Build the per-partition CSR when every id fits the dense gate;
-    * None when ids are negative, absent, or ≥ `maxSlots` (caller falls
-    * back to its join path). Pass `knownIdBounds` (min, max) when the
-    * caller already aggregated them — skips one pass over the cache.
+  /** Build the slot CSR of a src-partitioned edge frame in two jobs and
+    * no exchange: (1) pack each partition's id blocks and collect their
+    * (id, degree) lists, which the driver merges into the sorted id
+    * dictionary; (2) broadcast the ids once and remap every src and
+    * neighbor to its slot by binary search. None when the frame is empty,
+    * |V| ≥ [[MaxVertices]], a src appears in two partitions (the frame is
+    * not src-partitioned), or some neighbor is not a src (an asymmetric
+    * frame: its slot would index past every state vector) — the caller
+    * then takes its join path.
     */
-  def buildDense(edges: DataFrame, maxSlots: Long,
-      knownIdBounds: Option[(Long, Long)] = None): Option[Blocks] = {
-    val (lo, hi) = knownIdBounds.getOrElse {
-      val s = edges.agg(min(col("src")), max(col("src"))).head()
-      if (s.isNullAt(0)) return None
-      (s.getLong(0), s.getLong(1))
-    }
-    if (lo < 0L || hi >= maxSlots) return None
+  def buildDense(edges: DataFrame): Option[Blocks] = {
     val spark = edges.sparkSession
     import spark.implicits._
-    val rdd = edges
-      .select(col("src").cast("int").as("v"), col("dst").cast("int").as("u"))
+    val raw = edges
+      .select(col("src").cast("long").as("v"), col("dst").cast("long").as("u"))
       .sortWithinPartitions(col("v"))
-      .as[(Int, Int)].rdd.mapPartitions { it =>
-        val vs = new scala.collection.mutable.ArrayBuilder.ofInt
+      .as[(Long, Long)].rdd.mapPartitions { it =>
+        val vs = new scala.collection.mutable.ArrayBuilder.ofLong
         val offs = new scala.collection.mutable.ArrayBuilder.ofInt
-        val nbrs = new scala.collection.mutable.ArrayBuilder.ofInt
-        var cur = Int.MinValue
+        val nbrs = new scala.collection.mutable.ArrayBuilder.ofLong
+        var cur = Long.MinValue
         var cnt = 0
         it.foreach { case (v, u) =>
           if (v != cur || cnt == 0) { vs += v; offs += cnt; cur = v }
@@ -109,16 +122,52 @@ object Csr {
           cnt += 1
         }
         offs += cnt
-        val vsA = vs.result(); val offA = offs.result()
-        val nbrA = nbrs.result()
-        // sorted neighbor lists: broadcast-vector reads walk forward
-        var k = 0
-        while (k < vsA.length) {
-          java.util.Arrays.sort(nbrA, offA(k), offA(k + 1)); k += 1
-        }
-        Iterator((vsA, offA, nbrA))
+        Iterator((vs.result(), offs.result(), nbrs.result()))
       }.persist(StorageLevel.MEMORY_AND_DISK)
-    rdd.count()
-    Some(Blocks(rdd, (hi + 1).toInt))
+    try {
+      val parts = raw.map { case (vs, offs, _) =>
+        (vs, Array.tabulate(vs.length)(k => offs(k + 1) - offs(k)))
+      }.collect()
+      val nv = parts.iterator.map(_._1.length.toLong).sum
+      if (nv == 0L || nv >= MaxVertices) return None
+      val ids = Array.concat(parts.map(_._1).toIndexedSeq: _*)
+      java.util.Arrays.sort(ids)
+      var k = 1
+      while (k < ids.length) { if (ids(k) == ids(k - 1)) return None; k += 1 }
+      val degree = new Array[Int](ids.length)
+      parts.foreach { case (vs, d) =>
+        var j = 0
+        while (j < vs.length) {
+          degree(java.util.Arrays.binarySearch(ids, vs(j))) = d(j); j += 1
+        }
+      }
+      val sc = spark.sparkContext
+      val bcIds = sc.broadcast(ids)
+      val missing = sc.longAccumulator
+      val rdd = raw.map { case (vs, offA, nbrs) =>
+        val dict = bcIds.value
+        val slots = vs.map(java.util.Arrays.binarySearch(dict, _))
+        val nbrA = new Array[Int](nbrs.length)
+        var j = 0
+        while (j < nbrs.length) {
+          val s = java.util.Arrays.binarySearch(dict, nbrs(j))
+          if (s < 0) missing.add(1L)
+          nbrA(j) = s
+          j += 1
+        }
+        // sorted neighbor lists: broadcast-vector reads walk forward
+        var i = 0
+        while (i < slots.length) {
+          java.util.Arrays.sort(nbrA, offA(i), offA(i + 1)); i += 1
+        }
+        (slots, offA, nbrA)
+      }.persist(StorageLevel.MEMORY_AND_DISK)
+      rdd.count()
+      bcIds.unpersist(blocking = false)
+      if (missing.value > 0L) {
+        rdd.unpersist(blocking = false)
+        None
+      } else Some(Blocks(rdd, ids, degree))
+    } finally raw.unpersist(blocking = false)
   }
 }

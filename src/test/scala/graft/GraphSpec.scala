@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -127,63 +128,72 @@ class GraphSpec extends AnyFunSuite {
     }
   }
 
-  test("long-band chunked CSR paths equal the join formulations") {
-    // r13 (r12 judge item #1): ids in [2^25, 2^28) run the chunked
-    // long-id CSR kernels (CsrLongPaths) instead of falling to the join
-    // paths. Fixtures: (a) ids straddling the 2^22 chunk boundary —
-    // multi-chunk vector logic; (b) ids just above the Int gate — the
-    // band the dispatchers now route here; (c) an R-MAT power-law shape.
-    val cb = 1L << Chunked.Bits
-    val straddle = mkGraph((cb - 2L, cb - 1L), (cb - 1L, cb + 1L),
-      (cb + 1L, cb + 2L), (5L, 6L), (cb + 100L, cb + 101L))
-    val off = PageRank.CsrDenseMaxId + 5L
-    val aboveGate = mkGraph((off, off + 1L), (off + 1L, off + 2L),
-      (off, off + 2L), (1L, 2L))
-    val rmat = RMat.graph(spark, RMat.Params(scale = 8))
-    Seq(straddle, aboveGate, rmat).foreach { g =>
-      // cc
-      val lc = CsrLongPaths.labels(g).get
-      val jc = ConnectedComponents.joinLabels(g)
-      assert(lc.exceptAll(jc).count() == 0 && jc.exceptAll(lc).count() == 0,
-        "long-band CC disagrees with the frontier join path")
-      // bfs
-      val src = g.cachedUndirected.agg(min(col("src"))).head().getLong(0)
-      val lb = CsrLongPaths.bfs(g, src, 64).get
-      val jb = ShortestPaths.joinDistances(g, src)
-      assert(lb.exceptAll(jb).count() == 0 && jb.exceptAll(lb).count() == 0,
-        "long-band BFS disagrees with the frontier join BFS")
-      // coreness: labels AND round count (the oracleRounds contract)
-      val (lk, rl, cl) = CsrLongPaths.coreness(g, 100).get
-      val (jk, rj, cj) = Coreness.joinCoreness(g)
-      assert(cl && cj)
-      assert(rl == rj, s"round count differs: long $rl vs join $rj")
-      assert(lk.exceptAll(jk).count() == 0 && jk.exceptAll(lk).count() == 0,
-        "long-band coreness disagrees with the join h-iteration")
-      // pagerank (ulp-class accumulation-order noise only)
-      val lp = CsrLongPaths.pagerank(g).get.withColumnRenamed("pr", "pra")
-      val dp = PageRank.convergedDense(g).withColumnRenamed("pr", "prb")
-      val joined = lp.join(dp, Seq("id"), "full_outer")
-      assert(joined.filter(col("pra").isNull || col("prb").isNull)
-        .count() == 0, "long-band PR covers a different vertex set")
-      val maxDiff = joined
-        .agg(max(abs(col("pra") - col("prb")))).head().getDouble(0)
-      assert(maxDiff < 1e-6, s"long-band PR diverged: maxDiff=$maxDiff")
+  test("csr paths equal the join formulations under any id map") {
+    // the slot substrate indexes state by each vertex's rank among the
+    // distinct ids, so the CSR kernels serve every id space: identity,
+    // an offset of 2^40 and a signed 64-bit hash that yields negative ids
+    def mapped(edges: DataFrame, f: Column => Column) =
+      Graph(edges.select(f(col("src")).as("src"), f(col("dst")).as("dst"),
+        col("weight")))
+    def same(a: DataFrame, b: DataFrame, msg: String) =
+      assert(a.exceptAll(b).count() == 0 && b.exceptAll(a).count() == 0, msg)
+    val shift = 1L << 40
+    val maps = Seq[(String, Column => Column)](
+      "identity" -> (c => c),
+      "offset" -> (c => c + lit(shift)),
+      "hash" -> (c => xxhash64(c)))
+    // planted: a triangle with a tail, a path with a shortcut, a self-loop
+    // singleton and an isolated pair
+    val planted = Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L), (4L, 5L),
+      (20L, 21L), (21L, 22L), (22L, 23L), (20L, 22L), (30L, 30L),
+      (40L, 41L)).toDF("src", "dst").withColumn("weight", lit(1L))
+    val rmat = RMat.graph(spark, RMat.Params(scale = 8)).edges
+    Seq("planted" -> planted, "rmat" -> rmat).foreach { case (shape, e) =>
+      val ranks = maps.map { case (name, f) =>
+        val g = mapped(e, f)
+        val what = s"$shape/$name"
+        if (name == "hash")
+          assert(g.cachedUndirected.filter(col("src") < 0L).count() > 0,
+            s"$what: the hash map produced no negative id")
+        same(ConnectedComponents.csrLabels(g)
+            .getOrElse(fail(s"$what: csrLabels declined")),
+          ConnectedComponents.joinLabels(g),
+          s"$what: CSR CC differs from join CC")
+        val src = g.cachedUndirected.agg(min(col("src"))).head().getLong(0)
+        same(ShortestPaths.csrBfs(g, src, 64)
+            .getOrElse(fail(s"$what: csrBfs declined")),
+          ShortestPaths.joinDistances(g, src),
+          s"$what: CSR BFS differs from join BFS")
+        val (ck, cr, cc) = Coreness.csrCoreness(g, 100)
+          .getOrElse(fail(s"$what: csrCoreness declined"))
+        val (jk, jr, jc) = Coreness.joinCoreness(g)
+        assert(cc && jc)
+        assert(cr == jr, s"$what: round count differs: csr $cr vs join $jr")
+        same(ck, jk, s"$what: CSR coreness differs from join coreness")
+        val pr = PageRank.convergedCsr(g)
+          .getOrElse(fail(s"$what: convergedCsr declined"))
+          .localCheckpoint(true)
+        val joined = pr.withColumnRenamed("pr", "pra")
+          .join(PageRank.convergedDense(g).withColumnRenamed("pr", "prb"),
+            Seq("id"), "full_outer")
+        assert(joined.filter(col("pra").isNull || col("prb").isNull)
+          .count() == 0, s"$what: CSR and dense PR cover different vertices")
+        val maxDiff = joined
+          .agg(max(abs(col("pra") - col("prb")))).head().getDouble(0)
+        assert(maxDiff < 1e-6, s"$what: CSR PR diverged: maxDiff=$maxDiff")
+        name -> pr
+      }.toMap
+      // slot order is id order: a monotone id map leaves every rank's
+      // accumulation order, hence every double, unchanged
+      same(ranks("identity"),
+        ranks("offset").select((col("id") - lit(shift)).as("id"), col("pr")),
+        s"$shape: offset ids changed the CSR PageRank doubles")
     }
-    // gate: above CsrLong.MaxId every long path declines (join serves)
-    val far = CsrLong.MaxId + 9L
-    val gFar = mkGraph((far, far + 1L))
-    assert(CsrLongPaths.labels(gFar).isEmpty)
-    assert(CsrLongPaths.bfs(gFar, far, 64).isEmpty)
-    assert(CsrLongPaths.coreness(gFar, 100).isEmpty)
-    assert(CsrLongPaths.pagerank(gFar).isEmpty)
-    // and the Int path still owns its band: a dense small-id graph must
-    // not be routed long by the dispatchers (memo identity check)
-    assert(PageRank.convergedCsr(rmat).nonEmpty)
   }
 
   test("frontier cc equals the dense classic formulation") {
     // apply() dispatches to the CSR broadcast-vector path on these
-    // dense-id fixtures (r11); joinLabels is the frontier join
+    // fixtures (r11); joinLabels is the frontier join
     // formulation it must agree with exactly — as must the dense classic
     // reference, on every graph shape and both join-state paths
     val planted = mkGraph((1L, 2L), (2L, 3L), (10L, 11L))
@@ -204,7 +214,7 @@ class GraphSpec extends AnyFunSuite {
   }
 
   test("bfs csr path equals the frontier join formulation") {
-    // apply() dispatches BFS to the CSR bitmap path on dense ids (r11);
+    // apply() dispatches BFS to the CSR bitmap path (r11);
     // levels must agree exactly with the join path on every shape,
     // including a shortcut that changes a level and a disconnected part
     val planted = mkGraph((1L, 2L), (2L, 3L), (3L, 4L), (1L, 3L), (9L, 10L))
@@ -217,39 +227,95 @@ class GraphSpec extends AnyFunSuite {
       assert(a.exceptAll(b).count() == 0 && b.exceptAll(a).count() == 0,
         "CSR BFS disagrees with the frontier join BFS")
     }
-    // edgeless source: csrBfs declines (slot beyond the cache), apply
+    // edgeless source: csrBfs declines (the source has no slot), apply
     // still answers with the seed-only table via the join path
     val g2 = mkGraph((1L, 2L))
     assert(ShortestPaths.csrBfs(g2, 50L, 64).isEmpty)
     val seedOnly = ShortestPaths(g2, 50L)
     assert(seedOnly.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
       == Seq((50L, 0L)))
-    // sparse/hashed ids: gate rejects, join path serves
-    val off = PageRank.CsrDenseMaxId + 3L
+    // sparse ids above 2^25: the CSR path serves them and agrees with the
+    // join path
+    val off = (1L << 25) + 3L
     val g3 = mkGraph((off, off + 1L), (off + 1L, off + 2L))
-    assert(ShortestPaths.csrBfs(g3, off, 64).isEmpty)
+    val c3 = ShortestPaths.csrBfs(g3, off, 64)
+      .getOrElse(fail("CSR BFS declined sparse ids"))
+    val j3 = ShortestPaths.joinDistances(g3, off)
+    assert(c3.exceptAll(j3).count() == 0 && j3.exceptAll(c3).count() == 0,
+      "CSR BFS disagrees with the join BFS on sparse ids")
     val d3 = ShortestPaths(g3, off).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(d3 == Map(off -> 0L, (off + 1L) -> 1L, (off + 2L) -> 2L))
   }
 
-  test("cc csr gate: sparse/hashed ids fall back to the join path") {
-    // ids above CsrDenseMaxId reject the CSR build; apply must dispatch
-    // to joinLabels and agree with classic (self-loop + two components)
-    val off = PageRank.CsrDenseMaxId + 7L
+  test("cc csr path serves sparse ids and agrees with the join path") {
+    // sparse ids above 2^25 run the CSR path too; it must agree with
+    // joinLabels and classic (self-loop + two components)
+    val off = (1L << 25) + 7L
     val g = mkGraph((off + 1L, off + 2L), (off + 2L, off + 3L),
       (off + 10L, off + 10L), (off + 20L, off + 21L))
-    assert(ConnectedComponents.csrLabels(g).isEmpty,
-      "CSR gate accepted ids above CsrDenseMaxId")
+    val s = ConnectedComponents.csrLabels(g)
+      .getOrElse(fail("CSR path declined sparse ids"))
+    val j = ConnectedComponents.joinLabels(g)
+    assert(s.exceptAll(j).count() == 0 && j.exceptAll(s).count() == 0)
     val a = ConnectedComponents(g)
     val b = GraphReferences.classicCc(g)
     assert(a.exceptAll(b).count() == 0 && b.exceptAll(a).count() == 0)
-    // and on the SAME shape with dense ids, the CSR path must agree too
+    // and on the SAME shape with small ids, the CSR path must agree too
     val gd = mkGraph((1L, 2L), (2L, 3L), (10L, 10L), (20L, 21L))
     val c = ConnectedComponents.csrLabels(gd)
-    assert(c.nonEmpty, "CSR gate rejected dense ids")
+    assert(c.nonEmpty, "CSR path declined small ids")
     val d = GraphReferences.classicCc(gd)
     assert(c.get.exceptAll(d).count() == 0 && d.exceptAll(c.get).count() == 0)
+  }
+
+  test("csr build declines a neighbor that is not a src or a split src") {
+    // an asymmetric src-partitioned frame: 7 is a neighbor of 2 but never
+    // a src, so it has no slot and the kernels would index past every
+    // state vector — the build must decline (callers take the join path)
+    val asym = Seq((1L, 2L), (2L, 1L), (2L, 7L)).toDF("src", "dst")
+      .repartition(col("src"))
+    assert(Csr.buildDense(asym).isEmpty,
+      "CSR build accepted a neighbor outside the src set")
+    // the symmetric completion of the same frame builds
+    val sym = Seq((1L, 2L), (2L, 1L), (2L, 7L), (7L, 2L)).toDF("src", "dst")
+      .repartition(col("src"))
+    val b = Csr.buildDense(sym).getOrElse(fail("symmetric frame declined"))
+    assert(b.ids.toSeq == Seq(1L, 2L, 7L) && b.degree.toSeq == Seq(1, 2, 1))
+    b.rdd.unpersist(blocking = false)
+    // the same rows NOT partitioned by src: a src whose rows span two
+    // partitions would get two slots, so the build declines
+    val star = ((2L to 9L).map(u => (1L, u)) ++ (2L to 9L).map(u => (u, 1L)))
+      .toDF("src", "dst").repartition(4, col("dst"))
+    assert(star.filter(col("src") === 1L)
+      .select(spark_partition_id()).distinct().count() > 1)
+    assert(Csr.buildDense(star).isEmpty,
+      "CSR build accepted a src split across partitions")
+  }
+
+  test("csr memo: one shared build per graph, freed by release") {
+    // a session-memoized graph with ids above every old dense range:
+    // CC builds the blocks, BFS, PageRank and coreness reuse them, and
+    // Csr.release frees the one persisted copy
+    val off = (1L << 26) + 5L
+    val g = Graph(Seq((off, off + 1L), (off + 1L, off + 2L), (off, off + 2L),
+        (off + 9L, off + 10L)).toDF("src", "dst").withColumn("weight", lit(1L)),
+      memoizeAnalytics = true)
+    val hits0 = graft.core.SessionCaches.memoHits.get()
+    assert(ConnectedComponents(g).count() == 5L)
+    assert(ShortestPaths(g, off).count() == 3L)
+    assert(PageRank.converged(g).count() == 5L)
+    assert(Coreness(g).count() == 5L)
+    assert(graft.core.SessionCaches.memoHits.get() - hits0 == 3L,
+      "BFS, PageRank and coreness did not reuse CC's CSR build")
+    val (blocks, shared) = Csr.cachedOrBuild(g)
+    assert(shared && blocks.nonEmpty)
+    val id = blocks.get.rdd.id
+    val sc = spark.sparkContext
+    assert(sc.getPersistentRDDs.contains(id))
+    Csr.release(g)
+    assert(!sc.getPersistentRDDs.contains(id),
+      "Csr.release left the shared blocks persisted")
   }
 
   test("sssp distances on a planted path with a shortcut") {
@@ -776,7 +842,7 @@ class GraphSpec extends AnyFunSuite {
   }
 
   test("coreness csr path equals the window-sort h-iteration") {
-    // apply() dispatches to the CSR counting-h path on dense ids (r11);
+    // apply() dispatches to the CSR counting-h path (r11);
     // the synchronous schedule must give the SAME round count (the
     // oracleRounds contract) and the same labels as the join path
     val planted = mkGraph((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L), (4L, 5L))
@@ -789,10 +855,15 @@ class GraphSpec extends AnyFunSuite {
       assert(a.exceptAll(b).count() == 0 && b.exceptAll(a).count() == 0,
         "CSR coreness disagrees with the window-sort h-iteration")
     }
-    // sparse/hashed ids: gate rejects, apply agrees with the join path
-    val off = PageRank.CsrDenseMaxId + 11L
+    // sparse ids above 2^25: the CSR path serves them and agrees with the
+    // join path
+    val off = (1L << 25) + 11L
     val g3 = mkGraph((off, off + 1L), (off + 1L, off + 2L), (off, off + 2L))
-    assert(Coreness.csrCoreness(g3, 100).isEmpty)
+    val (c3, cr3, _) = Coreness.csrCoreness(g3, 100)
+      .getOrElse(fail("CSR coreness declined sparse ids"))
+    val (j3, jr3, _) = Coreness.joinCoreness(g3)
+    assert(cr3 == jr3, s"round count differs: csr $cr3 vs join $jr3")
+    assert(c3.exceptAll(j3).count() == 0 && j3.exceptAll(c3).count() == 0)
     val out3 = Coreness(g3).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(out3 == Map(off -> 2L, (off + 1L) -> 2L, (off + 2L) -> 2L))
