@@ -5,23 +5,36 @@ import java.util.concurrent.atomic.AtomicLong
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.types.StructType
 
 import graft.core.Tables
 import graft.graph.{EdgeUpdates, Graph}
 import graft.ops.TextAnalysis
 
-/** Structured Streaming operators (SURVEY §2 X1–X2).
+/** Structured Streaming operators (SURVEY §2 X1–X28). Every query is a real
+  * streaming query driven to completion with AvailableNow — the same code
+  * that would run with a Kafka source on a cluster — through one of two
+  * drains:
   *
-  * X1 runs the hourly event aggregation as a real streaming query (file
-  * source → groupBy agg → memory sink, complete mode) driven to completion
-  * with AvailableNow — same code that would run with a Kafka source and a
-  * Delta sink on a cluster. Distinct aggregations are not supported in
-  * streaming, so the streaming variant drops n_users vs the batch op.
+  *  - **memory-sink drain** ([[EventStream.drainToMemory]]): the stateful
+  *    aggregations and joins (X1, X3–X5, X8–X13) write their streaming
+  *    frame to a memory sink and return its table. Distinct aggregations
+  *    are not supported in streaming, so those variants drop their
+  *    distinct-count columns vs the batch ops.
+  *  - **staged foreachBatch drain** ([[EventStream.drainStaged]]): a feed
+  *    staged one parquet file per micro-batch ([[EventStream.stageByChunks]])
+  *    is read one file per trigger and each batch folds into driver-held
+  *    state — the document/vector indexes (X14, X25, X27, X28) and every
+  *    edge-action maintainer.
   *
-  * X2 maintains a graph under a stream of edge actions with foreachBatch:
-  * each micro-batch applies EdgeUpdates set-algebra to the accumulated edge
-  * state — the streaming re-expression of the reference's sequential update
-  * loop (ref: tests/networkx/test_python.py:139-144).
+  * The 14 edge-action maintainers (X2, X6, X7, X15–X24, X26) share one
+  * runner, [[EventStream.EdgeFeed]]: it seeds the edge state from the
+  * session-shared base snapshot, runs ONE update merge per micro-batch
+  * (EdgeUpdates set-algebra — the streaming re-expression of the
+  * reference's sequential update loop, ref:
+  * tests/networkx/test_python.py:139-144), rebinds the edge state to the
+  * merge's survivors and hands the maintainer an [[EventStream.EdgeBatch]]
+  * with the batch's presence flips.
   */
 /** JVM-static capture of per-run open session state (single-process only —
   * executors in local mode share this object; see sessionizeStream).
@@ -36,9 +49,11 @@ private[streaming] object SessionCapture {
 object EventStream extends Serializable {
   private val nameCounter = new AtomicLong(0)
 
-  /** Session-shared read-only INITIAL state for the incremental
-    * maintainers (X6/X7/X15/X16/X17/X18): the checkpointed edge table, the
-    * symmetrized distinct-pair view, the degree table, and |V| — built
+  /** Session-shared read-only INITIAL state for the 14 edge-action
+    * maintainers (X2, X6, X7, X15–X24, X26 — every [[EdgeFeed]] seeds its
+    * edge state from it): the checkpointed edge table, the symmetrized
+    * distinct-pair view (X15, X16, X18, X21, X24, X26), the degree table
+    * (X6, X15), and |V| (X15) — built
     * once per maintained graph and seeded into every maintainer. This is
     * the reference STINGER deployment model (one maintained graph, many
     * concurrent algorithms over it — ref: tests/stinger/src/alg) and the
@@ -133,6 +148,109 @@ object EventStream extends Serializable {
         (state.sparkSession, staging), Long.MaxValue) <=
         EdgeUpdates.BroadcastableActions)
 
+  /** One micro-batch merged into the edge state. `merged` carries every
+    * touched-or-present pair's new `weight` and pre-batch `weight_old`
+    * ([[EdgeUpdates.applyAnnotated]]); a FLIP is a pair whose presence
+    * (`weight > 0`) changed. The flips are the incremental maintainers'
+    * events: an insert on a present pair or an insert-then-delete inside
+    * one batch never flips (last-action-wins is resolved in the merge).
+    * Both projections are lazy over the merge checkpoint.
+    */
+  private final class EdgeBatch(val merged: DataFrame) {
+    private def flipped =
+      merged.filter((col("weight_old") > 0L) =!= (col("weight") > 0L))
+    /** Flipped pairs as merged: (src, dst, on). */
+    def flips: DataFrame =
+      flipped.select(col("src"), col("dst"), (col("weight") > 0L).as("on"))
+    /** Flipped pairs canonicalized: (a = least, b = greatest, on). */
+    def canonFlips: DataFrame =
+      flipped.select(least(col("src"), col("dst")).as("a"),
+        greatest(col("src"), col("dst")).as("b"),
+        (col("weight") > 0L).as("on"))
+    /** The symmetrized pair view `und` with canonical flips `cf` applied in
+      * both orientations (self-pairs once), lazily checkpointed — it
+      * materializes inside the next job that reads it — and the ON
+      * orientations (src, dst) the insert relaxations seed from.
+      */
+    def undAfter(und: DataFrame, cf: DataFrame,
+        bc: DataFrame => DataFrame): (DataFrame, DataFrame) = {
+      val flips2 = cf.select(explode(when(col("a") === col("b"),
+          array(struct(col("a").as("src"), col("b").as("dst"))))
+        .otherwise(array(
+          struct(col("a").as("src"), col("b").as("dst")),
+          struct(col("b").as("src"), col("a").as("dst"))))).as("e"),
+        col("on"))
+        .select(col("e.src"), col("e.dst"), col("on"))
+      val off2 = flips2.filter(!col("on")).select(col("src"), col("dst"))
+      val on2 = flips2.filter(col("on")).select(col("src"), col("dst"))
+      (und.join(bc(off2), Seq("src", "dst"), "left_anti")
+        .union(on2).localCheckpoint(eager = false), on2)
+    }
+  }
+
+  /** The runner every edge-action maintainer drains through. Construction
+    * resolves the staged feed (the session-shared dir when given, else
+    * the action log staged by action_id) and seeds the edge state from the
+    * shared base snapshot ([[maintainedBase]]); [[drain]] then runs the
+    * stream.
+    */
+  private final class EdgeFeed(spark: SparkSession, base: Graph,
+      actions: DataFrame, batches: Int, stagedDir: Option[String]) {
+    private val staging: String = stagedDir.getOrElse(
+      stageByChunks(actions, "action_id", batches))
+    val mb: MaintainedBase = maintainedBase(base)
+    /** The current edge state (src, dst, weight): rebound after every
+      * merge, never mutated.
+      */
+    var edges: DataFrame = mb.edges
+
+    /** Per micro-batch: ONE edge-state pass ([[mergeIngestBatch]]), its
+      * checkpoint eager or lazy (`eagerMerge` — lazy when a later job of
+      * the batch materializes it anyway), the edge state rebound to the
+      * merge's survivors, then `step`. Returns the final edge state.
+      */
+    def drain(eagerMerge: Boolean = true,
+        batchSecs: Option[scala.collection.mutable.Buffer[Double]] = None)(
+        step: EdgeBatch => Unit): DataFrame = {
+      drainStaged(spark, actions.schema, staging, batchSecs) { batch =>
+        val merged = mergeIngestBatch(edges, batch, staging)
+          .localCheckpoint(eagerMerge)
+        edges = merged.filter(col("weight") > 0L)
+          .select(col("src"), col("dst"), col("weight"))
+        step(new EdgeBatch(merged))
+      }
+      edges
+    }
+  }
+
+  /** Drains `stream` into a memory sink under AvailableNow and returns the
+    * sink's table.
+    */
+  private def drainToMemory(stream: Dataset[_], mode: String): DataFrame = {
+    val name = s"graft_stream_${nameCounter.incrementAndGet()}"
+    stream.writeStream.outputMode(mode).format("memory").queryName(name)
+      .trigger(Trigger.AvailableNow()).start().awaitTermination()
+    stream.sparkSession.table(name)
+  }
+
+  /** Drains the staged dir `staging` one file per micro-batch under
+    * AvailableNow, handing each batch to `f`; `batchSecs`, when set,
+    * receives each batch's wall seconds.
+    */
+  private def drainStaged(spark: SparkSession, schema: StructType,
+      staging: String,
+      batchSecs: Option[scala.collection.mutable.Buffer[Double]])(
+      f: DataFrame => Unit): Unit =
+    spark.readStream.schema(schema).option("maxFilesPerTrigger", "1")
+      .parquet(staging)
+      .writeStream.outputMode("append").trigger(Trigger.AvailableNow())
+      .foreachBatch { (batch: DataFrame, _: Long) =>
+        val t0 = System.nanoTime()
+        f(batch)
+        batchSecs.foreach(_ += (System.nanoTime() - t0) / 1e9)
+      }
+      .start().awaitTermination()
+
   /** Session-shared staged USER-PAIR feed (X19/X20's triangle-bearing
     * stream, [[EdgeUpdates.userPairActions]]) — same contract as
     * [[stagedActionFeed]].
@@ -175,6 +293,10 @@ object EventStream extends Serializable {
     * each, after every data chunk) — used to push the watermark past all
     * real event time so event-time timeouts and window finalization fire
     * before an AvailableNow run drains.
+    *
+    * The staging dir lives under `java.io.tmpdir` and is deleted, with
+    * every staged file, when the JVM exits — so a session-shared staging
+    * memo stays valid for the JVM's life and nothing outlives it.
     */
   private def stageByChunks(df: DataFrame, orderCol: String,
       batches: Int, sentinels: Seq[DataFrame] = Nil): String = {
@@ -187,6 +309,9 @@ object EventStream extends Serializable {
       batches: Int, sentinels: Seq[DataFrame]): String = {
     import java.nio.file.{Files, Path, StandardCopyOption}
     val staging = Files.createTempDirectory("graft-stage-")
+    // removed at JVM exit: the JVM deletes in reverse registration order,
+    // so every file moved in below (registered after the dir) goes first
+    staging.toFile.deleteOnExit()
     val base = System.currentTimeMillis() -
       (batches + sentinels.size + 30) * 2000L
     def pin(p: Path, seq: Int): Unit =
@@ -222,6 +347,7 @@ object EventStream extends Serializable {
           parts.zipWithIndex.foreach { case (p, j) =>
             val dst = staging.resolve(s"chunk-$i-$j.parquet")
             Files.move(p, dst, StandardCopyOption.ATOMIC_MOVE)
+            dst.toFile.deleteOnExit()
             pin(dst, i)
             // footer row count: local metadata read, zero Spark jobs —
             // feeds the SHJ-hint gate (chunkRowBound) for mergeIngestBatch
@@ -259,6 +385,7 @@ object EventStream extends Serializable {
       } finally listed.close()
       val dst = staging.resolve(s"sentinel-$j.parquet")
       Files.move(part, dst, StandardCopyOption.ATOMIC_MOVE)
+      dst.toFile.deleteOnExit()
       pin(dst, batches + j)
       val l2 = Files.list(tmp)
       try l2.iterator.forEachRemaining(p => Files.deleteIfExists(p)) finally l2.close()
@@ -286,15 +413,7 @@ object EventStream extends Serializable {
       .agg(count(lit(1)).as("n"), sum(col("value")).as("sv"))
       .select(col("hour"), col("event_type"), col("n"),
         round(col("sv"), 4).as("sum_value"))
-    val name = s"graft_stream_hourly_${nameCounter.incrementAndGet()}"
-    val q = agg.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(name)
+    drainToMemory(agg, "complete")
   }
 
   val eventsHourlySql: String =
@@ -321,15 +440,7 @@ object EventStream extends Serializable {
       .agg(count(lit(1)).as("n"), sum(col("value")).as("sv"))
       .select(unix_timestamp(col("window.start")).as("win_start"),
         col("event_type"), col("n"), round(col("sv"), 4).as("sum_value"))
-    val name = s"graft_stream_hopping_${nameCounter.incrementAndGet()}"
-    val q = agg.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(name)
+    drainToMemory(agg, "complete")
   }
 
   /** X11: streaming HyperLogLog maintenance — T20's (register, max-rank)
@@ -348,15 +459,7 @@ object EventStream extends Serializable {
     val regs = TextAnalysis.hllRegistersOf(
         stream.select(explode(TextAnalysis.tokens(col("text"))).as("term")))
       .select(col("register"), col("m_j").cast("long").as("m_j"))
-    val name = s"graft_stream_hll_${nameCounter.incrementAndGet()}"
-    val q = regs.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(name)
+    drainToMemory(regs, "complete")
   }
 
   /** X13: streaming counting-Bloom maintenance — T21's bit positions
@@ -379,15 +482,7 @@ object EventStream extends Serializable {
         md5(col("text")))).as("pos"))
       .groupBy(col("pos"))
       .agg(count(lit(1)).as("n"))
-    val name = s"graft_stream_bloom_${nameCounter.incrementAndGet()}"
-    val q = bits.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(name)
+    drainToMemory(bits, "complete")
   }
 
   val bloomBitsSql: String = {
@@ -429,15 +524,7 @@ object EventStream extends Serializable {
       .agg(count(lit(1)).as("n"), sum(col("value")).as("sv"))
       .select(col("c_mktsegment"), col("event_type"), col("n"),
         round(col("sv"), 4).as("sum_value"))
-    val name = s"graft_stream_enriched_${nameCounter.incrementAndGet()}"
-    val q = agg.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(name)
+    drainToMemory(agg, "complete")
   }
 
   val enrichedRevenueSql: String =
@@ -479,15 +566,7 @@ object EventStream extends Serializable {
       .select(col("purchase_id"), col("user_id"), col("click_id"),
         (unix_micros(col("purchase_ts")) - unix_micros(col("click_ts")))
           .as("gap_us"))
-    val name = s"graft_stream_ssjoin_${nameCounter.incrementAndGet()}"
-    val q = joined.writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(name)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(name)
+    drainToMemory(joined, "append")
   }
 
   val purchaseClickJoinSql: String =
@@ -518,15 +597,7 @@ object EventStream extends Serializable {
         md5(col("term").cast("binary")))).as("sb"))
       .groupBy(col("sb.s").cast("long").as("s"), col("sb.bucket").as("bucket"))
       .agg(count(lit(1)).as("c"))
-    val name = s"graft_stream_cms_${nameCounter.incrementAndGet()}"
-    val q = cells.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(name)
+    drainToMemory(cells, "complete")
   }
 
   val eventsHoppingSql: String =
@@ -534,27 +605,6 @@ object EventStream extends Serializable {
       |  event_type, count(*) AS n, round(sum(value), 4) AS sum_value
       |FROM events, (SELECT unnest([0, 1, 2, 3]) AS j) j
       |GROUP BY 1, 2""".stripMargin
-
-  /** X2: micro-batched graph maintenance. Splits the action log into
-    * `batches` chunks by action_id and folds EdgeUpdates over them,
-    * verifying the fold equals the one-shot batch apply (associativity of
-    * last-action-wins under ordered chunks). Exercised from tests; the
-    * foreachBatch production shape is identical with a streaming source.
-    */
-  def maintainGraph(spark: SparkSession, dir: String, batches: Int = 4): DataFrame = {
-    val actions = EdgeUpdates.actionsFromEvents(spark, dir)
-    val base = Graph.fromTpch(spark, dir).edges
-    val mm = actions.agg(max(col("action_id"))).head()
-    if (mm.isNullAt(0)) base // no actions → graph unchanged
-    else {
-      val step = (mm.getLong(0) + batches) / batches
-      (0 until batches).foldLeft(base) { (edges, i) =>
-        val chunk = actions.filter(col("action_id") >= i * step &&
-          col("action_id") < (i + 1) * step)
-        EdgeUpdates(edges, chunk).localCheckpoint(true)
-      }
-    }
-  }
 
   final case class Ev(user_id: Long, ts_us: Long, value: Double)
   final case class SessState(seq: Long, lastTs: Long, n: Long, sum: Double)
@@ -610,16 +660,12 @@ object EventStream extends Serializable {
       .schema(events.schema)
       .option("maxFilesPerTrigger", "1").parquet(staging)
       .select(col("user_id"), col("ts_us"), col("value")).as[Ev]
-    val name = s"graft_sessions_${nameCounter.incrementAndGet()}"
-    val q = stream.groupByKey(_.user_id)
+    val emitted = drainToMemory(stream.groupByKey(_.user_id)
       .flatMapGroupsWithState(OutputMode.Append(),
-        GroupStateTimeout.NoTimeout())(handle)
-      .writeStream.outputMode("append").format("memory").queryName(name)
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
+        GroupStateTimeout.NoTimeout())(handle), "append")
     val open = Option(SessionCapture.open.remove(runId)).get.toSeq
       .map { case (u, s) => Sess(u, s.seq, s.n, s.sum) }.toDF()
-    (spark.table(name), open)
+    (emitted, open)
   }
 
   final case class EvT(user_id: Long, ts: java.sql.Timestamp, ts_us: Long,
@@ -700,14 +746,10 @@ object EventStream extends Serializable {
         .option("maxFilesPerTrigger", "1").parquet(staging)
         .withWatermark("ts", "0 seconds")
         .as[EvT]
-      val name = s"graft_sessions_et_${nameCounter.incrementAndGet()}"
-      val q = stream.groupByKey(_.user_id)
-        .flatMapGroupsWithState(OutputMode.Append(),
-          GroupStateTimeout.EventTimeTimeout())(handle)
-        .writeStream.outputMode("append").format("memory").queryName(name)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      spark.table(name).filter(col("user_id") >= 0L)
+      drainToMemory(stream.groupByKey(_.user_id)
+          .flatMapGroupsWithState(OutputMode.Append(),
+            GroupStateTimeout.EventTimeTimeout())(handle), "append")
+        .filter(col("user_id") >= 0L)
         .select(col("user_id"), col("session_seq"), col("n_events"),
           round(col("sum_value"), 4).as("sum_value"))
     }
@@ -733,11 +775,7 @@ object EventStream extends Serializable {
       .agg(count(lit(1)).as("n"), round(sum(col("value")), 4).as("sum_value"))
       .select(unix_timestamp(col("window.start")).as("hour"),
         col("event_type"), col("n"), col("sum_value"))
-    val name = s"graft_wm_hourly_${nameCounter.incrementAndGet()}"
-    val q = agg.writeStream.outputMode("append").format("memory")
-      .queryName(name).trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    spark.table(name)
+    drainToMemory(agg, "append")
   }
 
   /** X4 (finalized): the same watermarked append-mode window aggregation,
@@ -773,11 +811,7 @@ object EventStream extends Serializable {
         .agg(count(lit(1)).as("n"), round(sum(col("value")), 4).as("sum_value"))
         .select(unix_timestamp(col("window.start")).as("hour"),
           col("event_type"), col("n"), col("sum_value"))
-      val name = s"graft_wm_final_${nameCounter.incrementAndGet()}"
-      val q = agg.writeStream.outputMode("append").format("memory")
-        .queryName(name).trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      spark.table(name).filter(col("event_type") =!= "__sentinel")
+      drainToMemory(agg, "append").filter(col("event_type") =!= "__sentinel")
     }
   }
 
@@ -795,43 +829,22 @@ object EventStream extends Serializable {
     val agg = stream
       .groupBy(md5(col("text")).as("content_hash"))
       .agg(min(col("doc_id")).as("keep_id"), count(lit(1)).as("n_copies"))
-    val name = s"graft_stream_dedup_${nameCounter.incrementAndGet()}"
-    val q = agg.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(name)
+    drainToMemory(agg, "complete")
   }
 
   /** X2 as a REAL streaming query: the action log is staged as one file
     * per arriving batch, consumed by a file-source stream one file per
-    * micro-batch (AvailableNow), and foreachBatch folds EdgeUpdates over
+    * micro-batch (AvailableNow), and each batch folds EdgeUpdates over
     * the edge state — the exact production shape for a Kafka/file feed of
-    * edge mutations maintaining a graph snapshot.
+    * edge mutations maintaining a graph snapshot. Ordered chunks fold to
+    * the one-shot batch update (associativity of last-action-wins).
     */
   def maintainGraphStream(spark: SparkSession, dir: String,
       batches: Int = IncrementalBatches): DataFrame = {
     val actions = EdgeUpdates.actionsFromEvents(spark, dir)
     val staging = stagedActionFeed(spark, dir, batches)
-    var state = maintainedBase(Graph.fromTpch(spark, dir)).edges
-    val stream = spark.readStream.schema(actions.schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(staging)
-    val q = stream.writeStream
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        state = mergeIngestBatch(state, batch, staging)
-          .filter(col("weight") > 0L)
-          .select(col("src"), col("dst"), col("weight"))
-          .localCheckpoint(true)
-      }
-      .start()
-    q.awaitTermination()
-    state
+    new EdgeFeed(spark, Graph.fromTpch(spark, dir), actions, batches,
+      Some(staging)).drain()(_ => ())
   }
 
   /** X6: INCREMENTAL degree maintenance over the streaming action feed —
@@ -863,42 +876,24 @@ object EventStream extends Serializable {
     val staging = stagedActionFeed(spark, dir, batches)
     // shared initial snapshot (edge checkpoint + degree table) — the
     // maintained graph serves every incremental analytic in the session
-    val mb = maintainedBase(Graph.fromTpch(spark, dir))
-    var edgeState = mb.edges
-    var degState = mb.deg.select(col("id"), col("deg").as("degree"))
-    val stream = spark.readStream.schema(actions.schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(staging)
-    val q = stream.writeStream
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        // ONE edge-state pass per batch: the update merge itself carries
-        // old-vs-new weight, so presence flips come out of the same scan —
-        // no separate before/after probes, no excepts. Two jobs per batch
-        // (merge checkpoint + degree-state checkpoint), each one scan.
-        val merged = mergeIngestBatch(edgeState, batch, staging)
-          .localCheckpoint(true)
-        edgeState = merged.filter(col("weight") > 0L)
-          .select(col("src"), col("dst"), col("weight"))
-        val flipsD = merged
-          .filter((col("weight_old") > 0L) =!= (col("weight") > 0L))
-          .select(least(col("src"), col("dst")).as("a"),
-            greatest(col("src"), col("dst")).as("b"),
-            when(col("weight") > 0L, lit(1L)).otherwise(lit(-1L)).as("d"))
-        val vertexDeltas = flipsD.select(
-            explode(when(col("a") === col("b"), array(col("a")))
-              .otherwise(array(col("a"), col("b")))).as("id"), col("d"))
-          .groupBy(col("id")).agg(sum(col("d")).as("delta"))
-        degState = degState.join(vertexDeltas, Seq("id"), "full_outer")
-          .select(col("id"),
-            (coalesce(col("degree"), lit(0L)) +
-              coalesce(col("delta"), lit(0L))).as("degree"))
-          .filter(col("degree") > 0L)
-          .localCheckpoint(true)
-      }
-      .start()
-    q.awaitTermination()
+    val feed = new EdgeFeed(spark, Graph.fromTpch(spark, dir), actions,
+      batches, Some(staging))
+    var degState = feed.mb.deg.select(col("id"), col("deg").as("degree"))
+    // two jobs per batch (merge checkpoint + degree-state checkpoint),
+    // each one scan: the flips come out of the merge itself
+    feed.drain() { eb =>
+      val vertexDeltas = eb.canonFlips.select(
+          explode(when(col("a") === col("b"), array(col("a")))
+            .otherwise(array(col("a"), col("b")))).as("id"),
+          when(col("on"), lit(1L)).otherwise(lit(-1L)).as("d"))
+        .groupBy(col("id")).agg(sum(col("d")).as("delta"))
+      degState = degState.join(vertexDeltas, Seq("id"), "full_outer")
+        .select(col("id"),
+          (coalesce(col("degree"), lit(0L)) +
+            coalesce(col("delta"), lit(0L))).as("degree"))
+        .filter(col("degree") > 0L)
+        .localCheckpoint(true)
+    }
     degState
   }
 
@@ -968,20 +963,10 @@ object EventStream extends Serializable {
       stagedDir: Option[String] = None,
       drainBase: Option[() => Graph] = None)
       : DataFrame = {
-    val staging = stagedDir.getOrElse(
-      stageByChunks(actions, "action_id", batches))
-    var edgeState = maintainedBase(base).edges
+    val feed = new EdgeFeed(spark, base, actions, batches, stagedDir)
     // initial labels: the one full CC (the stream starts from an existing
     // graph snapshot, as a production pipeline would)
-    def t[A](tag: String)(f: => A): A = {
-      val t0 = System.nanoTime()
-      val r = f
-      System.err.println(f"[xcc] $tag ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      r
-    }
-    var labels = t("initial-cc") {
-      graft.graph.ConnectedComponents(base).localCheckpoint(true)
-    }
+    var labels = graft.graph.ConnectedComponents(base).localCheckpoint(true)
     // endpoints of presence-flipping deletions, pending the next repair
     // (vertex ids, not component ids: later merges may rename components)
     val noDirty = spark.emptyDataFrame.select(lit(0L).as("id")).limit(0)
@@ -991,9 +976,8 @@ object EventStream extends Serializable {
     // subgraph ONLY, fold the fresh labels over the clean remainder, clear
     // the dirty set. Runs once at drain by default; per delete-batch when
     // eagerSplitRepair is on (then labels are exact after every batch).
-    def repairDirty(tag: String,
-        finalGraph: Option[() => Graph] = None): Unit =
-      if (dirtyVerts.limit(1).count() > 0) t(tag) {
+    def repairDirty(finalGraph: Option[() => Graph] = None): Unit =
+      if (dirtyVerts.limit(1).count() > 0) {
         val dirtyComps = labels
           .join(dirtyVerts, Seq("id"), "left_semi")
           .select(col("component")).distinct().localCheckpoint(true)
@@ -1018,7 +1002,7 @@ object EventStream extends Serializable {
           dirtyVerts = noDirty
         } else {
           val lsrc = labels.select(col("id").as("src"), col("component"))
-          val sub = edgeState.select(col("src"), col("dst"))
+          val sub = feed.edges.select(col("src"), col("dst"))
             .join(lsrc, "src")
             .join(dirtyComps, Seq("component"), "left_semi")
             .select(col("src"), col("dst"))
@@ -1031,7 +1015,7 @@ object EventStream extends Serializable {
             m("repairs") = m.getOrElse("repairs", 0L) + 1L
             m("dirtyComps") = m.getOrElse("dirtyComps", 0L) + dirtyComps.count()
             m("subEdges") = m.getOrElse("subEdges", 0L) + sub.count()
-            m("totalEdges") = m.getOrElse("totalEdges", 0L) + edgeState.count()
+            m("totalEdges") = m.getOrElse("totalEdges", 0L) + feed.edges.count()
           }
           val fresh = graft.graph.ConnectedComponents(sg)
           val clean = labels.join(dirtyComps, Seq("component"), "left_anti")
@@ -1042,95 +1026,76 @@ object EventStream extends Serializable {
           dirtyVerts = noDirty
         }
       }
-    val stream = spark.readStream.schema(actions.schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(staging)
-    val q = stream.writeStream
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) => t("batch") {
-        // ONE edge-state pass per batch: the update merge carries old-vs-new
-        // weight, and its presence flips are exactly incremental CC's
-        // events — pairs flipping ON are the only possible merges (an
-        // already-present pair's endpoints are already connected, so a
-        // surviving insert on a present pair changes nothing), pairs
-        // flipping OFF the only possible splits (an insert-then-delete
-        // within one batch never flips, so it neither merges nor schedules
-        // a repair — last-action-wins is resolved inside the merge). No
-        // before/after probes, no separate insert-survivor probe.
-        val merged = mergeIngestBatch(edgeState, batch, staging)
-          .localCheckpoint(true)
-        edgeState = merged.filter(col("weight") > 0L)
-          .select(col("src"), col("dst"), col("weight"))
-        val flippedOff = merged
-          .filter(col("weight_old") > 0L && col("weight") === 0L)
-        dirtyVerts = dirtyVerts
-          .union(flippedOff.select(col("src").as("id")))
-          .union(flippedOff.select(col("dst").as("id")))
-          .distinct().localCheckpoint(true)
-        // pairs that flipped ON — batch-bounded by construction (a flip
-        // needs a batch action on its pair), lazily re-read from the merge
-        // checkpoint; broadcast into the contraction joins below
-        val ins = merged.filter(col("weight_old") === 0L && col("weight") > 0L)
-          .select(least(col("src"), col("dst")).as("a"),
-            greatest(col("src"), col("dst")).as("b"))
-        val endpoints = ins.select(explode(array(col("a"), col("b"))).as("id"))
-          .distinct()
-        val newVerts = endpoints.join(labels, Seq("id"), "left_anti")
-          .select(col("id"), col("id").as("component"))
-        val labeled = labels.union(newVerts)
-        val la = labeled.select(col("id").as("a"), col("component").as("ca"))
-        val lb = labeled.select(col("id").as("b"), col("component").as("cb"))
-        // build side = the broadcast batch pairs; the |V|-row label table
-        // streams through both joins without an exchange
-        val contracted = broadcast(broadcast(ins).join(la, "a")).join(lb, "b")
-          .select(col("ca").as("src"), col("cb").as("dst"))
-          .filter(col("src") =!= col("dst"))
-          .collect()
-        // merge map via driver-side union-find on the CONTRACTED edge list
-        // — bounded by batch size (never corpus size) by construction, so
-        // collecting it is the scale-right move: a distributed CC loop here
-        // costs several barrier jobs per micro-batch for a graph of a few
-        // hundred nodes. Union-by-min keeps the min-label invariant
-        // (component id = min vertex id), so merged labels stay exact.
-        // `labeled` stays lazy until the merge map is known, so the
-        // new-vertex union and the merge join land in ONE checkpoint job.
-        if (contracted.isEmpty) labels = labeled.localCheckpoint(true)
-        else {
-          val parent = scala.collection.mutable.Map.empty[Long, Long]
-          def find(x: Long): Long = {
-            var r = x
-            while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
-            var c = x
-            while (parent.getOrElse(c, c) != c) {
-              val n = parent(c); parent(c) = r; c = n
-            }
-            r
+    val edgeState = feed.drain() { eb =>
+      // the merge's presence flips are exactly incremental CC's events —
+      // pairs flipping ON are the only possible merges (an already-present
+      // pair's endpoints are already connected, so a surviving insert on a
+      // present pair changes nothing), pairs flipping OFF the only
+      // possible splits. No before/after probes, no separate
+      // insert-survivor probe.
+      val flippedOff = eb.flips.filter(!col("on"))
+      dirtyVerts = dirtyVerts
+        .union(flippedOff.select(col("src").as("id")))
+        .union(flippedOff.select(col("dst").as("id")))
+        .distinct().localCheckpoint(true)
+      // pairs that flipped ON — batch-bounded by construction (a flip
+      // needs a batch action on its pair), lazily re-read from the merge
+      // checkpoint; broadcast into the contraction joins below
+      val ins = eb.canonFlips.filter(col("on")).select(col("a"), col("b"))
+      val endpoints = ins.select(explode(array(col("a"), col("b"))).as("id"))
+        .distinct()
+      val newVerts = endpoints.join(labels, Seq("id"), "left_anti")
+        .select(col("id"), col("id").as("component"))
+      val labeled = labels.union(newVerts)
+      val la = labeled.select(col("id").as("a"), col("component").as("ca"))
+      val lb = labeled.select(col("id").as("b"), col("component").as("cb"))
+      // build side = the broadcast batch pairs; the |V|-row label table
+      // streams through both joins without an exchange
+      val contracted = broadcast(broadcast(ins).join(la, "a")).join(lb, "b")
+        .select(col("ca").as("src"), col("cb").as("dst"))
+        .filter(col("src") =!= col("dst"))
+        .collect()
+      // merge map via driver-side union-find on the CONTRACTED edge list
+      // — bounded by batch size (never corpus size) by construction, so
+      // collecting it is the scale-right move: a distributed CC loop here
+      // costs several barrier jobs per micro-batch for a graph of a few
+      // hundred nodes. Union-by-min keeps the min-label invariant
+      // (component id = min vertex id), so merged labels stay exact.
+      // `labeled` stays lazy until the merge map is known, so the
+      // new-vertex union and the merge join land in ONE checkpoint job.
+      if (contracted.isEmpty) labels = labeled.localCheckpoint(true)
+      else {
+        val parent = scala.collection.mutable.Map.empty[Long, Long]
+        def find(x: Long): Long = {
+          var r = x
+          while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
+          var c = x
+          while (parent.getOrElse(c, c) != c) {
+            val n = parent(c); parent(c) = r; c = n
           }
-          contracted.foreach { row =>
-            val (ra, rb) = (find(row.getLong(0)), find(row.getLong(1)))
-            if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-          }
-          val merges = parent.keys.map(k => k -> find(k))
-            .filter { case (k, r) => k != r }.toSeq
-          val spark = batch.sparkSession
-          import spark.implicits._
-          val mergeDf = merges.toDF("component", "merged")
-          labels = labeled.join(broadcast(mergeDf), Seq("component"), "left")
-            .select(col("id"),
-              coalesce(col("merged"), col("component")).as("component"))
-            .localCheckpoint(true)
+          r
         }
-        // online mode: splits repaired INSIDE the delete-batch — labels
-        // leave every batch exact (the drain call below becomes a no-op)
-        if (eagerSplitRepair) repairDirty("batch-repair")
-        midStreamLabels.foreach(_ += ((labels, edgeState)))
-      }}
-      .start()
-    q.awaitTermination()
+        contracted.foreach { row =>
+          val (ra, rb) = (find(row.getLong(0)), find(row.getLong(1)))
+          if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+        }
+        val merges = parent.keys.map(k => k -> find(k))
+          .filter { case (k, r) => k != r }.toSeq
+        import spark.implicits._
+        val mergeDf = merges.toDF("component", "merged")
+        labels = labeled.join(broadcast(mergeDf), Seq("component"), "left")
+          .select(col("id"),
+            coalesce(col("merged"), col("component")).as("component"))
+          .localCheckpoint(true)
+      }
+      // online mode: splits repaired INSIDE the delete-batch — labels
+      // leave every batch exact (the drain call below becomes a no-op)
+      if (eagerSplitRepair) repairDirty()
+      midStreamLabels.foreach(_ += ((labels, feed.edges)))
+    }
     // drain: one split-repair pass over the dirty components' subgraph
     // (already-clean when eagerSplitRepair handled it per batch)
-    repairDirty("drain-repair", finalGraph = drainBase)
+    repairDirty(finalGraph = drainBase)
     // vertices isolated by deletion carry no edge: match batch-CC's vertex
     // set (components over the updated edge list)
     val present = edgeState.select(col("src").as("id"))
@@ -1179,30 +1144,21 @@ object EventStream extends Serializable {
     var bandState = Seq.empty[(Long, Int, Long)]
       .toDF("doc_id", "band", "bsig").localCheckpoint(true)
     var candParts = List.empty[DataFrame]
-    val stream = spark.readStream.schema(docs.schema)
-      .option("maxFilesPerTrigger", "1").parquet(staging)
-    val q = stream.writeStream
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val bt0 = System.nanoTime()
-        val nb = Dedup.bandTable(Dedup.signatures(batch))
-          .localCheckpoint(true)
-        // cross-batch: new bands probe the accumulated index (the index
-        // side is the big one at steady state — scanned, never widened
-        // nor rewritten)
-        val cross = nb.as("n").join(bandState.as("s"),
-            col("n.band") === col("s.band") &&
-              col("n.bsig") === col("s.bsig"))
-          .select(least(col("n.doc_id"), col("s.doc_id")).as("id_a"),
-            greatest(col("n.doc_id"), col("s.doc_id")).as("id_b"))
-        val within = Dedup.candidatePairs(nb)
-        candParts ::= cross.union(within).localCheckpoint(true)
-        bandState = bandState.union(fresh(nb))
-        batchSecs.foreach(_ += (System.nanoTime() - bt0) / 1e9)
-      }
-      .start()
-    q.awaitTermination()
+    drainStaged(spark, docs.schema, staging, batchSecs) { batch =>
+      val nb = Dedup.bandTable(Dedup.signatures(batch))
+        .localCheckpoint(true)
+      // cross-batch: new bands probe the accumulated index (the index
+      // side is the big one at steady state — scanned, never widened
+      // nor rewritten)
+      val cross = nb.as("n").join(bandState.as("s"),
+          col("n.band") === col("s.band") &&
+            col("n.bsig") === col("s.bsig"))
+        .select(least(col("n.doc_id"), col("s.doc_id")).as("id_a"),
+          greatest(col("n.doc_id"), col("s.doc_id")).as("id_b"))
+      val within = Dedup.candidatePairs(nb)
+      candParts ::= cross.union(within).localCheckpoint(true)
+      bandState = bandState.union(fresh(nb))
+    }
     // drain: dedup the accumulated candidates once, then exact-verify —
     // same machinery, same size-gated broadcast as batch D3
     val cands = candParts.map(fresh).foldLeft(
@@ -1252,19 +1208,10 @@ object EventStream extends Serializable {
     def fresh(df: DataFrame): DataFrame =
       spark.createDataFrame(df.rdd, df.schema)
     var indexParts = List.empty[DataFrame]
-    val stream = spark.readStream.schema(e.schema)
-      .option("maxFilesPerTrigger", "1").parquet(staging)
-    val q = stream.writeStream
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val bt0 = System.nanoTime()
-        indexParts ::= Similarity.ivfAssign(centroids, batch)
-          .localCheckpoint(true)
-        batchSecs.foreach(_ += (System.nanoTime() - bt0) / 1e9)
-      }
-      .start()
-    q.awaitTermination()
+    drainStaged(spark, e.schema, staging, batchSecs) { batch =>
+      indexParts ::= Similarity.ivfAssign(centroids, batch)
+        .localCheckpoint(true)
+    }
     val assigned = indexParts.map(fresh).foldLeft(
       Seq.empty[(Long, Seq[Double], Long)].toDF("vec_id", "v", "list_id"))(
       _.union(_))
@@ -1308,19 +1255,10 @@ object EventStream extends Serializable {
     def fresh(df: DataFrame): DataFrame =
       spark.createDataFrame(df.rdd, df.schema)
     var indexParts = List.empty[DataFrame]
-    val stream = spark.readStream.schema(e.schema)
-      .option("maxFilesPerTrigger", "1").parquet(staging)
-    val q = stream.writeStream
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val bt0 = System.nanoTime()
-        indexParts ::= Similarity.ivfPqEncode(coarse, books,
-          Similarity.unitize(batch)).localCheckpoint(true)
-        batchSecs.foreach(_ += (System.nanoTime() - bt0) / 1e9)
-      }
-      .start()
-    q.awaitTermination()
+    drainStaged(spark, e.schema, staging, batchSecs) { batch =>
+      indexParts ::= Similarity.ivfPqEncode(coarse, books,
+        Similarity.unitize(batch)).localCheckpoint(true)
+    }
     require(indexParts.nonEmpty, "annIvfPqStream: no batches arrived")
     val codes = indexParts.map(fresh).reduce(_.union(_))
     Similarity.ivfPqSearchFrom(codes, spark, dir, coarse, books,
@@ -1393,37 +1331,28 @@ object EventStream extends Serializable {
     var linkParts = List.empty[DataFrame]
     val wk = org.apache.spark.sql.expressions.Window
       .partitionBy(col("node")).orderBy(col("c").desc, col("nbr").asc)
-    val stream = spark.readStream.schema(e.schema)
-      .option("maxFilesPerTrigger", "1").parquet(staging)
-    val q = stream.writeStream
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val bt0 = System.nanoTime()
-        val assigned = Similarity.ivfAssign(centroids, batch)
-          .select(col("list_id"), col("vec_id").as("node"),
-            col("v").as("nv"))
-          .localCheckpoint(true)
-        val mates = memberState.union(assigned)
-          .select(col("list_id"), col("node").as("nbr"), col("nv").as("bv"))
-        val knn = assigned.join(mates, Seq("list_id"))
-          .filter(col("node") =!= col("nbr"))
-          .select(col("node"), col("nbr"),
-            Similarity.cosine(col("nv"), col("bv")).as("c"))
-          .withColumn("r", row_number().over(wk)).filter(col("r") <= m)
-          .select(col("node"), col("nbr"))
-        val ids = assigned.select(col("node"))
-        val chain = ids.filter(col("node") >= 1L)
-          .select((col("node") - 1L).as("node"), col("node").as("nbr"))
-        val jump = ids.filter(col("node") >= 2L && col("node") % 2 === 0)
-          .select((col("node") / 2L).cast("long").as("node"),
-            col("node").as("nbr"))
-        linkParts ::= knn.union(chain).union(jump).localCheckpoint(true)
-        memberState = memberState.union(fresh(assigned))
-        batchSecs.foreach(_ += (System.nanoTime() - bt0) / 1e9)
-      }
-      .start()
-    q.awaitTermination()
+    drainStaged(spark, e.schema, staging, batchSecs) { batch =>
+      val assigned = Similarity.ivfAssign(centroids, batch)
+        .select(col("list_id"), col("vec_id").as("node"),
+          col("v").as("nv"))
+        .localCheckpoint(true)
+      val mates = memberState.union(assigned)
+        .select(col("list_id"), col("node").as("nbr"), col("nv").as("bv"))
+      val knn = assigned.join(mates, Seq("list_id"))
+        .filter(col("node") =!= col("nbr"))
+        .select(col("node"), col("nbr"),
+          Similarity.cosine(col("nv"), col("bv")).as("c"))
+        .withColumn("r", row_number().over(wk)).filter(col("r") <= m)
+        .select(col("node"), col("nbr"))
+      val ids = assigned.select(col("node"))
+      val chain = ids.filter(col("node") >= 1L)
+        .select((col("node") - 1L).as("node"), col("node").as("nbr"))
+      val jump = ids.filter(col("node") >= 2L && col("node") % 2 === 0)
+        .select((col("node") / 2L).cast("long").as("node"),
+          col("node").as("nbr"))
+      linkParts ::= knn.union(chain).union(jump).localCheckpoint(true)
+      memberState = memberState.union(fresh(assigned))
+    }
     require(linkParts.nonEmpty, "annGraphStream: no batches arrived")
     val directed = linkParts.map(fresh).reduce(_.union(_))
     val links = directed
@@ -1485,13 +1414,11 @@ object EventStream extends Serializable {
       stagedDir: Option[String] = None): DataFrame = {
     def bc(df: DataFrame) = if (broadcastVertices) broadcast(df) else df
     val d = graft.graph.PageRank.Damping
-    val staging = stagedDir.getOrElse(
-      stageByChunks(actions, "action_id", batches))
     // shared initial snapshot: edge checkpoint, symmetrized pair view,
     // degree state, |V| (dense-regime cutoff scalar) — maintained under
     // flips by REBINDING, never by mutating the shared frames
-    val mb = maintainedBase(base)
-    var edgeState = mb.edges
+    val feed = new EdgeFeed(spark, base, actions, batches, stagedDir)
+    val mb = feed.mb
     var und = mb.und
     var degState = mb.deg
     val nvBase = mb.nv.toDouble
@@ -1536,69 +1463,41 @@ object EventStream extends Serializable {
           .localCheckpoint(eager = k == iterations)
       }
     recomputeAllLevels()
-    val stream = spark.readStream.schema(actions.schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(staging)
-    val q = stream.writeStream
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val tBatch0 = System.nanoTime()
-        // ONE edge-state pass: presence flips out of the same merge the
-        // other incremental maintainers read. LAZY: the nAff count below
-        // is the batch's one early materializing job — it persists the
-        // merge and the dSet checkpoint in the same pass instead of
-        // paying three eager barriers (r8 streaming-floor pass)
-        val merged = mergeIngestBatch(edgeState, batch, staging)
-          .localCheckpoint(eager = false)
-        edgeState = merged.filter(col("weight") > 0L)
-          .select(col("src"), col("dst"), col("weight"))
-        // lazy: every use is a narrow scan of the checkpointed merge —
-        // cheaper than paying another checkpoint barrier for a tiny set
-        val flips = merged
-          .filter((col("weight_old") > 0L) =!= (col("weight") > 0L))
-          .select(least(col("src"), col("dst")).as("a"),
-            greatest(col("src"), col("dst")).as("b"),
-            (col("weight") > 0L).as("on"))
-        // both directions of each flipped pair (self-pairs once)
-        val flips2 = flips.select(explode(when(col("a") === col("b"),
-            array(struct(col("a").as("src"), col("b").as("dst"))))
-          .otherwise(array(
-            struct(col("a").as("src"), col("b").as("dst")),
-            struct(col("b").as("src"), col("a").as("dst"))))).as("e"),
-          col("on"))
-          .select(col("e.src"), col("e.dst"), col("on"))
-        val off2 = flips2.filter(!col("on")).select(col("src"), col("dst"))
-        val on2 = flips2.filter(col("on")).select(col("src"), col("dst"))
-        // lazy checkpoint: persists inside degState's materializing job —
-        // one barrier for the edge view + degree merge, not two
-        und = und.join(bc(off2), Seq("src", "dst"), "left_anti")
-          .union(on2).localCheckpoint(eager = false)
-        // degree-changed set D = flip endpoints; recompute their degrees
-        // against the updated pair view (vertices isolated by deletes
-        // simply lose their degree row, and with it their rank rows)
-        val dSet = flips
-          .select(explode(when(col("a") === col("b"), array(col("a")))
-            .otherwise(array(col("a"), col("b")))).as("id"))
-          .distinct().localCheckpoint(eager = false)
-        val degD = und
-          .join(bc(dSet.select(col("id").as("did"))),
-            col("src") === col("did"))
-          .groupBy(col("src").as("id")).agg(count(lit(1)).as("deg"))
-        // lazy: materialized inside the level job below (every level view
-        // reads the degree state), like und above
-        degState = degState
-          .join(dSet, Seq("id"), "left_anti")
-          .union(degD).localCheckpoint(eager = false)
-        // regime pick per batch (the CC loop's dense/tail switch): an
-        // ingest-sized batch recomputes only A_k = D ∪ N(A_{k-1}) rows
-        // folded into per-level overlays; a batch whose change set is
-        // already a large fraction of |V| (this demo feed) recomputes all
-        // levels outright — the overlay bookkeeping would only add work
-        val nAff = dSet.count()
-        if (nAff == 0) { /* no presence flips: every level stands */ }
-        else if (nAff > denseCutoff * nvBase) recomputeAllLevels()
-        else {
+    // LAZY merge: the nAff count below is the batch's one early
+    // materializing job — it persists the merge and the dSet checkpoint in
+    // the same pass instead of paying three eager barriers
+    feed.drain(eagerMerge = false, batchSecs) { eb =>
+      // lazy: every use is a narrow scan of the checkpointed merge —
+      // cheaper than paying another checkpoint barrier for a tiny set
+      val flips = eb.canonFlips
+      // lazy checkpoint: persists inside degState's materializing job —
+      // one barrier for the edge view + degree merge, not two
+      und = eb.undAfter(und, flips, bc)._1
+      // degree-changed set D = flip endpoints; recompute their degrees
+      // against the updated pair view (vertices isolated by deletes
+      // simply lose their degree row, and with it their rank rows)
+      val dSet = flips
+        .select(explode(when(col("a") === col("b"), array(col("a")))
+          .otherwise(array(col("a"), col("b")))).as("id"))
+        .distinct().localCheckpoint(eager = false)
+      val degD = und
+        .join(bc(dSet.select(col("id").as("did"))),
+          col("src") === col("did"))
+        .groupBy(col("src").as("id")).agg(count(lit(1)).as("deg"))
+      // lazy: materialized inside the level job below (every level view
+      // reads the degree state), like und above
+      degState = degState
+        .join(dSet, Seq("id"), "left_anti")
+        .union(degD).localCheckpoint(eager = false)
+      // regime pick per batch (the CC loop's dense/tail switch): an
+      // ingest-sized batch recomputes only A_k = D ∪ N(A_{k-1}) rows
+      // folded into per-level overlays; a batch whose change set is
+      // already a large fraction of |V| (this demo feed) recomputes all
+      // levels outright — the overlay bookkeeping would only add work
+      val nAff = dSet.count()
+      if (nAff == 0) { /* no presence flips: every level stands */ }
+      else if (nAff > denseCutoff * nvBase) recomputeAllLevels()
+      else {
         // level k recompute on A_k = D UNION N(A_{k-1}): full neighborhood
         // sums for affected rows only, folded into the level OVERLAY —
         // never a |V|-row write (vertices isolated by deletes land in
@@ -1638,11 +1537,8 @@ object EventStream extends Serializable {
           .flatMap(k => Seq(overlays(k), touched(k)))
           .map(_.select(lit(1L).as("one")))
           .reduce(_ union _).count()
-        }
-        batchSecs.foreach(_ += (System.nanoTime() - tBatch0) / 1e9)
       }
-      .start()
-    q.awaitTermination()
+    }
     val nv = degState.count().toDouble
     lvlView(iterations).select(col("id"),
       round(col("s") / lit(nv), 8).as("pr"))
@@ -1701,13 +1597,10 @@ object EventStream extends Serializable {
       stagedDir: Option[String] = None,
       drainBase: Option[() => Graph] = None): DataFrame = {
     def bc(df: DataFrame) = if (broadcastState) broadcast(df) else df
-    val staging = stagedDir.getOrElse(
-      stageByChunks(actions, "action_id", batches))
     // shared initial snapshot (X15's und); memoized graphs also reuse the
     // session's converged BFS distances instead of re-running it
-    val mb = maintainedBase(base)
-    var edgeState = mb.edges
-    var und = mb.und
+    val feed = new EdgeFeed(spark, base, actions, batches, stagedDir)
+    var und = feed.mb.und
     val srcRow = und.agg(min(col("src"))).head()
     var source = if (srcRow.isNullAt(0)) Long.MaxValue else srcRow.getLong(0)
     var dist =
@@ -1719,96 +1612,69 @@ object EventStream extends Serializable {
         if (base.memoizeAnalytics) d0 else d0.localCheckpoint(true)
       }
     var dirty = false
-    val stream = spark.readStream.schema(actions.schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(staging)
-    val q = stream.writeStream
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        // ONE edge-state pass: the same single-pass flips X6/X7/X15 read
-        val merged = mergeIngestBatch(edgeState, batch, staging)
-          .localCheckpoint(true)
-        edgeState = merged.filter(col("weight") > 0L)
-          .select(col("src"), col("dst"), col("weight"))
-        val flips = merged
-          .filter((col("weight_old") > 0L) =!= (col("weight") > 0L))
-          .select(least(col("src"), col("dst")).as("a"),
-            greatest(col("src"), col("dst")).as("b"),
-            (col("weight") > 0L).as("on"))
-          .localCheckpoint(true)
-        val flips2 = flips.select(explode(when(col("a") === col("b"),
-            array(struct(col("a").as("src"), col("b").as("dst"))))
-          .otherwise(array(
-            struct(col("a").as("src"), col("b").as("dst")),
-            struct(col("b").as("src"), col("a").as("dst"))))).as("e"),
-          col("on"))
-          .select(col("e.src"), col("e.dst"), col("on"))
-        val off2 = flips2.filter(!col("on")).select(col("src"), col("dst"))
-        val on2 = flips2.filter(col("on")).select(col("src"), col("dst"))
-        // LAZY: materializes inside the first relax-round job that reads
-        // it (or not at all once dirty — the drain reads edgeState only);
-        // an eager barrier here bought nothing (r8 streaming-floor pass)
-        und = und.join(bc(off2), Seq("src", "dst"), "left_anti")
-          .union(on2).localCheckpoint(eager = false)
-        // ONE scalar job folds both dirty probes over the tiny flip set
-        // (was two — r8 streaming-floor pass): (1) a delete on a possible
-        // shortest-path edge — both endpoints reached AND level-crossing
-        // (|da − db| = 1); (2) the smallest inserted endpoint (a new
-        // minimum vertex id moves the source). Once dirty, neither probe
-        // matters — the drain re-derives its own source from the final
-        // graph — so the job is skipped outright.
-        if (!dirty) {
-          val da = dist.select(col("id").as("a"), col("dist").as("dda"))
-          val db = dist.select(col("id").as("b"), col("dist").as("ddb"))
-          val probe = flips
-            .join(bc(da), Seq("a"), "left").join(bc(db), Seq("b"), "left")
-            .agg(
-              max(!col("on") && abs(col("dda") - col("ddb")) === 1L)
-                .as("path_delete"),
-              min(when(col("on"), least(col("a"), col("b")))).as("min_on"))
-            .head()
-          dirty = !probe.isNullAt(0) && probe.getBoolean(0)
-          if (!probe.isNullAt(1) && probe.getLong(1) < source) {
-            source = probe.getLong(1)
-            dirty = true
-          }
+    val edgeState = feed.drain() { eb =>
+      val flips = eb.canonFlips.localCheckpoint(true)
+      // LAZY: materializes inside the first relax-round job that reads
+      // it (or not at all once dirty — the drain reads the edge state
+      // only); an eager barrier here bought nothing
+      val (undNext, on2) = eb.undAfter(und, flips, bc)
+      und = undNext
+      // ONE scalar job folds both dirty probes over the tiny flip set
+      // (was two — r8 streaming-floor pass): (1) a delete on a possible
+      // shortest-path edge — both endpoints reached AND level-crossing
+      // (|da − db| = 1); (2) the smallest inserted endpoint (a new
+      // minimum vertex id moves the source). Once dirty, neither probe
+      // matters — the drain re-derives its own source from the final
+      // graph — so the job is skipped outright.
+      if (!dirty) {
+        val da = dist.select(col("id").as("a"), col("dist").as("dda"))
+        val db = dist.select(col("id").as("b"), col("dist").as("ddb"))
+        val probe = flips
+          .join(bc(da), Seq("a"), "left").join(bc(db), Seq("b"), "left")
+          .agg(
+            max(!col("on") && abs(col("dda") - col("ddb")) === 1L)
+              .as("path_delete"),
+            min(when(col("on"), least(col("a"), col("b")))).as("min_on"))
+          .head()
+        dirty = !probe.isNullAt(0) && probe.getBoolean(0)
+        if (!probe.isNullAt(1) && probe.getLong(1) < source) {
+          source = probe.getLong(1)
+          dirty = true
         }
-        if (!dirty) {
-          // eager insert relaxation: seed candidates from flip-ON pairs
-          // whose other endpoint is reached, then frontier-relax forward
-          val dd = dist.select(col("id").as("rid"), col("dist").as("rd"))
-          var frontier = on2
-            .join(bc(dd), col("src") === col("rid"))
-            .select(col("dst").as("id"), (col("rd") + 1L).as("nd"))
+      }
+      if (!dirty) {
+        // eager insert relaxation: seed candidates from flip-ON pairs
+        // whose other endpoint is reached, then frontier-relax forward
+        val dd = dist.select(col("id").as("rid"), col("dist").as("rd"))
+        var frontier = on2
+          .join(bc(dd), col("src") === col("rid"))
+          .select(col("dst").as("id"), (col("rd") + 1L).as("nd"))
+          .groupBy(col("id")).agg(min(col("nd")).as("nd"))
+          .join(bc(dist.withColumnRenamed("dist", "old")), Seq("id"), "left")
+          .filter(col("old").isNull || col("nd") < col("old"))
+          .select(col("id"), col("nd").as("dist"))
+          .localCheckpoint(true)
+        var guard = 0
+        while (frontier.limit(1).count() > 0 && guard < 10000) {
+          guard += 1
+          dist = dist
+            .join(bc(frontier.select(col("id").as("fid"))),
+              col("id") === col("fid"), "left_anti")
+            .union(frontier).localCheckpoint(true)
+          frontier = und
+            .join(bc(frontier.select(col("id").as("fid"),
+                col("dist").as("fd"))),
+              col("src") === col("fid"))
+            .select(col("dst").as("id"), (col("fd") + 1L).as("nd"))
             .groupBy(col("id")).agg(min(col("nd")).as("nd"))
-            .join(bc(dist.withColumnRenamed("dist", "old")), Seq("id"), "left")
+            .join(bc(dist.withColumnRenamed("dist", "old")),
+              Seq("id"), "left")
             .filter(col("old").isNull || col("nd") < col("old"))
             .select(col("id"), col("nd").as("dist"))
             .localCheckpoint(true)
-          var guard = 0
-          while (frontier.limit(1).count() > 0 && guard < 10000) {
-            guard += 1
-            dist = dist
-              .join(bc(frontier.select(col("id").as("fid"))),
-                col("id") === col("fid"), "left_anti")
-              .union(frontier).localCheckpoint(true)
-            frontier = und
-              .join(bc(frontier.select(col("id").as("fid"),
-                  col("dist").as("fd"))),
-                col("src") === col("fid"))
-              .select(col("dst").as("id"), (col("fd") + 1L).as("nd"))
-              .groupBy(col("id")).agg(min(col("nd")).as("nd"))
-              .join(bc(dist.withColumnRenamed("dist", "old")),
-                Seq("id"), "left")
-              .filter(col("old").isNull || col("nd") < col("old"))
-              .select(col("id"), col("nd").as("dist"))
-              .localCheckpoint(true)
-          }
         }
       }
-      .start()
-    q.awaitTermination()
+    }
     if (dirty) {
       // one repair pass: BFS from the final graph's source (X7's drain
       // shape — the updated graph's min vertex, matching G10d exactly)
@@ -1869,12 +1735,10 @@ object EventStream extends Serializable {
       stagedDir: Option[String] = None,
       drainBase: Option[() => Graph] = None): DataFrame = {
     def bc(df: DataFrame) = if (broadcastState) broadcast(df) else df
-    val staging = stagedDir.getOrElse(
-      stageByChunks(actions, "action_id", batches))
-    var edgeState = maintainedBase(base).edges
+    val feed = new EdgeFeed(spark, base, actions, batches, stagedDir)
     // weighted symmetrized view: lazy over the checkpointed pair state
     def wund = {
-      val e = edgeState.select(col("src"), col("dst"), col("weight"))
+      val e = feed.edges.select(col("src"), col("dst"), col("weight"))
       e.union(e.filter(col("src") =!= col("dst"))
         .select(col("dst").as("src"), col("src").as("dst"), col("weight")))
     }
@@ -1890,92 +1754,79 @@ object EventStream extends Serializable {
         if (base.memoizeAnalytics) d0 else d0.localCheckpoint(true)
       }
     var dirty = false
-    val stream = spark.readStream.schema(actions.schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(staging)
-    val q = stream.writeStream
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        // ONE edge-state pass: the same single-pass merge X6/X7/X15/X16
-        // read; `changed` = presence flips OR weight changes (an insert
-        // on an existing pair INCREMENTS its weight — a lengthening)
-        val merged = mergeIngestBatch(edgeState, batch, staging)
-          .localCheckpoint(true)
-        edgeState = merged.filter(col("weight") > 0L)
-          .select(col("src"), col("dst"), col("weight"))
-        val changed = merged.filter(
-          ((col("weight_old") > 0L) =!= (col("weight") > 0L)) ||
-          (col("weight") > 0L && col("weight") =!= col("weight_old")))
-        // ONE scalar job folds both dirty probes over the tiny changed set
-        // (was two — r8 streaming-floor pass); skipped outright once
-        // dirty (the drain re-derives its own source): (1) a lengthening
-        // with a TIGHT old weight — both endpoints reached and the old
-        // weight exactly on a shortest path (the weighted analog of X16's
-        // level-crossing test); (2) the smallest surviving endpoint (a
-        // new minimum vertex id moves the source)
-        if (!dirty) {
-          val da = dist.select(col("id").as("src"), col("dist").as("dda"))
-          val db = dist.select(col("id").as("dst"), col("dist").as("ddb"))
-          val probe = changed
-            .join(bc(da), Seq("src"), "left").join(bc(db), Seq("dst"), "left")
-            .agg(
-              max(col("weight_old") > 0L &&
-                  (col("weight") <= 0L || col("weight") > col("weight_old")) &&
-                  (col("dda") + col("weight_old") === col("ddb") ||
-                   col("ddb") + col("weight_old") === col("dda")))
-                .as("lengthened"),
-              min(when(col("weight") > 0L, least(col("src"), col("dst"))))
-                .as("min_on"))
-            .head()
-          dirty = !probe.isNullAt(0) && probe.getBoolean(0)
-          if (!probe.isNullAt(1) && probe.getLong(1) < source) {
-            source = probe.getLong(1)
-            dirty = true
-          }
+    val edgeState = feed.drain() { eb =>
+      // `changed` = presence flips OR weight changes (an insert on an
+      // existing pair INCREMENTS its weight — a lengthening)
+      val changed = eb.merged.filter(
+        ((col("weight_old") > 0L) =!= (col("weight") > 0L)) ||
+        (col("weight") > 0L && col("weight") =!= col("weight_old")))
+      // ONE scalar job folds both dirty probes over the tiny changed set
+      // (was two — r8 streaming-floor pass); skipped outright once
+      // dirty (the drain re-derives its own source): (1) a lengthening
+      // with a TIGHT old weight — both endpoints reached and the old
+      // weight exactly on a shortest path (the weighted analog of X16's
+      // level-crossing test); (2) the smallest surviving endpoint (a
+      // new minimum vertex id moves the source)
+      if (!dirty) {
+        val da = dist.select(col("id").as("src"), col("dist").as("dda"))
+        val db = dist.select(col("id").as("dst"), col("dist").as("ddb"))
+        val probe = changed
+          .join(bc(da), Seq("src"), "left").join(bc(db), Seq("dst"), "left")
+          .agg(
+            max(col("weight_old") > 0L &&
+                (col("weight") <= 0L || col("weight") > col("weight_old")) &&
+                (col("dda") + col("weight_old") === col("ddb") ||
+                 col("ddb") + col("weight_old") === col("dda")))
+              .as("lengthened"),
+            min(when(col("weight") > 0L, least(col("src"), col("dst"))))
+              .as("min_on"))
+          .head()
+        dirty = !probe.isNullAt(0) && probe.getBoolean(0)
+        if (!probe.isNullAt(1) && probe.getLong(1) < source) {
+          source = probe.getLong(1)
+          dirty = true
         }
-        if (!dirty) {
-          // eager relaxation: shortened pairs (new, or weight decreased)
-          // seed candidates from their reached endpoints, then the
-          // improved set frontier-relaxes forward (G6b's loop, bounded
-          // by the shrunk region)
-          val sh = changed.filter(col("weight") > 0L &&
-              (col("weight_old") <= 0L || col("weight") < col("weight_old")))
-            .select(col("src"), col("dst"), col("weight"))
-          val sh2 = sh.union(sh.filter(col("src") =!= col("dst"))
-            .select(col("dst").as("src"), col("src").as("dst"), col("weight")))
-          val dd = dist.select(col("id").as("rid"), col("dist").as("rd"))
-          var frontier = sh2
-            .join(bc(dd), col("src") === col("rid"))
-            .select(col("dst").as("id"), (col("rd") + col("weight")).as("nd"))
+      }
+      if (!dirty) {
+        // eager relaxation: shortened pairs (new, or weight decreased)
+        // seed candidates from their reached endpoints, then the
+        // improved set frontier-relaxes forward (G6b's loop, bounded
+        // by the shrunk region)
+        val sh = changed.filter(col("weight") > 0L &&
+            (col("weight_old") <= 0L || col("weight") < col("weight_old")))
+          .select(col("src"), col("dst"), col("weight"))
+        val sh2 = sh.union(sh.filter(col("src") =!= col("dst"))
+          .select(col("dst").as("src"), col("src").as("dst"), col("weight")))
+        val dd = dist.select(col("id").as("rid"), col("dist").as("rd"))
+        var frontier = sh2
+          .join(bc(dd), col("src") === col("rid"))
+          .select(col("dst").as("id"), (col("rd") + col("weight")).as("nd"))
+          .groupBy(col("id")).agg(min(col("nd")).as("nd"))
+          .join(bc(dist.withColumnRenamed("dist", "old")), Seq("id"), "left")
+          .filter(col("old").isNull || col("nd") < col("old"))
+          .select(col("id"), col("nd").as("dist"))
+          .localCheckpoint(true)
+        var guard = 0
+        while (frontier.limit(1).count() > 0 && guard < 10000) {
+          guard += 1
+          dist = dist
+            .join(bc(frontier.select(col("id").as("fid"))),
+              col("id") === col("fid"), "left_anti")
+            .union(frontier).localCheckpoint(true)
+          frontier = wund
+            .join(bc(frontier.select(col("id").as("fid"),
+                col("dist").as("fd"))),
+              col("src") === col("fid"))
+            .select(col("dst").as("id"), (col("fd") + col("weight")).as("nd"))
             .groupBy(col("id")).agg(min(col("nd")).as("nd"))
-            .join(bc(dist.withColumnRenamed("dist", "old")), Seq("id"), "left")
+            .join(bc(dist.withColumnRenamed("dist", "old")),
+              Seq("id"), "left")
             .filter(col("old").isNull || col("nd") < col("old"))
             .select(col("id"), col("nd").as("dist"))
             .localCheckpoint(true)
-          var guard = 0
-          while (frontier.limit(1).count() > 0 && guard < 10000) {
-            guard += 1
-            dist = dist
-              .join(bc(frontier.select(col("id").as("fid"))),
-                col("id") === col("fid"), "left_anti")
-              .union(frontier).localCheckpoint(true)
-            frontier = wund
-              .join(bc(frontier.select(col("id").as("fid"),
-                  col("dist").as("fd"))),
-                col("src") === col("fid"))
-              .select(col("dst").as("id"), (col("fd") + col("weight")).as("nd"))
-              .groupBy(col("id")).agg(min(col("nd")).as("nd"))
-              .join(bc(dist.withColumnRenamed("dist", "old")),
-                Seq("id"), "left")
-              .filter(col("old").isNull || col("nd") < col("old"))
-              .select(col("id"), col("nd").as("dist"))
-              .localCheckpoint(true)
-          }
         }
       }
-      .start()
-    q.awaitTermination()
+    }
     if (dirty) {
       // one repair pass: weighted SSSP from the final graph's source
       // (the updated graph's min vertex — G6b over G9, matching the
@@ -2044,11 +1895,8 @@ object EventStream extends Serializable {
       stagedDir: Option[String] = None,
       drainBase: Option[() => Graph] = None): DataFrame = {
     def bc(df: DataFrame) = if (broadcastState) broadcast(df) else df
-    val staging = stagedDir.getOrElse(
-      stageByChunks(actions, "action_id", batches))
-    val mb = maintainedBase(base)
-    var edgeState = mb.edges
-    var und = mb.und
+    val feed = new EdgeFeed(spark, base, actions, batches, stagedDir)
+    var und = feed.mb.und
     // driver-side landmark ids (k O(1)-sized rows, like G17's collect)
     val lms: Seq[Long] = und.select(col("src")).distinct()
       .orderBy(col("src")).limit(k).collect().map(_.getLong(0)).toSeq
@@ -2065,111 +1913,84 @@ object EventStream extends Serializable {
       }
     // an empty base can only gain landmarks — every insert changes the set
     var dirty = lms.isEmpty
-    val stream = spark.readStream.schema(actions.schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(staging)
-    val q = stream.writeStream
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        // ONE edge-state pass: the same single-pass flips X6/X7/X15/X16 read
-        val merged = mergeIngestBatch(edgeState, batch, staging)
+    val edgeState = feed.drain() { eb =>
+      val flips = eb.canonFlips.localCheckpoint(true)
+      // LAZY like X16's und: materializes inside the first relax-round
+      // job that reads it, or never once dirty (the drain reads edges)
+      val (undNext, on2) = eb.undAfter(und, flips, bc)
+      und = undNext
+      if (!dirty) {
+        // ONE scalar job folds all three dirty tests over the tiny flip
+        // set: (1) an ON endpoint with a NEW id below the k-th landmark
+        // (any existing id there is already a landmark; with fewer than
+        // k landmarks, ANY new id would join the set, so any ON flip
+        // with a non-landmark endpoint flags), (2) an OFF touching a
+        // landmark (conservative isolation flag), (3) an OFF that
+        // level-crosses for some landmark
+        val underK = lms.size < k
+        val da = dist.select(col("landmark"), col("id").as("a"),
+          col("dist").as("dda"))
+        val db = dist.select(col("landmark"), col("id").as("b"),
+          col("dist").as("ddb"))
+        val checks = flips
+          .join(bc(da), Seq("a"), "left")
+          .join(bc(db), Seq("landmark", "b"), "left")
+          .agg(
+            max(col("on") &&
+              ((lit(underK) || col("a") < maxLm) &&
+                 !col("a").isInCollection(lms) ||
+               (lit(underK) || col("b") < maxLm) &&
+                 !col("b").isInCollection(lms)))
+              .as("new_small_id"),
+            max(!col("on") &&
+              (col("a").isInCollection(lms) ||
+               col("b").isInCollection(lms))).as("off_landmark"),
+            max(!col("on") &&
+              abs(col("dda") - col("ddb")) === 1L).as("level_cross"))
+          .head()
+        dirty = (!checks.isNullAt(0) && checks.getBoolean(0)) ||
+          (!checks.isNullAt(1) && checks.getBoolean(1)) ||
+          (!checks.isNullAt(2) && checks.getBoolean(2))
+      }
+      if (!dirty) {
+        // eager insert relaxation, all landmarks fused: candidates from
+        // flip-ON pairs whose other endpoint is reached from l, then the
+        // improved (landmark, vertex) set frontier-relaxes forward
+        val dd = dist.select(col("landmark"), col("id").as("rid"),
+          col("dist").as("rd"))
+        var frontier = on2
+          .join(bc(dd), col("src") === col("rid"))
+          .select(col("landmark"), col("dst").as("id"),
+            (col("rd") + 1L).as("nd"))
+          .groupBy(col("landmark"), col("id")).agg(min(col("nd")).as("nd"))
+          .join(bc(dist.withColumnRenamed("dist", "old")),
+            Seq("landmark", "id"), "left")
+          .filter(col("old").isNull || col("nd") < col("old"))
+          .select(col("landmark"), col("id"), col("nd").as("dist"))
           .localCheckpoint(true)
-        edgeState = merged.filter(col("weight") > 0L)
-          .select(col("src"), col("dst"), col("weight"))
-        val flips = merged
-          .filter((col("weight_old") > 0L) =!= (col("weight") > 0L))
-          .select(least(col("src"), col("dst")).as("a"),
-            greatest(col("src"), col("dst")).as("b"),
-            (col("weight") > 0L).as("on"))
-          .localCheckpoint(true)
-        val flips2 = flips.select(explode(when(col("a") === col("b"),
-            array(struct(col("a").as("src"), col("b").as("dst"))))
-          .otherwise(array(
-            struct(col("a").as("src"), col("b").as("dst")),
-            struct(col("b").as("src"), col("a").as("dst"))))).as("e"),
-          col("on"))
-          .select(col("e.src"), col("e.dst"), col("on"))
-        val off2 = flips2.filter(!col("on")).select(col("src"), col("dst"))
-        val on2 = flips2.filter(col("on")).select(col("src"), col("dst"))
-        // LAZY like X16's und: materializes inside the first relax-round
-        // job that reads it, or never once dirty (drain reads edgeState)
-        und = und.join(bc(off2), Seq("src", "dst"), "left_anti")
-          .union(on2).localCheckpoint(eager = false)
-        if (!dirty) {
-          // ONE scalar job folds all three dirty tests over the tiny flip
-          // set: (1) an ON endpoint with a NEW id below the k-th landmark
-          // (any existing id there is already a landmark; with fewer than
-          // k landmarks, ANY new id would join the set, so any ON flip
-          // with a non-landmark endpoint flags), (2) an OFF touching a
-          // landmark (conservative isolation flag), (3) an OFF that
-          // level-crosses for some landmark
-          val underK = lms.size < k
-          val da = dist.select(col("landmark"), col("id").as("a"),
-            col("dist").as("dda"))
-          val db = dist.select(col("landmark"), col("id").as("b"),
-            col("dist").as("ddb"))
-          val checks = flips
-            .join(bc(da), Seq("a"), "left")
-            .join(bc(db), Seq("landmark", "b"), "left")
-            .agg(
-              max(col("on") &&
-                ((lit(underK) || col("a") < maxLm) &&
-                   !col("a").isInCollection(lms) ||
-                 (lit(underK) || col("b") < maxLm) &&
-                   !col("b").isInCollection(lms)))
-                .as("new_small_id"),
-              max(!col("on") &&
-                (col("a").isInCollection(lms) ||
-                 col("b").isInCollection(lms))).as("off_landmark"),
-              max(!col("on") &&
-                abs(col("dda") - col("ddb")) === 1L).as("level_cross"))
-            .head()
-          dirty = (!checks.isNullAt(0) && checks.getBoolean(0)) ||
-            (!checks.isNullAt(1) && checks.getBoolean(1)) ||
-            (!checks.isNullAt(2) && checks.getBoolean(2))
-        }
-        if (!dirty) {
-          // eager insert relaxation, all landmarks fused: candidates from
-          // flip-ON pairs whose other endpoint is reached from l, then the
-          // improved (landmark, vertex) set frontier-relaxes forward
-          val dd = dist.select(col("landmark"), col("id").as("rid"),
-            col("dist").as("rd"))
-          var frontier = on2
-            .join(bc(dd), col("src") === col("rid"))
+        var guard = 0
+        while (frontier.limit(1).count() > 0 && guard < 10000) {
+          guard += 1
+          dist = dist
+            .join(bc(frontier.select(col("landmark"), col("id"))),
+              Seq("landmark", "id"), "left_anti")
+            .union(frontier).localCheckpoint(true)
+          frontier = und
+            .join(bc(frontier.select(col("landmark"),
+                col("id").as("fid"), col("dist").as("fd"))),
+              col("src") === col("fid"))
             .select(col("landmark"), col("dst").as("id"),
-              (col("rd") + 1L).as("nd"))
-            .groupBy(col("landmark"), col("id")).agg(min(col("nd")).as("nd"))
+              (col("fd") + 1L).as("nd"))
+            .groupBy(col("landmark"), col("id"))
+            .agg(min(col("nd")).as("nd"))
             .join(bc(dist.withColumnRenamed("dist", "old")),
               Seq("landmark", "id"), "left")
             .filter(col("old").isNull || col("nd") < col("old"))
             .select(col("landmark"), col("id"), col("nd").as("dist"))
             .localCheckpoint(true)
-          var guard = 0
-          while (frontier.limit(1).count() > 0 && guard < 10000) {
-            guard += 1
-            dist = dist
-              .join(bc(frontier.select(col("landmark"), col("id"))),
-                Seq("landmark", "id"), "left_anti")
-              .union(frontier).localCheckpoint(true)
-            frontier = und
-              .join(bc(frontier.select(col("landmark"),
-                  col("id").as("fid"), col("dist").as("fd"))),
-                col("src") === col("fid"))
-              .select(col("landmark"), col("dst").as("id"),
-                (col("fd") + 1L).as("nd"))
-              .groupBy(col("landmark"), col("id"))
-              .agg(min(col("nd")).as("nd"))
-              .join(bc(dist.withColumnRenamed("dist", "old")),
-                Seq("landmark", "id"), "left")
-              .filter(col("old").isNull || col("nd") < col("old"))
-              .select(col("landmark"), col("id"), col("nd").as("dist"))
-              .localCheckpoint(true)
-          }
         }
       }
-      .start()
-    q.awaitTermination()
+    }
     if (dirty) {
       // one repair pass: G17 over the final graph (its own landmark pick
       // — the updated graph's k smallest ids — matching the batch oracle)
@@ -2246,11 +2067,8 @@ object EventStream extends Serializable {
       stats: Option[scala.collection.mutable.Map[String, Long]] = None)
       : DataFrame = {
     def bc(df: DataFrame) = if (broadcastState) broadcast(df) else df
-    val staging = stagedDir.getOrElse(
-      stageByChunks(actions, "action_id", batches))
-    val mb = maintainedBase(base)
-    var edgeState = mb.edges
-    var und = mb.und
+    val feed = new EdgeFeed(spark, base, actions, batches, stagedDir)
+    var und = feed.mb.und
     val lms: Seq[Long] = und.select(col("src")).distinct()
       .orderBy(col("src")).limit(k).collect().map(_.getLong(0)).toSeq
     val maxLm = if (lms.isEmpty) Long.MinValue else lms.max
@@ -2274,194 +2092,168 @@ object EventStream extends Serializable {
     // touched: the drain recomputes δ for THESE only and reuses the
     // memoized base-graph δ for the rest (r10, judge item #8)
     val changedLms = scala.collection.mutable.Set.empty[Long]
-    val stream = spark.readStream.schema(actions.schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(staging)
-    val q = stream.writeStream
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val merged = mergeIngestBatch(edgeState, batch, staging)
+    val edgeState = feed.drain() { eb =>
+      val flips = eb.canonFlips.localCheckpoint(true)
+      val (undNext, on2) = eb.undAfter(und, flips, bc)
+      und = undNext
+      if (!dirty) {
+        // X18's three dirty tests, one scalar job over the flip set
+        val underK = lms.size < k
+        val da = fwd.select(col("lm"), col("id").as("a"),
+          col("dist").as("dda"))
+        val db = fwd.select(col("lm"), col("id").as("b"),
+          col("dist").as("ddb"))
+        val checks = flips
+          .join(bc(da), Seq("a"), "left")
+          .join(bc(db), Seq("lm", "b"), "left")
+          .agg(
+            max(col("on") &&
+              ((lit(underK) || col("a") < maxLm) &&
+                 !col("a").isInCollection(lms) ||
+               (lit(underK) || col("b") < maxLm) &&
+                 !col("b").isInCollection(lms)))
+              .as("new_small_id"),
+            max(!col("on") &&
+              (col("a").isInCollection(lms) ||
+               col("b").isInCollection(lms))).as("off_landmark"),
+            max(!col("on") &&
+              abs(col("dda") - col("ddb")) === 1L).as("level_cross"))
+          .head()
+        dirty = (!checks.isNullAt(0) && checks.getBoolean(0)) ||
+          (!checks.isNullAt(1) && checks.getBoolean(1)) ||
+          (!checks.isNullAt(2) && checks.getBoolean(2))
+      }
+      if (!dirty) {
+        stats.foreach(m =>
+          m("eagerBatches") = m.getOrElse("eagerBatches", 0L) + 1L)
+        // phase 1: eager distance relaxation (X18's fused loop), with
+        // the changed (lm, id) set recorded; improved rows carry a σ=0
+        // placeholder that phase 2 recomputes before any read
+        val dd = fwd.select(col("lm"), col("id").as("rid"),
+          col("dist").as("rd"))
+        var frontier = on2
+          .join(bc(dd), col("src") === col("rid"))
+          .select(col("lm"), col("dst").as("id"), (col("rd") + 1L).as("nd"))
+          .groupBy(col("lm"), col("id")).agg(min(col("nd")).as("nd"))
+          .join(bc(fwd.select(col("lm"), col("id"), col("dist").as("old"))),
+            Seq("lm", "id"), "left")
+          .filter(col("old").isNull || col("nd") < col("old"))
+          .select(col("lm"), col("id"), col("nd").as("dist"))
           .localCheckpoint(true)
-        edgeState = merged.filter(col("weight") > 0L)
-          .select(col("src"), col("dst"), col("weight"))
-        val flips = merged
-          .filter((col("weight_old") > 0L) =!= (col("weight") > 0L))
-          .select(least(col("src"), col("dst")).as("a"),
-            greatest(col("src"), col("dst")).as("b"),
-            (col("weight") > 0L).as("on"))
-          .localCheckpoint(true)
-        val flips2 = flips.select(explode(when(col("a") === col("b"),
-            array(struct(col("a").as("src"), col("b").as("dst"))))
-          .otherwise(array(
-            struct(col("a").as("src"), col("b").as("dst")),
-            struct(col("b").as("src"), col("a").as("dst"))))).as("e"),
-          col("on"))
-          .select(col("e.src"), col("e.dst"), col("on"))
-        val off2 = flips2.filter(!col("on")).select(col("src"), col("dst"))
-        val on2 = flips2.filter(col("on")).select(col("src"), col("dst"))
-        und = und.join(bc(off2), Seq("src", "dst"), "left_anti")
-          .union(on2).localCheckpoint(eager = false)
-        if (!dirty) {
-          // X18's three dirty tests, one scalar job over the flip set
-          val underK = lms.size < k
-          val da = fwd.select(col("lm"), col("id").as("a"),
-            col("dist").as("dda"))
-          val db = fwd.select(col("lm"), col("id").as("b"),
-            col("dist").as("ddb"))
-          val checks = flips
-            .join(bc(da), Seq("a"), "left")
-            .join(bc(db), Seq("lm", "b"), "left")
-            .agg(
-              max(col("on") &&
-                ((lit(underK) || col("a") < maxLm) &&
-                   !col("a").isInCollection(lms) ||
-                 (lit(underK) || col("b") < maxLm) &&
-                   !col("b").isInCollection(lms)))
-                .as("new_small_id"),
-              max(!col("on") &&
-                (col("a").isInCollection(lms) ||
-                 col("b").isInCollection(lms))).as("off_landmark"),
-              max(!col("on") &&
-                abs(col("dda") - col("ddb")) === 1L).as("level_cross"))
-            .head()
-          dirty = (!checks.isNullAt(0) && checks.getBoolean(0)) ||
-            (!checks.isNullAt(1) && checks.getBoolean(1)) ||
-            (!checks.isNullAt(2) && checks.getBoolean(2))
-        }
-        if (!dirty) {
-          stats.foreach(m =>
-            m("eagerBatches") = m.getOrElse("eagerBatches", 0L) + 1L)
-          // phase 1: eager distance relaxation (X18's fused loop), with
-          // the changed (lm, id) set recorded; improved rows carry a σ=0
-          // placeholder that phase 2 recomputes before any read
-          val dd = fwd.select(col("lm"), col("id").as("rid"),
-            col("dist").as("rd"))
-          var frontier = on2
-            .join(bc(dd), col("src") === col("rid"))
-            .select(col("lm"), col("dst").as("id"), (col("rd") + 1L).as("nd"))
+        val changedParts =
+          scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+        var guard = 0
+        while (frontier.limit(1).count() > 0 && guard < 10000) {
+          guard += 1
+          changedParts += frontier.select(col("lm"), col("id"))
+          fwd = fwd
+            .join(bc(frontier.select(col("lm"), col("id"))),
+              Seq("lm", "id"), "left_anti")
+            .union(frontier.withColumn("sigma", lit(0L)))
+            .localCheckpoint(true)
+          frontier = und
+            .join(bc(frontier.select(col("lm"), col("id").as("fid"),
+                col("dist").as("fd"))),
+              col("src") === col("fid"))
+            .select(col("lm"), col("dst").as("id"),
+              (col("fd") + 1L).as("nd"))
             .groupBy(col("lm"), col("id")).agg(min(col("nd")).as("nd"))
-            .join(bc(fwd.select(col("lm"), col("id"), col("dist").as("old"))),
+            .join(bc(fwd.select(col("lm"), col("id"),
+                col("dist").as("old"))),
               Seq("lm", "id"), "left")
             .filter(col("old").isNull || col("nd") < col("old"))
             .select(col("lm"), col("id"), col("nd").as("dist"))
             .localCheckpoint(true)
-          val changedParts =
-            scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-          var guard = 0
-          while (frontier.limit(1).count() > 0 && guard < 10000) {
-            guard += 1
-            changedParts += frontier.select(col("lm"), col("id"))
-            fwd = fwd
-              .join(bc(frontier.select(col("lm"), col("id"))),
-                Seq("lm", "id"), "left_anti")
-              .union(frontier.withColumn("sigma", lit(0L)))
-              .localCheckpoint(true)
-            frontier = und
-              .join(bc(frontier.select(col("lm"), col("id").as("fid"),
-                  col("dist").as("fd"))),
-                col("src") === col("fid"))
-              .select(col("lm"), col("dst").as("id"),
-                (col("fd") + 1L).as("nd"))
-              .groupBy(col("lm"), col("id")).agg(min(col("nd")).as("nd"))
-              .join(bc(fwd.select(col("lm"), col("id"),
-                  col("dist").as("old"))),
-                Seq("lm", "id"), "left")
-              .filter(col("old").isNull || col("nd") < col("old"))
-              .select(col("lm"), col("id"), col("nd").as("dist"))
-              .localCheckpoint(true)
-          }
-          // a tripped guard means the relaxation may be incomplete (σ=0
-          // placeholders / stale distances in fwd) — flag dirty so the
-          // drain runs the full G22 repair instead of reading the
-          // maintained state as exact
-          if (guard >= 10000) dirty = true
-          // phase 2: σ sweep — seeds are distance-changed pairs plus
-          // same-length new DAG edges; process lowest level first
-          val distChanged =
-            if (changedParts.isEmpty)
-              fwd.select(col("lm"), col("id")).limit(0)
-            else changedParts.reduce(_ union _).distinct()
-          val du = fwd.select(col("lm"), col("id").as("src"),
-            col("dist").as("du"))
-          val dv = fwd.select(col("lm"), col("id").as("dst"),
-            col("dist").as("dv"))
-          val newDag = on2.join(bc(du), Seq("src"))
-            .join(bc(dv), Seq("lm", "dst"))
-            .filter(col("dv") === col("du") + 1L)
-            .select(col("lm"), col("dst").as("id"))
-          var pend = fwd.select(col("lm"), col("id"), col("dist"))
-            .join(bc(distChanged.union(newDag).distinct()),
-              Seq("lm", "id"), "left_semi")
-            .localCheckpoint(true)
-          // every σ/dist change this batch propagates within its own
-          // landmark, so pend's lm set covers the batch's changed
-          // landmarks exactly (≤ k values, read off the fresh checkpoint)
-          changedLms ++= pend.select(col("lm")).distinct()
-            .collect().map(_.getLong(0))
-          guard = 0
-          while (!dirty && pend.limit(1).count() > 0 && guard < 10000) {
-            guard += 1
-            val mins = pend.groupBy(col("lm")).agg(min(col("dist")).as("md"))
-            val cur = pend.join(bc(mins), Seq("lm"))
-              .filter(col("dist") === col("md"))
-              .select(col("lm"), col("id"), col("dist"))
-              .localCheckpoint(true)
-            // σ(v) = Σ over DAG predecessors u (adjacent, one level up)
-            val cands = und
-              .join(bc(cur.select(col("lm"), col("id").as("vid"),
-                  col("dist").as("vd"))),
-                col("dst") === col("vid"))
-              .select(col("lm"), col("src").as("uid"), col("vid"), col("vd"))
-            val newSig = fwd.select(col("lm"), col("id").as("uid"),
-                col("dist").as("ud"), col("sigma").as("usig"))
-              .join(bc(cands), Seq("lm", "uid"))
-              .filter(col("ud") === col("vd") - 1L)
-              .groupBy(col("lm"), col("vid"))
-              .agg(sum(col("usig")).as("nsig"))
-            val curState = fwd
-              .join(bc(cur.select(col("lm"), col("id"))),
-                Seq("lm", "id"), "left_semi")
-              .select(col("lm"), col("id"), col("dist"),
-                col("sigma").as("osig"))
-            val curNew = curState
-              .join(newSig.select(col("lm"), col("vid").as("id"),
-                col("nsig")), Seq("lm", "id"), "left")
-              .select(col("lm"), col("id"), col("dist"),
-                coalesce(col("nsig"), col("osig")).as("sigma"), col("osig"))
-              .localCheckpoint(true)
-            fwd = fwd
-              .join(bc(curNew.select(col("lm"), col("id"))),
-                Seq("lm", "id"), "left_anti")
-              .union(curNew.select(col("lm"), col("id"), col("dist"),
-                col("sigma")))
-              .localCheckpoint(true)
-            // propagate only where σ actually changed (placeholder rows
-            // always differ — σ of a reached vertex is ≥ 1)
-            val changedNow = curNew.filter(col("sigma") =!= col("osig"))
-            val succ = und
-              .join(bc(changedNow.select(col("lm"), col("id").as("fid"),
-                  col("dist").as("fd"))),
-                col("src") === col("fid"))
-              .select(col("lm"), col("dst").as("id"),
-                (col("fd") + 1L).as("sd"))
-              .distinct()
-            val succAt = fwd.select(col("lm"), col("id"), col("dist"))
-              .join(bc(succ), Seq("lm", "id"))
-              .filter(col("dist") === col("sd"))
-              .select(col("lm"), col("id"), col("dist"))
-            pend = pend
-              .join(bc(cur.select(col("lm"), col("id"))),
-                Seq("lm", "id"), "left_anti")
-              .union(succAt).distinct()
-              .localCheckpoint(true)
-          }
-          // same contract for the σ sweep's own guard
-          if (guard >= 10000) dirty = true
         }
+        // a tripped guard means the relaxation may be incomplete (σ=0
+        // placeholders / stale distances in fwd) — flag dirty so the
+        // drain runs the full G22 repair instead of reading the
+        // maintained state as exact
+        if (guard >= 10000) dirty = true
+        // phase 2: σ sweep — seeds are distance-changed pairs plus
+        // same-length new DAG edges; process lowest level first
+        val distChanged =
+          if (changedParts.isEmpty)
+            fwd.select(col("lm"), col("id")).limit(0)
+          else changedParts.reduce(_ union _).distinct()
+        val du = fwd.select(col("lm"), col("id").as("src"),
+          col("dist").as("du"))
+        val dv = fwd.select(col("lm"), col("id").as("dst"),
+          col("dist").as("dv"))
+        val newDag = on2.join(bc(du), Seq("src"))
+          .join(bc(dv), Seq("lm", "dst"))
+          .filter(col("dv") === col("du") + 1L)
+          .select(col("lm"), col("dst").as("id"))
+        var pend = fwd.select(col("lm"), col("id"), col("dist"))
+          .join(bc(distChanged.union(newDag).distinct()),
+            Seq("lm", "id"), "left_semi")
+          .localCheckpoint(true)
+        // every σ/dist change this batch propagates within its own
+        // landmark, so pend's lm set covers the batch's changed
+        // landmarks exactly (≤ k values, read off the fresh checkpoint)
+        changedLms ++= pend.select(col("lm")).distinct()
+          .collect().map(_.getLong(0))
+        guard = 0
+        while (!dirty && pend.limit(1).count() > 0 && guard < 10000) {
+          guard += 1
+          val mins = pend.groupBy(col("lm")).agg(min(col("dist")).as("md"))
+          val cur = pend.join(bc(mins), Seq("lm"))
+            .filter(col("dist") === col("md"))
+            .select(col("lm"), col("id"), col("dist"))
+            .localCheckpoint(true)
+          // σ(v) = Σ over DAG predecessors u (adjacent, one level up)
+          val cands = und
+            .join(bc(cur.select(col("lm"), col("id").as("vid"),
+                col("dist").as("vd"))),
+              col("dst") === col("vid"))
+            .select(col("lm"), col("src").as("uid"), col("vid"), col("vd"))
+          val newSig = fwd.select(col("lm"), col("id").as("uid"),
+              col("dist").as("ud"), col("sigma").as("usig"))
+            .join(bc(cands), Seq("lm", "uid"))
+            .filter(col("ud") === col("vd") - 1L)
+            .groupBy(col("lm"), col("vid"))
+            .agg(sum(col("usig")).as("nsig"))
+          val curState = fwd
+            .join(bc(cur.select(col("lm"), col("id"))),
+              Seq("lm", "id"), "left_semi")
+            .select(col("lm"), col("id"), col("dist"),
+              col("sigma").as("osig"))
+          val curNew = curState
+            .join(newSig.select(col("lm"), col("vid").as("id"),
+              col("nsig")), Seq("lm", "id"), "left")
+            .select(col("lm"), col("id"), col("dist"),
+              coalesce(col("nsig"), col("osig")).as("sigma"), col("osig"))
+            .localCheckpoint(true)
+          fwd = fwd
+            .join(bc(curNew.select(col("lm"), col("id"))),
+              Seq("lm", "id"), "left_anti")
+            .union(curNew.select(col("lm"), col("id"), col("dist"),
+              col("sigma")))
+            .localCheckpoint(true)
+          // propagate only where σ actually changed (placeholder rows
+          // always differ — σ of a reached vertex is ≥ 1)
+          val changedNow = curNew.filter(col("sigma") =!= col("osig"))
+          val succ = und
+            .join(bc(changedNow.select(col("lm"), col("id").as("fid"),
+                col("dist").as("fd"))),
+              col("src") === col("fid"))
+            .select(col("lm"), col("dst").as("id"),
+              (col("fd") + 1L).as("sd"))
+            .distinct()
+          val succAt = fwd.select(col("lm"), col("id"), col("dist"))
+            .join(bc(succ), Seq("lm", "id"))
+            .filter(col("dist") === col("sd"))
+            .select(col("lm"), col("id"), col("dist"))
+          pend = pend
+            .join(bc(cur.select(col("lm"), col("id"))),
+              Seq("lm", "id"), "left_anti")
+            .union(succAt).distinct()
+            .localCheckpoint(true)
+        }
+        // same contract for the σ sweep's own guard
+        if (guard >= 10000) dirty = true
       }
-      .start()
-    q.awaitTermination()
+    }
     if (dirty) {
       stats.foreach(_("dirty") = 1L)
       // one repair pass: G22 over the final graph (its own landmark pick,
@@ -2568,11 +2360,9 @@ object EventStream extends Serializable {
       batchTris: Option[scala.collection.mutable.ArrayBuffer[Long]] = None,
       stagedDir: Option[String] = None): DataFrame = {
     import spark.implicits._
-    val staging = stagedDir.getOrElse(
-      stageByChunks(actions, "action_id", batches))
-    var edgeState = maintainedBase(base).edges
+    val feed = new EdgeFeed(spark, base, actions, batches, stagedDir)
     // canonical (src < dst) pair view, maintained under flips
-    var pairs = edgeState.select(col("src"), col("dst"))
+    var pairs = feed.edges.select(col("src"), col("dst"))
     def triAt(ps: DataFrame, s: DataFrame): Long =
       trianglesAt(ps, s).count()
     // initial count: one full oriented count of the base snapshot (zero
@@ -2582,39 +2372,25 @@ object EventStream extends Serializable {
       else graft.graph.Triangles.count(
         pairs.select(col("src").as("u"), col("dst").as("v")))
         .head().getLong(0)
-    val stream = spark.readStream.schema(actions.schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(staging)
-    val q = stream.writeStream
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val merged = mergeIngestBatch(edgeState, batch, staging)
-          .localCheckpoint(eager = false)
-        edgeState = merged.filter(col("weight") > 0L)
-          .select(col("src"), col("dst"), col("weight"))
-        // canonical pairs in, canonical flips out — no least/greatest pass
-        val flips = merged
-          .filter((col("weight_old") > 0L) =!= (col("weight") > 0L))
-          .select(col("src"), col("dst"), (col("weight") > 0L).as("on"))
-        val vB = flips
-          .select(explode(array(col("src"), col("dst"))).as("id"))
-          .distinct().localCheckpoint(eager = false)
-        val pairsNew = pairs
-          .join(broadcast(flips.filter(!col("on"))
-            .select(col("src"), col("dst"))), Seq("src", "dst"), "left_anti")
-          .union(flips.filter(col("on")).select(col("src"), col("dst")))
-          .localCheckpoint(eager = false)
-        // two batch-local count jobs; the first materializes the lazy
-        // merge/vB/pairs checkpoints in the same pass
-        val tNew = triAt(pairsNew, vB)
-        val tOld = triAt(pairs, vB)
-        tri += tNew - tOld
-        pairs = pairsNew
-        batchTris.foreach(_ += tri)
-      }
-      .start()
-    q.awaitTermination()
+    feed.drain(eagerMerge = false) { eb =>
+      // canonical pairs in, canonical flips out — no least/greatest pass
+      val flips = eb.flips
+      val vB = flips
+        .select(explode(array(col("src"), col("dst"))).as("id"))
+        .distinct().localCheckpoint(eager = false)
+      val pairsNew = pairs
+        .join(broadcast(flips.filter(!col("on"))
+          .select(col("src"), col("dst"))), Seq("src", "dst"), "left_anti")
+        .union(flips.filter(col("on")).select(col("src"), col("dst")))
+        .localCheckpoint(eager = false)
+      // two batch-local count jobs; the first materializes the lazy
+      // merge/vB/pairs checkpoints in the same pass
+      val tNew = triAt(pairsNew, vB)
+      val tOld = triAt(pairs, vB)
+      tri += tNew - tOld
+      pairs = pairsNew
+      batchTris.foreach(_ += tri)
+    }
     // drained: the full streaming-clustering-coefficient output STINGER's
     // alg emits — maintained triangle scalar + wedge count (one degree
     // aggregate over the final pair state) + the global coefficient
@@ -2675,10 +2451,8 @@ object EventStream extends Serializable {
         Map[Long, Long]]] = None,
       stagedDir: Option[String] = None): DataFrame = {
     import spark.implicits._
-    val staging = stagedDir.getOrElse(
-      stageByChunks(actions, "action_id", batches))
-    var edgeState = maintainedBase(base).edges
-    var pairs = edgeState.select(col("src"), col("dst"))
+    val feed = new EdgeFeed(spark, base, actions, batches, stagedDir)
+    var pairs = feed.edges.select(col("src"), col("dst"))
     // initial per-vertex counts: one oriented enumeration of the base
     // snapshot (empty for the streaming-ingest entry above)
     var triCnt: DataFrame =
@@ -2690,55 +2464,41 @@ object EventStream extends Serializable {
         .groupBy(col("id"))
         .agg(count(lit(1)).as("n_tri"))
         .localCheckpoint(true)
-    val stream = spark.readStream.schema(actions.schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(staging)
-    val q = stream.writeStream
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val merged = mergeIngestBatch(edgeState, batch, staging)
-          .localCheckpoint(eager = false)
-        edgeState = merged.filter(col("weight") > 0L)
-          .select(col("src"), col("dst"), col("weight"))
-        val flips = merged
-          .filter((col("weight_old") > 0L) =!= (col("weight") > 0L))
-          .select(col("src"), col("dst"), (col("weight") > 0L).as("on"))
-        val vB = flips
-          .select(explode(array(col("src"), col("dst"))).as("id"))
-          .distinct().localCheckpoint(eager = false)
-        val pairsNew = pairs
-          .join(broadcast(flips.filter(!col("on"))
-            .select(col("src"), col("dst"))), Seq("src", "dst"), "left_anti")
-          .union(flips.filter(col("on")).select(col("src"), col("dst")))
-          .localCheckpoint(eager = false)
-        // changed triangles as SETS on consistent before/after snapshots
-        val tripNew = trianglesAt(pairsNew, vB)
-          .localCheckpoint(eager = false)
-        val tripOld = trianglesAt(pairs, vB)
-          .localCheckpoint(eager = false)
-        val delta = tripNew.exceptAll(tripOld)
-          .select(explode(col("t")).as("id"), lit(1L).as("d"))
-          .union(tripOld.exceptAll(tripNew)
-            .select(explode(col("t")).as("id"), lit(-1L).as("d")))
-          .groupBy(col("id")).agg(sum(col("d")).as("d"))
-        // merge only the delta ids; rows exist only for vertices carrying
-        // triangles, so the write is triangled-vertex-bounded, not |V|
-        triCnt = triCnt.join(delta, Seq("id"), "full_outer")
-          .select(col("id"),
-            (coalesce(col("n_tri"), lit(0L)) +
-              coalesce(col("d"), lit(0L))).as("n_tri"))
-          .filter(col("n_tri") > 0L)
-          .localCheckpoint(eager = false)
-        pairs = pairsNew
-        // the batch's one materializing job pulls the lazy merge/vB/pairs/
-        // triple-set/state chain
-        triCnt.count()
-        batchCounts.foreach(_ += triCnt.collect()
-          .map(r => r.getLong(0) -> r.getLong(1)).toMap)
-      }
-      .start()
-    q.awaitTermination()
+    feed.drain(eagerMerge = false) { eb =>
+      val flips = eb.flips
+      val vB = flips
+        .select(explode(array(col("src"), col("dst"))).as("id"))
+        .distinct().localCheckpoint(eager = false)
+      val pairsNew = pairs
+        .join(broadcast(flips.filter(!col("on"))
+          .select(col("src"), col("dst"))), Seq("src", "dst"), "left_anti")
+        .union(flips.filter(col("on")).select(col("src"), col("dst")))
+        .localCheckpoint(eager = false)
+      // changed triangles as SETS on consistent before/after snapshots
+      val tripNew = trianglesAt(pairsNew, vB)
+        .localCheckpoint(eager = false)
+      val tripOld = trianglesAt(pairs, vB)
+        .localCheckpoint(eager = false)
+      val delta = tripNew.exceptAll(tripOld)
+        .select(explode(col("t")).as("id"), lit(1L).as("d"))
+        .union(tripOld.exceptAll(tripNew)
+          .select(explode(col("t")).as("id"), lit(-1L).as("d")))
+        .groupBy(col("id")).agg(sum(col("d")).as("d"))
+      // merge only the delta ids; rows exist only for vertices carrying
+      // triangles, so the write is triangled-vertex-bounded, not |V|
+      triCnt = triCnt.join(delta, Seq("id"), "full_outer")
+        .select(col("id"),
+          (coalesce(col("n_tri"), lit(0L)) +
+            coalesce(col("d"), lit(0L))).as("n_tri"))
+        .filter(col("n_tri") > 0L)
+        .localCheckpoint(eager = false)
+      pairs = pairsNew
+      // the batch's one materializing job pulls the lazy merge/vB/pairs/
+      // triple-set/state chain
+      triCnt.count()
+      batchCounts.foreach(_ += triCnt.collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap)
+    }
     // drained: join the final degree table — one aggregate over the final
     // pair state, the same drain shape as X19's wedge count
     val degs = pairs
@@ -2793,10 +2553,8 @@ object EventStream extends Serializable {
       stagedDir: Option[String] = None,
       publishDir: Option[String] = None): DataFrame = {
     import spark.implicits._
-    val staging = stagedDir.getOrElse(
-      stageByChunks(actions, "action_id", batches))
-    var edgeState = maintainedBase(base).edges
-    var pairs = edgeState.select(col("src"), col("dst"))
+    val feed = new EdgeFeed(spark, base, actions, batches, stagedDir)
+    var pairs = feed.edges.select(col("src"), col("dst"))
     // maintained triangle list as sorted id triples (X19's set shape);
     // empty-base streams accumulate it from deltas alone
     var triList: DataFrame =
@@ -2806,41 +2564,27 @@ object EventStream extends Serializable {
           pairs.select(col("src").as("u"), col("dst").as("v")))
         .select(array_sort(array(col("a"), col("x"), col("y"))).as("t"))
         .localCheckpoint(true)
-    val stream = spark.readStream.schema(actions.schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(staging)
-    val q = stream.writeStream
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val merged = mergeIngestBatch(edgeState, batch, staging)
-          .localCheckpoint(eager = false)
-        edgeState = merged.filter(col("weight") > 0L)
-          .select(col("src"), col("dst"), col("weight"))
-        val flips = merged
-          .filter((col("weight_old") > 0L) =!= (col("weight") > 0L))
-          .select(col("src"), col("dst"), (col("weight") > 0L).as("on"))
-        val vB = flips
-          .select(explode(array(col("src"), col("dst"))).as("id"))
-          .distinct().localCheckpoint(eager = false)
-        val pairsNew = pairs
-          .join(broadcast(flips.filter(!col("on"))
-            .select(col("src"), col("dst"))), Seq("src", "dst"), "left_anti")
-          .union(flips.filter(col("on")).select(col("src"), col("dst")))
-          .localCheckpoint(eager = false)
-        val tripNew = trianglesAt(pairsNew, vB).localCheckpoint(eager = false)
-        val tripOld = trianglesAt(pairs, vB).localCheckpoint(eager = false)
-        // batch-delta fold: destroyed triangles leave, created ones join —
-        // the one materializing job per batch pulls the whole lazy chain
-        triList = triList
-          .exceptAll(tripOld.exceptAll(tripNew))
-          .union(tripNew.exceptAll(tripOld))
-          .localCheckpoint(eager = false)
-        pairs = pairsNew
-        triList.count(): Unit
-      }
-      .start()
-    q.awaitTermination()
+    feed.drain(eagerMerge = false) { eb =>
+      val flips = eb.flips
+      val vB = flips
+        .select(explode(array(col("src"), col("dst"))).as("id"))
+        .distinct().localCheckpoint(eager = false)
+      val pairsNew = pairs
+        .join(broadcast(flips.filter(!col("on"))
+          .select(col("src"), col("dst"))), Seq("src", "dst"), "left_anti")
+        .union(flips.filter(col("on")).select(col("src"), col("dst")))
+        .localCheckpoint(eager = false)
+      val tripNew = trianglesAt(pairsNew, vB).localCheckpoint(eager = false)
+      val tripOld = trianglesAt(pairs, vB).localCheckpoint(eager = false)
+      // batch-delta fold: destroyed triangles leave, created ones join —
+      // the one materializing job per batch pulls the whole lazy chain
+      triList = triList
+        .exceptAll(tripOld.exceptAll(tripNew))
+        .union(tripNew.exceptAll(tripOld))
+        .localCheckpoint(eager = false)
+      pairs = pairsNew
+      triList.count(): Unit
+    }
     // drained: the truss peel CONSUMES the maintained list — no wedge
     // enumeration at drain (G18's kTrussFrom entry point, shared with the
     // memoized part-graph consumers)
@@ -2897,114 +2641,84 @@ object EventStream extends Serializable {
       broadcastState: Boolean = true,
       stagedDir: Option[String] = None): DataFrame = {
     def bc(df: DataFrame) = if (broadcastState) broadcast(df) else df
-    val staging = stagedDir.getOrElse(
-      stageByChunks(actions, "action_id", batches))
-    val mb = maintainedBase(base)
-    var edgeState = mb.edges
-    var und = mb.und
+    val feed = new EdgeFeed(spark, base, actions, batches, stagedDir)
+    var und = feed.mb.und
     // per-round label tables from the base (session memo for memoized
     // graphs — the batch graph_lpa query computed exactly these)
     val lbls: Array[DataFrame] = graft.graph.LabelPropagation
       .roundTables(base, rounds, broadcastVertices = broadcastState)
       .toArray
-    val stream = spark.readStream.schema(actions.schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(staging)
-    val q = stream.writeStream
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val merged = mergeIngestBatch(edgeState, batch, staging)
-          .localCheckpoint(true)
-        edgeState = merged.filter(col("weight") > 0L)
-          .select(col("src"), col("dst"), col("weight"))
-        val flips = merged
-          .filter((col("weight_old") > 0L) =!= (col("weight") > 0L))
-          .select(least(col("src"), col("dst")).as("a"),
-            greatest(col("src"), col("dst")).as("b"),
-            (col("weight") > 0L).as("on"))
-          .localCheckpoint(true)
-        val flips2 = flips.select(explode(when(col("a") === col("b"),
-            array(struct(col("a").as("src"), col("b").as("dst"))))
-          .otherwise(array(
-            struct(col("a").as("src"), col("b").as("dst")),
-            struct(col("b").as("src"), col("a").as("dst"))))).as("e"),
-          col("on"))
-          .select(col("e.src"), col("e.dst"), col("on"))
-        val off2 = flips2.filter(!col("on")).select(col("src"), col("dst"))
-        val on2 = flips2.filter(col("on")).select(col("src"), col("dst"))
-        und = und.join(bc(off2), Seq("src", "dst"), "left_anti")
-          .union(on2).localCheckpoint(eager = false)
-        // EAGER checkpoints on every node consumed by 2+ broadcasts: an
-        // un-materialized lazy plan is recomputed by EACH broadcast build
-        // (the r8 graph-coloring lesson), and here the chains would
-        // compound across the 5 rounds
-        val t = flips.select(explode(array(col("a"), col("b"))).as("id"))
-          .distinct().localCheckpoint(true)
-        // L_0: identity labels over the present vertices of T (appeared
-        // vertices join, vanished ones drop out)
-        val presentT = und.select(col("src").as("id"))
-          .join(bc(t), Seq("id"), "left_semi").distinct()
-        lbls(0) = lbls(0).join(bc(t), Seq("id"), "left_anti")
-          .union(presentT.select(col("id"), col("id").as("lbl")))
-          .localCheckpoint(true)
-        val nV = lbls(0).count()
-        var changed = t // round-0 changes are covered by T itself
-        // dense-batch flip (X15's r7 precedent): when the changed ball
-        // covers most of the graph — this harness's feed churns well over
-        // half the pairs per batch — the scoped merge machinery (ball
-        // broadcasts, anti/union folds) costs more than it saves; flip to
-        // the batch query's one-agg full round, which is always exact.
-        // Once dense, stay dense: later rounds' balls only reflect this
-        // one's. Sparse batches keep the scoped path (the fixture-proved
-        // 100 TB shape).
-        var dense = false
-        for (r <- 1 to rounds) {
+    feed.drain() { eb =>
+      val flips = eb.canonFlips.localCheckpoint(true)
+      und = eb.undAfter(und, flips, bc)._1
+      // EAGER checkpoints on every node consumed by 2+ broadcasts: an
+      // un-materialized lazy plan is recomputed by EACH broadcast build
+      // (the r8 graph-coloring lesson), and here the chains would
+      // compound across the 5 rounds
+      val t = flips.select(explode(array(col("a"), col("b"))).as("id"))
+        .distinct().localCheckpoint(true)
+      // L_0: identity labels over the present vertices of T (appeared
+      // vertices join, vanished ones drop out)
+      val presentT = und.select(col("src").as("id"))
+        .join(bc(t), Seq("id"), "left_semi").distinct()
+      lbls(0) = lbls(0).join(bc(t), Seq("id"), "left_anti")
+        .union(presentT.select(col("id"), col("id").as("lbl")))
+        .localCheckpoint(true)
+      val nV = lbls(0).count()
+      var changed = t // round-0 changes are covered by T itself
+      // dense-batch flip (X15's r7 precedent): when the changed ball
+      // covers most of the graph — this harness's feed churns well over
+      // half the pairs per batch — the scoped merge machinery (ball
+      // broadcasts, anti/union folds) costs more than it saves; flip to
+      // the batch query's one-agg full round, which is always exact.
+      // Once dense, stay dense: later rounds' balls only reflect this
+      // one's. Sparse batches keep the scoped path (the fixture-proved
+      // 100 TB shape).
+      var dense = false
+      for (r <- 1 to rounds) {
+        if (!dense) {
+          val nbrs = und
+            .join(bc(changed.select(col("id").as("fid"))),
+              col("src") === col("fid"))
+            .select(col("dst").as("id")).distinct()
+          val aR = t.union(nbrs).distinct().localCheckpoint(true)
+          dense = aR.count() * 2 >= nV
           if (!dense) {
-            val nbrs = und
-              .join(bc(changed.select(col("id").as("fid"))),
-                col("src") === col("fid"))
-              .select(col("dst").as("id")).distinct()
-            val aR = t.union(nbrs).distinct().localCheckpoint(true)
-            dense = aR.count() * 2 >= nV
-            if (!dense) {
-              // recompute round r for A_r: candidate edges probed with
-              // the ball broadcast, labels read from the (immutable this
-              // round) L_{r-1} table
-              val cands = und
-                .join(bc(aR.select(col("id").as("vid"))),
-                  col("dst") === col("vid"))
-                .select(col("src"), col("vid"))
-              val newLab = lbls(r - 1)
-                .join(bc(cands), col("id") === col("src"))
-                .groupBy(col("vid"), col("lbl")).agg(count(lit(1)).as("c"))
-                .groupBy(col("vid").as("id"))
-                .agg(expr("max_by(lbl, struct(c, -lbl))").as("lbl"))
-                .localCheckpoint(true)
-              val oldR = lbls(r)
-              changed = newLab
-                .join(oldR.select(col("id"), col("lbl").as("olbl")),
-                  Seq("id"), "left")
-                .filter(col("olbl").isNull || col("lbl") =!= col("olbl"))
-                .select(col("id"))
-                .localCheckpoint(eager = false)
-              lbls(r) = oldR.join(bc(aR), Seq("id"), "left_anti")
-                .union(newLab)
-                .localCheckpoint(true)
-            }
-          }
-          if (dense) {
-            // full round over the maintained view — G14's exact plan
-            lbls(r) = und.join(bc(lbls(r - 1)), col("src") === col("id"))
-              .groupBy(col("dst"), col("lbl")).agg(count(lit(1)).as("c"))
-              .groupBy(col("dst").as("id"))
+            // recompute round r for A_r: candidate edges probed with
+            // the ball broadcast, labels read from the (immutable this
+            // round) L_{r-1} table
+            val cands = und
+              .join(bc(aR.select(col("id").as("vid"))),
+                col("dst") === col("vid"))
+              .select(col("src"), col("vid"))
+            val newLab = lbls(r - 1)
+              .join(bc(cands), col("id") === col("src"))
+              .groupBy(col("vid"), col("lbl")).agg(count(lit(1)).as("c"))
+              .groupBy(col("vid").as("id"))
               .agg(expr("max_by(lbl, struct(c, -lbl))").as("lbl"))
+              .localCheckpoint(true)
+            val oldR = lbls(r)
+            changed = newLab
+              .join(oldR.select(col("id"), col("lbl").as("olbl")),
+                Seq("id"), "left")
+              .filter(col("olbl").isNull || col("lbl") =!= col("olbl"))
+              .select(col("id"))
+              .localCheckpoint(eager = false)
+            lbls(r) = oldR.join(bc(aR), Seq("id"), "left_anti")
+              .union(newLab)
               .localCheckpoint(true)
           }
         }
+        if (dense) {
+          // full round over the maintained view — G14's exact plan
+          lbls(r) = und.join(bc(lbls(r - 1)), col("src") === col("id"))
+            .groupBy(col("dst"), col("lbl")).agg(count(lit(1)).as("c"))
+            .groupBy(col("dst").as("id"))
+            .agg(expr("max_by(lbl, struct(c, -lbl))").as("lbl"))
+            .localCheckpoint(true)
+        }
       }
-      .start()
-    q.awaitTermination()
+    }
     lbls(rounds).select(col("id"), col("lbl").as("label"))
   }
 
@@ -3110,53 +2824,23 @@ object EventStream extends Serializable {
       stats: Option[scala.collection.mutable.Map[String, Long]] = None)
       : DataFrame = {
     def bc(df: DataFrame) = if (broadcastState) broadcast(df) else df
-    val staging = stagedDir.getOrElse(
-      stageByChunks(actions, "action_id", batches))
-    val mb = maintainedBase(base)
-    var edgeState = mb.edges
-    var und = mb.und
+    val feed = new EdgeFeed(spark, base, actions, batches, stagedDir)
+    var und = feed.mb.und
     // the base decomposition (session memo for memoized graphs)
     val baseCore = graft.graph.Coreness(base,
       broadcastVertices = broadcastState)
     var insertsB = 0L
     var flipEndParts = List.empty[DataFrame]
-    val stream = spark.readStream.schema(actions.schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(staging)
-    val q = stream.writeStream
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val merged = mergeIngestBatch(edgeState, batch, staging)
-          .localCheckpoint(true)
-        edgeState = merged.filter(col("weight") > 0L)
-          .select(col("src"), col("dst"), col("weight"))
-        val flips = merged
-          .filter((col("weight_old") > 0L) =!= (col("weight") > 0L))
-          .select(least(col("src"), col("dst")).as("a"),
-            greatest(col("src"), col("dst")).as("b"),
-            (col("weight") > 0L).as("on"))
-          .localCheckpoint(true)
-        insertsB += flips.filter(col("on")).count()
-        val flips2 = flips.select(explode(when(col("a") === col("b"),
-            array(struct(col("a").as("src"), col("b").as("dst"))))
-          .otherwise(array(
-            struct(col("a").as("src"), col("b").as("dst")),
-            struct(col("b").as("src"), col("a").as("dst"))))).as("e"),
-          col("on"))
-          .select(col("e.src"), col("e.dst"), col("on"))
-        val off2 = flips2.filter(!col("on")).select(col("src"), col("dst"))
-        val on2 = flips2.filter(col("on")).select(col("src"), col("dst"))
-        und = und.join(bc(off2), Seq("src", "dst"), "left_anti")
-          .union(on2).localCheckpoint(eager = false)
-        // batch-bounded flipped-endpoint parts feed the drain's sparse
-        // region seeding (r11)
-        flipEndParts ::= flips
-          .select(explode(array(col("a"), col("b"))).as("id"))
-          .distinct().localCheckpoint(true)
-      }
-      .start()
-    q.awaitTermination()
+    feed.drain() { eb =>
+      val flips = eb.canonFlips.localCheckpoint(true)
+      insertsB += flips.filter(col("on")).count()
+      und = eb.undAfter(und, flips, bc)._1
+      // batch-bounded flipped-endpoint parts feed the drain's sparse
+      // region seeding (r11)
+      flipEndParts ::= flips
+        .select(explode(array(col("a"), col("b"))).as("id"))
+        .distinct().localCheckpoint(true)
+    }
     stats.foreach(_("insertsB") = insertsB)
     val sym = und.localCheckpoint(true)
     val deg = sym.groupBy(col("src").as("id"))
@@ -3376,9 +3060,7 @@ object EventStream extends Serializable {
       repairStats: Option[scala.collection.mutable.Map[String, Long]] = None)
       : DataFrame = {
     def bc(df: DataFrame) = if (broadcastVertices) broadcast(df) else df
-    val staging = stagedDir.getOrElse(
-      stageByChunks(actions, "action_id", batches))
-    var edgeState = maintainedBase(base).edges
+    val feed = new EdgeFeed(spark, base, actions, batches, stagedDir)
     // old member set, reusing the session-memoized batch peel
     val baseCore =
       if (base.edges.isEmpty) {
@@ -3388,33 +3070,19 @@ object EventStream extends Serializable {
         broadcastVertices = broadcastVertices)
         .select(col("id")).localCheckpoint(true)
     // flipped endpoints accumulate lazily; one scoped repair at drain
-    val noIds = edgeState.select(col("src").as("id")).limit(0)
+    val noIds = feed.edges.select(col("src").as("id")).limit(0)
       .localCheckpoint(true)
     var insTouched = noIds
     var delTouched = noIds
-    val stream = spark.readStream.schema(actions.schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(staging)
-    val q = stream.writeStream
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val merged = mergeIngestBatch(edgeState, batch, staging)
-          .localCheckpoint(true)
-        edgeState = merged.filter(col("weight") > 0L)
-          .select(col("src"), col("dst"), col("weight"))
-        val flips = merged
-          .filter((col("weight_old") > 0L) =!= (col("weight") > 0L))
-          .select(col("src"), col("dst"), (col("weight") > 0L).as("on"))
-        def ends(f: DataFrame) = f
-          .select(explode(array(col("src"), col("dst"))).as("id")).distinct()
-        insTouched = insTouched.union(ends(flips.filter(col("on"))))
-          .localCheckpoint(eager = false)
-        delTouched = delTouched.union(ends(flips.filter(!col("on"))))
-          .localCheckpoint(eager = false)
-      }
-      .start()
-    q.awaitTermination()
+    val edgeState = feed.drain() { eb =>
+      val flips = eb.flips
+      def ends(f: DataFrame) = f
+        .select(explode(array(col("src"), col("dst"))).as("id")).distinct()
+      insTouched = insTouched.union(ends(flips.filter(col("on"))))
+        .localCheckpoint(eager = false)
+      delTouched = delTouched.union(ends(flips.filter(!col("on"))))
+        .localCheckpoint(eager = false)
+    }
     // ---- drain: one exact scoped repair over the final graph ----
     val g = drainBase.map(_()).getOrElse(Graph(edgeState))
     val und = g.cachedUndirected.select(col("src"), col("dst"))
