@@ -107,15 +107,18 @@ object ConnectedComponents {
       .getOrElse(joinLabels(g, maxIter, broadcastVertices))
 
   /** Min-label CC over the shared per-partition CSR (graph/Csr.scala) with
-    * the label state as a broadcast int vector and driver-side path
-    * compression — the r11 sv twin of PageRank.convergedCsr, and the same
-    * scale contract: the |E|-row adjacency never leaves the executors;
-    * each round broadcasts |V| ints, runs one 32-task min-over-neighbors
-    * pass, collects only the CHANGED (slot, label) chunks, then compresses
-    * label chains driver-side (labels are vertex slots, so lbl[v] ≤ v
-    * always and chains chase strictly downhill — one O(|V| α) pass spreads
-    * mins exponentially, the hash-to-min jump without its |V|-row
-    * self-join).
+    * the label state as an int vector and path compression after every
+    * round — the r11 sv twin of PageRank.convergedCsr, run by [[CsrLoop]]
+    * and with the same scale contract: the |E|-row adjacency never leaves
+    * the executors. Each round every block takes the min over its
+    * vertices' neighbor labels, reading only the pre-round labels
+    * (Jacobi), and returns just the CHANGED (slot, label) pairs; the fold
+    * applies them and compresses label chains (labels are vertex slots, so
+    * lbl[v] ≤ v always and chains chase strictly downhill — one O(|V| α)
+    * pass spreads mins exponentially, the hash-to-min jump without its
+    * |V|-row self-join). A one-partition CSR runs every round in one Spark
+    * task; otherwise each round is one job (broadcast the labels, map the
+    * blocks, collect, fold on the driver).
     *
     * Exactness: a round with zero improvements means lbl[v] ≤ lbl[u]
     * across every edge in BOTH orientations (the cache is symmetrized), so
@@ -124,84 +127,83 @@ object ConnectedComponents {
     * whose id is the min member id (slot order is id order), the
     * identical labeling the join path converges to (equivalence-tested on
     * every graph-shape fixture and under offset and hashed id maps).
+    * Throws IllegalStateException on the driver when `maxIter` rounds end
+    * short of the fixpoint.
     *
     * None (→ join path) when the graph is empty or has
     * [[Csr.MaxVertices]] or more vertices.
     */
   def csrLabels(g: Graph, maxIter: Int = 50): Option[DataFrame] = {
-    val edges = g.cachedUndirected
-    val spark = edges.sparkSession
-    import spark.implicits._
-    val (blocksOpt, shared) = Csr.cachedOrBuild(g)
-    blocksOpt.map { blocks =>
-      val csr = blocks.rdd
-      val n = blocks.ids.length
-      val sc = spark.sparkContext
-      val lbl = new Array[Int](n)
-      var v = 0
-      while (v < n) { lbl(v) = v; v += 1 }
-      var changed = 1L
-      var round = 0
-      while (changed > 0 && round < maxIter) {
-        val bcL = sc.broadcast(lbl)
-        val ups = csr.map { case (vsA, offA, nbrA) =>
-          val l = bcL.value
-          val ids = new scala.collection.mutable.ArrayBuilder.ofInt
-          val nl = new scala.collection.mutable.ArrayBuilder.ofInt
-          var k = 0
-          while (k < vsA.length) {
-            val vv = vsA(k)
-            var m = l(vv)
-            var j = offA(k)
-            val end = offA(k + 1)
-            while (j < end) {
-              val lu = l(nbrA(j)); if (lu < m) m = lu; j += 1
-            }
-            if (m < l(vv)) { ids += vv; nl += m }
-            k += 1
-          }
-          (ids.result(), nl.result())
-        }.collect()
-        bcL.destroy()
-        changed = 0L
-        ups.foreach { case (ids, nl) =>
-          var k = 0
-          while (k < ids.length) {
-            val vv = ids(k)
-            if (nl(k) < lbl(vv)) { lbl(vv) = nl(k); changed += 1 }
-            k += 1
-          }
-        }
-        if (changed > 0) {
-          // full path compression: chase each chain to its root once and
-          // rewrite the path — the pointer-jump acceleration, driver-side
-          var i2 = 0
-          while (i2 < n) {
-            var r = lbl(i2)
-            while (lbl(r) != r) r = lbl(r)
-            var c = i2
-            while (lbl(c) != r) { val nx = lbl(c); lbl(c) = r; c = nx }
-            i2 += 1
-          }
-        }
-        round += 1
-      }
-      if (changed > 0) throw new IllegalStateException(
+    val spark = g.cachedUndirected.sparkSession
+    CsrLoop.withBlocks(g) { blocks =>
+      val r = CsrLoop.run(blocks, MinLabelKernel,
+        new MinLabelState(Array.tabulate(blocks.ids.length)(v => v)), maxIter)
+      if (!r.converged) throw new IllegalStateException(
         s"ConnectedComponents.csr: fixpoint not reached after $maxIter " +
           "rounds — non-minimal labels must never be returned (or " +
           "memoized into the label cache; r11 ADVICE — the coreness " +
-          "contract). Raise maxIter; the driver-side path compression " +
-          "makes >50 rounds unreachable on any real graph.")
-      val bcOut = sc.broadcast((blocks.ids, lbl))
-      val out = csr.mapPartitions { it =>
-        val (ids, l) = bcOut.value
-        it.flatMap { case (vsA, _, _) =>
-          vsA.iterator.map(v0 => (ids(v0), ids(l(v0))))
+          "contract). Raise maxIter; the path compression makes >50 " +
+          "rounds unreachable on any real graph.")
+      Some(CsrLoop.emit(spark, blocks, r.state.lbl, "id", "component") {
+        (ids, l, v) => Some(ids(l(v)))
+      })
+    }
+  }
+
+  /** [[csrLabels]]' state: `lbl(v)` is slot v's label slot, `changed`
+    * the last round's improved labels (1 before the first round).
+    */
+  private final class MinLabelState(val lbl: Array[Int],
+      var changed: Long = 1L) extends Serializable
+
+  /** [[csrLabels]]' kernel. A block update is its changed slots and
+    * their new labels.
+    */
+  private object MinLabelKernel extends CsrLoop.Kernel[MinLabelState,
+      Array[Int], (Array[Int], Array[Int])] {
+    def pending(s: MinLabelState): Boolean = s.changed > 0
+    def message(s: MinLabelState): Array[Int] = s.lbl
+    def step(l: Array[Int], b: CsrLoop.Block): (Array[Int], Array[Int]) = {
+      val (vsA, offA, nbrA) = b
+      val ids = new scala.collection.mutable.ArrayBuilder.ofInt
+      val nl = new scala.collection.mutable.ArrayBuilder.ofInt
+      var k = 0
+      while (k < vsA.length) {
+        val vv = vsA(k)
+        var m = l(vv)
+        var j = offA(k)
+        val end = offA(k + 1)
+        while (j < end) {
+          val lu = l(nbrA(j)); if (lu < m) m = lu; j += 1
         }
-      }.toDF("id", "component").localCheckpoint(true)
-      bcOut.destroy()
-      if (!shared) csr.unpersist(blocking = false)
-      out
+        if (m < l(vv)) { ids += vv; nl += m }
+        k += 1
+      }
+      (ids.result(), nl.result())
+    }
+    def fold(s: MinLabelState, ups: Array[(Array[Int], Array[Int])]): Unit = {
+      val lbl = s.lbl
+      s.changed = 0L
+      ups.foreach { case (ids, nl) =>
+        var k = 0
+        while (k < ids.length) {
+          val vv = ids(k)
+          if (nl(k) < lbl(vv)) { lbl(vv) = nl(k); s.changed += 1 }
+          k += 1
+        }
+      }
+      if (s.changed > 0) {
+        // full path compression: chase each chain to its root once and
+        // rewrite the path — the pointer-jump acceleration
+        var i2 = 0
+        while (i2 < lbl.length) {
+          var r = lbl(i2)
+          while (lbl(r) != r) r = lbl(r)
+          var c = i2
+          while (lbl(c) != r) { val nx = lbl(c); lbl(c) = r; c = nx }
+          i2 += 1
+        }
+      }
     }
   }
 
@@ -473,116 +475,117 @@ object ShortestPaths {
     csrBfs(g, source, maxIter)
       .getOrElse(runJoin(g, edges, source, maxIter, broadcastState))
 
-  /** BFS over the shared per-partition CSR (graph/Csr.scala) — the r11
-    * sssp/diameter twin of ConnectedComponents.csrLabels, with an even
-    * lighter per-round exchange: executors need only a VISITED bitmap
-    * (|V|/8 bytes — 1.8 MB at SCALE 24, not the |V|-int state vector) plus
-    * the frontier slots; each partition walks just its frontier vertices'
-    * neighbor lists (src rows are partition-unique and sorted, so a
-    * binary search finds each frontier vertex's block) and returns a
-    * discovery BITMAP, which the driver ORs into distances and the next
-    * frontier. Per-round driver traffic is bitmap-bounded (|V|/8 bytes
-    * per partition) regardless of how hub-heavy the frontier is; total
-    * executor work telescopes to Σ deg(reached) = O(|E|) over the whole
-    * BFS — the textbook level-synchronous cost, with zero joins, zero
-    * aggregates, zero shuffle.
+  /** BFS over the shared per-partition CSR (graph/Csr.scala), run by
+    * [[CsrLoop]] — the r11 sssp/diameter twin of
+    * ConnectedComponents.csrLabels, with an even lighter step: a block
+    * reads only a VISITED bitmap (|V|/8 bytes — 1.8 MB at SCALE 24, not
+    * the |V|-int state vector) plus the frontier slots, walks just its
+    * frontier vertices' neighbor lists (src rows are partition-unique and
+    * sorted, so a binary search finds each frontier vertex's block) and
+    * returns a discovery BITMAP, which the fold ORs into distances and
+    * the next frontier. Per-round traffic on the multi-block path
+    * (broadcast, collect) is bitmap-bounded (|V|/8 bytes per partition)
+    * regardless of how hub-heavy the frontier is; a one-partition CSR runs
+    * every level in one Spark task. Total work telescopes to
+    * Σ deg(reached) = O(|E|) over the whole BFS — the textbook
+    * level-synchronous cost, with zero joins, zero aggregates, zero
+    * shuffle.
     *
     * Exactness: a vertex enters the bitmap in round d iff some round-(d−1)
     * frontier vertex lists it and no earlier round visited it — the same
     * level sets the join path's anti-join produces; output rows cover
     * exactly the reached vertices (emitted from the partition-unique src
-    * lists). None (→ join path) when the source has no edge (the join
-    * path's seed-only answer needs no adjacency) and under the
-    * [[Csr.MaxVertices]] gate like the other broadcast-vector paths.
+    * lists). A frontier still non-empty after `maxIter` levels prints a
+    * `[graft] WARN` and returns the levels reached. None (→ join path)
+    * when the source has no edge (the join path's seed-only answer needs
+    * no adjacency) and under the [[Csr.MaxVertices]] gate like the other
+    * broadcast-vector paths.
     */
   def csrBfs(g: Graph, source: Long, maxIter: Int): Option[DataFrame] = {
     val spark = g.cachedUndirected.sparkSession
-    import spark.implicits._
-    val (blocksOpt, shared) = Csr.cachedOrBuild(g)
-    val src =
-      blocksOpt.fold(-1)(b => java.util.Arrays.binarySearch(b.ids, source))
-    if (src < 0) {
-      if (!shared) blocksOpt.foreach(_.rdd.unpersist(blocking = false))
-      return None
-    }
-    blocksOpt.map { blocks =>
-      val csr = blocks.rdd
-      val n = blocks.ids.length
-      val sc = spark.sparkContext
-      val words = (n + 63) >> 6
-      val visited = new Array[Long](words)
-      val dist = new Array[Int](n)
-      java.util.Arrays.fill(dist, -1)
-      dist(src) = 0
-      visited(src >> 6) |= 1L << (src & 63)
-      var frontier = Array(src)
-      var d = 0
-      while (frontier.nonEmpty && d < maxIter) {
-        d += 1
-        val bcV = sc.broadcast(visited)
-        val bcF = sc.broadcast(frontier)
-        val news = csr.map { case (vsA, offA, nbrA) =>
-          val vis = bcV.value
-          val fr = bcF.value
-          val found = new Array[Long](vis.length)
-          var fi = 0
-          while (fi < fr.length) {
-            val k = java.util.Arrays.binarySearch(vsA, fr(fi))
-            if (k >= 0) {
-              var j = offA(k)
-              val end = offA(k + 1)
-              while (j < end) {
-                val u = nbrA(j)
-                if ((vis(u >> 6) & (1L << (u & 63))) == 0L)
-                  found(u >> 6) |= 1L << (u & 63)
-                j += 1
-              }
-            }
-            fi += 1
-          }
-          found
-        }.reduce { (a, b) =>
-          var w = 0
-          while (w < a.length) { a(w) |= b(w); w += 1 }
-          a
-        }
-        bcV.destroy(); bcF.destroy()
-        val nf = new scala.collection.mutable.ArrayBuilder.ofInt
-        var w = 0
-        while (w < words) {
-          var bits = news(w) & ~visited(w)
-          visited(w) |= news(w)
-          while (bits != 0L) {
-            val b = java.lang.Long.numberOfTrailingZeros(bits)
-            val v = (w << 6) + b
-            dist(v) = d
-            nf += v
-            bits &= bits - 1
-          }
-          w += 1
-        }
-        frontier = nf.result()
+    CsrLoop.withBlocks(g) { blocks =>
+      val src = java.util.Arrays.binarySearch(blocks.ids, source)
+      if (src < 0) None
+      else {
+        val r = CsrLoop.run(blocks, LevelKernel,
+          new LevelState(blocks.ids.length, src), maxIter)
+        if (!r.converged)
+          System.err.println(s"[graft] WARN ShortestPaths.csr: frontier " +
+            s"still non-empty after $maxIter hops — distances beyond the " +
+            "cap missing")
+        // the seed row ships separately: the symmetrized cache lists the
+        // source as a src iff it has an edge, but the join path's seed row
+        // exists even for an edgeless source — emission must match exactly
+        Some(CsrLoop.emit(spark, blocks, r.state.dist, "id", "dist",
+            extra = Seq((source, 0L))) { (_, ds, v) =>
+          if (v != src && ds(v) >= 0) Some(ds(v).toLong) else None
+        })
       }
-      if (frontier.nonEmpty)
-        System.err.println(s"[graft] WARN ShortestPaths.csr: frontier " +
-          s"still non-empty after $maxIter hops — distances beyond the " +
-          "cap missing")
-      // the seed row ships separately: the symmetrized cache lists the
-      // source as a src iff it has an edge, but the join path's seed row
-      // exists even for an edgeless source — emission must match exactly
-      val bcD = sc.broadcast((blocks.ids, dist))
-      val out = csr.mapPartitions { it =>
-        val (ids, ds) = bcD.value
-        it.flatMap { case (vsA, _, _) =>
-          vsA.iterator.filter(v0 => v0 != src && ds(v0) >= 0)
-            .map(v0 => (ids(v0), ds(v0).toLong))
+    }
+  }
+
+  /** [[csrBfs]]' state: the visited bitmap, each slot's level (−1 while
+    * unreached), the current frontier and its level `d`.
+    */
+  private final class LevelState(n: Int, src: Int) extends Serializable {
+    val visited = new Array[Long]((n + 63) >> 6)
+    val dist = Array.fill(n)(-1)
+    var frontier = Array(src)
+    var d = 0
+    dist(src) = 0
+    visited(src >> 6) |= 1L << (src & 63)
+  }
+
+  /** [[csrBfs]]' kernel: a block reads (visited, frontier) and returns
+    * the bitmap of unvisited neighbors of its frontier vertices.
+    */
+  private object LevelKernel extends CsrLoop.Kernel[LevelState,
+      (Array[Long], Array[Int]), Array[Long]] {
+    def pending(s: LevelState): Boolean = s.frontier.nonEmpty
+    def message(s: LevelState): (Array[Long], Array[Int]) =
+      (s.visited, s.frontier)
+    def step(m: (Array[Long], Array[Int]), b: CsrLoop.Block): Array[Long] = {
+      val (vis, fr) = m
+      val (vsA, offA, nbrA) = b
+      val found = new Array[Long](vis.length)
+      var fi = 0
+      while (fi < fr.length) {
+        val k = java.util.Arrays.binarySearch(vsA, fr(fi))
+        if (k >= 0) {
+          var j = offA(k)
+          val end = offA(k + 1)
+          while (j < end) {
+            val u = nbrA(j)
+            if ((vis(u >> 6) & (1L << (u & 63))) == 0L)
+              found(u >> 6) |= 1L << (u & 63)
+            j += 1
+          }
         }
-      }.toDF("id", "dist")
-        .union(Seq((source, 0L)).toDF("id", "dist"))
-        .localCheckpoint(true)
-      bcD.destroy()
-      if (!shared) csr.unpersist(blocking = false)
-      out
+        fi += 1
+      }
+      found
+    }
+    def fold(s: LevelState, ups: Array[Array[Long]]): Unit = {
+      val visited = s.visited
+      s.d += 1
+      val nf = new scala.collection.mutable.ArrayBuilder.ofInt
+      var w = 0
+      while (w < visited.length) {
+        var news = 0L
+        var p = 0
+        while (p < ups.length) { news |= ups(p)(w); p += 1 }
+        var bits = news & ~visited(w)
+        visited(w) |= news
+        while (bits != 0L) {
+          val b = java.lang.Long.numberOfTrailingZeros(bits)
+          val v = (w << 6) + b
+          s.dist(v) = s.d
+          nf += v
+          bits &= bits - 1
+        }
+        w += 1
+      }
+      s.frontier = nf.result()
     }
   }
 
@@ -946,7 +949,7 @@ object PageRank {
 
   /** Tolerance-converged variant: stops when Σ|x_{k+1} − x_k| < tol (the
     * reference converges on epsilon=1e-8 total delta, App.scala:164).
-    * Dispatches to the driver-vector CSR path ([[convergedCsr]]) below
+    * Dispatches to the CSR vector path ([[convergedCsr]]) below
     * the [[Csr.MaxVertices]] gate and otherwise to the Chebyshev join
     * formulation ([[convergedCheby]]). The dense power iteration survives
     * as [[convergedDense]], the equivalence reference for both.
@@ -1047,37 +1050,39 @@ object PageRank {
   }
 
   /** Chebyshev PageRank over a per-partition CSR with the rank state as a
-    * broadcast vector — the compute-floor lever for the large R-MAT tier
-    * (r7–r10 receipts: per-iteration cost there is the 530M-row
-    * probe+agg, not shuffle bytes; the bcswap path already moved ZERO
-    * |E|-row exchange bytes and still paid 13–17 s/iteration building
-    * 32 per-task 16.8M-group hash tables).
+    * |V|-double vector, run by [[CsrLoop]] — the compute-floor lever for
+    * the large R-MAT tier (r7–r10 receipts: per-iteration cost there is
+    * the 530M-row probe+agg, not shuffle bytes; the bcswap path already
+    * moved ZERO |E|-row exchange bytes and still paid 13–17 s/iteration
+    * building 32 per-task 16.8M-group hash tables).
     *
     * Shape: `cachedUndirected` is hash-partitioned on `src` and holds
     * both orientations, so (src → sorted neighbor list) is a ZERO-exchange
-    * per-partition CSR build (one sortWithinPartitions, materialized
-    * once). Each iteration then is
+    * per-partition CSR build ([[Csr.buildDense]], materialized once).
+    * Each iteration then is
     *
-    *   1. driver: contrib[v] = x[v]/outdeg[v]   (|V| doubles)
-    *   2. broadcast contrib; one 32-task job computes per-src neighbor
-    *      sums as a primitive-array SpMV over the cached CSR blocks —
-    *      no join, no hash aggregate, no |E|-row intermediate
-    *   3. collect the per-partition sum chunks (|V| doubles total) and
-    *      apply the three-term Chebyshev update driver-side; Σ|Δx| is
-    *      free every round, so the loop stops at the exact iteration
-    *      (no DeltaEvery overshoot)
+    *   1. message: contrib[v] = x[v]/outdeg[v]   (|V| doubles)
+    *   2. step: per-src neighbor sums of contrib as a primitive-array SpMV
+    *      over each CSR block — no join, no hash aggregate, no |E|-row
+    *      intermediate
+    *   3. fold: apply the three-term Chebyshev update to the sum chunks in
+    *      partition order; Σ|Δx| is free every round, so the loop stops at
+    *      the exact iteration (no DeltaEvery overshoot)
     *
-    * Per-iteration driver traffic is |V| doubles out (broadcast) + |V|
-    * doubles back (collect) — the SAME magnitude the accepted bcswap
-    * path's BroadcastExchange collects and re-broadcasts every round,
-    * minus the Row overhead. The |E|-row adjacency never leaves the
-    * executors (that is the 100 TB-scale invariant); the |V|-vector is
-    * the broadcastable-state assumption both paths share, and the
-    * [[Csr.MaxVertices]] gate plus the join-path fallback keep the
-    * billion-vertex story identical to bcswap's. RDD
-    * mapPartitions is justified here the same way the multimodal decoders
-    * are: no Catalyst expression can index a broadcast primitive vector,
-    * and the kernel is genuinely per-partition imperative.
+    * A one-partition CSR runs every iteration inside one Spark task.
+    * Otherwise each iteration is one job: contrib goes out as a broadcast
+    * (|V| doubles) and the sum chunks come back by collect (|V| doubles) —
+    * the SAME magnitude the accepted bcswap path's BroadcastExchange
+    * collects and re-broadcasts every round, minus the Row overhead. The
+    * |E|-row adjacency never leaves the executors (that is the 100
+    * TB-scale invariant); the |V|-vector is the broadcastable-state
+    * assumption both paths share, and the [[Csr.MaxVertices]] gate plus
+    * the join-path fallback keep the billion-vertex story identical to
+    * bcswap's. RDD mapPartitions is justified here the same way the
+    * multimodal decoders are: no Catalyst expression can index a
+    * primitive state vector, and the kernel is genuinely per-partition
+    * imperative. Σ|Δx| still above `tol` after `maxIter` iterations
+    * prints a `[graft] WARN` and returns the last iterate.
     *
     * Returns None when the graph is empty or at the [[Csr.MaxVertices]]
     * gate (caller falls back); arithmetic is msgRound's exactly (sum of
@@ -1090,48 +1095,73 @@ object PageRank {
   def convergedCsr(g: Graph, tol: Double = 1e-8,
       maxIter: Int = 100): Option[DataFrame] = {
     val spark = g.cachedUndirected.sparkSession
-    import spark.implicits._
-    val (blocksOpt, csrShared) = Csr.cachedOrBuild(g)
-    if (blocksOpt.isEmpty) return None
-    val blocks = blocksOpt.get
-    val csr = blocks.rdd
-    val outdeg = blocks.degree
-    val n = blocks.ids.length
-    val nv = n.toDouble
-    val sc = spark.sparkContext
-    val teleport = (1.0 - Damping) / nv
-    val x = Array.fill(n)(1.0 / nv)
-    val xp = Array.fill(n)(1.0 / nv)
-    val contrib = new Array[Double](n)
+    CsrLoop.withBlocks(g) { blocks =>
+      val nv = blocks.ids.length.toDouble
+      val r = CsrLoop.run(blocks, ChebyshevKernel(tol, (1.0 - Damping) / nv),
+        new ChebyshevState(blocks.degree), maxIter)
+      if (!r.converged)
+        System.err.println(s"[graft] WARN PageRank.csr: Σ|Δx|=" +
+          s"${r.state.delta} still above tol=$tol after $maxIter iterations")
+      // same HALF_UP 8 dp rounding as round(x, 8)
+      Some(CsrLoop.emit(spark, blocks, r.state.x, "id", "pr") { (_, x, v) =>
+        Some(BigDecimal(x(v))
+          .setScale(8, scala.math.BigDecimal.RoundingMode.HALF_UP).toDouble)
+      })
+    }
+  }
+
+  /** [[convergedCsr]]' state: iterates x (current) and xp (previous),
+    * the contribution buffer, ω and Σ|Δx| of the last iteration and the
+    * iteration count `i`.
+    */
+  private final class ChebyshevState(val outdeg: Array[Int])
+      extends Serializable {
+    val x = Array.fill(outdeg.length)(1.0 / outdeg.length)
+    val xp = Array.fill(outdeg.length)(1.0 / outdeg.length)
+    val contrib = new Array[Double](outdeg.length)
     var omega = 1.0
     var delta = Double.MaxValue
     var i = 0
-    while (i < maxIter && delta > tol) {
-      omega =
-        if (i == 0) 1.0
-        else if (i == 1) 1.0 / (1.0 - Damping * Damping / 2.0)
-        else 1.0 / (1.0 - omega * Damping * Damping / 4.0)
+  }
+
+  /** [[convergedCsr]]' kernel: a block reads contrib and returns its src
+    * slots with their neighbor sums.
+    */
+  private final case class ChebyshevKernel(tol: Double, teleport: Double)
+      extends CsrLoop.Kernel[ChebyshevState, Array[Double],
+        (Array[Int], Array[Double])] {
+    def pending(s: ChebyshevState): Boolean = s.delta > tol
+    def message(s: ChebyshevState): Array[Double] = {
       var v = 0
-      while (v < n) { contrib(v) = x(v) / outdeg(v); v += 1 }
-      val bc = sc.broadcast(contrib)
-      val sums = csr.map { case (vsA, offA, nbrA) =>
-        val c = bc.value
-        val out = new Array[Double](vsA.length)
-        var k = 0
-        while (k < vsA.length) {
-          var s = 0.0
-          var j = offA(k)
-          val end = offA(k + 1)
-          while (j < end) { s += c(nbrA(j)); j += 1 }
-          out(k) = s
-          k += 1
-        }
-        (vsA, out)
-      }.collect()
-      bc.destroy()
-      val w = omega
+      while (v < s.contrib.length) {
+        s.contrib(v) = s.x(v) / s.outdeg(v); v += 1
+      }
+      s.contrib
+    }
+    def step(c: Array[Double],
+        b: CsrLoop.Block): (Array[Int], Array[Double]) = {
+      val (vsA, offA, nbrA) = b
+      val out = new Array[Double](vsA.length)
+      var k = 0
+      while (k < vsA.length) {
+        var sum = 0.0
+        var j = offA(k)
+        val end = offA(k + 1)
+        while (j < end) { sum += c(nbrA(j)); j += 1 }
+        out(k) = sum
+        k += 1
+      }
+      (vsA, out)
+    }
+    def fold(s: ChebyshevState,
+        ups: Array[(Array[Int], Array[Double])]): Unit = {
+      val (x, xp) = (s.x, s.xp)
+      val w =
+        if (s.i == 0) 1.0
+        else if (s.i == 1) 1.0 / (1.0 - Damping * Damping / 2.0)
+        else 1.0 / (1.0 - s.omega * Damping * Damping / 4.0)
       var dsum = 0.0
-      sums.foreach { case (vsA, ms) =>
+      ups.foreach { case (vsA, ms) =>
         var k = 0
         while (k < vsA.length) {
           val vid = vsA(k)
@@ -1143,29 +1173,10 @@ object PageRank {
           k += 1
         }
       }
-      delta = dsum
-      i += 1
+      s.omega = w
+      s.delta = dsum
+      s.i += 1
     }
-    if (delta > tol)
-      System.err.println(s"[graft] WARN PageRank.csr: Σ|Δx|=$delta still " +
-        s"above tol=$tol after $maxIter iterations")
-    // distribute the final vector through the blocks' src slots (same
-    // HALF_UP 8 dp rounding as round(x, 8)); materialize before freeing
-    // the broadcast and the CSR cache
-    val bcX = sc.broadcast((blocks.ids, x))
-    val out = csr.mapPartitions { it =>
-      val (ids, xv) = bcX.value
-      it.flatMap { case (vsA, _, _) =>
-        vsA.iterator.map { v0 =>
-          (ids(v0), BigDecimal(xv(v0))
-            .setScale(8, scala.math.BigDecimal.RoundingMode.HALF_UP)
-            .toDouble)
-        }
-      }
-    }.toDF("id", "pr").localCheckpoint(true)
-    bcX.destroy()
-    if (!csrShared) csr.unpersist(blocking = false)
-    Some(out)
   }
 
   /** The dense synchronous power iteration (pre-r6 `converged`): every
@@ -1715,97 +1726,102 @@ object Coreness {
       .getOrElse(runJoin(g, maxIter, broadcastVertices))
 
   /** The h-operator iteration over the shared per-partition CSR
-    * (graph/Csr.scala) — the r11 lever the large-tier receipt named: the
-    * join path's per-round cost is a \|2E\|-row window sort + aggregate
-    * exchange (556 s/round at SCALE 24 on the measured host), while here
-    * each round broadcasts the \|V\|-int estimate vector and computes
-    * every vertex's Hirsch index in ONE pass over its CSR block with a
-    * counting array (c[min(est(u), deg)]++ then the descending
-    * cumulative scan — O(deg) per vertex, no sort at all, hub skew
-    * vanishes into the linear scan). Only CHANGED (id, est) chunks
-    * collect. The schedule is synchronous like [[hPass]], so the
-    * per-round estimates — and therefore the convergence depth the
-    * `oracleRounds` contract checks — are identical to the join path's
-    * (equivalence-tested per round count and per final label). The
-    * initial estimate is the blocks' degree vector. Gate
-    * ([[Csr.MaxVertices]]) and fallback as the other broadcast-vector
-    * paths.
+    * (graph/Csr.scala), run by [[CsrLoop]] — the r11 lever the large-tier
+    * receipt named: the join path's per-round cost is a \|2E\|-row window
+    * sort + aggregate exchange (556 s/round at SCALE 24 on the measured
+    * host), while here each round's block step reads the \|V\|-int
+    * estimate vector and computes every vertex's Hirsch index in ONE pass
+    * over its CSR block with a counting array (c[min(est(u), deg)]++ then
+    * the descending cumulative scan — O(deg) per vertex, no sort at all,
+    * hub skew vanishes into the linear scan), returning only CHANGED
+    * (slot, est) pairs. A one-partition CSR runs every round in one Spark
+    * task; otherwise each round is one job (broadcast the estimates, map
+    * the blocks, collect, fold on the driver). The schedule is synchronous
+    * like [[hPass]], so the per-round estimates — and therefore the
+    * convergence depth the `oracleRounds` contract checks — are identical
+    * to the join path's (equivalence-tested per round count and per final
+    * label). The initial estimate is the blocks' degree vector. Throws
+    * IllegalStateException on the driver when `maxIter` rounds end short
+    * of the fixpoint. Gate ([[Csr.MaxVertices]]) and fallback as the other
+    * broadcast-vector paths.
     */
   def csrCoreness(g: Graph,
       maxIter: Int): Option[(DataFrame, Int, Boolean)] = {
     val spark = g.cachedUndirected.sparkSession
-    import spark.implicits._
-    val (blocksOpt, shared) = Csr.cachedOrBuild(g)
-    blocksOpt.map { blocks =>
-      val csr = blocks.rdd
-      val sc = spark.sparkContext
-      val est = blocks.degree.clone()
-      var changed = 1L
-      var i = 0
-      while (changed > 0 && i < maxIter) {
-        val bcE = sc.broadcast(est)
-        val ups = csr.map { case (vsA, offA, nbrA) =>
-          val e = bcE.value
-          var maxDeg = 0
-          var k = 0
-          while (k < vsA.length) {
-            val d = offA(k + 1) - offA(k)
-            if (d > maxDeg) maxDeg = d
-            k += 1
-          }
-          val cnt = new Array[Int](maxDeg + 1)
-          val ids = new scala.collection.mutable.ArrayBuilder.ofInt
-          val ne = new scala.collection.mutable.ArrayBuilder.ofInt
-          k = 0
-          while (k < vsA.length) {
-            val v = vsA(k)
-            val start = offA(k)
-            val end = offA(k + 1)
-            val d = end - start
-            java.util.Arrays.fill(cnt, 0, d + 1, 0)
-            var j = start
-            while (j < end) {
-              val x = e(nbrA(j))
-              cnt(if (x > d) d else x) += 1
-              j += 1
-            }
-            var h = d
-            var cum = 0
-            var found = 0
-            while (h > 0 && found == 0) {
-              cum += cnt(h)
-              if (cum >= h) found = h else h -= 1
-            }
-            if (found != e(v)) { ids += v; ne += found }
-            k += 1
-          }
-          (ids.result(), ne.result())
-        }.collect()
-        bcE.destroy()
-        changed = 0L
-        ups.foreach { case (ids, ne) =>
-          var k = 0
-          while (k < ids.length) {
-            if (est(ids(k)) != ne(k)) { est(ids(k)) = ne(k); changed += 1 }
-            k += 1
-          }
-        }
-        i += 1
-      }
-      if (changed > 0) throw new IllegalStateException(
+    CsrLoop.withBlocks(g) { blocks =>
+      val r = CsrLoop.run(blocks, HIndexKernel,
+        new HIndexState(blocks.degree.clone()), maxIter)
+      if (!r.converged) throw new IllegalStateException(
         s"Coreness: h-iteration did not converge within $maxIter rounds — " +
           "an unconverged estimate must never be returned (or memoized): " +
           "downstream warm starts (X26) assume exact coreness. Raise maxIter.")
-      val bcO = sc.broadcast((blocks.ids, est))
-      val out = csr.mapPartitions { it =>
-        val (ids, e) = bcO.value
-        it.flatMap { case (vsA, _, _) =>
-          vsA.iterator.map(v0 => (ids(v0), e(v0).toLong))
+      val out = CsrLoop.emit(spark, blocks, r.state.est, "id", "coreness") {
+        (_, e, v) => Some(e(v).toLong)
+      }
+      Some((out, r.rounds, true))
+    }
+  }
+
+  /** [[csrCoreness]]' state: each slot's estimate and the last round's
+    * changed count (1 before the first round).
+    */
+  private final class HIndexState(val est: Array[Int],
+      var changed: Long = 1L) extends Serializable
+
+  /** [[csrCoreness]]' kernel (the counting [[hPass]] per block). A block
+    * update is its changed slots and their new estimates.
+    */
+  private object HIndexKernel extends CsrLoop.Kernel[HIndexState, Array[Int],
+      (Array[Int], Array[Int])] {
+    def pending(s: HIndexState): Boolean = s.changed > 0
+    def message(s: HIndexState): Array[Int] = s.est
+    def step(e: Array[Int], b: CsrLoop.Block): (Array[Int], Array[Int]) = {
+      val (vsA, offA, nbrA) = b
+      var maxDeg = 0
+      var k = 0
+      while (k < vsA.length) {
+        val d = offA(k + 1) - offA(k)
+        if (d > maxDeg) maxDeg = d
+        k += 1
+      }
+      val cnt = new Array[Int](maxDeg + 1)
+      val ids = new scala.collection.mutable.ArrayBuilder.ofInt
+      val ne = new scala.collection.mutable.ArrayBuilder.ofInt
+      k = 0
+      while (k < vsA.length) {
+        val v = vsA(k)
+        val start = offA(k)
+        val end = offA(k + 1)
+        val d = end - start
+        java.util.Arrays.fill(cnt, 0, d + 1, 0)
+        var j = start
+        while (j < end) {
+          val x = e(nbrA(j))
+          cnt(if (x > d) d else x) += 1
+          j += 1
         }
-      }.toDF("id", "coreness").localCheckpoint(true)
-      bcO.destroy()
-      if (!shared) csr.unpersist(blocking = false)
-      (out, i, true)
+        var h = d
+        var cum = 0
+        var found = 0
+        while (h > 0 && found == 0) {
+          cum += cnt(h)
+          if (cum >= h) found = h else h -= 1
+        }
+        if (found != e(v)) { ids += v; ne += found }
+        k += 1
+      }
+      (ids.result(), ne.result())
+    }
+    def fold(s: HIndexState, ups: Array[(Array[Int], Array[Int])]): Unit = {
+      val est = s.est
+      s.changed = 0L
+      ups.foreach { case (ids, ne) =>
+        var k = 0
+        while (k < ids.length) {
+          if (est(ids(k)) != ne(k)) { est(ids(k)) = ne(k); s.changed += 1 }
+          k += 1
+        }
+      }
     }
   }
 

@@ -8,16 +8,19 @@ import org.apache.spark.storage.StorageLevel
 /** Per-partition CSR blocks over dense vertex slots — the shared
   * substrate of the broadcast-vector iteration paths
   * ([[ConnectedComponents.csrLabels]], [[ShortestPaths.csrBfs]],
-  * [[PageRank.convergedCsr]], [[Coreness.csrCoreness]]).
+  * [[PageRank.convergedCsr]], [[Coreness.csrCoreness]]), which all run
+  * their rounds through [[CsrLoop]].
   *
   * `Graph.cachedUndirected` is hash-partitioned on `src` and holds both
   * orientations, so every vertex's full neighbor list lives in exactly one
   * partition and (src → sorted neighbor list) builds with ZERO exchange:
   * one `sortWithinPartitions` groups each src's rows and the per-partition
   * pass packs primitive arrays. The |E|-row adjacency never leaves the
-  * executors afterwards — each iteration of a consumer broadcasts only a
-  * |V|-slot primitive vector and collects |V|-bounded update chunks, the
-  * same memory class as the accepted bcswap BroadcastExchange.
+  * executors afterwards. A one-partition CSR runs a consumer's whole loop
+  * inside one Spark task; over several partitions each round is one job
+  * that broadcasts only a |V|-slot primitive vector and collects
+  * |V|-bounded update chunks, the same memory class as the accepted bcswap
+  * BroadcastExchange.
   *
   * Vertex slots: every vertex's slot is its rank in the sorted array of
   * distinct vertex ids ([[Blocks.ids]]), so state vectors are sized by

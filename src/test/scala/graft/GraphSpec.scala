@@ -191,6 +191,106 @@ class GraphSpec extends AnyFunSuite {
     }
   }
 
+  /** The partition count of `g`'s CSR blocks, which decides whether the
+    * CSR loops run in one task or one job per round.
+    */
+  def csrPartitions(g: Graph): Int = {
+    val b = Csr.buildDense(g.cachedUndirected)
+      .getOrElse(fail("csr build declined"))
+    b.rdd.unpersist(blocking = false)
+    b.rdd.getNumPartitions
+  }
+
+  test("csr loop: the one-task and the multi-block paths agree exactly") {
+    def same(a: DataFrame, b: DataFrame, msg: String) =
+      assert(a.exceptAll(b).count() == 0 && b.exceptAll(a).count() == 0, msg)
+    val planted = Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L), (4L, 5L),
+      (20L, 21L), (21L, 22L), (22L, 23L), (20L, 22L), (30L, 30L),
+      (40L, 41L)).toDF("src", "dst")
+    val rmat = RMat.graph(spark, RMat.Params(scale = 8)).edges
+      .select("src", "dst")
+    Seq("planted" -> planted, "rmat" -> rmat).foreach { case (shape, raw) =>
+      val one = Graph.fromRawEdges(raw)
+      // about four src partitions, each holding some vertex
+      val many = Graph.fromRawEdges(raw, rowsPerPartition = raw.count() / 2)
+      assert(csrPartitions(one) == 1, s"$shape: one-block fixture split")
+      assert(csrPartitions(many) >= 3, s"$shape: multi-block fixture is not")
+      assert(many.cachedUndirected.select(spark_partition_id()).distinct()
+        .count() >= 3, s"$shape: fewer than 3 non-empty blocks")
+      same(ConnectedComponents.csrLabels(one).get,
+        ConnectedComponents.csrLabels(many).get, s"$shape: CC labels differ")
+      val src = one.cachedUndirected.agg(min(col("src"))).head().getLong(0)
+      same(ShortestPaths.csrBfs(one, src, 64).get,
+        ShortestPaths.csrBfs(many, src, 64).get,
+        s"$shape: BFS distances differ")
+      val (k1, r1, _) = Coreness.csrCoreness(one, 100).get
+      val (km, rm, _) = Coreness.csrCoreness(many, 100).get
+      assert(r1 == rm, s"$shape: coreness rounds differ: $r1 vs $rm")
+      same(k1, km, s"$shape: coreness labels differ")
+      same(PageRank.convergedCsr(one).get, PageRank.convergedCsr(many).get,
+        s"$shape: PageRank 8 dp output differs")
+    }
+  }
+
+  test("csr loop: a one-block graph runs each csr call in a fixed job count") {
+    val g = Graph.fromRawEdges(
+      RMat.graph(spark, RMat.Params(scale = 8)).edges.select("src", "dst"))
+    assert(csrPartitions(g) == 1)
+    val src = g.cachedUndirected.agg(min(col("src"))).head().getLong(0)
+    val sc = spark.sparkContext
+    def jobs(call: => Any): Int = {
+      val n = new java.util.concurrent.atomic.AtomicInteger
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(
+            e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          n.incrementAndGet()
+      }
+      org.apache.spark.graftspec.Bus.drain(sc)
+      sc.addSparkListener(listener)
+      try { call; org.apache.spark.graftspec.Bus.drain(sc) }
+      finally sc.removeSparkListener(listener)
+      n.get
+    }
+    // 2 build jobs + 1 loop job + 1 emit job, whatever the round count
+    val budget = 4
+    val counts = Seq(
+      "cc" -> jobs(ConnectedComponents.csrLabels(g).get),
+      "bfs" -> jobs(ShortestPaths.csrBfs(g, src, 64).get),
+      "pagerank" -> jobs(PageRank.convergedCsr(g).get),
+      "pagerank/3" -> jobs(PageRank.convergedCsr(g, maxIter = 3).get),
+      "coreness" -> jobs(Coreness.csrCoreness(g, 100).get),
+      "coreness/1" -> jobs(intercept[IllegalStateException](
+        Coreness.csrCoreness(g, 1))))
+    counts.foreach { case (call, n) =>
+      assert(n <= budget, s"$call ran $n jobs, budget $budget: $counts")
+    }
+    val m = counts.toMap
+    assert(m("pagerank") == m("pagerank/3"),
+      s"pagerank's job count depends on its round count: $counts")
+  }
+
+  test("csr loop: non-convergence is decided on the driver on both paths") {
+    val edges = (1L until 40L).map(i => (i, i + 1)).toDF("src", "dst")
+    Seq(Graph.fromRawEdges(edges),
+      Graph.fromRawEdges(edges, rowsPerPartition = 8)).foreach { g =>
+      val parts = csrPartitions(g)
+      // the throw reaches the caller as itself, not wrapped in a
+      // SparkException from a task
+      val cc = intercept[IllegalStateException](
+        ConnectedComponents.csrLabels(g, maxIter = 1))
+      assert(cc.getMessage.contains("fixpoint not reached"), cc.getMessage)
+      val core = intercept[IllegalStateException](Coreness.csrCoreness(g, 1))
+      assert(core.getMessage.contains("did not converge"), core.getMessage)
+      val near = ShortestPaths.csrBfs(g, 1L, 2).get.collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(near == Map(1L -> 0L, 2L -> 1L, 3L -> 2L),
+        s"$parts blocks: csrBfs(maxIter = 2) returned $near")
+      val pr = PageRank.convergedCsr(g, maxIter = 3).get
+      assert(pr.count() == 40L && pr.select("id").distinct().count() == 40L,
+        s"$parts blocks: unconverged PageRank is not one row per vertex")
+    }
+  }
+
   test("frontier cc equals the dense classic formulation") {
     // apply() dispatches to the CSR broadcast-vector path on these
     // fixtures (r11); joinLabels is the frontier join
