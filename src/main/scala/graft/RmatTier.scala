@@ -216,7 +216,8 @@ object RmatTier {
     val ne = g.cachedUndirected.count()
     // release this run's graph caches: a multi-run session (back-to-back
     // tier runs for variance pinning) must not accumulate 265M-row caches
-    // (the CSR blocks sv/sssp/pr shared are the same size class)
+    // (the one CSR build sv, sssp and pr shared on `g` is the same size
+    // class)
     graft.graph.Csr.release(g)
     g.preSymmetrized match {
       case Some(sym) => sym.unpersist(blocking = false)

@@ -78,7 +78,7 @@ object Partitioning {
       .repartition(keys.map(col): _*)
       .persist(level)
     first.count()
-    val n = obs.get("n").asInstanceOf[Long]
+    val n = Observations.metric(obs, "n").asInstanceOf[Long]
     val current = first.rdd.getNumPartitions
     val target = ((n + rowsPerPartition - 1) / rowsPerPartition)
       .max(1L).min(maxPartitions.toLong).toInt

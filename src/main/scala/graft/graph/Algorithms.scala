@@ -135,7 +135,7 @@ object ConnectedComponents {
     */
   def csrLabels(g: Graph, maxIter: Int = 50): Option[DataFrame] = {
     val spark = g.cachedUndirected.sparkSession
-    CsrLoop.withBlocks(g) { blocks =>
+    Csr.cachedOrBuild(g).flatMap { blocks =>
       val r = CsrLoop.run(blocks, MinLabelKernel,
         new MinLabelState(Array.tabulate(blocks.ids.length)(v => v)), maxIter)
       if (!r.converged) throw new IllegalStateException(
@@ -503,7 +503,7 @@ object ShortestPaths {
     */
   def csrBfs(g: Graph, source: Long, maxIter: Int): Option[DataFrame] = {
     val spark = g.cachedUndirected.sparkSession
-    CsrLoop.withBlocks(g) { blocks =>
+    Csr.cachedOrBuild(g).flatMap { blocks =>
       val src = java.util.Arrays.binarySearch(blocks.ids, source)
       if (src < 0) None
       else {
@@ -629,7 +629,8 @@ object ShortestPaths {
         .withColumn("dist", lit(d))
         .observe(obs, count(lit(1)).as("n"))
         .localCheckpoint(true)
-      if (obs.get("n").asInstanceOf[Long] == 0L) done = true
+      if (graft.core.Observations.metric(obs, "n").asInstanceOf[Long] == 0L)
+        done = true
       else {
         dist = dist.union(next)
         frontier = next
@@ -770,8 +771,8 @@ object WeightedShortestPaths {
         .observe(obs, sum(when(col("imp"), 1L).otherwise(0L)).as("nimp"))
         .localCheckpoint(true)
       frontier = upd.filter(col("imp")).select(col("id"), col("dist"))
-      frontierNonEmpty =
-        Option(obs.get("nimp")).exists(_.asInstanceOf[Long] > 0L)
+      frontierNonEmpty = Option(graft.core.Observations.metric(obs, "nimp"))
+        .exists(_.asInstanceOf[Long] > 0L)
       dist = upd.select(col("id"), col("dist"))
     }
     if (frontierNonEmpty)
@@ -880,7 +881,8 @@ object LandmarkDistances {
         .withColumn("dist", lit(d))
         .observe(obs, count(lit(1)).as("n"))
         .localCheckpoint(true)
-      if (obs.get("n").asInstanceOf[Long] == 0L) done = true
+      if (graft.core.Observations.metric(obs, "n").asInstanceOf[Long] == 0L)
+        done = true
       else {
         levels += next
         frontier = next
@@ -1095,7 +1097,7 @@ object PageRank {
   def convergedCsr(g: Graph, tol: Double = 1e-8,
       maxIter: Int = 100): Option[DataFrame] = {
     val spark = g.cachedUndirected.sparkSession
-    CsrLoop.withBlocks(g) { blocks =>
+    Csr.cachedOrBuild(g).flatMap { blocks =>
       val nv = blocks.ids.length.toDouble
       val r = CsrLoop.run(blocks, ChebyshevKernel(tol, (1.0 - Damping) / nv),
         new ChebyshevState(blocks.degree), maxIter)
@@ -1748,7 +1750,7 @@ object Coreness {
   def csrCoreness(g: Graph,
       maxIter: Int): Option[(DataFrame, Int, Boolean)] = {
     val spark = g.cachedUndirected.sparkSession
-    CsrLoop.withBlocks(g) { blocks =>
+    Csr.cachedOrBuild(g).flatMap { blocks =>
       val r = CsrLoop.run(blocks, HIndexKernel,
         new HIndexState(blocks.degree.clone()), maxIter)
       if (!r.converged) throw new IllegalStateException(
@@ -2573,7 +2575,8 @@ object Betweenness {
         .join(bc(visited), Seq("lm", "id"), "left_anti")
         .observe(obs, count(lit(1)).as("n"))
         .localCheckpoint(true)
-      frontierNonEmpty = obs.get("n").asInstanceOf[Long] > 0L
+      frontierNonEmpty =
+        graft.core.Observations.metric(obs, "n").asInstanceOf[Long] > 0L
       if (frontierNonEmpty) levels += next
       frontier = next
     }

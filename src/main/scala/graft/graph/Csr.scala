@@ -31,6 +31,11 @@ import org.apache.spark.storage.StorageLevel
   * list is id-sorted, so consumers' accumulation orders are those of the
   * id-indexed kernels.
   *
+  * One build per `Graph` instance: the blocks are a property of the
+  * graph, like [[Graph.cachedUndirected]], so sv, sssp and pr on one
+  * graph share one build ([[cachedOrBuild]]) and a declined build is not
+  * retried.
+  *
   * Gate: |V| < [[MaxVertices]]. Callers fall back to their
   * equivalence-tested join formulations on None.
   */
@@ -48,54 +53,33 @@ object Csr {
   /** CSR blocks: one (srcSlots, offsets, neighborSlots) triple per
     * partition, src slots ascending and each neighbor list slot-sorted;
     * `ids(s)` is slot s's vertex id (ascending) and `degree(s)` its
-    * neighbor count. The RDD is persisted; callers unpersist.
+    * neighbor count. The RDD is persisted and belongs to the `Graph`
+    * it was built for ([[cachedOrBuild]]).
     */
   final case class Blocks(rdd: RDD[(Array[Int], Array[Int], Array[Int])],
       ids: Array[Long], degree: Array[Int])
 
-  /** Session-lifetime CSR memo for `memoizeAnalytics` graphs — one
-    * maintained graph serves several broadcast-vector analytics (the tier
-    * run alone consumes it from sv, sssp, AND pr), so the build runs once
-    * per graph. The [[ConnectedComponents]] labelCache contract: ad-hoc
-    * graphs never enter (keyed by Graph reference identity, a persisted
-    * 2-GB-class RDD per construction would pin forever); dead-session
-    * entries sweep on access; tier sessions call [[release]] between
-    * back-to-back runs (the RmatTier cache-release point).
+  /** `g`'s CSR blocks: the first call on a `Graph` instance builds them
+    * ([[Graph.csr]]), every later call on the same instance gets the same
+    * blocks — or the same declined build — and counts a
+    * [[graft.core.SessionCaches.memoHits]] hit. The blocks live as long
+    * as the instance: [[release]] frees them early, and otherwise Spark's
+    * ContextCleaner unpersists them once the graph is garbage-collected.
+    * Session-memoized graphs ([[Graph.fromTpch]],
+    * [[EdgeUpdates.updatedGraph]]) are one instance per session, so they
+    * build once per session.
     */
-  private val cache =
-    scala.collection.concurrent.TrieMap[Graph, Option[Blocks]]()
+  def cachedOrBuild(g: Graph): Option[Blocks] = {
+    if (g.csrBuilt) graft.core.SessionCaches.memoHits.incrementAndGet()
+    g.csr
+  }
 
-  /** Memoized-or-fresh CSR for `g`: `(blocks, shared)` — when `shared`
-    * the blocks belong to the session memo and the consumer must NOT
-    * unpersist them; when not, the consumer owns the persist.
-    *
-    * The memo insert is race-safe (r11 ADVICE): the build runs OUTSIDE
-    * the map update, `putIfAbsent` decides the winner, and a losing
-    * concurrent build unpersists its multi-GB RDD instead of leaking it
-    * for the session.
+  /** Free `g`'s CSR blocks if a consumer built them; builds nothing. A
+    * later consumer still gets correct results: the unpersisted blocks
+    * recompute from their lineage.
     */
-  def cachedOrBuild(g: Graph): (Option[Blocks], Boolean) =
-    if (g.memoizeAnalytics) {
-      graft.core.SessionCaches.sweep(cache)(_.edges.sparkSession)
-      cache.get(g) match {
-        case Some(b) =>
-          graft.core.SessionCaches.memoHits.incrementAndGet()
-          (b, true)
-        case None =>
-          val built = buildDense(g.cachedUndirected)
-          cache.putIfAbsent(g, built) match {
-            case Some(winner) =>
-              built.foreach(_.rdd.unpersist(blocking = false))
-              graft.core.SessionCaches.memoHits.incrementAndGet()
-              (winner, true)
-            case None => (built, true)
-          }
-      }
-    } else (buildDense(g.cachedUndirected), false)
-
-  /** Drop `g`'s memoized blocks and free their persisted storage. */
   def release(g: Graph): Unit =
-    cache.remove(g).flatten.foreach(_.rdd.unpersist(blocking = false))
+    if (g.csrBuilt) g.csr.foreach(_.rdd.unpersist(blocking = false))
 
   /** Build the slot CSR of a src-partitioned edge frame in two jobs and
     * no exchange: (1) pack each partition's id blocks and collect their

@@ -80,16 +80,6 @@ private[graph] object CsrLoop {
     Result(s, rounds, !k.pending(s))
   }
 
-  /** `body` over `g`'s CSR blocks; None when the build declines. Blocks
-    * this call built (not the session memo's) are unpersisted afterwards,
-    * also when `body` throws.
-    */
-  def withBlocks[A](g: Graph)(body: Csr.Blocks => Option[A]): Option[A] = {
-    val (blocksOpt, shared) = Csr.cachedOrBuild(g)
-    try blocksOpt.flatMap(body)
-    finally if (!shared) blocksOpt.foreach(_.rdd.unpersist(blocking = false))
-  }
-
   /** The loop's output as `(idCol, valueCol)` rows: for every slot, from
     * the partition holding it as a src, `(ids(slot), v)` for each `v` in
     * `row(ids, state, slot)`, then `extra`. `state` and the id dictionary

@@ -487,9 +487,11 @@ object Dedup {
     // broadcast by the (free) materialized count, as with LSH candidates
     val comp = if (comp0.count() <= BroadcastableCandidates)
       broadcast(comp0) else comp0
-    // the ad-hoc pair graph's edge cache isn't session-memoized like
-    // Graph.fromTpch — release it now that the labels are materialized
+    // the ad-hoc pair graph's edge cache and CSR aren't session-memoized
+    // like Graph.fromTpch — release them now that the labels are
+    // materialized
     pairGraph.cachedUndirected.unpersist()
+    graft.graph.Csr.release(pairGraph)
     Tables.documents(spark, dir).select(col("doc_id"))
       .join(comp.withColumnRenamed("id", "doc_id"), Seq("doc_id"), "left")
       .select(col("doc_id"),

@@ -831,7 +831,8 @@ object Similarity {
       // estimate every round — exponential stats-walk blowup by ~hop 20
       // (see graft.core.Checkpoints.freshStats)
       (graft.core.Checkpoints.freshStats(ranked),
-        Option(obs.get("nexp")).map(_.asInstanceOf[Long]).getOrElse(0L))
+        Option(graft.core.Observations.metric(obs, "nexp"))
+          .map(_.asInstanceOf[Long]).getOrElse(0L))
     }
     // seed: the fixed entry node, exact-scored per query
     var (beam, nExp) = rankAndCkpt(

@@ -1023,6 +1023,7 @@ object EventStream extends Serializable {
           labels = clean.union(fresh.select(col("id"), col("component")))
             .localCheckpoint(true)
           sg.cachedUndirected.unpersist()
+          graft.graph.Csr.release(sg)
           dirtyVerts = noDirty
         }
       }
@@ -1681,7 +1682,10 @@ object EventStream extends Serializable {
       val g = drainBase.map(_()).getOrElse(Graph(edgeState))
       val out = graft.graph.ShortestPaths.fromMinVertex(g,
         broadcastState = broadcastState)
-      if (drainBase.isEmpty) g.cachedUndirected.unpersist()
+      if (drainBase.isEmpty) {
+        g.cachedUndirected.unpersist()
+        graft.graph.Csr.release(g)
+      }
       out
     } else dist
   }

@@ -232,34 +232,39 @@ class GraphSpec extends AnyFunSuite {
     }
   }
 
+  /** Spark jobs `call` starts. */
+  def jobsOf(call: => Any): Int = {
+    val sc = spark.sparkContext
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        n.incrementAndGet()
+    }
+    org.apache.spark.graftspec.Bus.drain(sc)
+    sc.addSparkListener(listener)
+    try { call; org.apache.spark.graftspec.Bus.drain(sc) }
+    finally sc.removeSparkListener(listener)
+    n.get
+  }
+
   test("csr loop: a one-block graph runs each csr call in a fixed job count") {
     val g = Graph.fromRawEdges(
       RMat.graph(spark, RMat.Params(scale = 8)).edges.select("src", "dst"))
     assert(csrPartitions(g) == 1)
     val src = g.cachedUndirected.agg(min(col("src"))).head().getLong(0)
-    val sc = spark.sparkContext
-    def jobs(call: => Any): Int = {
-      val n = new java.util.concurrent.atomic.AtomicInteger
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          n.incrementAndGet()
-      }
-      org.apache.spark.graftspec.Bus.drain(sc)
-      sc.addSparkListener(listener)
-      try { call; org.apache.spark.graftspec.Bus.drain(sc) }
-      finally sc.removeSparkListener(listener)
-      n.get
-    }
-    // 2 build jobs + 1 loop job + 1 emit job, whatever the round count
-    val budget = 4
+    // the first call: 2 build jobs + 1 loop job + 1 emit job, whatever
+    // the round count; every later call on the instance reuses the build
+    val first = jobsOf(ConnectedComponents.csrLabels(g).get)
+    assert(first <= 4, s"the first csr call ran $first jobs, budget 4")
+    val budget = 2
     val counts = Seq(
-      "cc" -> jobs(ConnectedComponents.csrLabels(g).get),
-      "bfs" -> jobs(ShortestPaths.csrBfs(g, src, 64).get),
-      "pagerank" -> jobs(PageRank.convergedCsr(g).get),
-      "pagerank/3" -> jobs(PageRank.convergedCsr(g, maxIter = 3).get),
-      "coreness" -> jobs(Coreness.csrCoreness(g, 100).get),
-      "coreness/1" -> jobs(intercept[IllegalStateException](
+      "cc" -> jobsOf(ConnectedComponents.csrLabels(g).get),
+      "bfs" -> jobsOf(ShortestPaths.csrBfs(g, src, 64).get),
+      "pagerank" -> jobsOf(PageRank.convergedCsr(g).get),
+      "pagerank/3" -> jobsOf(PageRank.convergedCsr(g, maxIter = 3).get),
+      "coreness" -> jobsOf(Coreness.csrCoreness(g, 100).get),
+      "coreness/1" -> jobsOf(intercept[IllegalStateException](
         Coreness.csrCoreness(g, 1))))
     counts.foreach { case (call, n) =>
       assert(n <= budget, s"$call ran $n jobs, budget $budget: $counts")
@@ -267,6 +272,25 @@ class GraphSpec extends AnyFunSuite {
     val m = counts.toMap
     assert(m("pagerank") == m("pagerank/3"),
       s"pagerank's job count depends on its round count: $counts")
+    Csr.release(g)
+  }
+
+  test("csr build: a declined build runs its jobs once per graph") {
+    // the two frames buildDense declines (see the spec below), as the
+    // symmetrized view of a graph: an asymmetric one and a split src
+    val asym = Seq((1L, 2L), (2L, 1L), (2L, 7L)).toDF("src", "dst")
+      .repartition(col("src"))
+    val star = ((2L to 9L).map(u => (1L, u)) ++ (2L to 9L).map(u => (u, 1L)))
+      .toDF("src", "dst").repartition(4, col("dst"))
+    Seq("asymmetric" -> asym, "split src" -> star).foreach { case (what, sym) =>
+      val g = Graph(sym.filter(col("src") <= col("dst")),
+        preSymmetrized = Some(sym))
+      g.cachedUndirected.count()
+      val first = jobsOf(assert(ConnectedComponents.csrLabels(g).isEmpty))
+      val second = jobsOf(assert(ShortestPaths.csrBfs(g, 1L, 64).isEmpty))
+      assert(first >= 1 && second == 0,
+        s"$what: build jobs $first, then $second on the second call")
+    }
   }
 
   test("csr loop: non-convergence is decided on the driver on both paths") {
@@ -394,28 +418,41 @@ class GraphSpec extends AnyFunSuite {
   }
 
   test("csr memo: one shared build per graph, freed by release") {
-    // a session-memoized graph with ids above every old dense range:
-    // CC builds the blocks, BFS, PageRank and coreness reuse them, and
-    // Csr.release frees the one persisted copy
+    // ids above every old dense range, on a session-memoized graph and on
+    // an ad-hoc one: CC builds the blocks, BFS, PageRank and coreness
+    // reuse them, and Csr.release frees the one persisted copy
     val off = (1L << 26) + 5L
-    val g = Graph(Seq((off, off + 1L), (off + 1L, off + 2L), (off, off + 2L),
-        (off + 9L, off + 10L)).toDF("src", "dst").withColumn("weight", lit(1L)),
-      memoizeAnalytics = true)
-    val hits0 = graft.core.SessionCaches.memoHits.get()
-    assert(ConnectedComponents(g).count() == 5L)
-    assert(ShortestPaths(g, off).count() == 3L)
-    assert(PageRank.converged(g).count() == 5L)
-    assert(Coreness(g).count() == 5L)
-    assert(graft.core.SessionCaches.memoHits.get() - hits0 == 3L,
-      "BFS, PageRank and coreness did not reuse CC's CSR build")
-    val (blocks, shared) = Csr.cachedOrBuild(g)
-    assert(shared && blocks.nonEmpty)
-    val id = blocks.get.rdd.id
+    val raw = Seq((off, off + 1L), (off + 1L, off + 2L), (off, off + 2L),
+      (off + 9L, off + 10L)).toDF("src", "dst")
     val sc = spark.sparkContext
-    assert(sc.getPersistentRDDs.contains(id))
-    Csr.release(g)
-    assert(!sc.getPersistentRDDs.contains(id),
-      "Csr.release left the shared blocks persisted")
+    def labels(g: Graph) = ConnectedComponents(g).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    Seq("memoized" -> Graph(raw.withColumn("weight", lit(1L)),
+        memoizeAnalytics = true),
+      "ad-hoc" -> Graph.fromRawEdges(raw)).foreach { case (what, g) =>
+      assert(jobsOf(Csr.release(g)) == 0, s"$what: release built the blocks")
+      val hits0 = graft.core.SessionCaches.memoHits.get()
+      val cc = labels(g)
+      assert(cc.size == 5)
+      assert(ShortestPaths(g, off).count() == 3L)
+      assert(PageRank.converged(g).count() == 5L)
+      assert(Coreness(g).count() == 5L)
+      assert(graft.core.SessionCaches.memoHits.get() - hits0 == 3L,
+        s"$what: BFS, PageRank and coreness did not reuse CC's CSR build")
+      val id = Csr.cachedOrBuild(g).getOrElse(fail(s"$what: declined")).rdd.id
+      assert(sc.getPersistentRDDs.contains(id))
+      Csr.release(g)
+      assert(!sc.getPersistentRDDs.contains(id),
+        s"$what: Csr.release left the shared blocks persisted")
+      // the released blocks recompute from their lineage
+      assert(ConnectedComponents.csrLabels(g).get.collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap == cc,
+        s"$what: CC after release differs")
+      assert(ShortestPaths.csrBfs(g, off, 64).get.collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap ==
+        Map(off -> 0L, off + 1L -> 1L, off + 2L -> 1L),
+        s"$what: BFS after release differs")
+    }
   }
 
   test("sssp distances on a planted path with a shortcut") {

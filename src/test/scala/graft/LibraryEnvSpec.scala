@@ -52,4 +52,13 @@ class LibraryEnvSpec extends AnyFunSuite {
     if (hits.nonEmpty) fail(hits.mkString(
       s"${hits.size} non-WARN stderr write(s) in library code:\n", "\n", ""))
   }
+
+  test("library packages read observed metrics only through core.Observations") {
+    // Observation.get waits without a bound for its listener-bus event
+    val rawGet = """\bobs\w*\.(get|getAsJava|getOrEmpty|getRow)\b""".r
+    val hits = libraryLines(rawGet.findFirstIn(_).isDefined)
+    if (hits.nonEmpty) fail(hits.mkString(
+      s"${hits.size} unbounded Observation read(s) in library code:\n",
+      "\n", ""))
+  }
 }

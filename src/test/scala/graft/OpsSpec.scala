@@ -134,6 +134,27 @@ class OpsSpec extends AnyFunSuite {
     }
   }
 
+  test("dedup clusters frees its pair graph's caches and CSR") {
+    // the memoized pair set is an output of the pipeline, built once per
+    // session: warm it so the call below runs the pair graph alone
+    val memo = Dedup.minhashLshCached(spark, sf)
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val out = Dedup.clusters(spark, sf)
+    assert(out.count() == graft.core.Tables.documents(spark, sf).count())
+    // what the result and the memo read: the materialized CC labels and
+    // the checkpointed pair set
+    def checkpoints(df: org.apache.spark.sql.DataFrame): Set[Int] =
+      df.queryExecution.logical.collect {
+        case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.id
+      }.toSet
+    val left = sc.getPersistentRDDs.keySet -- before --
+      checkpoints(out) -- checkpoints(memo)
+    assert(left.isEmpty, "Dedup.clusters left persisted RDDs behind: " +
+      left.toSeq.sorted.map(id => sc.getPersistentRDDs(id).toDebugString)
+        .mkString("\n"))
+  }
+
   test("keep-best resolution keeps the max-quality member of every cluster") {
     val kept = Dedup.keepBest(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))

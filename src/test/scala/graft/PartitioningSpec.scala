@@ -61,4 +61,24 @@ class PartitioningSpec extends AnyFunSuite {
         s"${grown.rdd.getNumPartitions}")
     grown.unpersist()
   }
+
+  test("an observed metric that never arrives throws after its bound") {
+    import scala.concurrent.duration._
+    import org.apache.spark.sql.Observation
+    import org.apache.spark.sql.functions.{count, lit}
+    import graft.core.Observations
+    // no action ever runs a plan observing `pending`: the read must fail
+    // at its bound instead of waiting forever like Observation.get
+    val pending = Observation("never")
+    spark.range(3).observe(pending, count(lit(1)).as("n"))
+    val t0 = System.nanoTime()
+    val e = intercept[IllegalStateException](
+      Observations.metric(pending, "n", bound = 200.millis))
+    assert(e.getMessage.contains("'n'"), e.getMessage)
+    assert((System.nanoTime() - t0) / 1e9 < 30.0)
+    // a completed observation reads at once
+    val done = Observation("done")
+    spark.range(5).observe(done, count(lit(1)).as("n")).collect()
+    assert(Observations.metric(done, "n", bound = 1.minute) == 5L)
+  }
 }
