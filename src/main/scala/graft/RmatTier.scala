@@ -138,13 +138,14 @@ object RmatTier {
     // delete on (a,b) must hit a base row stored as (b,a)) and lets the
     // symmetrized view skip its |2E|-row distinct shuffle entirely
     // (edgesCanonical: two shuffles in the whole build instead of three).
-    // r7: Graph.fromRawEdges — both orientations explode up front and the
-    // 2|E| rows exchange ONCE hashed on src, aggregating the pair
-    // dedup+count in place (hash(src) satisfies the (src,dst) clustering)
-    // straight into the src-aligned symmetrized cache; the canonical
-    // one-row-per-pair table EdgeUpdates reads derives from the same
-    // cache by a narrow filter. The r6 shape paid two exchanges and two
-    // full cache materializations for the same 265M-row view.
+    // Graph.fromRawEdges — both orientations explode up front and the
+    // 2|E| rows exchange ONCE hashed on src, each partition packing
+    // straight into long-id CSR blocks (a pair's multiplicity kept as a
+    // run) with no aggregate and no columnar cache; the symmetrized view,
+    // the canonical one-row-per-pair table EdgeUpdates reads and the
+    // CSR sv, sssp and pr share all derive from those blocks, which
+    // Csr.release frees. The r6 shape paid two exchanges and two full
+    // cache materializations for the same 265M-row view.
     // untimed page-cache warm of the raw edge parquet (column pages, not
     // just footers — a bare count() reads no data pages): the reference
     // harness generates the graph then immediately reads it back, so every

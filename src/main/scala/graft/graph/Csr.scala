@@ -2,6 +2,8 @@ package graft.graph
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.UnsafeRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -13,12 +15,17 @@ import org.apache.spark.storage.StorageLevel
   *
   * `Graph.cachedUndirected` is hash-partitioned on `src` and holds both
   * orientations, so every vertex's full neighbor list lives in exactly one
-  * partition and (src → sorted neighbor list) builds with ZERO exchange:
-  * one `sortWithinPartitions` groups each src's rows and the per-partition
-  * pass packs primitive arrays. The |E|-row adjacency never leaves the
-  * executors afterwards. A one-partition CSR runs a consumer's whole loop
-  * inside one Spark task; over several partitions each round is one job
-  * that broadcasts only a |V|-slot primitive vector and collects
+  * partition and (src → sorted neighbor list) builds with ZERO exchange.
+  * One primitive packer serves both build paths: [[pack]] sorts each
+  * partition's rows in primitive arrays into long-id blocks ([[Packed]]),
+  * and [[slot]] turns those into slot blocks. A raw-edge build
+  * ([[Graph.fromRawEdges]]) packs its one exchange and keeps the packed
+  * blocks as the graph's only materialization, so its CSR slots them
+  * without sorting again; any other graph packs `cachedUndirected` for
+  * the build alone ([[buildDense]]). The |E|-row adjacency never leaves
+  * the executors afterwards. A one-partition CSR runs a consumer's whole
+  * loop inside one Spark task; over several partitions each round is one
+  * job that broadcasts only a |V|-slot primitive vector and collects
   * |V|-bounded update chunks, the same memory class as the accepted bcswap
   * BroadcastExchange.
   *
@@ -74,87 +81,179 @@ object Csr {
     g.csr
   }
 
-  /** Free `g`'s CSR blocks if a consumer built them; builds nothing. A
-    * later consumer still gets correct results: the unpersisted blocks
-    * recompute from their lineage.
+  /** Free `g`'s CSR blocks if a consumer built them, and the packed
+    * blocks of a raw-edge build; builds nothing. A later consumer still
+    * gets correct results: the unpersisted blocks recompute from their
+    * lineage.
     */
-  def release(g: Graph): Unit =
+  def release(g: Graph): Unit = {
     if (g.csrBuilt) g.csr.foreach(_.rdd.unpersist(blocking = false))
+    g.packed.foreach(_.unpersist(blocking = false))
+  }
 
-  /** Build the slot CSR of a src-partitioned edge frame in two jobs and
-    * no exchange: (1) pack each partition's id blocks and collect their
-    * (id, degree) lists, which the driver merges into the sorted id
-    * dictionary; (2) broadcast the ids once and remap every src and
-    * neighbor to its slot by binary search. None when the frame is empty,
-    * |V| ≥ [[MaxVertices]], a src appears in two partitions (the frame is
-    * not src-partitioned), or some neighbor is not a src (an asymmetric
-    * frame: its slot would index past every state vector) — the caller
-    * then takes its join path.
+  /** Packed long-id CSR blocks: one (srcIds, offsets, nbrIds) triple per
+    * partition of a src-partitioned edge frame, partition i's rows in
+    * block i. srcIds are ascending and distinct within a block, src k's
+    * neighbors are `nbrIds(offsets(k) until offsets(k + 1))` in id order,
+    * and a repeated (src, dst) row stays an adjacent repeat: a pair's
+    * multiplicity is its run length.
     */
-  def buildDense(edges: DataFrame): Option[Blocks] = {
-    val spark = edges.sparkSession
-    import spark.implicits._
-    val raw = edges
-      .select(col("src").cast("long").as("v"), col("dst").cast("long").as("u"))
-      .sortWithinPartitions(col("v"))
-      .as[(Long, Long)].rdd.mapPartitions { it =>
-        val vs = new scala.collection.mutable.ArrayBuilder.ofLong
-        val offs = new scala.collection.mutable.ArrayBuilder.ofInt
-        val nbrs = new scala.collection.mutable.ArrayBuilder.ofLong
-        var cur = Long.MinValue
-        var cnt = 0
-        it.foreach { case (v, u) =>
-          if (v != cur || cnt == 0) { vs += v; offs += cnt; cur = v }
-          nbrs += u
-          cnt += 1
-        }
-        offs += cnt
-        Iterator((vs.result(), offs.result(), nbrs.result()))
-      }.persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      val parts = raw.map { case (vs, offs, _) =>
-        (vs, Array.tabulate(vs.length)(k => offs(k + 1) - offs(k)))
-      }.collect()
-      val nv = parts.iterator.map(_._1.length.toLong).sum
-      if (nv == 0L || nv >= MaxVertices) return None
-      val ids = Array.concat(parts.map(_._1).toIndexedSeq: _*)
-      java.util.Arrays.sort(ids)
-      var k = 1
-      while (k < ids.length) { if (ids(k) == ids(k - 1)) return None; k += 1 }
-      val degree = new Array[Int](ids.length)
-      parts.foreach { case (vs, d) =>
-        var j = 0
-        while (j < vs.length) {
-          degree(java.util.Arrays.binarySearch(ids, vs(j))) = d(j); j += 1
+  type Packed = RDD[(Array[Long], Array[Int], Array[Long])]
+
+  /** Pack src-partitioned `(src: long, dst: long)` rows into [[Packed]]
+    * blocks, partition by partition, in primitive arrays: one sort of the
+    * partition's src column gives the distinct srcs and their offsets, the
+    * dsts scatter into their src's segment and each segment sorts in
+    * place. Partition indices are kept.
+    */
+  def pack(rows: RDD[InternalRow]): Packed = rows.mapPartitions({ it =>
+    var src = new Array[Long](1024)
+    var dst = new Array[Long](1024)
+    var n = 0
+    while (it.hasNext) {
+      val r = it.next()
+      if (n == src.length) {
+        src = java.util.Arrays.copyOf(src, 2 * n)
+        dst = java.util.Arrays.copyOf(dst, 2 * n)
+      }
+      src(n) = r.getLong(0)
+      dst(n) = r.getLong(1)
+      n += 1
+    }
+    val sorted = java.util.Arrays.copyOf(src, n)
+    java.util.Arrays.sort(sorted)
+    // distinct srcs in place, offsets from their run starts
+    val offBuf = new scala.collection.mutable.ArrayBuilder.ofInt
+    var nv = 0
+    var i = 0
+    while (i < n) {
+      if (i == 0 || sorted(i) != sorted(i - 1)) {
+        sorted(nv) = sorted(i); offBuf += i; nv += 1
+      }
+      i += 1
+    }
+    offBuf += n
+    val vs = java.util.Arrays.copyOf(sorted, nv)
+    val offs = offBuf.result()
+    val fill = java.util.Arrays.copyOf(offs, nv)
+    val nbrs = new Array[Long](n)
+    i = 0
+    while (i < n) {
+      val k = java.util.Arrays.binarySearch(vs, src(i))
+      nbrs(fill(k)) = dst(i)
+      fill(k) += 1
+      i += 1
+    }
+    var k = 0
+    while (k < nv) { java.util.Arrays.sort(nbrs, offs(k), offs(k + 1)); k += 1 }
+    Iterator((vs, offs, nbrs))
+  }, preservesPartitioning = true)
+
+  /** The rows of [[Packed]] blocks, one `(src, dst, weight)` row per
+    * distinct pair with weight = its run length, block i in partition i.
+    * Each block's iterator reuses one row, as Spark's row iterators do.
+    */
+  def expand(packed: Packed): RDD[InternalRow] = packed.mapPartitions({ it =>
+    it.flatMap { case (vs, offs, nbrs) =>
+      new Iterator[InternalRow] {
+        private val row = new UnsafeRow(3)
+        private val width = UnsafeRow.calculateBitSetWidthInBytes(3) + 3 * 8
+        row.pointTo(new Array[Byte](width), width)
+        private var k = 0
+        private var j = 0
+        def hasNext: Boolean = j < nbrs.length
+        def next(): InternalRow = {
+          while (offs(k + 1) <= j) k += 1
+          val u = nbrs(j)
+          var e = j + 1
+          while (e < offs(k + 1) && nbrs(e) == u) e += 1
+          row.setLong(0, vs(k)); row.setLong(1, u); row.setLong(2, e - j)
+          j = e
+          row
         }
       }
-      val sc = spark.sparkContext
-      val bcIds = sc.broadcast(ids)
-      val missing = sc.longAccumulator
-      val rdd = raw.map { case (vs, offA, nbrs) =>
-        val dict = bcIds.value
-        val slots = vs.map(java.util.Arrays.binarySearch(dict, _))
-        val nbrA = new Array[Int](nbrs.length)
-        var j = 0
-        while (j < nbrs.length) {
-          val s = java.util.Arrays.binarySearch(dict, nbrs(j))
-          if (s < 0) missing.add(1L)
-          nbrA(j) = s
+    }
+  }, preservesPartitioning = true)
+
+  /** Build the slot CSR of a src-partitioned edge frame: [[slot]] of its
+    * [[pack]]ed blocks, which live only for the build.
+    */
+  def buildDense(edges: DataFrame): Option[Blocks] = {
+    val packed = pack(edges
+      .select(col("src").cast("long"), col("dst").cast("long"))
+      .queryExecution.toRdd).persist(StorageLevel.MEMORY_AND_DISK)
+    try slot(packed) finally packed.unpersist(blocking = false)
+  }
+
+  /** The slot CSR of packed blocks in two jobs and no exchange: (1)
+    * collect each block's (id, distinct-neighbor count) lists, which the
+    * driver merges into the sorted id dictionary; (2) broadcast the ids
+    * once and remap every src and neighbor to its slot by binary search,
+    * folding repeated neighbors. Neighbor lists come out slot-sorted, as
+    * slot order is id order. None when the blocks are empty,
+    * |V| ≥ [[MaxVertices]], a src appears in two blocks (the rows were
+    * not src-partitioned), or some neighbor is not a src (an asymmetric
+    * frame: its slot would index past every state vector) — the caller
+    * then takes its join path. The packed blocks stay as they are.
+    */
+  def slot(packed: Packed): Option[Blocks] = {
+    val parts = packed.map { case (vs, offs, nbrs) =>
+      val d = new Array[Int](vs.length)
+      var k = 0
+      while (k < vs.length) {
+        var j = offs(k)
+        while (j < offs(k + 1)) {
+          if (j == offs(k) || nbrs(j) != nbrs(j - 1)) d(k) += 1
           j += 1
         }
-        // sorted neighbor lists: broadcast-vector reads walk forward
-        var i = 0
-        while (i < slots.length) {
-          java.util.Arrays.sort(nbrA, offA(i), offA(i + 1)); i += 1
+        k += 1
+      }
+      (vs, d)
+    }.collect()
+    val nv = parts.iterator.map(_._1.length.toLong).sum
+    if (nv == 0L || nv >= MaxVertices) return None
+    val ids = Array.concat(parts.map(_._1).toIndexedSeq: _*)
+    java.util.Arrays.sort(ids)
+    var k = 1
+    while (k < ids.length) { if (ids(k) == ids(k - 1)) return None; k += 1 }
+    val degree = new Array[Int](ids.length)
+    parts.foreach { case (vs, d) =>
+      var j = 0
+      while (j < vs.length) {
+        degree(java.util.Arrays.binarySearch(ids, vs(j))) = d(j); j += 1
+      }
+    }
+    val sc = packed.sparkContext
+    val bcIds = sc.broadcast(ids)
+    val missing = sc.longAccumulator
+    val rdd = packed.map { case (vs, offs, nbrs) =>
+      val dict = bcIds.value
+      val slots = vs.map(java.util.Arrays.binarySearch(dict, _))
+      val offA = new Array[Int](vs.length + 1)
+      val nbrA = new Array[Int](nbrs.length)
+      var m = 0
+      var i = 0
+      while (i < vs.length) {
+        var j = offs(i)
+        while (j < offs(i + 1)) {
+          if (j == offs(i) || nbrs(j) != nbrs(j - 1)) {
+            val s = java.util.Arrays.binarySearch(dict, nbrs(j))
+            if (s < 0) missing.add(1L)
+            nbrA(m) = s
+            m += 1
+          }
+          j += 1
         }
-        (slots, offA, nbrA)
-      }.persist(StorageLevel.MEMORY_AND_DISK)
-      rdd.count()
-      bcIds.unpersist(blocking = false)
-      if (missing.value > 0L) {
-        rdd.unpersist(blocking = false)
-        None
-      } else Some(Blocks(rdd, ids, degree))
-    } finally raw.unpersist(blocking = false)
+        i += 1
+        offA(i) = m
+      }
+      (slots, offA, if (m == nbrA.length) nbrA else java.util.Arrays.copyOf(nbrA, m))
+    }.persist(StorageLevel.MEMORY_AND_DISK)
+    rdd.count()
+    bcIds.unpersist(blocking = false)
+    if (missing.value > 0L) {
+      rdd.unpersist(blocking = false)
+      None
+    } else Some(Blocks(rdd, ids, degree))
   }
 }

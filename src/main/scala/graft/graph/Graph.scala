@@ -20,7 +20,10 @@ import graft.core.Tables
   * ([[csr]]). The two views are session caches that stay until a caller
   * unpersists them; the CSR blocks go with the instance (Spark's
   * ContextCleaner unpersists them once it is garbage-collected) or
-  * earlier through [[Csr.release]].
+  * earlier through [[Csr.release]]. A raw-edge graph
+  * ([[Graph.fromRawEdges]]) materializes one thing only, its packed CSR
+  * blocks ([[packed]]): [[edges]], `preSymmetrized` and both views are
+  * expanded from them, and its slot CSR is slotted from them.
   *
   * @param memoizeAnalytics opt-in for the session-lifetime analytics memo
   *   caches (e.g. converged CC labels). Only the session-memoized graphs
@@ -67,8 +70,8 @@ final case class Graph(edges: DataFrame, memoizeAnalytics: Boolean = false,
   lazy val cachedUndirected: DataFrame =
     preSymmetrized match {
       // a build that already materialized the src-aligned symmetrized
-      // cache ([[Graph.fromRawEdges]]): project the algorithm view off it
-      // (columnar cache scan + narrow project, partitioning preserved)
+      // view ([[Graph.fromRawEdges]]): project the algorithm view off it
+      // (narrow project, partitioning preserved)
       case Some(sym) => sym.select(col("src"), col("dst"))
       // session-memoized graphs hold ONE |2E| session cache — the
       // weighted view — and the unweighted view is a narrow projection
@@ -89,13 +92,19 @@ final case class Graph(edges: DataFrame, memoizeAnalytics: Boolean = false,
         graft.core.Partitioning.cachedSizedBy(undirected, Seq("src"))
     }
 
-  /** The slot CSR of [[cachedUndirected]] ([[Csr.buildDense]]): the
-    * first CSR consumer builds it and every later one on this instance
-    * reuses it, a declined build (None) included — read it through
-    * [[Csr.cachedOrBuild]].
+  /** The packed long-id blocks a raw-edge build materialized
+    * ([[Graph.fromRawEdges]]), which every view of this graph expands;
+    * None for any other graph. [[Csr.release]] frees them.
+    */
+  @volatile private[graph] var packed: Option[Csr.Packed] = None
+
+  /** The slot CSR of [[cachedUndirected]]: [[Csr.slot]] of the [[packed]]
+    * blocks, else [[Csr.buildDense]]. The first CSR consumer builds it
+    * and every later one on this instance reuses it, a declined build
+    * (None) included — read it through [[Csr.cachedOrBuild]].
     */
   private[graph] lazy val csr: Option[Csr.Blocks] = {
-    val built = Csr.buildDense(cachedUndirected)
+    val built = packed.fold(Csr.buildDense(cachedUndirected))(Csr.slot)
     csrBuilt = true
     built
   }
@@ -124,10 +133,10 @@ final case class Graph(edges: DataFrame, memoizeAnalytics: Boolean = false,
     * never builds it).
     */
   lazy val cachedWeightedUndirected: DataFrame = preSymmetrized match {
-    // fromRawEdges already materialized exactly this view: (src, dst,
+    // fromRawEdges already expands exactly this view: (src, dst,
     // weight = pair multiplicity), both orientations, self-loops once,
     // src-aligned — the weight of a pair is orientation-symmetric by
-    // construction, so the cache serves the weighted consumers directly
+    // construction, so the view serves the weighted consumers directly
     case Some(sym) => sym
     case None =>
       val e = edges.select(col("src"), col("dst"), col("weight"))
@@ -150,38 +159,57 @@ object Graph {
   /** ONE-shuffle graph build from a raw directed multi-edge list (the
     * R-MAT tier's workload): each raw edge explodes into both
     * orientations up front, the 2|E| skinny rows exchange ONCE hashed on
-    * `src`, and the per-pair dedup+count aggregates in place —
-    * HashPartitioning(src) already satisfies the (src, dst) clustering
-    * requirement, so Catalyst inserts no second exchange — landing
-    * directly in the src-aligned symmetrized cache every algorithm
-    * scans. The canonical one-row-per-pair edge table (EdgeUpdates'
-    * contract) derives from the same cache by a narrow `src <= dst`
-    * filter, weight = pair multiplicity on both views.
+    * `src`, and each exchanged partition packs straight into long-id CSR
+    * blocks ([[Csr.pack]]: one primitive sort, a pair's multiplicity kept
+    * as a run). Those blocks are all the build materializes. The
+    * symmetrized view `preSymmetrized` = [[cachedWeightedUndirected]]
+    * (`src, dst, weight` = pair multiplicity, both orientations,
+    * self-loops once), [[cachedUndirected]] and the canonical
+    * one-row-per-pair [[edges]] (EdgeUpdates' contract, `src <= dst`)
+    * are expansions of them ([[Csr.expand]]), declared to Catalyst as
+    * hash-partitioned on `src` with the exchange's partition count —
+    * true, as packing and expansion keep partition indices — so
+    * consumers clustering on `src` read them with no exchange. The
+    * graph's slot CSR slots the same blocks without sorting again, and
+    * [[Csr.release]] frees them. An edge with a null endpoint names no
+    * vertex and is dropped.
     *
-    * The previous shape (canonical groupBy shuffle → symmetrize →
-    * persist+count → repartition(src) → persist+count again, via
-    * cachedSizedBy) moved the 265M-row SCALE-24 view through two full
-    * cache materializations and two exchanges; this is one of each.
+    * Sizing the exchange costs a `raw.count()`: a parquet metadata count
+    * reads no data pages, but any other source (`StingerFiles` decodes
+    * every edge) runs a job of its own that scans the input.
     */
   def fromRawEdges(raw: DataFrame,
       rowsPerPartition: Long = 1000000L): Graph = {
+    import org.apache.spark.sql.types.{LongType, StructField, StructType}
     import org.apache.spark.storage.StorageLevel
-    val nRaw = raw.count() // parquet metadata count — no data scan
+    val nRaw = raw.count()
     val target = ((2 * nRaw + rowsPerPartition - 1) / rowsPerPartition)
       .max(1L).min(1L << 17).toInt
-    val both = raw.select(explode(when(col("src") === col("dst"),
+    val e = raw.select(col("src").cast("long").as("src"),
+        col("dst").cast("long").as("dst"))
+      .filter(col("src").isNotNull && col("dst").isNotNull)
+    val both = e.select(explode(when(col("src") === col("dst"),
         array(struct(col("src"), col("dst"))))
       .otherwise(array(
         struct(col("src"), col("dst")),
         struct(col("dst").as("src"), col("src").as("dst"))))).as("e"))
       .select(col("e.src"), col("e.dst"))
-    val sym = both.repartition(target, col("src"))
-      .groupBy(col("src"), col("dst"))
-      .agg(count(lit(1)).as("weight"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    sym.count()
-    Graph(sym.filter(col("src") <= col("dst")),
+    val packed = Csr.pack(both.repartition(target, col("src"))
+      .queryExecution.toRdd).persist(StorageLevel.MEMORY_AND_DISK)
+    // materializes the blocks; their in-memory size is the views' size
+    // estimate, as a columnar cache's compressed size was
+    val bytes = packed.map { case (vs, _, nbrs) =>
+      12L * vs.length + 8L * nbrs.length
+    }.fold(0L)(_ + _)
+    val sym = org.apache.spark.sql.graftbridge.FrameBridge.hashPartitioned(
+      raw.sparkSession,
+      StructType(Seq("src", "dst", "weight")
+        .map(StructField(_, LongType, nullable = false))),
+      Csr.expand(packed), "src", bytes)
+    val g = Graph(sym.filter(col("src") <= col("dst")),
       edgesCanonical = true, preSymmetrized = Some(sym))
+    g.packed = Some(packed)
+    g
   }
 
   /** Build the bipartite customer–supplier graph from the relational tables:

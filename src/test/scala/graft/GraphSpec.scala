@@ -611,6 +611,84 @@ class GraphSpec extends AnyFunSuite {
     assert(c.cachedUndirected.exceptAll(a).count() == 0 &&
       a.exceptAll(c.cachedUndirected).count() == 0,
       "fromRawEdges symmetrized cache diverged")
+    // the packed build against the general path on raw rows with
+    // self-loops, both orientations of a pair and repeated rows, in one
+    // block and in several: the same views (weights included) and the
+    // same slot CSR as buildDense of the general symmetrized frame
+    def same(x: DataFrame, y: DataFrame, msg: String) =
+      assert(x.exceptAll(y).count() == 0 && y.exceptAll(x).count() == 0, msg)
+    def lists(b: Csr.Blocks) = b.rdd.flatMap { case (slots, offs, nbrs) =>
+      slots.indices.map(k => slots(k) -> nbrs.slice(offs(k), offs(k + 1)).toSeq)
+    }.collect().toMap
+    val planted = Seq((1L, 2L), (2L, 1L), (1L, 2L), (3L, 3L), (3L, 3L),
+      (4L, 5L), (5L, 6L), (6L, 4L), (4L, 5L), (7L, 7L), (2L, 3L), (9L, 8L))
+      .toDF("src", "dst")
+    Seq("planted" -> planted,
+      "rmat+planted" -> raw.select("src", "dst").union(planted)).foreach {
+      case (shape, r) =>
+        val general = Graph(r.groupBy(col("src"), col("dst"))
+          .agg(count(lit(1)).as("weight")))
+        val want = Csr.buildDense(general.cachedUndirected)
+          .getOrElse(fail(s"$shape: general build declined"))
+        Seq(1L, r.count() / 2).foreach { rows =>
+          val what = s"$shape, rowsPerPartition $rows"
+          val g = Graph.fromRawEdges(r, rowsPerPartition = rows)
+          same(g.edges, Graph(r
+            .select(least(col("src"), col("dst")).as("src"),
+              greatest(col("src"), col("dst")).as("dst"))
+            .groupBy(col("src"), col("dst")).agg(count(lit(1)).as("weight")),
+            edgesCanonical = true).edges, s"$what: edges diverged")
+          same(g.cachedUndirected, general.cachedUndirected,
+            s"$what: cachedUndirected diverged")
+          same(g.cachedWeightedUndirected, general.cachedWeightedUndirected,
+            s"$what: cachedWeightedUndirected diverged")
+          val got = Csr.cachedOrBuild(g).getOrElse(fail(s"$what: declined"))
+          assert(got.ids.toSeq == want.ids.toSeq, s"$what: slot ids differ")
+          assert(got.degree.toSeq == want.degree.toSeq, s"$what: degrees differ")
+          assert(lists(got) == lists(want), s"$what: neighbor slots differ")
+          if (rows > 1L) assert(got.rdd.getNumPartitions >= 3,
+            s"$what: the multi-block build is not")
+          Csr.release(g)
+        }
+        want.rdd.unpersist(blocking = false)
+        general.cachedUndirected.unpersist()
+        general.cachedWeightedUndirected.unpersist()
+    }
+  }
+
+  test("release frees every RDD of a raw-edge graph") {
+    val raw = RMat.edges(spark, RMat.Params(scale = 8)).select("src", "dst")
+    val sc = spark.sparkContext
+    Seq(true, false).foreach { withCsr =>
+      val before = sc.getPersistentRDDs.keySet
+      val g = Graph.fromRawEdges(raw, rowsPerPartition = raw.count() / 2)
+      g.cachedUndirected.count()
+      if (withCsr) assert(Csr.cachedOrBuild(g).nonEmpty)
+      Csr.release(g)
+      val left = sc.getPersistentRDDs.keySet -- before
+      assert(left.isEmpty, s"csr built: $withCsr; release left " +
+        left.toSeq.sorted.map(id => sc.getPersistentRDDs(id).toDebugString)
+          .mkString("\n"))
+    }
+  }
+
+  test("a raw-edge graph's views are declared src-partitioned") {
+    // consumers that cluster on src read the view with no exchange
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    // walks into AQE's query stages, which a plain collect stops at
+    val plans = new AdaptiveSparkPlanHelper {}
+    val raw = RMat.edges(spark, RMat.Params(scale = 8)).select("src", "dst")
+    Seq(1000000L, raw.count() / 2).foreach { rows =>
+      val g = Graph.fromRawEdges(raw, rowsPerPartition = rows)
+      val q = g.cachedUndirected.groupBy("src").count()
+      q.collect()
+      val plan = q.queryExecution.executedPlan
+      val shuffles = plans.collect(plan) { case s: ShuffleExchangeLike => s }
+      assert(shuffles.isEmpty,
+        s"rowsPerPartition $rows: a src aggregate exchanged the view:\n$plan")
+      Csr.release(g)
+    }
   }
 
   test("converged pagerank paths equal the dense formulation") {
