@@ -947,14 +947,14 @@ object PageRank {
     */
   def fixedIterations(g: Graph, iterations: Int = 5,
       broadcastVertices: Boolean = true): DataFrame =
-    run(g, iterations, tol = 0.0, broadcastVertices)._1
+    run(g, iterations, broadcastVertices)
 
   /** Tolerance-converged variant: stops when Σ|x_{k+1} − x_k| < tol (the
     * reference converges on epsilon=1e-8 total delta, App.scala:164).
     * Dispatches to the CSR vector path ([[convergedCsr]]) below
     * the [[Csr.MaxVertices]] gate and otherwise to the Chebyshev join
-    * formulation ([[convergedCheby]]). The dense power iteration survives
-    * as [[convergedDense]], the equivalence reference for both.
+    * formulation ([[convergedCheby]]). The specs check both against a
+    * dense power iteration run to the same tolerance.
     */
   def converged(g: Graph, tol: Double = 1e-8, maxIter: Int = 100,
       broadcastVertices: Boolean = true): DataFrame =
@@ -977,9 +977,9 @@ object PageRank {
     * the lever is iteration COUNT). Each iteration is one edge⋈state
     * join + one contribution aggregate + one |V|-row update, identical in
     * shape to [[fixedIterations]]; convergence is checked on Σ|x_{k+1} −
-    * x_k| every [[DeltaEvery]] rounds like the dense path. Equivalence vs
-    * [[convergedDense]] is asserted in tests on every graph shape and
-    * both state paths.
+    * x_k| every [[DeltaEvery]] rounds. Equivalence with the dense power
+    * iteration is asserted in tests on every graph shape and both state
+    * paths.
     */
   def convergedCheby(g: Graph, tol: Double = 1e-8, maxIter: Int = 100,
       broadcastVertices: Boolean = true): DataFrame = {
@@ -1090,8 +1090,8 @@ object PageRank {
     * gate (caller falls back); arithmetic is msgRound's exactly (sum of
     * x/outdeg over in-neighbors, outdeg = the blocks' degree), with only
     * accumulation order differing — ulp-level noise under the 8 dp output
-    * rounding, equivalence-tested against [[convergedDense]] like the
-    * other state paths. Slot order is id order, so the per-vertex
+    * rounding, equivalence-tested against the dense power iteration like
+    * the other state paths. Slot order is id order, so the per-vertex
     * accumulation order does not depend on the id map.
     */
   def convergedCsr(g: Graph, tol: Double = 1e-8,
@@ -1181,15 +1181,6 @@ object PageRank {
     }
   }
 
-  /** The dense synchronous power iteration (pre-r6 `converged`): every
-    * iteration joins the FULL edge set and rewrites the FULL rank state,
-    * even when almost no rank still moves materially. Kept as the
-    * equivalence reference for [[converged]]'s three paths.
-    */
-  def convergedDense(g: Graph, tol: Double = 1e-8, maxIter: Int = 100,
-      broadcastVertices: Boolean = true): DataFrame =
-    run(g, maxIter, tol, broadcastVertices)._1
-
   /** One PageRank message round: msg(u) = Σ_{v∈N(u)} rank_v/outdeg_v,
     * returned as (dst, msg).
     *
@@ -1220,8 +1211,8 @@ object PageRank {
         .select(col("dst"), (col(rankCol) / col("outdeg")).as("contrib"))
         .groupBy(col("dst")).agg(sum(col("contrib")).as("msg"))
 
-  private def run(g: Graph, maxIter: Int, tol: Double,
-      broadcastVertices: Boolean): (DataFrame, Int) = {
+  private def run(g: Graph, iterations: Int,
+      broadcastVertices: Boolean): DataFrame = {
     // the |V|-row update join always hash-joins the message side (see
     // [[convergedCheby]]'s shj note: SMJ would re-sort the state every
     // round on either state path)
@@ -1235,7 +1226,7 @@ object PageRank {
       degrees.unpersist()
       val spark = edges.sparkSession
       import spark.implicits._
-      return (Seq.empty[(Long, Double)].toDF("id", "pr"), 0)
+      return Seq.empty[(Long, Double)].toDF("id", "pr")
     }
     // single state table (id, outdeg, pr): no ranks⋈degrees join inside the
     // loop — one broadcast, one edges scan, one contribution shuffle, one
@@ -1243,43 +1234,23 @@ object PageRank {
     var state = degrees
       .select(col("id"), col("outdeg"), lit(1.0 / nv).as("pr"))
       .localCheckpoint(true)
-    // handle on the round's backing checkpoint (state itself becomes a
-    // projection of it below) — dropped as soon as the next round's
-    // checkpoint has materialized, keeping storage at ~2 rounds instead
-    // of maxIter rounds of dead blocks awaiting a driver full GC
-    var cp = state
-    var i = 0
-    var delta = Double.MaxValue
-    while (i < maxIter && (tol == 0.0 || delta > tol)) {
+    // each round's checkpoint is dropped as soon as the next round's has
+    // materialized, keeping storage at ~2 rounds instead of `iterations`
+    // rounds of dead blocks awaiting a driver full GC
+    (0 until iterations).foreach { _ =>
       // broadcast path: zero |E|-row exchange (see [[msgRound]]); shuffle
       // path: probe-side SHJ + map-side-combined contribution aggregate
       val contribs = msgRound(edges, state, "pr", broadcastVertices)
-      // carry the old rank through the update so the convergence delta is a
-      // plain aggregate over the checkpointed result — no extra join+shuffle
-      // per iteration
-      val next = state.select(col("id"), col("outdeg"), col("pr").as("pr_old"))
+      val next = state
         .join(shj(contribs), col("id") === contribs("dst"), "left")
         .select(col("id"), col("outdeg"),
-          (lit((1.0 - Damping) / nv) + lit(Damping) * coalesce(col("msg"), lit(0.0))).as("pr"),
-          col("pr_old"))
+          (lit((1.0 - Damping) / nv) + lit(Damping) * coalesce(col("msg"), lit(0.0))).as("pr"))
         .localCheckpoint(true)
-      // amortize the scalar convergence job: deltas shrink monotonically
-      // (~×damping per step), so checking every few iterations stops at
-      // most deltaEvery-1 steps late — never early
-      if (tol > 0.0 && ((i + 1) % DeltaEvery == 0 || i + 1 == maxIter)) {
-        delta = next.agg(sum(abs(col("pr") - col("pr_old")))).head().getDouble(0)
-      }
-      graft.core.Checkpoints.drop(cp)
-      cp = next
-      state = next.select(col("id"), col("outdeg"), col("pr"))
-      i += 1
+      graft.core.Checkpoints.drop(state)
+      state = next
     }
-    if (tol > 0.0 && delta > tol)
-      System.err.println(s"[graft] WARN PageRank: Σ|Δpr|=$delta still above " +
-        s"tol=$tol after $maxIter iterations (the reference caps at the " +
-        "same maxIter — result matches its capped semantics)")
     degrees.unpersist() // edges cache is shared (Graph.cachedUndirected)
-    (state.select(col("id"), round(col("pr"), 8).as("pr")), i)
+    state.select(col("id"), round(col("pr"), 8).as("pr"))
   }
 
   /** G15: personalized PageRank — random walk with restart to a source set

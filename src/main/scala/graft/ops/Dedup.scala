@@ -1,9 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{Observations, Tables}
 
 /** Deduplication operators over the `documents` table (SURVEY §2 D1–D5).
   *
@@ -46,9 +46,6 @@ object Dedup {
   def shingleRowsOf(docs: DataFrame, k: Int = ShingleSize): DataFrame =
     docs.select(col("doc_id"), explode(shingles(col("text"), k)).as("sh"))
 
-  private def shingleTable(spark: SparkSession, dir: String): DataFrame =
-    shingleRowsOf(Tables.documents(spark, dir))
-
   /** D1: exact dedup by content hash — keep the min doc_id per group. */
   def exact(spark: SparkSession, dir: String): DataFrame =
     Tables.documents(spark, dir)
@@ -65,40 +62,55 @@ object Dedup {
     * shingles — the oracle baseline, not the scale path.
     */
   def ngramJaccard(spark: SparkSession, dir: String, threshold: Double = 0.8): DataFrame = {
-    val sh = shingleTable(spark, dir)
-    val inter = sh.as("a").join(sh.as("b"),
-      col("a.sh") === col("b.sh") && col("a.doc_id") < col("b.doc_id"))
+    val sh = shingleRowsOf(Tables.documents(spark, dir))
+    val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
+    sh.as("a").join(sh.as("b"),
+        col("a.sh") === col("b.sh") && col("a.doc_id") < col("b.doc_id"))
       .groupBy(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
       .agg(count(lit(1)).as("inter"))
-    jaccardFromIntersections(sh, inter, threshold)
-  }
-
-  /** Exact Jaccard for an explicit candidate-pair set: only candidate
-    * pairs' shingles are ever joined (linear in |cands|·|doc|, never n²).
-    * No broadcast hint: candidate-pair volume is corpus-dependent (a
-    * dup-heavy crawl can make it huge) — AQE broadcasts small sides itself.
-    */
-  private[graft] def jaccardOfCandidates(sh: DataFrame, cands: DataFrame,
-      threshold: Double): DataFrame = {
-    val candSh = cands
-      .join(sh.select(col("doc_id").as("id_a"), col("sh")), Seq("id_a"))
-    val inter = candSh
-      .join(sh.select(col("doc_id"), col("sh").as("sh_b")),
-        col("id_b") === col("doc_id") && col("sh") === col("sh_b"))
-      .groupBy(col("id_a"), col("id_b")).agg(count(lit(1)).as("inter"))
-    jaccardFromIntersections(sh, inter, threshold)
-  }
-
-  private def jaccardFromIntersections(sh: DataFrame, inter: DataFrame,
-      threshold: Double): DataFrame = {
-    val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-    inter
       .join(sizes.select(col("doc_id").as("id_a"), col("n").as("na")), "id_a")
       .join(sizes.select(col("doc_id").as("id_b"), col("n").as("nb")), "id_b")
       .withColumn("jaccard",
         col("inter").cast("double") / (col("na") + col("nb") - col("inter")))
       .filter(col("jaccard") >= threshold)
       .select(col("id_a"), col("id_b"), round(col("jaccard"), 6).as("jaccard"))
+  }
+
+  /** Exact Jaccard ≥ threshold of an (id_a, id_b) candidate set over
+    * (doc_id, s) distinct-shingle arrays (so `size(s)` is the set's size):
+    * each pair intersects its two arrays in one projection — no shingle
+    * explode, no intersection join; linear in |cands|·|doc|, never n².
+    */
+  private[graft] def jaccardOfCandidates(sets: DataFrame, cands: DataFrame,
+      threshold: Double): DataFrame =
+    cands
+      .join(sets.select(col("doc_id").as("id_a"), col("s").as("sa")), "id_a")
+      .join(sets.select(col("doc_id").as("id_b"), col("s").as("sb")), "id_b")
+      .withColumn("inter", size(array_intersect(col("sa"), col("sb"))))
+      .withColumn("jaccard", col("inter").cast("double") /
+        (size(col("sa")) + size(col("sb")) - col("inter")))
+      .filter(col("jaccard") >= threshold)
+      .select(col("id_a"), col("id_b"), round(col("jaccard"), 6).as("jaccard"))
+
+  /** The LSH pipelines' verify: exact Jaccard of `candidates` over the
+    * (doc_id, text) `docs`. The candidates' row count rides their
+    * checkpoint's job to gate a broadcast (a checkpointed frame carries no
+    * size estimate, and a dup-heavy crawl could exceed driver memory);
+    * only candidate docs are shingled, once each.
+    */
+  private[graft] def verifyCandidates(docs: DataFrame, candidates: DataFrame,
+      threshold: Double): DataFrame = {
+    val obs = Observation()
+    val cands0 = candidates.observe(obs, count(lit(1)).as("n"))
+      .localCheckpoint(true)
+    val n = Observations.metric(obs, "n").asInstanceOf[Long]
+    val cands = if (n <= BroadcastableCandidates) broadcast(cands0) else cands0
+    val candIds = cands0.select(col("id_a").as("doc_id"))
+      .union(cands0.select(col("id_b").as("doc_id"))).distinct()
+    // checkpoint: both sides of every pair read these sets
+    val sets = docs.join(candIds, "doc_id")
+      .select(col("doc_id"), shingles(col("text")).as("s")).localCheckpoint(true)
+    jaccardOfCandidates(sets, cands, threshold)
   }
 
   /** CTE chain ending in `pairs(id_a, id_b, j)` — the exact all-pairs
@@ -159,10 +171,12 @@ object Dedup {
     */
   def prefixFilterJoin(spark: SparkSession, dir: String,
       threshold: Double = 0.8): DataFrame =
-    prefixFilterJoinOf(shingleTable(spark, dir), threshold)
+    prefixFilterJoinOf(Tables.documents(spark, dir)
+      .select(col("doc_id"), shingles(col("text")).as("s")), threshold)
 
-  private[graft] def prefixFilterJoinOf(sh: DataFrame,
+  private[graft] def prefixFilterJoinOf(sets: DataFrame,
       threshold: Double): DataFrame = {
+    val sh = sets.select(col("doc_id"), explode(col("s")).as("sh"))
     val dfreq = sh.groupBy(col("sh")).agg(count(lit(1)).as("df"))
     // per-doc shingles sorted by (df, sh): a per-row array sort after a
     // co-partitioned df join — no global window, no vocabulary collect
@@ -180,20 +194,9 @@ object Dedup {
           col("a.m").cast("double") >= lit(threshold) * col("b.m"))
       .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
       .distinct()
-    jaccardOfCandidates(sh, cands, threshold)
+    jaccardOfCandidates(sets, cands, threshold)
   }
 
-  /** D3: MinHash + LSH banding, exact-verified. 126 signatures via double
-    * hashing; 21 bands × 6 rows hashed to a band key; docs sharing any band
-    * key become candidates; candidates are verified with exact Jaccard so
-    * the output equals `ngramJaccard` up to band-recall (≈1-3e-10 on the
-    * planted j≥0.93 pairs) — which is why the DuckDB oracle is the exact
-    * all-pairs SQL.
-    *
-    * This is the 100 TB path: shingle explode is linear, the signature
-    * groupBy has map-side combine, band buckets are uniform, and the
-    * verification join touches only candidate pairs.
-    */
   /** (doc_id, sig: array<long>) MinHash signatures for a (doc_id, text)
     * table — shared by the pipeline and its profiler so stage timings
     * always measure the code that actually runs.
@@ -221,96 +224,85 @@ object Dedup {
       .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
       .distinct()
 
+  /** D3: MinHash + LSH banding, exact-verified. 126 signatures via double
+    * hashing; 21 bands × 6 rows hashed to a band key; docs sharing any band
+    * key become candidates; candidates are verified with exact Jaccard so
+    * the output equals `ngramJaccard` up to band-recall (≈1-3e-10 on the
+    * planted j≥0.93 pairs) — which is why the DuckDB oracle is the exact
+    * all-pairs SQL.
+    *
+    * This is the 100 TB path: one projection reads each text once for its
+    * signature and content hash, one grouping by content hash collapses
+    * exact duplicates with map-side combine, band buckets are uniform, and
+    * the verify shingles only candidate docs, each once, and intersects
+    * two arrays per candidate pair.
+    */
   def minhashLsh(spark: SparkSession, dir: String, threshold: Double = 0.8): DataFrame =
     minhashLshDocs(Tables.documents(spark, dir).select(col("doc_id"), col("text")),
       threshold)
 
   /** The full pipeline over an explicit (doc_id, text) corpus.
     *
-    * Exact-duplicate pre-pass: LSH runs on one representative per distinct
-    * text, so a dup-heavy corpus (the 100 TB crawl norm — and the way a
-    * degenerate band bucket of m identical docs would otherwise emit m²
-    * candidate rows into the shingle-verify join) costs LSH work linear in
-    * the number of *distinct* texts. Duplicate members are reconstituted
-    * afterwards by group joins: identical texts have identical shingle sets,
-    * so every member pair inherits its representatives' exact Jaccard, and
-    * within-group pairs are exactly 1.0 — no shingle work for either.
+    * Exact-duplicate pre-pass: LSH runs on one representative (the min
+    * doc_id) per distinct text, so a dup-heavy corpus (the 100 TB crawl
+    * norm — and the way a degenerate band bucket of m identical docs would
+    * otherwise emit m² candidate rows into the verify) costs LSH work
+    * linear in the number of *distinct* texts. Duplicate members are
+    * reconstituted afterwards from each group's member list: identical
+    * texts have identical shingle sets, so every member pair inherits its
+    * representatives' exact Jaccard, and within-group pairs are exactly
+    * 1.0 — no shingle work for either. A null text has no shingles and
+    * pairs with nothing.
     */
   def minhashLshDocs(docs: DataFrame, threshold: Double = 0.8): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val spark = docs.sparkSession
     // the signature projection is compute-bound: make sure a small file
     // count doesn't serialize it onto a few cores (a 100 TB corpus is
     // already wide — the guard is a no-op there)
     val p = spark.sparkContext.defaultParallelism
     val wide = if (docs.rdd.getNumPartitions < p) docs.repartition(p) else docs
-    // ONE text pass computes the content hash and the full MinHash
-    // signature together (the codegen'd signature kernel already scans
-    // every byte; md5 rides along in the same projection) — r2's separate
-    // dup-detection agg + window passes cost two extra full-text scans.
-    // The checkpoint materializes ~1 KB/doc of signatures (standard
-    // signature storage at any scale); dup detection afterwards runs on the
-    // checkpointed 40-byte (doc_id, ch) rows, never on text.
-    val sigsAll = wide.select(col("doc_id"), md5(col("text")).as("ch"),
+    // ONE text pass computes the content hash and the MinHash signature;
+    // ONE grouping by content hash yields every aggregate the later steps
+    // need: representative, members and signature (identical texts have
+    // identical signatures, so first() is deterministic). Whether any
+    // group has two members rides the checkpoint's job as a metric.
+    val dupObs = Observation()
+    val groups = wide.filter(col("text").isNotNull)
+      .select(col("doc_id"), md5(col("text")).as("ch"),
         graft.functions.MinHashSigFn.minhashSig(col("text"), ShingleSize,
           NumHashes).as("sig"))
+      .groupBy(col("ch"))
+      .agg(min(col("doc_id")).as("doc_id"),
+        collect_list(col("doc_id")).as("members"), first(col("sig")).as("sig"))
+      .observe(dupObs, max(size(col("members"))).as("m"))
       .localCheckpoint(true)
-    val counts = sigsAll.agg(count(lit(1)), count_distinct(col("ch"))).head()
-    val hasDups = counts.getLong(0) != counts.getLong(1)
-    // (doc_id, rep): the min doc_id per distinct text — dup branch only;
-    // shuffles 40-byte rows off the checkpoint. localCheckpoint (not
-    // persist): blocks are freed by the ContextCleaner when the plan is
-    // garbage-collected, so repeated calls don't accumulate storage.
-    lazy val mem = sigsAll.select(col("doc_id"), col("ch"))
-      .withColumn("rep", min(col("doc_id")).over(Window.partitionBy(col("ch"))))
-      .select(col("doc_id"), col("rep"))
-      .localCheckpoint(true)
-    // LSH runs on one signature per distinct text: identical texts have
-    // identical signatures, so any member's sig represents the group
-    // (first() is deterministic here). Map-side combine keeps the shuffle
-    // at one sig per distinct text per partition — and this branch only
-    // runs when dups exist at all.
-    val sigs = if (!hasDups) sigsAll.select(col("doc_id"), col("sig"))
-      else sigsAll.groupBy(col("ch"))
-        .agg(min(col("doc_id")).as("doc_id"), first(col("sig")).as("sig"))
-        .select(col("doc_id"), col("sig"))
-    val cands0 = candidatePairs(bandTable(sigs)).localCheckpoint(true)
-    // size-GATED broadcast, not unconditional: candidate volume is
-    // corpus-dependent (a dup-heavy crawl could exceed driver memory), and
-    // a checkpointed RDD reports no stats, so the static planner would
-    // otherwise sort-merge even a tiny candidate table. The count is free —
-    // the checkpoint is already materialized.
-    val cands = if (cands0.count() <= BroadcastableCandidates)
-      broadcast(cands0) else cands0
-    // exact-verify only candidate documents: semi-join the corpus down to
-    // docs that appear in some candidate pair before exploding shingles
-    // (the verify needs text again — reps carries it, unlike sigsAll)
-    val reps = if (!hasDups) wide
-      else wide.join(mem.filter(col("doc_id") === col("rep"))
-        .select(col("doc_id")), "doc_id")
-    val candIds = cands.select(col("id_a").as("doc_id"))
-      .union(cands.select(col("id_b").as("doc_id"))).distinct()
-    // checkpoint: the verify consumes the shingle table three times (two
-    // intersection joins + the per-doc sizes) — materialize the explode
-    // once instead of re-scanning candidate docs' text per consumer
-    val sh = shingleRowsOf(reps.join(candIds, "doc_id")).localCheckpoint(true)
-    val repPairs = jaccardOfCandidates(sh, cands, threshold)
+    val hasDups = Observations.metric(dupObs, "m") match {
+      case m: Int => m > 1
+      case _ => false // no documents
+    }
+    // candidates are representatives: the verify reads their text in `docs`
+    val repPairs = verifyCandidates(docs, candidatePairs(bandTable(groups)),
+      threshold)
     if (!hasDups) repPairs
     else {
       // reconstitute duplicate members: cross-group pairs inherit the rep
       // pair's Jaccard; within-group pairs are identical texts (Jaccard 1.0)
       val cross = repPairs
-        .join(mem.select(col("rep").as("id_a"), col("doc_id").as("ma")), "id_a")
-        .join(mem.select(col("rep").as("id_b"), col("doc_id").as("mb")), "id_b")
-        .select(least(col("ma"), col("mb")).as("id_a"),
-          greatest(col("ma"), col("mb")).as("id_b"), col("jaccard"))
-      val within = mem.as("x").join(mem.as("y"),
-          col("x.rep") === col("y.rep") && col("x.doc_id") < col("y.doc_id"))
-        .select(col("x.doc_id").as("id_a"), col("y.doc_id").as("id_b"),
+        .join(groups.select(col("doc_id").as("id_a"), col("members").as("ma")), "id_a")
+        .join(groups.select(col("doc_id").as("id_b"), col("members").as("mb")), "id_b")
+        .select(explode(concat(ascendingPairs(col("ma"), col("mb")),
+          ascendingPairs(col("mb"), col("ma")))).as("p"), col("jaccard"))
+      val within = groups.filter(size(col("members")) > 1)
+        .select(explode(ascendingPairs(col("members"), col("members"))).as("p"),
           lit(1.0).as("jaccard"))
-      cross.union(within)
+      cross.union(within).select(col("p.id_a"), col("p.id_b"), col("jaccard"))
     }
   }
+
+  /** Every (id_a, id_b) with id_a from `xs`, id_b from `ys` and id_a < id_b. */
+  private def ascendingPairs(xs: Column, ys: Column): Column =
+    flatten(transform(xs, x => transform(filter(ys, y => y > x),
+      y => struct(x.as("id_a"), y.as("id_b")))))
 
   /** D4: SimHash (64-bit, whitespace tokens, token-frequency weighted) with
     * 4×16-bit band blocking; near-dup pairs at Hamming distance ≤ maxHamming.

@@ -1160,18 +1160,12 @@ object EventStream extends Serializable {
       candParts ::= cross.union(within).localCheckpoint(true)
       bandState = bandState.union(fresh(nb))
     }
-    // drain: dedup the accumulated candidates once, then exact-verify —
-    // same machinery, same size-gated broadcast as batch D3
+    // drain: dedup the accumulated candidates once, then exact-verify
+    // them with batch D3's verify step
     val cands = candParts.map(fresh).foldLeft(
         Seq.empty[(Long, Long)].toDF("id_a", "id_b"))(_.union(_))
-      .distinct().localCheckpoint(true)
-    val candIds = cands.select(col("id_a").as("doc_id"))
-      .union(cands.select(col("id_b").as("doc_id"))).distinct()
-    val sh = Dedup.shingleRowsOf(docs.join(candIds, "doc_id"))
-      .localCheckpoint(true)
-    val gated = if (cands.count() <= Dedup.BroadcastableCandidates)
-      broadcast(cands) else cands
-    Dedup.jaccardOfCandidates(sh, gated, threshold)
+      .distinct()
+    Dedup.verifyCandidates(docs, cands, threshold)
   }
   /** X25: INCREMENTAL IVF ANN index maintenance over a streaming
     * embedding feed — X14's append-only-index contract applied to

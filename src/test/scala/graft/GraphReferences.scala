@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.graph.Graph
+import graft.graph.{Graph, PageRank}
 
 /** Reference formulations the specs check the library's graph paths
   * against. No query runs them, so they live in test scope.
@@ -51,6 +51,45 @@ object GraphReferences {
     }
     assert(converged, s"classic CC: fixpoint not reached after $maxIter rounds")
     labels
+  }
+
+  /** The dense synchronous power iteration to a tolerance — the
+    * equivalence reference for `PageRank.converged`'s paths. Every round
+    * joins the FULL edge set and rewrites the FULL rank state, even when
+    * almost no rank still moves materially. Stops once Σ|Δpr| ≤ tol,
+    * checked every `PageRank.DeltaEvery` rounds (deltas shrink
+    * monotonically, so that stops at most DeltaEvery − 1 rounds late,
+    * never early), or after maxIter rounds. Returns (id, pr) rounded to
+    * 8 dp, like the library paths.
+    */
+  def densePagerank(g: Graph, tol: Double = 1e-8, maxIter: Int = 100,
+      broadcastVertices: Boolean = true): DataFrame = {
+    def bc(df: DataFrame) = if (broadcastVertices) broadcast(df) else df
+    val d = PageRank.Damping
+    val edges = g.cachedUndirected
+    val degrees = edges.groupBy(col("src").as("id"))
+      .agg(count(lit(1)).as("outdeg")).localCheckpoint(true)
+    val nv = degrees.count().toDouble
+    var state = degrees.withColumn("pr", lit(1.0 / nv))
+    var delta = Double.MaxValue
+    var i = 0
+    while (i < maxIter && delta > tol) {
+      val msgs = edges.join(bc(state), col("dst") === col("id"))
+        .groupBy(col("src").as("to"))
+        .agg(sum(col("pr") / col("outdeg")).as("msg"))
+      val next = state.withColumnRenamed("pr", "pr_old")
+        .join(msgs, col("id") === col("to"), "left")
+        .select(col("id"), col("outdeg"), col("pr_old"),
+          (lit((1.0 - d) / nv) + lit(d) * coalesce(col("msg"), lit(0.0)))
+            .as("pr"))
+        .localCheckpoint(true)
+      if ((i + 1) % PageRank.DeltaEvery == 0 || i + 1 == maxIter)
+        delta = next.agg(sum(abs(col("pr") - col("pr_old")))).head()
+          .getDouble(0)
+      state = next.drop("pr_old")
+      i += 1
+    }
+    state.select(col("id"), round(col("pr"), 8).as("pr"))
   }
 
   /** The row_number window formulation of the coreness h-pass — the shape

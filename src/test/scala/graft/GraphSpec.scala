@@ -9,6 +9,7 @@ import graft.graph._
 class GraphSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
+  import TestSpark.jobsOf
 
   def mkGraph(edges: (Long, Long)*): Graph =
     Graph(edges.toDF("src", "dst").withColumn("weight", lit(1L)))
@@ -174,7 +175,7 @@ class GraphSpec extends AnyFunSuite {
           .getOrElse(fail(s"$what: convergedCsr declined"))
           .localCheckpoint(true)
         val joined = pr.withColumnRenamed("pr", "pra")
-          .join(PageRank.convergedDense(g).withColumnRenamed("pr", "prb"),
+          .join(GraphReferences.densePagerank(g).withColumnRenamed("pr", "prb"),
             Seq("id"), "full_outer")
         assert(joined.filter(col("pra").isNull || col("prb").isNull)
           .count() == 0, s"$what: CSR and dense PR cover different vertices")
@@ -230,22 +231,6 @@ class GraphSpec extends AnyFunSuite {
       same(PageRank.convergedCsr(one).get, PageRank.convergedCsr(many).get,
         s"$shape: PageRank 8 dp output differs")
     }
-  }
-
-  /** Spark jobs `call` starts. */
-  def jobsOf(call: => Any): Int = {
-    val sc = spark.sparkContext
-    val n = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        n.incrementAndGet()
-    }
-    org.apache.spark.graftspec.Bus.drain(sc)
-    sc.addSparkListener(listener)
-    try { call; org.apache.spark.graftspec.Bus.drain(sc) }
-    finally sc.removeSparkListener(listener)
-    n.get
   }
 
   test("csr loop: a one-block graph runs each csr call in a fixed job count") {
@@ -505,7 +490,7 @@ class GraphSpec extends AnyFunSuite {
     // fixpoint than 60 power steps; its equivalence is asserted against
     // the converged fixpoint in the delta/cheby-vs-dense test below.
     val g = Graph.fromTpch(spark, TestSpark.sfTiny)
-    val a = PageRank.convergedDense(g, tol = 1e-12, maxIter = 60)
+    val a = GraphReferences.densePagerank(g, tol = 1e-12, maxIter = 60)
       .withColumnRenamed("pr", "pra")
     val b = PageRank.fixedIterations(g, 60).withColumnRenamed("pr", "prb")
     val maxDiff = a.join(b, "id")
@@ -699,7 +684,7 @@ class GraphSpec extends AnyFunSuite {
     val rmat = RMat.graph(spark, RMat.Params(scale = 8))
     Seq(planted, rmat, Graph.fromTpch(spark, TestSpark.sfTiny)).foreach { g =>
       Seq(true, false).foreach { bcast =>
-        val b = PageRank.convergedDense(g, broadcastVertices = bcast)
+        val b = GraphReferences.densePagerank(g, broadcastVertices = bcast)
           .withColumnRenamed("pr", "prb").localCheckpoint(true)
         Seq(
           "cheby" -> PageRank.convergedCheby(g, broadcastVertices = bcast),

@@ -107,8 +107,10 @@ class OpsSpec extends AnyFunSuite {
   }
 
   test("minhash+LSH finds exactly the exact-jaccard pairs") {
-    val exact = Dedup.ngramJaccard(spark, sf).select("id_a", "id_b")
-    val lsh = Dedup.minhashLsh(spark, sf).select("id_a", "id_b")
+    // (id_a, id_b, jaccard) rows: a wrong intersection count in the
+    // verify shows in the jaccard column even when the pair set is right
+    val exact = Dedup.ngramJaccard(spark, sf)
+    val lsh = Dedup.minhashLsh(spark, sf)
     assert(exact.exceptAll(lsh).count() == 0, "LSH missed true pairs")
     assert(lsh.exceptAll(exact).count() == 0, "LSH produced false pairs past verification")
   }
@@ -176,6 +178,57 @@ class OpsSpec extends AnyFunSuite {
       assert(doc == best._2,
         s"cluster $canon kept $doc but best is ${best._2}")
     }
+  }
+
+  /** A hand-built corpus of the shapes the dedup pipelines special-case:
+    * duplicate groups of size 3, 2 and 1 whose texts are near-duplicates
+    * of each other (so member pairs inherit their representatives'
+    * Jaccard), null, empty and shorter-than-k texts, and two docs with
+    * disjoint shingles. Written as a `documents` table under a fresh dir.
+    */
+  lazy val edgeCaseDir: String = {
+    import spark.implicits._
+    val a = (0 until 40).map(i => s"w${i * 7 % 23}x$i").mkString(" ")
+    val a1 = a.updated(100, '#')
+    val a2 = a.updated(180, '%')
+    val digits = (0 until 30).map(i => (i * 37 % 1000).toString).mkString("-")
+    val letters = "qwertyuiopasdfghjklzxcvbnm" * 3
+    val docs = Seq(1L -> a, 2L -> a, 3L -> a, 4L -> a1, 5L -> a1, 6L -> a2,
+      7L -> digits, 8L -> letters, 9L -> null, 10L -> null, 11L -> "",
+      12L -> "", 13L -> "abc", 14L -> "abc", 15L -> "abcd")
+    val dir = java.nio.file.Files.createTempDirectory("graft-dedup-edge")
+    docs.toDF("doc_id", "text").coalesce(1)
+      .write.parquet(s"$dir/documents.parquet")
+    dir.toString
+  }
+
+  test("minhash+LSH and prefix filtering equal the exact Jaccard on edge cases") {
+    val exact = Dedup.ngramJaccard(spark, edgeCaseDir).localCheckpoint(true)
+    Seq("minhash+LSH" -> Dedup.minhashLsh(spark, edgeCaseDir),
+        "prefix filter" -> Dedup.prefixFilterJoin(spark, edgeCaseDir))
+      .foreach { case (what, out) =>
+        assert(exact.exceptAll(out).count() == 0, s"$what missed true pairs")
+        assert(out.exceptAll(exact).count() == 0, s"$what produced wrong rows")
+      }
+    val pairs = exact.collect().map(r => (r.getLong(0), r.getLong(1)) ->
+      r.getDouble(2)).toMap
+    // the three within-group pairs of the size-3 group, its six and three
+    // cross pairs with the near-duplicate groups of size 2 and 1, their
+    // two cross pairs and their within pair, the two empty texts and the
+    // two equal short texts; null texts pair with nothing
+    assert(pairs.size == 17, s"got ${pairs.keys.toSeq.sorted}")
+    Seq((1L, 2L), (1L, 3L), (2L, 3L), (4L, 5L), (11L, 12L), (13L, 14L))
+      .foreach(p => assert(pairs(p) == 1.0, s"$p"))
+    Seq(1L, 2L, 3L).foreach(m => assert(pairs((m, 4L)) == pairs((1L, 5L))))
+  }
+
+  test("minhash+LSH runs a fixed number of Spark jobs") {
+    // the measured count on this corpus: a driver round trip between
+    // stages (a count() or head()) or a materialized shingle explode adds
+    // a job and fails the pin
+    val docs = graft.core.Tables.documents(spark, edgeCaseDir)
+    val jobs = TestSpark.jobsOf(Dedup.minhashLshDocs(docs, 0.8).collect())
+    assert(jobs <= 14, s"minhashLshDocs ran $jobs jobs, budget 14")
   }
 
   test("minhash+LSH survives a dup-heavy corpus without a candidate blowup") {

@@ -19,4 +19,20 @@ object TestSpark {
     s
   }
   val sfTiny = "/root/testdata/sf0.001"
+
+  /** Spark jobs `call` starts. */
+  def jobsOf(call: => Any): Int = {
+    val sc = spark.sparkContext
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        n.incrementAndGet()
+    }
+    org.apache.spark.graftspec.Bus.drain(sc)
+    sc.addSparkListener(listener)
+    try { call; org.apache.spark.graftspec.Bus.drain(sc) }
+    finally sc.removeSparkListener(listener)
+    n.get
+  }
 }
