@@ -128,24 +128,18 @@ object RmatTier {
       (r, sec)
     }
 
-    // build: raw edge list on disk → weighted dedup'd edges → symmetrized
-    // adjacency cache the algorithms read (the reference's build step ends
-    // with its adjacency structure likewise materialized). Pairs are
-    // CANONICALIZED (src ≤ dst) in the same aggregation that counts
-    // multiplicities: raw R-MAT output can carry both orientations of a
-    // pair, and the action stream is canonical at generation — so this
-    // both honors EdgeUpdates' one-directed-row-per-pair contract (a
-    // delete on (a,b) must hit a base row stored as (b,a)) and lets the
-    // symmetrized view skip its |2E|-row distinct shuffle entirely
-    // (edgesCanonical: two shuffles in the whole build instead of three).
-    // Graph.fromRawEdges — both orientations explode up front and the
-    // 2|E| rows exchange ONCE hashed on src, each partition packing
-    // straight into long-id CSR blocks (a pair's multiplicity kept as a
-    // run) with no aggregate and no columnar cache; the symmetrized view,
-    // the canonical one-row-per-pair table EdgeUpdates reads and the
-    // CSR sv, sssp and pr share all derive from those blocks, which
-    // Csr.release frees. The r6 shape paid two exchanges and two full
-    // cache materializations for the same 265M-row view.
+    // build: raw edge list on disk → the symmetrized adjacency the
+    // algorithms read (the reference's build step ends with its adjacency
+    // structure likewise materialized). Graph.fromRawEdges explodes both
+    // orientations up front, exchanges the 2|E| rows ONCE hashed on src
+    // and packs each partition straight into long-id CSR blocks (a pair's
+    // multiplicity kept as its weight) with no aggregate and no columnar
+    // cache; the symmetrized view, the canonical one-row-per-pair table
+    // EdgeUpdates reads (its contract: a delete on (a,b) must hit a base
+    // row stored as (b,a)) and the CSR sv, sssp and pr share all derive
+    // from those blocks, which Csr.release frees. The r6 shape paid two
+    // exchanges and two full cache materializations for the same
+    // 265M-row view.
     // untimed page-cache warm of the raw edge parquet (column pages, not
     // just footers — a bare count() reads no data pages): the reference
     // harness generates the graph then immediately reads it back, so every
@@ -220,10 +214,6 @@ object RmatTier {
     // (the one CSR build sv, sssp and pr shared on `g` is the same size
     // class)
     graft.graph.Csr.release(g)
-    g.preSymmetrized match {
-      case Some(sym) => sym.unpersist(blocking = false)
-      case None => g.cachedUndirected.unpersist(blocking = false)
-    }
     TierRun(tier, buildSec, svSec, ssspSec, prSec, updSec, rate,
       nv, ne, naActual, warmSec)
   }

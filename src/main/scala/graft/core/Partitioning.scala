@@ -13,7 +13,8 @@ import org.apache.spark.storage.StorageLevel
   * estimate is useless here (join cardinality estimates can be off by 10^5×
   * — observed 2.19 TB estimated for a 24 MB join result), so partition on
   * the ACTUAL row count: persist, count, and re-partition the cached rows
-  * only when the existing layout is badly off (>4× either way).
+  * only when the existing layout is badly off: at most a quarter of the
+  * target partition count, or [[OverPartitionTolerance]] times it.
   */
 object Partitioning {
   /** Over-partitioning tolerance (r15): a second cache pass to SHRINK the

@@ -1060,7 +1060,7 @@ object PageRank {
     *
     * Shape: `cachedUndirected` is hash-partitioned on `src` and holds
     * both orientations, so (src → sorted neighbor list) is a ZERO-exchange
-    * per-partition CSR build ([[Csr.buildDense]], materialized once).
+    * per-partition CSR build ([[Csr.slot]] of the graph's packed blocks).
     * Each iteration then is
     *
     *   1. message: contrib[v] = x[v]/outdeg[v]   (|V| doubles)
@@ -1438,31 +1438,21 @@ object PageRank {
     * at unit weights this IS fixedIterations (equivalence-tested). The
     * weighted symmetrized view folds parallel edges by weight SUM
     * (orientation weights of the same pair add — both directions carry
-    * the pair's full multiplicity, mirroring Graph.undirected's
-    * presence semantics).
+    * the pair's full multiplicity, mirroring the unweighted view's
+    * presence semantics): [[Graph.cachedWeightedUndirected]].
     */
   def fixedIterationsWeighted(g: Graph, iterations: Int = 5,
       broadcastVertices: Boolean = true): DataFrame = {
     def bc(df: DataFrame) = if (broadcastVertices) broadcast(df) else df
     def shj(df: DataFrame) =
       if (broadcastVertices) df else df.hint("SHUFFLE_HASH")
-    val e = g.edges.select(col("src"), col("dst"), col("weight"))
-    // session-memoized graphs read the shared weighted view (one build
-    // serves weighted PR + both multi-contractions); ad-hoc graphs build
-    // privately and release below
-    val wedges = if (g.memoizeAnalytics) g.cachedWeightedUndirected
-      else graft.core.Partitioning.cachedSizedBy(
-        e.union(e.filter(col("src") =!= col("dst"))
-            .select(col("dst").as("src"), col("src").as("dst"), col("weight")))
-          .groupBy(col("src"), col("dst")).agg(sum(col("weight")).as("weight")),
-        Seq("src"))
+    val wedges = g.cachedWeightedUndirected
     val degrees = wedges.groupBy(col("src").as("id"))
       .agg(sum(col("weight")).cast("double").as("wdeg"))
       .localCheckpoint(true)
     val nv = degrees.count().toDouble
     if (nv == 0.0) {
-      if (!g.memoizeAnalytics) wedges.unpersist()
-      val spark = e.sparkSession
+      val spark = wedges.sparkSession
       import spark.implicits._
       return Seq.empty[(Long, Double)].toDF("id", "pr")
     }
@@ -1483,7 +1473,6 @@ object PageRank {
         .localCheckpoint(true)
       i += 1
     }
-    if (!g.memoizeAnalytics) wedges.unpersist()
     state.select(col("id"), round(col("pr"), 8).as("pr"))
   }
 

@@ -102,24 +102,10 @@ object MultiContract {
     def bc(df: DataFrame) = if (broadcastVertices) broadcast(df) else df
     val spark = g.edges.sparkSession
     import spark.implicits._
-    val e = g.edges.select(col("src"), col("dst"), col("weight"))
     // weight-summed symmetric view (PageRank.unrolledWeightedSql's
-    // wedges). Session-memoized graphs read the shared
-    // [[Graph.cachedWeightedUndirected]] — weighted PR and both
-    // contraction queries consumed three private builds of this same
-    // |2E|-row view per session (guide §2.4: share one exchange);
-    // ad-hoc/fixture graphs keep the private build.
-    var sym =
-      if (g.memoizeAnalytics)
-        g.cachedWeightedUndirected.select(col("src").as("u"),
-          col("dst").as("v"), col("weight").as("w"))
-      else e.select(col("src").as("u"), col("dst").as("v"),
-          col("weight").as("w"))
-        .union(e.filter(col("src") =!= col("dst"))
-          .select(col("dst").as("u"), col("src").as("v"),
-            col("weight").as("w")))
-        .groupBy(col("u"), col("v")).agg(sum(col("w")).as("w"))
-        .localCheckpoint(true)
+    // wedges), shared with weighted PageRank
+    var sym = g.cachedWeightedUndirected.select(col("src").as("u"),
+      col("dst").as("v"), col("weight").as("w"))
     val vol = sym.agg(coalesce(sum(col("w")), lit(0L))).head().getLong(0)
     if (vol == 0L)
       return Seq.empty[(Long, Long)].toDF("id", "community")

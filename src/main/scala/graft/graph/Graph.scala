@@ -15,98 +15,70 @@ import graft.core.Tables
   * map-side partials, and the same code runs on a 1000-executor cluster by
   * just partitioning the edge table on `src`.
   *
-  * What depends only on the edges is built at most once per instance:
-  * [[cachedUndirected]], [[cachedWeightedUndirected]] and the slot CSR
-  * ([[csr]]). The two views are session caches that stay until a caller
-  * unpersists them; the CSR blocks go with the instance (Spark's
-  * ContextCleaner unpersists them once it is garbage-collected) or
-  * earlier through [[Csr.release]]. A raw-edge graph
-  * ([[Graph.fromRawEdges]]) materializes one thing only, its packed CSR
-  * blocks ([[packed]]): [[edges]], `preSymmetrized` and both views are
-  * expanded from them, and its slot CSR is slotted from them.
+  * One layout, one owner (GraphX's edge partition: primitive arrays, every
+  * view derived from them). The first consumer of any view builds this
+  * instance's packed CSR blocks ([[Graph.Layout]]) once: each edge
+  * explodes into both orientations (a self-loop once, an edge with a null
+  * endpoint dropped), the rows exchange ONCE hashed on `src`, and each
+  * partition packs into long-id blocks of distinct neighbors with the
+  * pair's weight sum ([[Csr.pack]]). [[cachedWeightedUndirected]] and
+  * [[cachedUndirected]] are expansions of those blocks and the slot CSR
+  * ([[csr]]) slots them. The blocks belong to the instance: [[Csr.release]]
+  * frees them, and otherwise Spark's ContextCleaner unpersists them once
+  * the instance is garbage-collected.
   *
+  * @param edges the directed edges; a `weight` column (1 per row when
+  *   absent) gives each pair its weight sum in the weighted view
   * @param memoizeAnalytics opt-in for the session-lifetime analytics memo
   *   caches (e.g. converged CC labels). Only the session-memoized graphs
   *   ([[Graph.fromTpch]], [[EdgeUpdates.updatedGraph]]) set it — one
-  *   instance per session, so their CSR is built once per session: an
+  *   instance per session, so their blocks are built once per session: an
   *   ad-hoc graph (a dedup pair graph, a test fixture) is keyed by
   *   DataFrame reference identity, so caching its results would pin
   *   checkpointed RDDs forever — an unbounded leak in long-lived sessions.
   */
-final case class Graph(edges: DataFrame, memoizeAnalytics: Boolean = false,
-    edgesCanonical: Boolean = false,
-    preSymmetrized: Option[DataFrame] = None) {
+final case class Graph(edges: DataFrame, memoizeAnalytics: Boolean = false) {
 
-  /** Symmetrized, deduplicated edge view (reference graphs are undirected:
-    * networkx.Graph dedupes, Bagel builds both directions). Self-loops kept
-    * as a single direction.
-    *
-    * When the caller declares `edgesCanonical` (one row per pair, src ≤
-    * dst — e.g. a canonicalized R-MAT tier build), the symmetrized view
-    * is distinct BY CONSTRUCTION and the |2E|-row dedup shuffle is
-    * skipped entirely — at SCALE 24 that is one fewer 265M-row exchange
-    * in the build workload.
+  /** This instance's packed blocks, once built; [[Graph.fromRawEdges]]
+    * sets them before any consumer reads them.
     */
-  def undirected: DataFrame = {
-    val e = edges.select(col("src"), col("dst"))
-    if (edgesCanonical)
-      e.union(e.filter(col("src") =!= col("dst"))
-        .select(col("dst").as("src"), col("src").as("dst")))
-    else
-      e.union(e.select(col("dst").as("src"), col("src").as("dst"))).distinct()
+  @volatile private[graph] var built: Option[Graph.Layout] = None
+
+  private[graph] def layout: Graph.Layout = synchronized {
+    if (built.isEmpty) built = Some(Graph.Layout(edges, Graph.RowsPerBlock))
+    built.get
   }
 
-  /** Materialized, row-count-partitioned undirected view, hash-partitioned
-    * on `src` — computed once per Graph instance and shared by every
-    * algorithm run against it (`Graph.fromTpch` memoizes instances per
-    * (session, dir), so the six graph workloads in a session scan and
-    * cache the edge table once), and the input of the instance's one CSR
-    * build ([[csr]]). The src alignment means degree aggregates
-    * and the shuffle-fallback frontier/state joins read the cache without
-    * re-exchanging the edge side — at the large R-MAT tier that is the
-    * difference between exchanging 265M edges or 15M state rows per
-    * iteration.
+  /** The weight-summed symmetrized view `(src, dst, weight)`: one row per
+    * directed orientation of a pair, parallel edges folded by weight sum,
+    * self-loops once (reference graphs are undirected: networkx.Graph
+    * dedupes, Bagel builds both directions). It is declared to Catalyst
+    * as hash-partitioned on `src` — true, as packing and expansion keep
+    * partition indices — so degree aggregates and the join paths'
+    * frontier/state joins read it without re-exchanging the edge side; at
+    * the large R-MAT tier that is the difference between exchanging 265M
+    * edges or 15M state rows per iteration.
+    */
+  lazy val cachedWeightedUndirected: DataFrame = layout.view
+
+  /** The `(src, dst)` projection of [[cachedWeightedUndirected]]: the
+    * symmetrized, deduplicated edge view the unweighted algorithms read.
     */
   lazy val cachedUndirected: DataFrame =
-    preSymmetrized match {
-      // a build that already materialized the src-aligned symmetrized
-      // view ([[Graph.fromRawEdges]]): project the algorithm view off it
-      // (narrow project, partitioning preserved)
-      case Some(sym) => sym.select(col("src"), col("dst"))
-      // session-memoized graphs hold ONE |2E| session cache — the
-      // weighted view — and the unweighted view is a narrow projection
-      // off it (r15, ADVICE r14: the two session caches held the same
-      // row set at 1.67x the footprint, and sessions running both
-      // weighted and unweighted analytics paid two |2E| exchanges +
-      // materializations where one suffices). Row-identical: both views
-      // keep one row per orientation pair with self-loops once, the
-      // weighted groupBy dedupes exactly like the old distinct. The
-      // in-memory columnar cache prunes the weight column on scan, so
-      // unweighted consumers read the same bytes as before. Ad-hoc
-      // graphs keep the independent build: their callers unpersist
-      // `cachedUndirected` directly, which must hit the real cache
-      // entry, not a projection of it.
-      case None if memoizeAnalytics =>
-        cachedWeightedUndirected.select(col("src"), col("dst"))
-      case None =>
-        graft.core.Partitioning.cachedSizedBy(undirected, Seq("src"))
-    }
+    cachedWeightedUndirected.select(col("src"), col("dst"))
 
-  /** The packed long-id blocks a raw-edge build materialized
-    * ([[Graph.fromRawEdges]]), which every view of this graph expands;
-    * None for any other graph. [[Csr.release]] frees them.
-    */
-  @volatile private[graph] var packed: Option[Csr.Packed] = None
+  /** [[cachedWeightedUndirected]], which every graph now materializes. */
+  def preSymmetrized: Option[DataFrame] = Some(cachedWeightedUndirected)
 
-  /** The slot CSR of [[cachedUndirected]]: [[Csr.slot]] of the [[packed]]
-    * blocks, else [[Csr.buildDense]]. The first CSR consumer builds it
-    * and every later one on this instance reuses it, a declined build
-    * (None) included — read it through [[Csr.cachedOrBuild]].
+  /** The slot CSR of the packed blocks ([[Csr.slot]]). The first CSR
+    * consumer builds it and every later one on this instance reuses it,
+    * a declined build (None) included — read it through
+    * [[Csr.cachedOrBuild]].
     */
   private[graph] lazy val csr: Option[Csr.Blocks] = {
-    val built = packed.fold(Csr.buildDense(cachedUndirected))(Csr.slot)
+    val slotted = Csr.slot(layout.packed)
     csrBuilt = true
-    built
+    slotted
   }
 
   /** Whether [[csr]] has been built: [[Csr.release]] frees only blocks
@@ -114,40 +86,16 @@ final case class Graph(edges: DataFrame, memoizeAnalytics: Boolean = false,
     */
   @volatile private[graph] var csrBuilt = false
 
+  /** Rows of [[cachedWeightedUndirected]], counted by the build: an upper
+    * bound on the vertex count, as every vertex is the src of a row.
+    */
+  private[graft] def symmetrizedRows: Long = layout.rows
+
   /** Distinct vertex ids appearing in any edge. */
   def vertices: DataFrame =
     edges.select(col("src").as("id"))
       .union(edges.select(col("dst").as("id")))
       .distinct()
-
-  /** Materialized weight-SUMMED symmetrized view `(src, dst, weight)` —
-    * one row per directed orientation, parallel edges folded by weight
-    * sum, self-loops kept once — hash-partitioned on `src` like
-    * [[cachedUndirected]]. Weighted PageRank and both multi-contraction
-    * queries each consumed this identical view through private builds
-    * (three |2E|-row exchanges per session where one suffices — guide
-    * §2.4); like the unweighted cache it is built once per Graph
-    * instance and released with the session. Callers running on ad-hoc
-    * (non-memoized) graphs keep private builds so fixture caches are
-    * never pinned (`lazy` means an instance that never needs the view
-    * never builds it).
-    */
-  lazy val cachedWeightedUndirected: DataFrame = preSymmetrized match {
-    // fromRawEdges already expands exactly this view: (src, dst,
-    // weight = pair multiplicity), both orientations, self-loops once,
-    // src-aligned — the weight of a pair is orientation-symmetric by
-    // construction, so the view serves the weighted consumers directly
-    case Some(sym) => sym
-    case None =>
-      val e = edges.select(col("src"), col("dst"), col("weight"))
-      graft.core.Partitioning.cachedSizedBy(
-        e.union(e.filter(col("src") =!= col("dst"))
-            .select(col("dst").as("src"), col("src").as("dst"),
-              col("weight")))
-          .groupBy(col("src"), col("dst"))
-          .agg(sum(col("weight")).as("weight")),
-        Seq("src"))
-  }
 }
 
 object Graph {
@@ -156,59 +104,86 @@ object Graph {
     */
   val SupplierOffset = 1000000L
 
-  /** ONE-shuffle graph build from a raw directed multi-edge list (the
-    * R-MAT tier's workload): each raw edge explodes into both
-    * orientations up front, the 2|E| skinny rows exchange ONCE hashed on
-    * `src`, and each exchanged partition packs straight into long-id CSR
-    * blocks ([[Csr.pack]]: one primitive sort, a pair's multiplicity kept
-    * as a run). Those blocks are all the build materializes. The
-    * symmetrized view `preSymmetrized` = [[cachedWeightedUndirected]]
-    * (`src, dst, weight` = pair multiplicity, both orientations,
-    * self-loops once), [[cachedUndirected]] and the canonical
-    * one-row-per-pair [[edges]] (EdgeUpdates' contract, `src <= dst`)
-    * are expansions of them ([[Csr.expand]]), declared to Catalyst as
-    * hash-partitioned on `src` with the exchange's partition count —
-    * true, as packing and expansion keep partition indices — so
-    * consumers clustering on `src` read them with no exchange. The
-    * graph's slot CSR slots the same blocks without sorting again, and
-    * [[Csr.release]] frees them. An edge with a null endpoint names no
-    * vertex and is dropped.
-    *
-    * Sizing the exchange costs a `raw.count()`: a parquet metadata count
-    * reads no data pages, but any other source (`StingerFiles` decodes
-    * every edge) runs a job of its own that scans the input.
+  /** Symmetrized rows per packed block the build aims at. */
+  val RowsPerBlock = 1000000L
+
+  /** A graph's packed blocks, its weighted view over them and the view's
+    * row count.
+    */
+  private[graph] final case class Layout(packed: Csr.Packed, view: DataFrame,
+      rows: Long)
+
+  private[graph] object Layout {
+    /** The one build. The exchange runs at the session's shuffle
+      * partitions n (an explicit count, which AQE does not coalesce), and
+      * the job that materializes the packed blocks also counts their rows.
+      * From that count the blocks merge ([[Csr.merge]]) into the fewest t
+      * dividing n with at most `rowsPerBlock` rows each (t = n when even
+      * n blocks are larger), so the blocks are exactly
+      * `HashPartitioning(src, t)`'s partitions, as the view declares.
+      */
+    def apply(edges: DataFrame, rowsPerBlock: Long): Layout = {
+      import org.apache.spark.sql.types.{LongType, StructField, StructType}
+      import org.apache.spark.storage.StorageLevel
+      val spark = edges.sparkSession
+      // a graph without a weight column exchanges no constant one per row:
+      // the packer counts each row once
+      val cols = Seq(col("src").cast("long").as("src"),
+          col("dst").cast("long").as("dst")) ++
+        (if (edges.columns.contains("weight"))
+          Seq(coalesce(col("weight").cast("long"), lit(0L)).as("weight"))
+        else Nil)
+      val e = edges.select(cols: _*)
+        .filter(col("src").isNotNull && col("dst").isNotNull)
+      val flip = e.columns.map {
+        case "src" => col("dst").as("src")
+        case "dst" => col("src").as("dst")
+        case c => col(c)
+      }
+      val both = e.select(explode(when(col("src") === col("dst"),
+          array(struct(e.columns.map(col): _*)))
+        .otherwise(array(struct(e.columns.map(col): _*), struct(flip: _*))))
+        .as("e"))
+        .select(col("e.*"))
+      val n = spark.conf.get("spark.sql.shuffle.partitions").toInt
+      val wide = Csr.pack(both.repartition(n, col("src"))
+        .queryExecution.toRdd).persist(StorageLevel.MEMORY_AND_DISK)
+      // materializes the blocks; their in-memory size is the view's size
+      // estimate, as a columnar cache's compressed size was
+      val (rows, bytes) = wide.map { case (vs, _, nbrs, _) =>
+        (nbrs.length.toLong, 12L * vs.length + 16L * nbrs.length)
+      }.fold((0L, 0L)) { case ((r1, b1), (r2, b2)) => (r1 + r2, b1 + b2) }
+      val want = ((rows + rowsPerBlock - 1) / rowsPerBlock).max(1L).min(n)
+      val t = (want.toInt to n).find(n % _ == 0).get
+      val packed = if (t == n) wide else {
+        val merged = Csr.merge(wide, t).persist(StorageLevel.MEMORY_AND_DISK)
+        merged.count()
+        wide.unpersist(blocking = false)
+        merged
+      }
+      // nullable columns: with non-nullable ones the incremental PageRank
+      // stream's checkpointed plans failed Catalyst's union constraint
+      // rewrite (`key not found`)
+      val view = org.apache.spark.sql.graftbridge.FrameBridge.hashPartitioned(
+        spark,
+        StructType(Seq("src", "dst", "weight").map(StructField(_, LongType))),
+        Csr.expand(packed), "src", bytes)
+      Layout(packed, view, rows)
+    }
+  }
+
+  /** A graph of a raw directed multi-edge list (the R-MAT tier's
+    * workload): weight 1 per raw row, so a pair's weight is its
+    * multiplicity, and [[Graph.edges]] is the canonical one-row-per-pair
+    * table (EdgeUpdates' contract, `src <= dst`) filtered from the
+    * instance's own weighted view. Builds the blocks now, at
+    * `rowsPerPartition` rows per block.
     */
   def fromRawEdges(raw: DataFrame,
-      rowsPerPartition: Long = 1000000L): Graph = {
-    import org.apache.spark.sql.types.{LongType, StructField, StructType}
-    import org.apache.spark.storage.StorageLevel
-    val nRaw = raw.count()
-    val target = ((2 * nRaw + rowsPerPartition - 1) / rowsPerPartition)
-      .max(1L).min(1L << 17).toInt
-    val e = raw.select(col("src").cast("long").as("src"),
-        col("dst").cast("long").as("dst"))
-      .filter(col("src").isNotNull && col("dst").isNotNull)
-    val both = e.select(explode(when(col("src") === col("dst"),
-        array(struct(col("src"), col("dst"))))
-      .otherwise(array(
-        struct(col("src"), col("dst")),
-        struct(col("dst").as("src"), col("src").as("dst"))))).as("e"))
-      .select(col("e.src"), col("e.dst"))
-    val packed = Csr.pack(both.repartition(target, col("src"))
-      .queryExecution.toRdd).persist(StorageLevel.MEMORY_AND_DISK)
-    // materializes the blocks; their in-memory size is the views' size
-    // estimate, as a columnar cache's compressed size was
-    val bytes = packed.map { case (vs, _, nbrs) =>
-      12L * vs.length + 8L * nbrs.length
-    }.fold(0L)(_ + _)
-    val sym = org.apache.spark.sql.graftbridge.FrameBridge.hashPartitioned(
-      raw.sparkSession,
-      StructType(Seq("src", "dst", "weight")
-        .map(StructField(_, LongType, nullable = false))),
-      Csr.expand(packed), "src", bytes)
-    val g = Graph(sym.filter(col("src") <= col("dst")),
-      edgesCanonical = true, preSymmetrized = Some(sym))
-    g.packed = Some(packed)
+      rowsPerPartition: Long = RowsPerBlock): Graph = {
+    val l = Layout(raw.select(col("src"), col("dst")), rowsPerPartition)
+    val g = Graph(l.view.filter(col("src") <= col("dst")))
+    g.built = Some(l)
     g
   }
 

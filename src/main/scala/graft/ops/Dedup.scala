@@ -472,17 +472,15 @@ object Dedup {
   def clusters(spark: SparkSession, dir: String, threshold: Double = 0.8): DataFrame = {
     val pairs = minhashLshCached(spark, dir, threshold)
       .select(col("id_a").as("src"), col("id_b").as("dst"))
-      .withColumn("weight", lit(1L))
     val pairGraph = graft.graph.Graph(pairs)
     val comp0 = graft.graph.ConnectedComponents(pairGraph)
     // checkpointed CC labels carry no Catalyst stats → size-gate the
-    // broadcast by the (free) materialized count, as with LSH candidates
-    val comp = if (comp0.count() <= BroadcastableCandidates)
+    // broadcast by the row count the graph's build already holds, which
+    // bounds the label count
+    val comp = if (pairGraph.symmetrizedRows <= BroadcastableCandidates)
       broadcast(comp0) else comp0
-    // the ad-hoc pair graph's edge cache and CSR aren't session-memoized
-    // like Graph.fromTpch — release them now that the labels are
-    // materialized
-    pairGraph.cachedUndirected.unpersist()
+    // the ad-hoc pair graph's blocks aren't session-memoized like
+    // Graph.fromTpch — release them now that the labels are materialized
     graft.graph.Csr.release(pairGraph)
     Tables.documents(spark, dir).select(col("doc_id"))
       .join(comp.withColumnRenamed("id", "doc_id"), Seq("doc_id"), "left")

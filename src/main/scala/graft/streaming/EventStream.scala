@@ -860,7 +860,7 @@ object EventStream extends Serializable {
     *     broadcast-small touched set — the edge state is scanned, never
     *     shuffled on its full width);
     *  3. presence flips become ±1 deltas per endpoint (self-loops count
-    *     once, matching Graph.undirected keeping one direction);
+    *     once, matching Graph.cachedUndirected keeping one direction);
     *  4. merge the batch-sized delta table into the |V|-row degree state
     *     (full-outer + coalesce; vertices reaching degree 0 drop out).
     *
@@ -1022,7 +1022,6 @@ object EventStream extends Serializable {
             .select(col("id"), col("component"))
           labels = clean.union(fresh.select(col("id"), col("component")))
             .localCheckpoint(true)
-          sg.cachedUndirected.unpersist()
           graft.graph.Csr.release(sg)
           dirtyVerts = noDirty
         }
@@ -1676,10 +1675,7 @@ object EventStream extends Serializable {
       val g = drainBase.map(_()).getOrElse(Graph(edgeState))
       val out = graft.graph.ShortestPaths.fromMinVertex(g,
         broadcastState = broadcastState)
-      if (drainBase.isEmpty) {
-        g.cachedUndirected.unpersist()
-        graft.graph.Csr.release(g)
-      }
+      if (drainBase.isEmpty) graft.graph.Csr.release(g)
       out
     } else dist
   }
@@ -1837,7 +1833,7 @@ object EventStream extends Serializable {
           Seq.empty[(Long, Long)].toDF("id", "dist")
         } else graft.graph.WeightedShortestPaths(g, s2.getLong(0),
           broadcastState = broadcastState)
-      if (drainBase.isEmpty) g.cachedUndirected.unpersist()
+      if (drainBase.isEmpty) graft.graph.Csr.release(g)
       out
     } else dist
   }
@@ -1995,7 +1991,7 @@ object EventStream extends Serializable {
       val g = drainBase.map(_()).getOrElse(Graph(edgeState))
       val out = graft.graph.LandmarkDistances(g, k,
         broadcastState = broadcastState)
-      if (drainBase.isEmpty) g.cachedUndirected.unpersist()
+      if (drainBase.isEmpty) graft.graph.Csr.release(g)
       out
     } else dist
   }
@@ -2258,7 +2254,7 @@ object EventStream extends Serializable {
       // matching the batch oracle)
       val g = drainBase.map(_()).getOrElse(Graph(edgeState))
       val out = graft.graph.Betweenness(g, k, broadcastState = broadcastState)
-      if (drainBase.isEmpty) g.cachedUndirected.unpersist()
+      if (drainBase.isEmpty) graft.graph.Csr.release(g)
       out
     } else {
       stats.foreach(_("dirty") = 0L)
@@ -3172,9 +3168,9 @@ object EventStream extends Serializable {
       .join(bc(cf.select(col("id").as("dst"))), Seq("dst"), "left_semi")
       .groupBy(col("src").as("id")).agg(count(lit(1)).as("core_degree"))
     if (drainBase.isEmpty) {
-      // materialize before dropping the ad-hoc graph's cache the agg reads
+      // materialize before dropping the ad-hoc graph's blocks the agg reads
       val o = out.localCheckpoint(true)
-      g.cachedUndirected.unpersist()
+      graft.graph.Csr.release(g)
       o
     } else out
   }

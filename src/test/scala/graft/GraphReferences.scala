@@ -3,12 +3,55 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.graph.{Graph, PageRank}
+import graft.graph.{Csr, Graph, PageRank}
 
 /** Reference formulations the specs check the library's graph paths
   * against. No query runs them, so they live in test scope.
   */
 object GraphReferences {
+
+  /** The symmetrized distinct edge view of directed `(src, dst)` rows:
+    * both orientations, self-loops once — what `Graph.cachedUndirected`
+    * holds.
+    */
+  def undirected(edges: DataFrame): DataFrame = {
+    val e = edges.select(col("src").cast("long"), col("dst").cast("long"))
+      .filter(col("src").isNotNull && col("dst").isNotNull)
+    e.union(e.select(col("dst"), col("src"))).distinct()
+  }
+
+  /** The weight-summed symmetrized view of `(src, dst[, weight])` rows
+    * (weight 1 per row when absent): both orientations of a pair carry the
+    * pair's weight sum, self-loops once — what
+    * `Graph.cachedWeightedUndirected` holds.
+    */
+  def weightedUndirected(edges: DataFrame): DataFrame = {
+    val w = if (edges.columns.contains("weight")) col("weight").cast("long")
+      else lit(1L)
+    val e = edges.select(col("src").cast("long").as("src"),
+        col("dst").cast("long").as("dst"), w.as("weight"))
+      .filter(col("src").isNotNull && col("dst").isNotNull)
+    e.union(e.filter(col("src") =!= col("dst"))
+        .select(col("dst"), col("src"), col("weight")))
+      .groupBy(col("src"), col("dst")).agg(sum(col("weight")).as("weight"))
+  }
+
+  /** The sorted adjacency of `(src, dst)` rows, built on the driver:
+    * every vertex of [[undirected]] to its ascending distinct neighbors.
+    */
+  def adjacency(edges: DataFrame): Map[Long, Seq[Long]] =
+    undirected(edges).collect().toSeq.map(r => r.getLong(0) -> r.getLong(1))
+      .groupBy(_._1).map { case (v, ps) => v -> ps.map(_._2).sorted }
+
+  /** The adjacency a slot CSR holds, in vertex ids: comparable with
+    * [[adjacency]].
+    */
+  def adjacency(b: Csr.Blocks): Map[Long, Seq[Long]] = {
+    val ids = b.ids
+    b.rdd.flatMap { case (slots, offs, nbrs) =>
+      slots.indices.map(k => slots(k) -> nbrs.slice(offs(k), offs(k + 1)).toSeq)
+    }.collect().map { case (s, ns) => ids(s) -> ns.map(n => ids(n)) }.toMap
+  }
 
   /** The dense (non-frontier) connected-components formulation — every
     * round joins the FULL label state against the edges and takes the min

@@ -26,7 +26,7 @@ class GraphSpec extends AnyFunSuite {
   test("degrees: sum of degrees = 2 * undirected edge count") {
     val g = Graph.fromTpch(spark, TestSpark.sfTiny)
     val degSum = Degrees(g).agg(sum("degree")).head().getLong(0)
-    assert(degSum == g.undirected.count())
+    assert(degSum == GraphReferences.undirected(g.edges).count())
   }
 
   test("connected components on two planted components") {
@@ -193,12 +193,14 @@ class GraphSpec extends AnyFunSuite {
   }
 
   /** The partition count of `g`'s CSR blocks, which decides whether the
-    * CSR loops run in one task or one job per round.
+    * CSR loops run in one task or one job per round, once the blocks are
+    * checked against the driver-side adjacency of `input`, the rows `g`
+    * was built from.
     */
-  def csrPartitions(g: Graph): Int = {
-    val b = Csr.buildDense(g.cachedUndirected)
-      .getOrElse(fail("csr build declined"))
-    b.rdd.unpersist(blocking = false)
+  def csrPartitions(g: Graph, input: DataFrame): Int = {
+    val b = Csr.cachedOrBuild(g).getOrElse(fail("csr build declined"))
+    assert(GraphReferences.adjacency(b) == GraphReferences.adjacency(input),
+      "the slot CSR differs from the reference adjacency")
     b.rdd.getNumPartitions
   }
 
@@ -214,8 +216,9 @@ class GraphSpec extends AnyFunSuite {
       val one = Graph.fromRawEdges(raw)
       // about four src partitions, each holding some vertex
       val many = Graph.fromRawEdges(raw, rowsPerPartition = raw.count() / 2)
-      assert(csrPartitions(one) == 1, s"$shape: one-block fixture split")
-      assert(csrPartitions(many) >= 3, s"$shape: multi-block fixture is not")
+      assert(csrPartitions(one, raw) == 1, s"$shape: one-block fixture split")
+      assert(csrPartitions(many, raw) >= 3,
+        s"$shape: multi-block fixture is not")
       assert(many.cachedUndirected.select(spark_partition_id()).distinct()
         .count() >= 3, s"$shape: fewer than 3 non-empty blocks")
       same(ConnectedComponents.csrLabels(one).get,
@@ -234,14 +237,15 @@ class GraphSpec extends AnyFunSuite {
   }
 
   test("csr loop: a one-block graph runs each csr call in a fixed job count") {
-    val g = Graph.fromRawEdges(
-      RMat.graph(spark, RMat.Params(scale = 8)).edges.select("src", "dst"))
-    assert(csrPartitions(g) == 1)
+    val raw = RMat.graph(spark, RMat.Params(scale = 8)).edges
+      .select("src", "dst")
+    val g = Graph.fromRawEdges(raw)
     val src = g.cachedUndirected.agg(min(col("src"))).head().getLong(0)
     // the first call: 2 build jobs + 1 loop job + 1 emit job, whatever
     // the round count; every later call on the instance reuses the build
     val first = jobsOf(ConnectedComponents.csrLabels(g).get)
     assert(first <= 4, s"the first csr call ran $first jobs, budget 4")
+    assert(csrPartitions(g, raw) == 1)
     val budget = 2
     val counts = Seq(
       "cc" -> jobsOf(ConnectedComponents.csrLabels(g).get),
@@ -261,20 +265,21 @@ class GraphSpec extends AnyFunSuite {
   }
 
   test("csr build: a declined build runs its jobs once per graph") {
-    // the two frames buildDense declines (see the spec below), as the
-    // symmetrized view of a graph: an asymmetric one and a split src
-    val asym = Seq((1L, 2L), (2L, 1L), (2L, 7L)).toDF("src", "dst")
-      .repartition(col("src"))
-    val star = ((2L to 9L).map(u => (1L, u)) ++ (2L to 9L).map(u => (u, 1L)))
-      .toDF("src", "dst").repartition(4, col("dst"))
-    Seq("asymmetric" -> asym, "split src" -> star).foreach { case (what, sym) =>
-      val g = Graph(sym.filter(col("src") <= col("dst")),
-        preSymmetrized = Some(sym))
+    // an empty graph is the decline a test can reach (the other is
+    // |V| >= Csr.MaxVertices); with and without a weight column, and
+    // with rows whose endpoints are all null
+    val empty = Seq.empty[(Long, Long)].toDF("src", "dst")
+    val nulls = Seq[(java.lang.Long, java.lang.Long)]((null, 1L), (2L, null))
+      .toDF("src", "dst")
+    Seq("empty" -> empty, "weighted" -> empty.withColumn("weight", lit(1L)),
+      "null endpoints" -> nulls).foreach { case (what, edges) =>
+      val g = Graph(edges)
       g.cachedUndirected.count()
       val first = jobsOf(assert(ConnectedComponents.csrLabels(g).isEmpty))
       val second = jobsOf(assert(ShortestPaths.csrBfs(g, 1L, 64).isEmpty))
       assert(first >= 1 && second == 0,
         s"$what: build jobs $first, then $second on the second call")
+      Csr.release(g)
     }
   }
 
@@ -282,7 +287,7 @@ class GraphSpec extends AnyFunSuite {
     val edges = (1L until 40L).map(i => (i, i + 1)).toDF("src", "dst")
     Seq(Graph.fromRawEdges(edges),
       Graph.fromRawEdges(edges, rowsPerPartition = 8)).foreach { g =>
-      val parts = csrPartitions(g)
+      val parts = csrPartitions(g, edges)
       // the throw reaches the caller as itself, not wrapped in a
       // SparkException from a task
       val cc = intercept[IllegalStateException](
@@ -378,28 +383,26 @@ class GraphSpec extends AnyFunSuite {
     assert(c.get.exceptAll(d).count() == 0 && d.exceptAll(c.get).count() == 0)
   }
 
-  test("csr build declines a neighbor that is not a src or a split src") {
-    // an asymmetric src-partitioned frame: 7 is a neighbor of 2 but never
-    // a src, so it has no slot and the kernels would index past every
-    // state vector — the build must decline (callers take the join path)
+  test("csr build gives a one-way neighbor and a split src one slot each") {
+    // the build explodes both orientations and exchanges on src itself,
+    // so an asymmetric frame (7 is a neighbor of 2 but never a src) and
+    // a frame whose src rows span partitions both build the reference
+    // adjacency: every neighbor is a src with exactly one slot
     val asym = Seq((1L, 2L), (2L, 1L), (2L, 7L)).toDF("src", "dst")
       .repartition(col("src"))
-    assert(Csr.buildDense(asym).isEmpty,
-      "CSR build accepted a neighbor outside the src set")
-    // the symmetric completion of the same frame builds
-    val sym = Seq((1L, 2L), (2L, 1L), (2L, 7L), (7L, 2L)).toDF("src", "dst")
-      .repartition(col("src"))
-    val b = Csr.buildDense(sym).getOrElse(fail("symmetric frame declined"))
-    assert(b.ids.toSeq == Seq(1L, 2L, 7L) && b.degree.toSeq == Seq(1, 2, 1))
-    b.rdd.unpersist(blocking = false)
-    // the same rows NOT partitioned by src: a src whose rows span two
-    // partitions would get two slots, so the build declines
     val star = ((2L to 9L).map(u => (1L, u)) ++ (2L to 9L).map(u => (u, 1L)))
       .toDF("src", "dst").repartition(4, col("dst"))
     assert(star.filter(col("src") === 1L)
       .select(spark_partition_id()).distinct().count() > 1)
-    assert(Csr.buildDense(star).isEmpty,
-      "CSR build accepted a src split across partitions")
+    Seq("asymmetric" -> asym, "split src" -> star).foreach { case (what, e) =>
+      val g = Graph(e)
+      val b = Csr.cachedOrBuild(g).getOrElse(fail(s"$what: declined"))
+      assert(GraphReferences.adjacency(b) == GraphReferences.adjacency(e),
+        s"$what: adjacency differs")
+      if (what == "asymmetric")
+        assert(b.ids.toSeq == Seq(1L, 2L, 7L) && b.degree.toSeq == Seq(1, 2, 1))
+      Csr.release(g)
+    }
   }
 
   test("csr memo: one shared build per graph, freed by release") {
@@ -569,91 +572,145 @@ class GraphSpec extends AnyFunSuite {
   }
 
   test("canonical-pairs build has the identical undirected view") {
-    // the RmatTier build canonicalizes pairs (src<=dst) and declares
-    // edgesCanonical, skipping the symmetrize-dedup shuffle — the
-    // resulting adjacency must be row-identical to the general path
-    val raw = RMat.edges(spark, RMat.Params(scale = 8))
-    val a = Graph(raw.groupBy(col("src"), col("dst"))
-      .agg(count(lit(1)).as("weight"))).undirected
-    val b = Graph(raw
-      .select(least(col("src"), col("dst")).as("src"),
-        greatest(col("src"), col("dst")).as("dst"))
-      .groupBy(col("src"), col("dst")).agg(count(lit(1)).as("weight")),
-      edgesCanonical = true).undirected
-    assert(a.exceptAll(b).count() == 0 && b.exceptAll(a).count() == 0,
-      "canonical undirected view diverged from the general path")
-    // r7 one-shuffle build: same canonical edge table (weights included)
-    // and same symmetrized adjacency as the general path
-    val c = Graph.fromRawEdges(raw)
-    val bEdges = Graph(raw
-      .select(least(col("src"), col("dst")).as("src"),
-        greatest(col("src"), col("dst")).as("dst"))
-      .groupBy(col("src"), col("dst")).agg(count(lit(1)).as("weight")),
-      edgesCanonical = true)
-    assert(c.edges.exceptAll(bEdges.edges).count() == 0 &&
-      bEdges.edges.exceptAll(c.edges).count() == 0,
-      "fromRawEdges canonical edges diverged")
-    assert(c.cachedUndirected.exceptAll(a).count() == 0 &&
-      a.exceptAll(c.cachedUndirected).count() == 0,
-      "fromRawEdges symmetrized cache diverged")
-    // the packed build against the general path on raw rows with
-    // self-loops, both orientations of a pair and repeated rows, in one
-    // block and in several: the same views (weights included) and the
-    // same slot CSR as buildDense of the general symmetrized frame
+    // every constructor — raw rows, per-pair counts, canonical (src <=
+    // dst) pairs and the raw-edge build in one block and in several — on
+    // rows with self-loops, both orientations of a pair and repeated
+    // rows, against the general formulations in GraphReferences: the same
+    // unweighted and weighted views and a slot CSR holding the reference
+    // adjacency
     def same(x: DataFrame, y: DataFrame, msg: String) =
       assert(x.exceptAll(y).count() == 0 && y.exceptAll(x).count() == 0, msg)
-    def lists(b: Csr.Blocks) = b.rdd.flatMap { case (slots, offs, nbrs) =>
-      slots.indices.map(k => slots(k) -> nbrs.slice(offs(k), offs(k + 1)).toSeq)
-    }.collect().toMap
     val planted = Seq((1L, 2L), (2L, 1L), (1L, 2L), (3L, 3L), (3L, 3L),
       (4L, 5L), (5L, 6L), (6L, 4L), (4L, 5L), (7L, 7L), (2L, 3L), (9L, 8L))
       .toDF("src", "dst")
-    Seq("planted" -> planted,
-      "rmat+planted" -> raw.select("src", "dst").union(planted)).foreach {
+    val rmat = RMat.edges(spark, RMat.Params(scale = 8))
+    Seq("planted" -> planted, "rmat+planted" -> rmat.union(planted)).foreach {
       case (shape, r) =>
-        val general = Graph(r.groupBy(col("src"), col("dst"))
-          .agg(count(lit(1)).as("weight")))
-        val want = Csr.buildDense(general.cachedUndirected)
-          .getOrElse(fail(s"$shape: general build declined"))
-        Seq(1L, r.count() / 2).foreach { rows =>
-          val what = s"$shape, rowsPerPartition $rows"
-          val g = Graph.fromRawEdges(r, rowsPerPartition = rows)
-          same(g.edges, Graph(r
-            .select(least(col("src"), col("dst")).as("src"),
-              greatest(col("src"), col("dst")).as("dst"))
-            .groupBy(col("src"), col("dst")).agg(count(lit(1)).as("weight")),
-            edgesCanonical = true).edges, s"$what: edges diverged")
-          same(g.cachedUndirected, general.cachedUndirected,
-            s"$what: cachedUndirected diverged")
-          same(g.cachedWeightedUndirected, general.cachedWeightedUndirected,
-            s"$what: cachedWeightedUndirected diverged")
-          val got = Csr.cachedOrBuild(g).getOrElse(fail(s"$what: declined"))
-          assert(got.ids.toSeq == want.ids.toSeq, s"$what: slot ids differ")
-          assert(got.degree.toSeq == want.degree.toSeq, s"$what: degrees differ")
-          assert(lists(got) == lists(want), s"$what: neighbor slots differ")
-          if (rows > 1L) assert(got.rdd.getNumPartitions >= 3,
+        val undirected = GraphReferences.undirected(r).localCheckpoint(true)
+        val weighted = GraphReferences.weightedUndirected(r)
+          .localCheckpoint(true)
+        val adjacency = GraphReferences.adjacency(r)
+        val canonical = r
+          .select(least(col("src"), col("dst")).as("src"),
+            greatest(col("src"), col("dst")).as("dst"))
+          .groupBy(col("src"), col("dst")).agg(count(lit(1)).as("weight"))
+        val several = Graph.fromRawEdges(r, rowsPerPartition = r.count() / 2)
+        Seq("raw rows" -> Graph(r),
+          "per-pair counts" -> Graph(r.groupBy(col("src"), col("dst"))
+            .agg(count(lit(1)).as("weight"))),
+          "canonical pairs" -> Graph(canonical),
+          "fromRawEdges, one block" -> Graph.fromRawEdges(r),
+          "fromRawEdges, several blocks" -> several).foreach { case (c, g) =>
+          val what = s"$shape, $c"
+          same(g.cachedUndirected, undirected, s"$what: unweighted view")
+          same(g.cachedWeightedUndirected, weighted, s"$what: weighted view")
+          val b = Csr.cachedOrBuild(g).getOrElse(fail(s"$what: declined"))
+          assert(GraphReferences.adjacency(b) == adjacency,
+            s"$what: slot CSR adjacency")
+          if (c.startsWith("fromRawEdges"))
+            same(g.edges, canonical, s"$what: canonical edges")
+          if (g eq several) assert(b.rdd.getNumPartitions >= 3,
             s"$what: the multi-block build is not")
           Csr.release(g)
         }
-        want.rdd.unpersist(blocking = false)
-        general.cachedUndirected.unpersist()
-        general.cachedWeightedUndirected.unpersist()
     }
   }
 
   test("release frees every RDD of a raw-edge graph") {
-    val raw = RMat.edges(spark, RMat.Params(scale = 8)).select("src", "dst")
+    // and of a graph built from edges, with and without a weight column
+    val raw = RMat.edges(spark, RMat.Params(scale = 8))
     val sc = spark.sparkContext
-    Seq(true, false).foreach { withCsr =>
+    val builds = Seq[(String, () => Graph)](
+      "raw-edge" -> (() =>
+        Graph.fromRawEdges(raw, rowsPerPartition = raw.count() / 2)),
+      "edges" -> (() => Graph(raw)),
+      "weighted edges" -> (() => Graph(raw.withColumn("weight", lit(2L)))))
+    for ((what, build) <- builds; withCsr <- Seq(true, false)) {
       val before = sc.getPersistentRDDs.keySet
-      val g = Graph.fromRawEdges(raw, rowsPerPartition = raw.count() / 2)
+      val g = build()
       g.cachedUndirected.count()
       if (withCsr) assert(Csr.cachedOrBuild(g).nonEmpty)
       Csr.release(g)
       val left = sc.getPersistentRDDs.keySet -- before
-      assert(left.isEmpty, s"csr built: $withCsr; release left " +
+      assert(left.isEmpty, s"$what, csr built: $withCsr; release left " +
         left.toSeq.sorted.map(id => sc.getPersistentRDDs(id).toDebugString)
           .mkString("\n"))
+    }
+  }
+
+  test("graph build: weight sums, one entry per pair, no null vertex") {
+    def same(x: DataFrame, y: DataFrame, msg: String) =
+      assert(x.exceptAll(y).count() == 0 && y.exceptAll(x).count() == 0, msg)
+    // parallel edges in both orientations, a BIGINT weight of 10^6, a
+    // repeated self-loop, and rows with a null endpoint
+    val rows = Seq[(java.lang.Long, java.lang.Long, Long)](
+      (1L, 2L, 1L), (1L, 2L, 2L), (2L, 1L, 3L), (2L, 3L, 1000000L),
+      (3L, 3L, 4L), (3L, 3L, 5L), (3L, 4L, 1L), (null, 5L, 7L),
+      (6L, null, 7L), (null, null, 1L)).toDF("src", "dst", "weight")
+    val g = Graph(rows)
+    same(g.cachedWeightedUndirected, GraphReferences.weightedUndirected(rows),
+      "weighted view differs from the reference sums")
+    // (1,2) (2,1) (2,3) (3,2) (3,3) (3,4) (4,3): the 10^6 weight is one
+    // entry, not 10^6 repeats
+    val b = Csr.cachedOrBuild(g).getOrElse(fail("declined"))
+    val entries = b.rdd.map(_._3.length.toLong).fold(0L)(_ + _)
+    assert(entries == 7L && g.cachedWeightedUndirected.count() == 7L,
+      s"packed $entries entries, want 7")
+    // a null endpoint names no vertex (not id 0, not its other end)
+    assert(b.ids.toSeq == Seq(1L, 2L, 3L, 4L), s"slot ids ${b.ids.toSeq}")
+    assert(ConnectedComponents(g).collect().map(_.getLong(0)).sorted.toSeq ==
+      Seq(1L, 2L, 3L, 4L))
+    val memo = Graph(rows, memoizeAnalytics = true)
+    same(PageRank.fixedIterationsWeighted(g),
+      PageRank.fixedIterationsWeighted(memo),
+      "weighted PageRank differs between ad-hoc and memoized graphs")
+    Seq(g, memo).foreach(Csr.release)
+  }
+
+  test("a graph's declared src partitioning holds row by row") {
+    // one block (one shuffle partition), a forced multi-block build, and
+    // builds merged from the session's 4 shuffle partitions into 1 and 2
+    // blocks: a join of the view with a frame hash-partitioned on src to
+    // the same count exchanges only that frame, and gives the rows of the
+    // same join over an undeclared copy of the view
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    val plans = new AdaptiveSparkPlanHelper {}
+    def same(x: DataFrame, y: DataFrame, msg: String) =
+      assert(x.exceptAll(y).count() == 0 && y.exceptAll(x).count() == 0, msg)
+    val raw = RMat.edges(spark, RMat.Params(scale = 8))
+    val rows = GraphReferences.undirected(raw).count()
+    def withConf[T](k: String, v: String)(body: => T): T = {
+      val old = spark.conf.getOption(k)
+      spark.conf.set(k, v)
+      try body finally old.fold(spark.conf.unset(k))(spark.conf.set(k, _))
+    }
+    val builds = Seq(
+      "one block" -> (1, withConf("spark.sql.shuffle.partitions", "1") {
+        val g = Graph(raw); g.cachedUndirected; g
+      }),
+      "multi-block" -> (4, Graph.fromRawEdges(raw, rowsPerPartition = 1)),
+      "merged into 1" -> (1, Graph(raw)),
+      "merged into 2" ->
+        (2, Graph.fromRawEdges(raw, rowsPerPartition = rows / 2 + 1)))
+    withConf("spark.sql.autoBroadcastJoinThreshold", "-1") {
+      builds.foreach { case (what, (t, g)) =>
+        val view = g.cachedUndirected
+        assert(view.rdd.getNumPartitions == t, s"$what: blocks")
+        val other = raw.select(col("src"), col("dst").as("o"))
+          .repartition(t, col("src"))
+        val q = view.join(other, "src")
+        q.collect()
+        val shuffles = plans.collect(q.queryExecution.executedPlan) {
+          case s: ShuffleExchangeLike => s
+        }
+        assert(shuffles.size == 1,
+          s"$what: not a one-sided exchange:\n${q.queryExecution.executedPlan}")
+        val undeclared = spark.createDataFrame(view.rdd, view.schema)
+        same(q, undeclared.join(other, "src"),
+          s"$what: the declared partitioning lost join rows")
+        Csr.release(g)
+      }
     }
   }
 
@@ -941,7 +998,7 @@ class GraphSpec extends AnyFunSuite {
     val k = 16
     val out = KCore(gt, k).collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(out.values.forall(_ >= k), "core member below k induced degree")
-    var adj = gt.undirected.collect()
+    var adj = GraphReferences.undirected(gt.edges).collect()
       .map(r => (r.getLong(0), r.getLong(1)))
       .groupBy(_._1).map { case (v, es) => v -> es.map(_._2).toSet }
     var changed = true
@@ -979,7 +1036,7 @@ class GraphSpec extends AnyFunSuite {
     assert(out(1L) == 1L && out(2L) == 1L && out(11L) == out(12L))
     // real graph: exact agreement with the sequential replay
     val gt = Graph.fromTpch(spark, TestSpark.sfTiny)
-    val symT = gt.undirected.select("src", "dst").collect()
+    val symT = GraphReferences.undirected(gt.edges).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSeq
     val outT = LabelPropagation(gt, rounds = 5).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -1021,7 +1078,7 @@ class GraphSpec extends AnyFunSuite {
     val gt = Graph.fromTpch(spark, TestSpark.sfTiny)
     val dist = Coreness(gt).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    var adj = gt.undirected.collect()
+    var adj = GraphReferences.undirected(gt.edges).collect()
       .map(r => (r.getLong(0), r.getLong(1)))
       .groupBy(_._1).map { case (v, es) => v -> es.map(_._2).toSet }
     var k = 1
@@ -1116,7 +1173,7 @@ class GraphSpec extends AnyFunSuite {
       "rounds past the fixpoint are not idempotent")
     // every community is connected in the original graph: contraction
     // only ever merges along edges
-    val adj = gt.undirected.collect()
+    val adj = GraphReferences.undirected(gt.edges).collect()
       .map(r => (r.getLong(0), r.getLong(1)))
       .groupBy(_._1).map { case (v, es) => v -> es.map(_._2).toSet }
     val comm = r4.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap

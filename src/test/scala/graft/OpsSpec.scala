@@ -157,6 +157,16 @@ class OpsSpec extends AnyFunSuite {
         .mkString("\n"))
   }
 
+  test("dedup clusters runs a fixed number of Spark jobs") {
+    // the measured count on this corpus with the pair set memoized: the
+    // pair graph's build, its slot CSR, the CC loop and its output, then
+    // the assignment join; a count() gate or a second build of the pair
+    // graph adds a job and fails the pin
+    Dedup.minhashLshCached(spark, sf)
+    val jobs = TestSpark.jobsOf(Dedup.clusters(spark, sf).collect())
+    assert(jobs <= 10, s"Dedup.clusters ran $jobs jobs, budget 10")
+  }
+
   test("keep-best resolution keeps the max-quality member of every cluster") {
     val kept = Dedup.keepBest(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))

@@ -528,7 +528,7 @@ class StreamingSpec extends AnyFunSuite {
       assert(got.exceptAll(fresh).count() == 0 &&
         fresh.exceptAll(got).count() == 0,
         s"mid-stream labels diverged from batch CC after batch $i")
-      g.cachedUndirected.unpersist()
+      graft.graph.Csr.release(g)
     }
     val batch = ConnectedComponents(Graph(EdgeUpdates(base.edges, actions)))
     assert(streamed.exceptAll(batch).count() == 0 &&
