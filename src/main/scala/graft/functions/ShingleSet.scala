@@ -13,20 +13,54 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * The distinct k-char windows of the string (one window of the whole
   * string if it is shorter than k), in first-occurrence order. Windows come
-  * from [[ShingleWindows]]; each is probed in a hash set as a view over the
-  * input bytes and copied out only when it is new, so a document costs time
-  * linear in its bytes and one copy per distinct shingle.
+  * from [[ShingleWindows]]; each is hashed in place and probed in an
+  * open-addressing table of distinct-shingle indices keyed on that hash,
+  * comparing bytes only on an equal hash, and copied out only when it is
+  * new — so a document costs time linear in its bytes, one copy per
+  * distinct shingle and no per-window object.
   */
 object ShingleSetImpl {
   def shingles(s: UTF8String, k: Int): ArrayData = {
-    val seen = new java.util.HashSet[UTF8String]()
-    val out = scala.collection.mutable.ArrayBuffer.empty[Any]
     val win = new ShingleWindows(s, k)
-    while (win.next()) {
-      val sh = win.view()
-      if (seen.add(sh)) out += sh.copy()
+    var out = new Array[UTF8String](16)
+    var outHash = new Array[Long](16)
+    var n = 0
+    // power-of-two table at load ≤ 1/2; slot = shingle index + 1, 0 = empty
+    var slots = new Array[Int](32)
+    def slotOf(h: Long): Int = (h ^ (h >>> 32)).toInt & (slots.length - 1)
+    def emptySlot(h: Long): Int = {
+      var p = slotOf(h)
+      while (slots(p) != 0) p = (p + 1) & (slots.length - 1)
+      p
     }
-    new GenericArrayData(out.toArray)
+    while (win.next()) {
+      val h = win.hash(42L)
+      var p = slotOf(h)
+      var found = false
+      while (!found && slots(p) != 0) {
+        val i = slots(p) - 1
+        found = outHash(i) == h && win.sameBytes(out(i))
+        p = (p + 1) & (slots.length - 1)
+      }
+      if (!found) {
+        // p is the empty slot the probe stopped at, unless the table grows
+        if (n == out.length) {
+          out = java.util.Arrays.copyOf(out, n * 2)
+          outHash = java.util.Arrays.copyOf(outHash, n * 2)
+          slots = new Array[Int](slots.length * 2)
+          var i = 0
+          while (i < n) { slots(emptySlot(outHash(i))) = i + 1; i += 1 }
+          p = emptySlot(h)
+        }
+        out(n) = win.view().copy()
+        outHash(n) = h
+        n += 1
+        slots(p) = n
+      }
+    }
+    val res = new Array[Any](n)
+    System.arraycopy(out, 0, res, 0, n)
+    new GenericArrayData(res)
   }
 }
 

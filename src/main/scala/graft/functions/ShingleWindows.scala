@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.expressions.XXH64
+import org.apache.spark.unsafe.array.ByteArrayMethods
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Cursor over the k-char shingle windows of a UTF-8 string, as byte
@@ -52,6 +53,12 @@ final class ShingleWindows(s: UTF8String, k: Int) {
   def hash(seed: Long): Long =
     XXH64.hashUnsafeBytes(s.getBaseObject, s.getBaseOffset + start,
       end - start, seed)
+
+  /** Whether the current window's bytes equal `u`'s, compared in place. */
+  def sameBytes(u: UTF8String): Boolean =
+    u.numBytes == end - start &&
+      ByteArrayMethods.arrayEquals(s.getBaseObject, s.getBaseOffset + start,
+        u.getBaseObject, u.getBaseOffset, end - start)
 
   /** The current window as a view over the string's memory: valid only
     * while `s`'s bytes are (copy it to keep it past the current row).

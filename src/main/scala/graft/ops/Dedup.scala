@@ -77,40 +77,70 @@ object Dedup {
   }
 
   /** Exact Jaccard ≥ threshold of an (id_a, id_b) candidate set over
-    * (doc_id, s) distinct-shingle arrays (so `size(s)` is the set's size):
-    * each pair intersects its two arrays in one projection — no shingle
-    * explode, no intersection join; linear in |cands|·|doc|, never n².
+    * (doc_id, s) distinct-shingle arrays: each pair joins its two arrays
+    * and `set_jaccard` ([[graft.functions.SetJaccard]]) hashes the smaller
+    * one and probes it with the other in one call — no shingle explode, no
+    * intersection join, no intermediate intersection array; linear in
+    * |cands|·|doc|, never n². Join strategies come from hints on `cands`
+    * and `sets`, if the caller puts any.
     */
   private[graft] def jaccardOfCandidates(sets: DataFrame, cands: DataFrame,
       threshold: Double): DataFrame =
     cands
       .join(sets.select(col("doc_id").as("id_a"), col("s").as("sa")), "id_a")
       .join(sets.select(col("doc_id").as("id_b"), col("s").as("sb")), "id_b")
-      .withColumn("inter", size(array_intersect(col("sa"), col("sb"))))
-      .withColumn("jaccard", col("inter").cast("double") /
-        (size(col("sa")) + size(col("sb")) - col("inter")))
+      .withColumn("jaccard",
+        graft.functions.SetJaccardFn.setJaccard(col("sa"), col("sb")))
       .filter(col("jaccard") >= threshold)
       .select(col("id_a"), col("id_b"), round(col("jaccard"), 6).as("jaccard"))
 
   /** The LSH pipelines' verify: exact Jaccard of `candidates` over the
-    * (doc_id, text) `docs`. The candidates' row count rides their
-    * checkpoint's job to gate a broadcast (a checkpointed frame carries no
-    * size estimate, and a dup-heavy crawl could exceed driver memory);
-    * only candidate docs are shingled, once each.
+    * (doc_id, text) `docs`. Only candidate docs are shingled, once each.
+    *
+    * Both joins have a fixed strategy, chosen from sizes that ride the
+    * checkpoints' jobs as `observe()` metrics (a checkpointed frame
+    * carries no usable size estimate, and a dup-heavy crawl could exceed
+    * driver memory). When the candidate docs' sets take at most the
+    * session's `spark.sql.autoBroadcastJoinThreshold` bytes as unsafe
+    * rows, they are broadcast into both joins and the candidates stream
+    * through them with no exchange. Otherwise, and always when the
+    * session disabled broadcasts (a threshold ≤ 0), the candidates are
+    * broadcast (at most [[BroadcastableCandidates]] rows) into the first
+    * join and the second is a sort-merge join. Left to AQE, the second
+    * join became a broadcast of whichever side's shuffle stage finished
+    * first, so the verify ran a different set of stages from pass to pass.
+    *
+    * The size is an upper bound on the (doc_id, s) unsafe rows: 40 bytes
+    * a row (null bits, doc_id, the array's offset word, its length and a
+    * null-bit word) plus 16 bytes and the UTF-8 bytes of each shingle
+    * (its offset word, a null bit and up to 7 bytes of padding to a word):
+    * an ASCII 5-gram takes 16 bytes and counts 21, a 5-gram of 3-byte
+    * characters takes 24 and counts 31.
     */
   private[graft] def verifyCandidates(docs: DataFrame, candidates: DataFrame,
       threshold: Double): DataFrame = {
-    val obs = Observation()
-    val cands0 = candidates.observe(obs, count(lit(1)).as("n"))
+    val candObs = Observation()
+    val cands = candidates.observe(candObs, count(lit(1)).as("n"))
       .localCheckpoint(true)
-    val n = Observations.metric(obs, "n").asInstanceOf[Long]
-    val cands = if (n <= BroadcastableCandidates) broadcast(cands0) else cands0
-    val candIds = cands0.select(col("id_a").as("doc_id"))
-      .union(cands0.select(col("id_b").as("doc_id"))).distinct()
+    val n = Observations.metric(candObs, "n").asInstanceOf[Long]
+    val candIds = cands.select(col("id_a").as("doc_id"))
+      .union(cands.select(col("id_b").as("doc_id"))).distinct()
     // checkpoint: both sides of every pair read these sets
+    val setObs = Observation()
     val sets = docs.join(candIds, "doc_id")
-      .select(col("doc_id"), shingles(col("text")).as("s")).localCheckpoint(true)
-    jaccardOfCandidates(sets, cands, threshold)
+      .select(col("doc_id"), shingles(col("text")).as("s"))
+      .observe(setObs, sum(lit(40L) + size(col("s")) * 16L +
+        octet_length(array_join(col("s"), ""))).as("bytes"))
+      .localCheckpoint(true)
+    val bytes = Observations.metric(setObs, "bytes") match {
+      case b: Long => b
+      case _ => 0L // no candidates
+    }
+    val thr = docs.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    if (thr > 0 && bytes <= thr)
+      jaccardOfCandidates(broadcast(sets), cands, threshold)
+    else jaccardOfCandidates(sets.hint("merge"),
+      if (n <= BroadcastableCandidates) broadcast(cands) else cands, threshold)
   }
 
   /** CTE chain ending in `pairs(id_a, id_b, j)` — the exact all-pairs
@@ -205,16 +235,18 @@ object Dedup {
     docs.select(col("doc_id"),
       graft.functions.MinHashSigFn.minhashSig(col("text"), ShingleSize, NumHashes).as("sig"))
 
-  /** (doc_id, band, bsig): one hashed band key per signature slice. */
-  def bandTable(sigs: DataFrame): DataFrame = {
-    val bandStructs = (0 until NumBands).map { j =>
-      val rows = (0 until BandRows).map(r =>
-        element_at(col("sig"), j * BandRows + r + 1))
-      struct(lit(j).as("band"), xxhash64(rows: _*).as("bsig"))
-    }
-    sigs.select(col("doc_id"), explode(array(bandStructs: _*)).as("bs"))
-      .select(col("doc_id"), col("bs.band").as("band"), col("bs.bsig").as("bsig"))
-  }
+  /** (doc_id, band, bsig): one row per LSH band of each signature — band
+    * j's key `bsig` hashes the signature's j-th slice of [[BandRows]]
+    * values, equal to Spark's `xxhash64` over them. `band_keys`
+    * ([[graft.functions.BandKeys]]) computes all [[NumBands]] keys of a
+    * signature in one call and `posexplode` numbers them, so `band` is an
+    * int and both are non-null; a null signature (a null text) has no
+    * bands.
+    */
+  def bandTable(sigs: DataFrame): DataFrame =
+    sigs.select(col("doc_id"),
+      posexplode(graft.functions.BandKeysFn.bandKeys(col("sig"), BandRows,
+        NumBands)).as(Seq("band", "bsig")))
 
   /** Distinct (id_a < id_b) pairs sharing any band bucket. */
   def candidatePairs(bands: DataFrame): DataFrame =

@@ -1,14 +1,16 @@
 package graft
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StringType
+import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
 import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.functions.{ArrayDot, MinHashImpl, MinHashSigFn, ShingleSetFn, ShingleSetImpl}
+import graft.functions.{ArrayDot, BandKeysFn, BandKeysImpl, MinHashImpl, MinHashSigFn,
+  SetJaccardFn, ShingleSetFn, ShingleSetImpl}
+import graft.ops.Dedup
 
 class FunctionsSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -33,6 +35,33 @@ class FunctionsSpec extends AnyFunSuite {
     array_distinct(transform(
       sequence(lit(1), greatest(length(text) - (k - 1), lit(1))),
       i => text.substr(i, lit(k))))
+
+  /** Reference band table: the column formulation `band_keys` replaced —
+    * one struct of `xxhash64` over `rows` `element_at`s per band, exploded.
+    */
+  private def xxhashBandTable(sigs: DataFrame, rows: Int, bands: Int): DataFrame = {
+    val bandStructs = (0 until bands).map { j =>
+      val slice = (0 until rows).map(r => element_at(col("sig"), j * rows + r + 1))
+      struct(lit(j).as("band"), xxhash64(slice: _*).as("bsig"))
+    }
+    sigs.select(col("doc_id"), explode(array(bandStructs: _*)).as("bs"))
+      .select(col("doc_id"), col("bs.band").as("band"), col("bs.bsig").as("bsig"))
+  }
+
+  /** `body` with whole-stage codegen on and generated projections only, or
+    * with both off (every expression evaluated by `eval`).
+    */
+  private def withCodegen[T](on: Boolean)(body: => T): T = {
+    val keys = Seq("spark.sql.codegen.wholeStage", "spark.sql.codegen.factoryMode")
+    val old = keys.map(k => k -> spark.conf.getOption(k))
+    spark.conf.set(keys(0), on.toString)
+    spark.conf.set(keys(1), if (on) "CODEGEN_ONLY" else "NO_CODEGEN")
+    try body
+    finally old.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
 
   /** Texts covering the window edge cases plus ~200 generated documents
     * mixing 1- to 4-byte UTF-8 characters and repeated words.
@@ -240,5 +269,94 @@ class FunctionsSpec extends AnyFunSuite {
     // the last window is clamped at the end of the string
     assert(shingleBytes(a).last == "defg".getBytes("UTF-8").toSeq :+ 0xE2.toByte)
     assert(shingleBytes(a).size == 4)
+  }
+
+  test("band_keys equals the xxhash64(element_at) band table, interpreted and generated") {
+    import spark.implicits._
+    val rng = new scala.util.Random(29)
+    val edge = Seq(Long.MinValue, Long.MaxValue, 0L, -1L, 42L)
+    val sigs = (0 until 300).map { i =>
+      (i.toLong, Seq.fill(Dedup.NumHashes)(
+        if (i % 10 == 0) edge(rng.nextInt(edge.size)) else rng.nextLong()))
+    } :+ ((300L, Seq.fill(Dedup.NumHashes)(7L)))
+    val df = sigs.toDF("doc_id", "sig")
+    val ref = xxhashBandTable(df, Dedup.BandRows, Dedup.NumBands)
+      .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).sorted.toSeq
+    assert(ref.size == sigs.size * Dedup.NumBands)
+    Seq(true, false).foreach { on =>
+      val got = withCodegen(on) {
+        val t = Dedup.bandTable(df)
+        // the schema the X14 stream's accumulated band state unions with
+        assert(t.schema.map(f => (f.name, f.dataType, f.nullable)) ==
+          Seq(("doc_id", LongType, false), ("band", IntegerType, false),
+            ("bsig", LongType, false)), s"codegen=$on")
+        t.collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).sorted.toSeq
+      }
+      assert(got == ref, s"codegen=$on")
+    }
+    // the kernel called directly, band by band
+    sigs.take(20).foreach { case (id, sig) =>
+      val keys = BandKeysImpl.keys(
+        org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(sig.toArray),
+        Dedup.BandRows, Dedup.NumBands).toLongArray().toSeq
+      assert(keys == ref.filter(_._1 == id).map(_._3), s"direct keys of $id")
+    }
+    // keys of consecutive slices, and a null signature has none
+    val keys = spark.range(1).select(
+        BandKeysFn.bandKeys(sequence(lit(1L), lit(12L)), 6, 2),
+        BandKeysFn.bandKeys(lit(null).cast("array<bigint>"), 6, 2)).head()
+    assert(keys.getSeq[Long](0) == Seq(0L, 6L).map(o =>
+      (1L to 6L).foldLeft(BandKeysImpl.Seed)((h, v) => XXH64.hashLong(v + o, h))))
+    assert(keys.isNullAt(1))
+  }
+
+  test("set_jaccard equals an exact set Jaccard, NaN on two empty sets, null on null") {
+    import spark.implicits._
+    def exact(a: Seq[String], b: Seq[String]): Double = {
+      val inter = (a.toSet & b.toSet).size
+      inter.toDouble / (a.toSet | b.toSet).size
+    }
+    val rng = new scala.util.Random(31)
+    val pool = (0 until 400).map(i => s"w$i") ++
+      Seq("é", "ñandú", "€€", "数据", "🙂🙃", "𝄞x", "", " ", "a", "ab", "abc")
+    def draw(n: Int): Seq[String] = rng.shuffle(pool).take(n)
+    val big = draw(300)
+    val cases: Seq[(Seq[String], Seq[String])] = Seq(
+      (big, big),                                   // identical
+      (big.take(150), big.drop(150)),               // disjoint
+      (Seq("x"), Seq("x")), (Seq("x"), Seq("y")),   // one element
+      (Seq("é€数"), Seq("é€数", "é€")),            // multi-byte
+      (Seq("😀a", "😀b", "中文", "ß"), Seq("ß", "😀b", "x")),
+      (big.take(10), big),                          // different sizes
+      (big, (big.take(200) ++ draw(50)).distinct),
+      (Seq(""), Seq("", "a")),
+      (Seq("only"), Seq.empty[String])) ++
+      (0 until 100).map(_ => (draw(rng.nextInt(60)), draw(1 + rng.nextInt(200))))
+    val df = cases.zipWithIndex.map { case ((a, b), i) => (i, a, b) }.toDF("i", "a", "b")
+    Seq(true, false).foreach { on =>
+      val got = withCodegen(on) {
+        df.select(col("i"), SetJaccardFn.setJaccard(col("a"), col("b")),
+            SetJaccardFn.setJaccard(col("b"), col("a")))
+          .collect().map(r => r.getInt(0) -> ((r.getDouble(1), r.getDouble(2)))).toMap
+      }
+      cases.zipWithIndex.foreach { case ((a, b), i) =>
+        assert(got(i) == ((exact(a, b), exact(a, b))), s"codegen=$on case $i: $a / $b")
+      }
+    }
+    // the same IEEE value as the cast-and-divide it replaced
+    val viaIntersect = df.select(col("i"),
+        (size(array_intersect(col("a"), col("b"))).cast("double") /
+          (size(col("a")) + size(col("b")) -
+            size(array_intersect(col("a"), col("b"))))).as("j"))
+      .collect().map(r => r.getInt(0) -> r.getDouble(1)).toMap
+    cases.indices.foreach(i =>
+      assert(viaIntersect(i) == exact(cases(i)._1, cases(i)._2), s"case $i"))
+    // two empty sets: NaN; a null array: null
+    val empty = array().cast("array<string>")
+    val edge = spark.range(1).select(SetJaccardFn.setJaccard(empty, empty),
+        SetJaccardFn.setJaccard(lit(null).cast("array<string>"), array(lit("a"))))
+      .head()
+    assert(edge.getDouble(0).isNaN)
+    assert(edge.isNullAt(1))
   }
 }

@@ -115,6 +115,33 @@ class OpsSpec extends AnyFunSuite {
     assert(lsh.exceptAll(exact).count() == 0, "LSH produced false pairs past verification")
   }
 
+  test("minhash+LSH verify: broadcast sets and the merge-join fallback agree") {
+    // the same candidates verified with the sets broadcast into both joins
+    // (the strategy at this size) and in a session that disabled
+    // broadcasts, which takes the fallback: broadcast candidates, then a
+    // sort-merge join
+    val docs = graft.core.Tables.documents(spark, sf).select("doc_id", "text")
+    val cands = Dedup.candidatePairs(Dedup.bandTable(Dedup.signatures(docs)))
+    val viaBroadcast = Dedup.verifyCandidates(docs, cands, 0.8)
+    val rows = viaBroadcast.collect().toSeq
+    assert(rows.nonEmpty)
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "-1")
+    val (viaMerge, mergeRows) = try {
+      val df = Dedup.verifyCandidates(docs, cands, 0.8)
+      (df, df.collect().toSeq)
+    } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    assert(mergeRows.sortBy(r => (r.getLong(0), r.getLong(1))) ==
+      rows.sortBy(r => (r.getLong(0), r.getLong(1))))
+    def finalPlan(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.executedPlan.toString.split("== Initial Plan ==")(0)
+    assert(!finalPlan(viaBroadcast).contains("SortMergeJoin") &&
+      !finalPlan(viaBroadcast).contains("Exchange hashpartitioning"),
+      finalPlan(viaBroadcast))
+    assert(finalPlan(viaMerge).contains("SortMergeJoin"), finalPlan(viaMerge))
+  }
+
   test("dedup clusters: transitive closure of pairs, singletons self-map") {
     val out = Dedup.clusters(spark, sf).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -239,6 +266,20 @@ class OpsSpec extends AnyFunSuite {
     val docs = graft.core.Tables.documents(spark, edgeCaseDir)
     val jobs = TestSpark.jobsOf(Dedup.minhashLshDocs(docs, 0.8).collect())
     assert(jobs <= 14, s"minhashLshDocs ran $jobs jobs, budget 14")
+  }
+
+  test("minhash+LSH generates no method over the JIT's huge-method limit") {
+    // a generated method above the limit is never JIT-compiled: the band
+    // table's 21 x 6 xxhash64 expansion was one, and ran interpreted
+    val docs = graft.core.Tables.documents(spark, edgeCaseDir)
+    val stages = TestSpark.codegenMethodSizes(
+      Dedup.minhashLshDocs(docs, 0.8).collect())
+    Seq("minhash_sig", "band_keys", "shingle_set", "set_jaccard").foreach(k =>
+      assert(stages.exists(_._1.contains(k)), s"no codegen stage runs $k"))
+    stages.foreach { case (stage, bytes) =>
+      assert(bytes > 0 && bytes < TestSpark.HugeMethodLimit,
+        s"a method of $bytes bytes in\n$stage")
+    }
   }
 
   test("minhash+LSH survives a dup-heavy corpus without a candidate blowup") {

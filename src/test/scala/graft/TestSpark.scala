@@ -35,4 +35,35 @@ object TestSpark {
     finally sc.removeSparkListener(listener)
     n.get
   }
+
+  /** HotSpot compiles no method of more bytecode than this
+    * (`-XX:HugeMethodLimit`, with `DontCompileHugeMethods` on by default):
+    * a larger generated method runs in the interpreter for good.
+    */
+  val HugeMethodLimit = 8000
+
+  /** Every whole-stage codegen stage of the plans `call` executes
+    * (checkpoints included), compiled with `CodeGenerator.compile` (via
+    * `codegenStringSeq`): its subtree and the bytecode size of its
+    * largest method, -1 where it does not compile.
+    */
+  def codegenMethodSizes(call: => Any): Seq[(String, Int)] = {
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val plans = scala.collection.mutable.ArrayBuffer.empty[SparkPlan]
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.synchronized(plans += qe.executedPlan)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    val sc = spark.sparkContext
+    org.apache.spark.graftspec.Bus.drain(sc)
+    spark.listenerManager.register(listener)
+    try { call; org.apache.spark.graftspec.Bus.drain(sc) }
+    finally spark.listenerManager.unregister(listener)
+    plans.synchronized(plans.toList).flatMap(p =>
+      org.apache.spark.sql.execution.debug.codegenStringSeq(p).map {
+        case (subtree, _, stats) => (subtree, stats.maxMethodCodeSize)
+      })
+  }
 }
