@@ -513,12 +513,10 @@ object ShortestPaths {
           System.err.println(s"[graft] WARN ShortestPaths.csr: frontier " +
             s"still non-empty after $maxIter hops — distances beyond the " +
             "cap missing")
-        // the seed row ships separately: the symmetrized cache lists the
-        // source as a src iff it has an edge, but the join path's seed row
-        // exists even for an edgeless source — emission must match exactly
-        Some(CsrLoop.emit(spark, blocks, r.state.dist, "id", "dist",
-            extra = Seq((source, 0L))) { (_, ds, v) =>
-          if (v != src && ds(v) >= 0) Some(ds(v).toLong) else None
+        // the source has a slot (an edgeless source took the join path
+        // above), so its (source, 0) seed row comes from that slot
+        Some(CsrLoop.emit(spark, blocks, r.state.dist, "id", "dist") {
+          (_, ds, v) => if (ds(v) >= 0) Some(ds(v).toLong) else None
         })
       }
     }
@@ -1104,12 +1102,30 @@ object PageRank {
       if (!r.converged)
         System.err.println(s"[graft] WARN PageRank.csr: Σ|Δx|=" +
           s"${r.state.delta} still above tol=$tol after $maxIter iterations")
-      // same HALF_UP 8 dp rounding as round(x, 8)
       Some(CsrLoop.emit(spark, blocks, r.state.x, "id", "pr") { (_, x, v) =>
-        Some(BigDecimal(x(v))
-          .setScale(8, scala.math.BigDecimal.RoundingMode.HALF_UP).toDouble)
+        Some(round8(x(v)))
       })
     }
+  }
+
+  /** `x` rounded HALF_UP to 8 decimal places, as `round(x, 8)` and
+    * `BigDecimal(x).setScale(8, HALF_UP)` round it (the decimal
+    * expansion `Double.toString` gives). A rank in [0, 1) takes the
+    * arithmetic path unless the fraction of `x·1e8` lies within 1e-6 of
+    * one half: `x·1e8` and that expansion's scaled value differ by under
+    * 2e-8 there, so the direction is the decimal's, and the quotient of
+    * an integer below 2^53 by 1e8 is the correctly rounded double of the
+    * 8 dp decimal, as `toDouble` gives. Every other value, a near-tie
+    * included, takes the `BigDecimal` path.
+    */
+  private[graft] def round8(x: Double): Double = {
+    val y = x * 1e8
+    val k = math.floor(y)
+    val f = y - k
+    if (x >= 0.0 && x < 1.0 && math.abs(f - 0.5) > 1e-6)
+      (k + (if (f > 0.5) 1.0 else 0.0)) / 1e8
+    else BigDecimal(x)
+      .setScale(8, scala.math.BigDecimal.RoundingMode.HALF_UP).toDouble
   }
 
   /** [[convergedCsr]]' state: iterates x (current) and xp (previous),

@@ -20,7 +20,11 @@ import org.apache.spark.storage.StorageLevel
   * one-partition CSR runs a consumer's whole loop inside one Spark task;
   * over several partitions each round is one job that broadcasts only a
   * |V|-slot primitive vector and collects |V|-bounded update chunks, the
-  * same memory class as the accepted bcswap BroadcastExchange.
+  * same memory class as the accepted bcswap BroadcastExchange. A
+  * consumer's result is packed blocks too ([[CsrLoop.emit]]): one
+  * (ids, values) pair of primitive arrays per slot block, co-partitioned
+  * with it, so the result is declared hash-partitioned on `id` as the
+  * edge views are on `src`.
   *
   * Vertex slots: every vertex's slot is its rank in the sorted array of
   * distinct vertex ids ([[Blocks.ids]]), so state vectors are sized by
@@ -223,9 +227,7 @@ object Csr {
   def expand(packed: Packed): RDD[InternalRow] = packed.mapPartitions({ it =>
     it.flatMap { case (vs, offs, nbrs, w) =>
       new Iterator[InternalRow] {
-        private val row = new UnsafeRow(3)
-        private val width = UnsafeRow.calculateBitSetWidthInBytes(3) + 3 * 8
-        row.pointTo(new Array[Byte](width), width)
+        private val row = unsafeRow(3)
         private var k = 0
         private var j = 0
         def hasNext: Boolean = j < nbrs.length
@@ -238,6 +240,14 @@ object Csr {
       }
     }
   }, preservesPartitioning = true)
+
+  /** A reusable row of `fields` non-null fixed-width fields. */
+  private[graph] def unsafeRow(fields: Int): UnsafeRow = {
+    val row = new UnsafeRow(fields)
+    val width = UnsafeRow.calculateBitSetWidthInBytes(fields) + fields * 8
+    row.pointTo(new Array[Byte](width), width)
+    row
+  }
 
   /** The slot CSR of packed blocks in two jobs and no exchange: (1)
     * collect each block's (id, degree) lists, which the driver merges into

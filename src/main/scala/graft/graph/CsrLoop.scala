@@ -1,9 +1,11 @@
 package graft.graph
 
-import scala.reflect.ClassTag
-import scala.reflect.runtime.universe.TypeTag
+import scala.reflect.{ClassTag, classTag}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.graftbridge.FrameBridge
+import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
 
 /** The broadcast-vector fixpoint over [[Csr.Blocks]], written once for
   * the four CSR kernels ([[ConnectedComponents.csrLabels]],
@@ -80,27 +82,56 @@ private[graph] object CsrLoop {
     Result(s, rounds, !k.pending(s))
   }
 
-  /** The loop's output as `(idCol, valueCol)` rows: for every slot, from
-    * the partition holding it as a src, `(ids(slot), v)` for each `v` in
-    * `row(ids, state, slot)`, then `extra`. `state` and the id dictionary
-    * travel as one broadcast; the frame is materialized (one job) before
-    * the broadcast is freed.
+  /** The loop's output as `(idCol, valueCol)` rows, `valueCol` a long or
+    * a double column as `T` is: for every slot, from the block holding it
+    * as a src, `(ids(slot), v)` for the `v` of `row(ids, state, slot)`.
+    * `state` and the id dictionary travel as one broadcast, and one job
+    * packs each block's rows into two primitive arrays (ids and value
+    * bits) and collects them before that broadcast is freed; each packed
+    * block is then broadcast on its own. The frame expands block i's rows
+    * in partition i on read and is declared hash-partitioned on `idCol`
+    * into the blocks' partition count — true, as slot block i holds
+    * exactly the srcs [[Graph]]'s build hashed to partition i — so a
+    * one-block result counts, and any result aggregates on `idCol`, with
+    * no exchange. The packed blocks live as long as the frame (Spark's
+    * ContextCleaner frees their broadcasts); no RDD is persisted.
     */
-  def emit[V, T: TypeTag](spark: SparkSession, blocks: Csr.Blocks, state: V,
-      idCol: String, valueCol: String, extra: Seq[(Long, T)] = Nil)(
+  def emit[V, T: ClassTag](spark: SparkSession, blocks: Csr.Blocks,
+      state: V, idCol: String, valueCol: String)(
       row: (Array[Long], V, Int) => Option[T]): DataFrame = {
-    import spark.implicits._
+    val double = classTag[T] == ClassTag.Double
+    require(double || classTag[T] == ClassTag.Long,
+      s"CsrLoop.emit: a long or double value, not ${classTag[T]}")
     val csr = blocks.rdd
-    val bc = csr.sparkContext.broadcast((blocks.ids, state))
-    try {
-      val rows = csr.mapPartitions { it =>
-        val (ids, s) = bc.value
-        it.flatMap { case (vsA, _, _) =>
-          vsA.iterator.flatMap(v => row(ids, s, v).map(x => (ids(v), x)))
+    val sc = csr.sparkContext
+    val bc = sc.broadcast((blocks.ids, state))
+    val packed = try csr.map { case (vsA, _, _) =>
+      val (ids, s) = bc.value
+      val out = new scala.collection.mutable.ArrayBuilder.ofLong
+      val bits = new scala.collection.mutable.ArrayBuilder.ofLong
+      vsA.foreach(v => row(ids, s, v).foreach { x =>
+        out += ids(v)
+        bits += (if (double)
+          java.lang.Double.doubleToRawLongBits(x.asInstanceOf[Double])
+        else x.asInstanceOf[Long])
+      })
+      (out.result(), bits.result())
+    }.collect() finally bc.destroy()
+    // t handles in t slices: partition i holds block i's broadcast
+    val rows = sc.parallelize(packed.toSeq.map(sc.broadcast(_)), packed.length)
+      .mapPartitions(_.flatMap { b =>
+        val (ids, bits) = b.value
+        val r = Csr.unsafeRow(2)
+        Iterator.tabulate[InternalRow](ids.length) { j =>
+          r.setLong(0, ids(j))
+          if (double) r.setDouble(1, java.lang.Double.longBitsToDouble(bits(j)))
+          else r.setLong(1, bits(j))
+          r
         }
-      }.toDF(idCol, valueCol)
-      (if (extra.isEmpty) rows else rows.union(extra.toDF(idCol, valueCol)))
-        .localCheckpoint(true)
-    } finally bc.destroy()
+      })
+    val schema = StructType(Seq(StructField(idCol, LongType, false),
+      StructField(valueCol, if (double) DoubleType else LongType, false)))
+    FrameBridge.hashPartitioned(spark, schema, rows, idCol,
+      24L * packed.iterator.map(_._1.length.toLong).sum)
   }
 }

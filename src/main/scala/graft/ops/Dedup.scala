@@ -506,9 +506,9 @@ object Dedup {
       .select(col("id_a").as("src"), col("id_b").as("dst"))
     val pairGraph = graft.graph.Graph(pairs)
     val comp0 = graft.graph.ConnectedComponents(pairGraph)
-    // checkpointed CC labels carry no Catalyst stats → size-gate the
-    // broadcast by the row count the graph's build already holds, which
-    // bounds the label count
+    // the join path's checkpointed CC labels carry no Catalyst stats →
+    // size-gate the broadcast by the row count the graph's build already
+    // holds, which bounds the label count
     val comp = if (pairGraph.symmetrizedRows <= BroadcastableCandidates)
       broadcast(comp0) else comp0
     // the ad-hoc pair graph's blocks aren't session-memoized like

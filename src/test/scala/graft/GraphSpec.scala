@@ -242,17 +242,20 @@ class GraphSpec extends AnyFunSuite {
     val g = Graph.fromRawEdges(raw)
     val src = g.cachedUndirected.agg(min(col("src"))).head().getLong(0)
     // the first call: 2 build jobs + 1 loop job + 1 emit job, whatever
-    // the round count; every later call on the instance reuses the build
+    // the round count; every later call on the instance reuses the build,
+    // and its one-block result counts with no exchange: loop, emit and
+    // the caller's count() are 3 jobs
     val first = jobsOf(ConnectedComponents.csrLabels(g).get)
     assert(first <= 4, s"the first csr call ran $first jobs, budget 4")
     assert(csrPartitions(g, raw) == 1)
-    val budget = 2
+    val budget = 3
     val counts = Seq(
-      "cc" -> jobsOf(ConnectedComponents.csrLabels(g).get),
-      "bfs" -> jobsOf(ShortestPaths.csrBfs(g, src, 64).get),
-      "pagerank" -> jobsOf(PageRank.convergedCsr(g).get),
-      "pagerank/3" -> jobsOf(PageRank.convergedCsr(g, maxIter = 3).get),
-      "coreness" -> jobsOf(Coreness.csrCoreness(g, 100).get),
+      "cc" -> jobsOf(ConnectedComponents.csrLabels(g).get.count()),
+      "bfs" -> jobsOf(ShortestPaths.csrBfs(g, src, 64).get.count()),
+      "pagerank" -> jobsOf(PageRank.convergedCsr(g).get.count()),
+      "pagerank/3" ->
+        jobsOf(PageRank.convergedCsr(g, maxIter = 3).get.count()),
+      "coreness" -> jobsOf(Coreness.csrCoreness(g, 100).get._1.count()),
       "coreness/1" -> jobsOf(intercept[IllegalStateException](
         Coreness.csrCoreness(g, 1))))
     counts.foreach { case (call, n) =>
@@ -262,6 +265,91 @@ class GraphSpec extends AnyFunSuite {
     assert(m("pagerank") == m("pagerank/3"),
       s"pagerank's job count depends on its round count: $counts")
     Csr.release(g)
+  }
+
+  /** The four CSR results of `g`, by name, BFS from its least vertex. */
+  def csrResults(g: Graph): Seq[(String, DataFrame)] = {
+    val src = g.cachedUndirected.agg(min(col("src"))).head().getLong(0)
+    Seq("cc" -> ConnectedComponents.csrLabels(g).get,
+      "bfs" -> ShortestPaths.csrBfs(g, src, 64).get,
+      "pagerank" -> PageRank.convergedCsr(g).get,
+      "coreness" -> Coreness.csrCoreness(g, 100).get._1)
+  }
+
+  test("csr results stay readable after their broadcast and blocks are freed") {
+    // each result is materialized before its call frees the broadcast; a
+    // new, differently planned job over it (a join with a vertex frame,
+    // then an aggregate on id) still reads the same rows, also after
+    // Csr.release frees the slot and packed blocks
+    val raw = RMat.graph(spark, RMat.Params(scale = 8)).edges
+      .select("src", "dst")
+    val vertices = raw.select(col("src").as("id"))
+      .union(raw.select(col("dst").as("id"))).distinct()
+    Seq("one block" -> Graph.fromRawEdges(raw),
+      "multi-block" ->
+        Graph.fromRawEdges(raw, rowsPerPartition = raw.count() / 2)
+    ).foreach { case (what, g) =>
+      val results = csrResults(g).map { case (name, df) =>
+        (name, df, df.collect().toSet)
+      }
+      Csr.release(g)
+      results.foreach { case (name, df, rows) =>
+        val value = df.columns(1)
+        val again = df.join(vertices, "id").groupBy("id")
+          .agg(max(col(value)).as(value)).collect().toSet
+        assert(again == rows, s"$what/$name: rows changed after release")
+      }
+    }
+  }
+
+  test("csr results are hash-partitioned on id as they declare") {
+    // block i holds exactly the srcs the build hashed to partition i, so
+    // every row sits in partition pmod(hash(id), t) and an aggregate on
+    // id plans no exchange
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val plans = new AdaptiveSparkPlanHelper {}
+    val raw = RMat.graph(spark, RMat.Params(scale = 8)).edges
+      .select("src", "dst")
+    val g = Graph.fromRawEdges(raw, rowsPerPartition = raw.count() / 2)
+    val t = csrPartitions(g, raw)
+    assert(t >= 3, s"multi-block fixture has $t blocks")
+    csrResults(g).foreach { case (name, df) =>
+      assert(df.rdd.getNumPartitions == t, s"$name: blocks")
+      val misplaced = df.filter(
+        spark_partition_id() =!= pmod(hash(col("id")), lit(t))).count()
+      assert(misplaced == 0, s"$name: $misplaced rows off their partition")
+      val q = df.groupBy("id").count()
+      q.collect()
+      val shuffles = plans.collect(q.queryExecution.executedPlan) {
+        case s: ShuffleExchangeExec => s
+      }
+      assert(shuffles.isEmpty, s"$name: an aggregate on id exchanged:\n" +
+        q.queryExecution.executedPlan)
+    }
+    Csr.release(g)
+  }
+
+  test("pagerank's 8 dp rounding equals BigDecimal HALF_UP bit for bit") {
+    def reference(x: Double): Double = BigDecimal(x)
+      .setScale(8, scala.math.BigDecimal.RoundingMode.HALF_UP).toDouble
+    val rnd = new scala.util.Random(7)
+    // decimal ties at the 9th place, and values a hair either side
+    val ties = Seq.fill(20000) {
+      val t = ("0." + f"${rnd.nextInt(100000000)}%08d" + "5").toDouble
+      Seq(t, math.nextUp(t), math.nextDown(t))
+    }.flatten
+    val boundary = Seq(0.0, -0.0, 1.0, math.nextDown(1.0), 0.999999995,
+      0.99999999, Double.MinPositiveValue, 1e-300, 1e-9, 5e-9, 4.9999999e-9,
+      0.5, 0.125, 1e-8, 1.5, -0.25, 3.000000005)
+    val inputs = Seq.fill(200000)(rnd.nextDouble()) ++
+      Seq.fill(20000)(rnd.nextDouble() * 1e-4) ++ ties ++ boundary
+    inputs.foreach { x =>
+      val (got, want) = (PageRank.round8(x), reference(x))
+      assert(java.lang.Double.doubleToRawLongBits(got) ==
+        java.lang.Double.doubleToRawLongBits(want),
+        s"round8($x) = $got, BigDecimal gives $want")
+    }
   }
 
   test("csr build: a declined build runs its jobs once per graph") {
