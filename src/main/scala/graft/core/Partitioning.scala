@@ -1,6 +1,6 @@
 package graft.core
 
-import org.apache.spark.sql.{DataFrame, Observation}
+import org.apache.spark.sql.{DataFrame, Observation, Row}
 import org.apache.spark.sql.functions.{col, count, lit}
 import org.apache.spark.storage.StorageLevel
 
@@ -74,13 +74,17 @@ object Partitioning {
     // small ones); a second pass now happens only when that layout is
     // BADLY off the size-derived target (too few partitions for the
     // data, or over-partitioned past [[OverPartitionTolerance]]).
+    // The pass is materialized by one job that reads no row of it (the
+    // cache stores a partition whole before handing out its iterator),
+    // and the partition count comes from the planned rows, not from a
+    // deserializing `first.rdd`.
     val obs = Observation()
     val first = df.observe(obs, count(lit(1)).as("n"))
       .repartition(keys.map(col): _*)
       .persist(level)
-    first.count()
+    first.foreachPartition((_: Iterator[Row]) => ())
     val n = Observations.metric(obs, "n").asInstanceOf[Long]
-    val current = first.rdd.getNumPartitions
+    val current = first.queryExecution.toRdd.getNumPartitions
     val target = ((n + rowsPerPartition - 1) / rowsPerPartition)
       .max(1L).min(maxPartitions.toLong).toInt
     if (current.toLong * 4 <= target ||

@@ -242,7 +242,7 @@ object Csr {
   }, preservesPartitioning = true)
 
   /** A reusable row of `fields` non-null fixed-width fields. */
-  private[graph] def unsafeRow(fields: Int): UnsafeRow = {
+  private[graft] def unsafeRow(fields: Int): UnsafeRow = {
     val row = new UnsafeRow(fields)
     val width = UnsafeRow.calculateBitSetWidthInBytes(fields) + fields * 8
     row.pointTo(new Array[Byte](width), width)

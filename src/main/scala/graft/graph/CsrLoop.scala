@@ -131,7 +131,7 @@ private[graph] object CsrLoop {
       })
     val schema = StructType(Seq(StructField(idCol, LongType, false),
       StructField(valueCol, if (double) DoubleType else LongType, false)))
-    FrameBridge.hashPartitioned(spark, schema, rows, idCol,
+    FrameBridge.hashPartitioned(spark, schema, rows, Seq(idCol),
       24L * packed.iterator.map(_._1.length.toLong).sum)
   }
 }

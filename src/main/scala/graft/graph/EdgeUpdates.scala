@@ -1,29 +1,37 @@
 package graft.graph
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
+import scala.collection.mutable.ArrayBuilder
 
-import graft.core.Tables
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.UnsafeRow
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.FrameBridge
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
+
+import graft.core.{Observations, Tables}
 
 /** Batch edge insert/delete — the reference's "update" workload
   * (ref: tests/networkx/test_python.py:139-144: action (i,j) with i>=0
   * inserts, (~i,~j) deletes; tests/bagel/App.scala:261-271: duplicate
   * insert increments weight).
   *
-  * The reference applies actions sequentially; the Spark-first equivalent is
-  * set algebra with per-edge **last-action-wins** semantics, totally ordered
-  * by action id. Final weight of an edge =
+  * The reference applies actions sequentially, each touching only its own
+  * pair (STINGER's in-place apply, tests/bagel/App.scala:261-271); the
+  * Spark-first equivalent keeps per-edge **last-action-wins** semantics,
+  * totally ordered by action id. Final weight of an edge =
   *   (base weight, if the edge was never deleted) + #inserts after the last
   *   delete;  the edge exists iff that weight > 0.
-  * This matches replaying the action log edge-by-edge. Physically: the
-  * action log resolves to one row per touched pair (window + aggregate,
-  * shuffling only action rows); for typical (≤ [[BroadcastableActions]])
-  * logs that delta BROADCASTS and the base table is only scanned — the
-  * STINGER idea expressed relationally, and the shape that survives a
-  * 100 TB base where exchanging the edge set per update batch is the
-  * bottleneck. Compaction-sized logs fall back to the co-shuffled
-  * full-outer merge on (src, dst).
+  * This matches replaying the action log edge-by-edge. Physically
+  * ([[merge]]): the base and the actions are co-partitioned on
+  * (src, dst) — a base already laid out that way is read in place, so
+  * only the actions exchange (as per-pair deltas when the log comes in
+  * one partition) — and each partition resolves its actions in a
+  * primitive hash table and streams its base rows past it, the
+  * GraphX shape of zipping co-partitioned partitions through primitive
+  * indexes instead of running a general join. The SQL oracles below
+  * state the same semantics as window + aggregate + full-outer join.
   */
 object EdgeUpdates {
 
@@ -177,6 +185,12 @@ object EdgeUpdates {
       .filter(col("weight") > 0L)
       .select(col("src"), col("dst"), col("weight"))
 
+  /** Actions a merge task resolves at most, when the log's size is known:
+    * the merge runs in at least |actions| / this many partitions, so one
+    * task's pair table (about 80 bytes an action) stays near 320 MB.
+    */
+  val BroadcastableActions = 4000000L
+
   /** The update merge WITHOUT the survivor filter: every touched-or-present
     * pair with its new `weight` and pre-update `weight_old`. Presence flips
     * (weight_old > 0 ≠ weight > 0) come free from the same single
@@ -193,95 +207,281 @@ object EdgeUpdates {
     * the R-MAT action stream canonicalizes src<=dst at generation. A new
     * edge source must either canonicalize (src<dst) or keep its endpoint
     * domains disjoint before feeding this merge.
-    */
-  /** Action-count ceiling for the broadcast-delta apply: below it the
-    * touched-pair table (≤ one row per action) broadcasts, and the base
-    * edge table is only SCANNED — never exchanged or sorted. Above it
-    * (bulk compaction-sized logs) the co-shuffled full-outer merge is the
-    * right plan. ~16 bytes/pair ⇒ 64 MB at the ceiling.
-    */
-  val BroadcastableActions = 4000000L
-
-  /** @param knownActionCount pass it when the caller already counted the
-    *   (materialized) action log — e.g. the per-batch streaming maintainers
-    *   and RmatTier — so gating the SHJ hint costs nothing. When absent,
-    *   the actions are localCheckpoint'd BEFORE counting: the count gates
-    *   the hint AND the checkpoint feeds the merge, so a non-materialized
-    *   action lineage is never evaluated twice per apply.
+    *
+    * @param knownActionCount pass it when the caller already counted the
+    *   (materialized) action log — e.g. perfbench and RmatTier. When
+    *   absent, the actions are localCheckpoint'd and counted by the same
+    *   job (an observed metric), so a non-materialized action lineage is
+    *   never evaluated twice per apply. The count sizes the merge's
+    *   partitions ([[BroadcastableActions]]).
     */
   def applyAnnotated(base: DataFrame, actions: DataFrame,
-      knownActionCount: Option[Long] = None): DataFrame = {
-    // |touched| ≤ |actions|: the action count gates the hash-join hint (an
-    // SHJ build side must fit per-partition memory; compaction-sized logs
-    // sort-merge instead)
-    val (acts, n) = knownActionCount match {
-      case Some(c) => (actions, c)
+      knownActionCount: Option[Long] = None): DataFrame =
+    knownActionCount match {
+      case Some(_) => merge(base, actions, knownActionCount)
       case None =>
-        val a = actions.localCheckpoint(true)
-        (a, a.count())
+        val obs = Observation()
+        val a = actions.observe(obs, count(lit(1)).as("n"))
+          .localCheckpoint(true)
+        merge(base, a, Some(Observations.metric(obs, "n").asInstanceOf[Long]))
     }
-    applyAnnotatedPath(base, acts, broadcastDelta = false,
-      shjHint = n <= BroadcastableActions)
+
+  /** The merge kernel behind [[applyAnnotated]] and the streaming
+    * maintainers' per-batch merge: `base` (src, dst, weight) and
+    * `actions` (src, dst, is_del, action_id) zipped partition by partition
+    * in n partitions, both laid out as `repartition(n, src, dst)`. A base
+    * already planned that way ([[FrameBridge.hashPartitions]]: a
+    * `cachedSizedBy(…, Seq("src", "dst"))` cache, or a previous merge's
+    * output) is read as it is; any other base exchanges once into as many
+    * partitions as it comes in — a checkpoint keeps the count adaptive
+    * execution coalesced its rows to, a file scan has one per split — as
+    * the size estimates of such plans can be off by orders of magnitude.
+    * `actionCount`, when known, raises n so no task resolves more than
+    * [[BroadcastableActions]] actions.
+    *
+    * The actions are resolved per pair in a primitive open-addressing
+    * table keyed on (src, dst) ([[Touched]]). A log that comes in one
+    * partition (a checkpointed log, a staged micro-batch file) is resolved
+    * by that one task, and only its per-pair deltas exchange; a log in
+    * several partitions exchanges its action rows and each merge task
+    * resolves its own, as last-action-wins needs a pair's actions
+    * together. Each merge task streams its base rows against its table
+    * and then emits the touched pairs no base row matched, all through one
+    * reused `UnsafeRow` — no window, aggregate, sort or join. The output
+    * is declared hash-partitioned on (src, dst) into n partitions, true
+    * by construction, so a merge over a previous merge's output (the
+    * streaming edge state) exchanges only its actions.
+    *
+    * Semantics are per pair, last action wins by `action_id`: a base row
+    * gets `(any delete ? 0 : coalesce(weight, 0)) + #inserts after the last
+    * delete`, duplicate base rows each on their own; a touched pair no base
+    * row has gets the inserts after its last delete. `weight_old` is
+    * `coalesce(weight, 0)` (0 for a new pair). A null endpoint never
+    * matches: such a base row passes through, and such actions resolve to
+    * their own pair (nulls group together), as a full-outer join on
+    * (src, dst) treats them.
+    */
+  private[graft] def merge(base: DataFrame, actions: DataFrame,
+      actionCount: Option[Long]): DataFrame = {
+    val spark = base.sparkSession
+    val keys = Seq("src", "dst")
+    val b = base.select(col("src").cast("long").as("src"),
+      col("dst").cast("long").as("dst"), col("weight").cast("long").as("weight"))
+    val a = actions.select(col("src").cast("long").as("src"),
+      col("dst").cast("long").as("dst"), col("is_del").cast("boolean").as("is_del"),
+      col("action_id").cast("long").as("action_id"))
+    val want = actionCount.fold(1)(c =>
+      ((c + BroadcastableActions - 1) / BroadcastableActions).toInt.max(1))
+    val n = FrameBridge.hashPartitions(b, keys).filter(_ >= want).getOrElse(
+      want.max(b.queryExecution.executedPlan.execute().getNumPartitions))
+    val size = Seq(b, a).map(_.queryExecution.optimizedPlan.stats.sizeInBytes)
+      .sum.min(BigInt(Long.MaxValue)).toLong
+    val log = a.queryExecution.toRdd
+    val resolved = log.getNumPartitions == 1
+    val baseRows = FrameBridge.hashRows(b, keys, n)
+    val actRows = if (!resolved) FrameBridge.hashRows(a, keys, n)
+      else FrameBridge.hashRows(FrameBridge.unpartitioned(spark, DeltaSchema,
+        log.mapPartitions(as => Touched.ofActions(as).deltas), size), keys, n)
+    require(baseRows.getNumPartitions == n && actRows.getNumPartitions == n,
+      s"merge: ${baseRows.getNumPartitions} base and " +
+        s"${actRows.getNumPartitions} action partitions, expected $n")
+    val rows = baseRows.zipPartitions(actRows)((bs, as) =>
+      (if (resolved) Touched.ofDeltas(as) else Touched.ofActions(as)).merged(bs))
+    FrameBridge.hashPartitioned(spark, MergedSchema, rows, keys, size)
   }
 
-  /** [[applyAnnotated]] with the plan choice explicit — tests assert the
-    * broadcast-delta path ≡ the full-outer merge. Measured at SCALE 24
-    * (133M-edge base, 1M actions, local[32], receipts in SURVEY.md §7):
-    * sort-merge 14.3 s, +SHUFFLE_HASH hint 10.4 s, broadcast-delta 37 s
-    * (a local exchange is cheap; the delta's two base scans + two 1M-row
-    * broadcasts are not), and with the base pre-partitioned on (src, dst)
-    * the hash merge drops to 7.5 s / 133 k act/s — only the action delta
-    * moves and nothing is sorted. The broadcast-delta path is the
-    * network-bound-cluster shape where exchanging a 100 TB base at all is
-    * the bottleneck; it stays available and equivalence-tested.
+  private val MergedSchema = StructType(Seq(
+    StructField("src", LongType), StructField("dst", LongType),
+    StructField("weight", LongType, false),
+    StructField("weight_old", LongType, false)))
+
+  /** A resolved pair: (src, dst, delta), delta = #inserts after the last
+    * delete << 1 | any delete.
     */
-  private[graft] def applyAnnotatedPath(base: DataFrame, actions: DataFrame,
-      broadcastDelta: Boolean, shjHint: Boolean = false): DataFrame = {
-    val byEdge = Window.partitionBy(col("src"), col("dst"))
-    // per action row: the last delete's action_id over its edge (null if none)
-    val annotated = actions.withColumn("last_del",
-      max(when(col("is_del"), col("action_id"))).over(byEdge))
-    // one row per touched pair: did any delete hit it, and how many
-    // inserts survive the last delete (count of non-null whens)
-    val perPair = annotated
-      .groupBy(col("src"), col("dst"))
-      .agg(max(col("is_del")).as("any_del"),
-        count(when(!col("is_del") &&
-          (col("last_del").isNull || col("action_id") > col("last_del")),
-          lit(1))).as("n_ins"))
-    val baseCols = base.select(col("src"), col("dst"), col("weight"))
-    if (broadcastDelta) {
-      // STINGER-shaped delta apply: the 100 TB-side base never moves —
-      // survivors come from a broadcast anti join (map-only scan), touched
-      // base weights from a broadcast inner join (same scan shape), and
-      // only the ≤|actions|-row delta is ever exchanged
-      val keys = perPair.select(col("src"), col("dst"))
-      val untouched = baseCols.join(broadcast(keys), Seq("src", "dst"),
-          "left_anti")
-        .select(col("src"), col("dst"), col("weight"),
-          col("weight").as("weight_old"))
-      val baseTouched = baseCols.join(broadcast(keys), Seq("src", "dst"),
-          "left_semi")
-      val resolved = perPair.join(baseTouched, Seq("src", "dst"), "left")
-        .select(col("src"), col("dst"),
-          (when(col("any_del"), lit(0L))
-            .otherwise(coalesce(col("weight"), lit(0L))) +
-            col("n_ins")).as("weight"),
-          coalesce(col("weight"), lit(0L)).as("weight_old"))
-      untouched.union(resolved)
-    } else {
-      // SHUFFLE_HASH on the pair-delta side: full-outer SHJ streams the
-      // base against a per-partition hash of the (small) delta instead of
-      // SORTING the whole base; with a base already partitioned on
-      // (src, dst) the base side doesn't even exchange
-      val pp = if (shjHint) perPair.hint("SHUFFLE_HASH") else perPair
-      baseCols
-        .join(pp, Seq("src", "dst"), "full_outer")
-        .select(col("src"), col("dst"),
-          (when(coalesce(col("any_del"), lit(false)), lit(0L))
-            .otherwise(coalesce(col("weight"), lit(0L))) +
-            coalesce(col("n_ins"), lit(0L))).as("weight"),
-          coalesce(col("weight"), lit(0L)).as("weight_old"))
+  private val DeltaSchema = StructType(Seq(
+    StructField("src", LongType), StructField("dst", LongType),
+    StructField("delta", LongType, false)))
+
+  /** One task's touched pairs: an open-addressing table keyed on
+    * (src, dst) and their null flags, and per pair whether any delete hit
+    * it and how many inserts follow its last delete. Built from action
+    * rows ([[Touched.ofActions]]) or from the deltas of a log one task
+    * resolved ([[Touched.ofDeltas]]).
+    */
+  private final class Touched(capacity: Int) {
+    import Touched._
+    // slot → pair index (-1 empty), power-of-two capacity ≥ 2 · capacity
+    private val mask = Integer.highestOneBit(math.max(capacity, 1) * 2 - 1) * 2 - 1
+    private val slots = Array.fill(mask + 1)(-1)
+    private val pSrc = new Array[Long](capacity)
+    private val pDst = new Array[Long](capacity)
+    private val pNulls = new Array[Byte](capacity)
+    val anyDel = new Array[Boolean](capacity)
+    val nIns = new Array[Long](capacity)
+    private val matched = new Array[Boolean](capacity)
+    private var pairs = 0
+
+    /** The pair of (s, d, nulls), or -1 (`add`: a new pair) if absent. */
+    def pairOf(s: Long, d: Long, nulls: Int, add: Boolean): Int = {
+      var z = s * 0x9E3779B97F4A7C15L + d + nulls
+      z = (z ^ (z >>> 30)) * 0xBF58476D1CE4E5B9L
+      z = (z ^ (z >>> 27)) * 0x94D049BB133111EBL
+      var i = (z ^ (z >>> 31)).toInt & mask
+      while (slots(i) >= 0) {
+        val p = slots(i)
+        if (pSrc(p) == s && pDst(p) == d && pNulls(p) == nulls) return p
+        i = (i + 1) & mask
+      }
+      if (!add) return -1
+      val p = pairs
+      pairs += 1
+      pSrc(p) = s; pDst(p) = d; pNulls(p) = nulls.toByte
+      slots(i) = p
+      p
+    }
+
+    private def setKey(row: UnsafeRow, p: Int): Unit = {
+      if ((pNulls(p) & SrcNull) != 0) row.setNullAt(0) else row.setLong(0, pSrc(p))
+      if ((pNulls(p) & DstNull) != 0) row.setNullAt(1) else row.setLong(1, pDst(p))
+    }
+
+    /** The pairs as [[DeltaSchema]] rows. */
+    def deltas: Iterator[InternalRow] = {
+      val row = Csr.unsafeRow(3)
+      Iterator.tabulate[InternalRow](pairs) { p =>
+        setKey(row, p)
+        row.setLong(2, nIns(p) << 1 | (if (anyDel(p)) 1L else 0L))
+        row
+      }
+    }
+
+    /** `base`'s (src, dst, weight) rows merged, then the touched pairs no
+      * base row matched, as (src, dst, weight, weight_old) rows.
+      */
+    def merged(base: Iterator[InternalRow]): Iterator[InternalRow] =
+      new Iterator[InternalRow] {
+        private val row = Csr.unsafeRow(4)
+        private var k = 0 // the next pair to emit, once the base is done
+        def hasNext: Boolean = base.hasNext || {
+          while (k < pairs && matched(k)) k += 1
+          k < pairs
+        }
+        def next(): InternalRow =
+          if (base.hasNext) {
+            val r = base.next()
+            val w = if (r.isNullAt(2)) 0L else r.getLong(2)
+            val p = if (r.isNullAt(0) || r.isNullAt(1)) -1
+              else pairOf(r.getLong(0), r.getLong(1), 0, add = false)
+            if (r.isNullAt(0)) row.setNullAt(0) else row.setLong(0, r.getLong(0))
+            if (r.isNullAt(1)) row.setNullAt(1) else row.setLong(1, r.getLong(1))
+            if (p < 0) row.setLong(2, w)
+            else {
+              matched(p) = true
+              row.setLong(2, (if (anyDel(p)) 0L else w) + nIns(p))
+            }
+            row.setLong(3, w)
+            row
+          } else {
+            if (!hasNext) throw new NoSuchElementException
+            setKey(row, k)
+            row.setLong(2, nIns(k))
+            row.setLong(3, 0L)
+            k += 1
+            row
+          }
+      }
+  }
+
+  private object Touched {
+    val SrcNull = 1
+    val DstNull = 2
+    val Del = 4
+    val Ins = 8
+    val IdNull = 16
+
+    /** Key columns 0 and 1 of `r` and their null flags, into the builders. */
+    private def readKey(r: InternalRow, src: ArrayBuilder.ofLong,
+        dst: ArrayBuilder.ofLong): Int = {
+      var f = 0
+      if (r.isNullAt(0)) { f |= SrcNull; src += 0L } else src += r.getLong(0)
+      if (r.isNullAt(1)) { f |= DstNull; dst += 0L } else dst += r.getLong(1)
+      f
+    }
+
+    /** The pairs of (src, dst, is_del, action_id) rows. Pass 1 reads them
+      * into primitive arrays, gives each its pair and records per pair
+      * whether any delete hit it and its last delete's `action_id`; pass 2
+      * counts each pair's inserts after that delete. An `is_del` null
+      * neither deletes nor inserts, and a delete without an `action_id`
+      * deletes but sets no last delete — as the SQL formulation reads them.
+      */
+    def ofActions(actions: Iterator[InternalRow]): Touched = {
+      val srcB = new ArrayBuilder.ofLong
+      val dstB = new ArrayBuilder.ofLong
+      val idB = new ArrayBuilder.ofLong
+      val flagB = new ArrayBuilder.ofByte
+      actions.foreach { r =>
+        var f = readKey(r, srcB, dstB)
+        if (!r.isNullAt(2)) f |= (if (r.getBoolean(2)) Del else Ins)
+        if (r.isNullAt(3)) { f |= IdNull; idB += 0L } else idB += r.getLong(3)
+        flagB += f.toByte
+      }
+      val (aSrc, aDst, aId, aFlag) =
+        (srcB.result(), dstB.result(), idB.result(), flagB.result())
+      val m = aSrc.length
+      val t = new Touched(m)
+      val hasLastDel = new Array[Boolean](m)
+      val lastDel = new Array[Long](m)
+      // pass 1: each action's pair, any delete and the last delete
+      val pairOfAction = new Array[Int](m)
+      var i = 0
+      while (i < m) {
+        val f = aFlag(i)
+        val p = t.pairOf(aSrc(i), aDst(i), f & (SrcNull | DstNull), add = true)
+        pairOfAction(i) = p
+        if ((f & Del) != 0) {
+          t.anyDel(p) = true
+          if ((f & IdNull) == 0 && (!hasLastDel(p) || aId(i) > lastDel(p))) {
+            hasLastDel(p) = true
+            lastDel(p) = aId(i)
+          }
+        }
+        i += 1
+      }
+      // pass 2: the inserts after each pair's last delete
+      i = 0
+      while (i < m) {
+        val f = aFlag(i)
+        val p = pairOfAction(i)
+        if ((f & Ins) != 0 && (!hasLastDel(p) ||
+            ((f & IdNull) == 0 && aId(i) > lastDel(p))))
+          t.nIns(p) += 1
+        i += 1
+      }
+      t
+    }
+
+    /** The pairs of [[DeltaSchema]] rows, each pair in one row. */
+    def ofDeltas(deltas: Iterator[InternalRow]): Touched = {
+      val srcB = new ArrayBuilder.ofLong
+      val dstB = new ArrayBuilder.ofLong
+      val deltaB = new ArrayBuilder.ofLong
+      val flagB = new ArrayBuilder.ofByte
+      deltas.foreach { r =>
+        flagB += readKey(r, srcB, dstB).toByte
+        deltaB += r.getLong(2)
+      }
+      val (dSrc, dDst, dDelta, dFlag) =
+        (srcB.result(), dstB.result(), deltaB.result(), flagB.result())
+      val t = new Touched(dSrc.length)
+      var i = 0
+      while (i < dSrc.length) {
+        val p = t.pairOf(dSrc(i), dDst(i), dFlag(i), add = true)
+        t.anyDel(p) = (dDelta(i) & 1L) != 0
+        t.nIns(p) = dDelta(i) >>> 1
+        i += 1
+      }
+      t
     }
   }
 

@@ -167,7 +167,7 @@ object Graph {
       val view = org.apache.spark.sql.graftbridge.FrameBridge.hashPartitioned(
         spark,
         StructType(Seq("src", "dst", "weight").map(StructField(_, LongType))),
-        Csr.expand(packed), "src", bytes)
+        Csr.expand(packed), Seq("src"), bytes)
       Layout(packed, view, rows)
     }
   }

@@ -89,8 +89,12 @@ object Dedup {
     cands
       .join(sets.select(col("doc_id").as("id_a"), col("s").as("sa")), "id_a")
       .join(sets.select(col("doc_id").as("id_b"), col("s").as("sb")), "id_b")
-      .withColumn("jaccard",
-        graft.functions.SetJaccardFn.setJaccard(col("sa"), col("sb")))
+      // a generator evaluates the Jaccard once per pair: a filter on a
+      // projected column would be pushed into the join condition and the
+      // projection would evaluate it a second time
+      .select(col("id_a"), col("id_b"), explode(array(
+        graft.functions.SetJaccardFn.setJaccard(col("sa"), col("sb"))))
+        .as("jaccard"))
       .filter(col("jaccard") >= threshold)
       .select(col("id_a"), col("id_b"), round(col("jaccard"), 6).as("jaccard"))
 

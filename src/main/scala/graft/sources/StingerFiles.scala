@@ -7,9 +7,12 @@ import scala.jdk.CollectionConverters._
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.FrameBridge
+import org.apache.spark.sql.types.{BooleanType, LongType, StructField, StructType}
 
-import graft.graph.Graph
+import graft.graph.{Csr, Graph}
 
 /** Reader/writer for the reference's binary graph and action-stream files
   * (ref: rmatter/src/rmatter.c:321-326 graph = u64 endian_check 0x1234ABCD,
@@ -88,82 +91,100 @@ object StingerFiles {
     }
   }
 
-  /** Distributed CSR read → edge DataFrame (src, dst, weight). */
+  /** First vertex (or action) of slice `i` of `total` split into `p`:
+    * the ranges `spark.range(0, total, 1, p)` gives its partitions.
+    */
+  private def sliceStart(total: Long, p: Int, i: Int): Long =
+    (BigInt(i) * total / p).toLong
+
+  /** Distributed CSR read → edge DataFrame (src, dst, weight). Task i
+    * reads vertex slice i of `p` and emits its edges through one reused
+    * unsafe row.
+    */
   def readGraph(spark: SparkSession, path: String,
       partitions: Int = 0): Graph = {
     val entries = confEntries(spark)
-    val (nv, _, flip) = header(rebuild(entries), path)
+    val (nv, ne, flip) = header(rebuild(entries), path)
     val p = if (partitions > 0) partitions
       else math.max(1, math.min(spark.sparkContext.defaultParallelism,
         (nv / 65536L + 1L).toInt))
-    import spark.implicits._
-    val edges = spark.range(0L, nv, 1L, p).as[Long].mapPartitions { it =>
-      val vs = it.toArray
-      if (vs.isEmpty) Iterator.empty
+    val rows = spark.sparkContext.parallelize(0 until p, p).flatMap { i =>
+      val v0 = sliceStart(nv, p, i)
+      val v1 = sliceStart(nv, p, i + 1)
+      if (v0 == v1) Iterator.empty
       else {
         val conf = rebuild(entries)
-        val v0 = vs.head
-        val v1 = vs.last + 1 // spark.range partitions are contiguous
         val headerBytes = HeaderWords * 8L
         // off[v0..v1] — v1-v0+1 words
         val off = readLongsAt(conf, path, headerBytes + 8L * v0,
           v1 - v0 + 1, flip)
-        val (e0, e1) = (off.head, off.last)
+        val e0 = off.head
         val indPos = headerBytes + 8L * (nv + 1)
-        // re-read ne from the header inside the task to locate wgt[]
-        val ne = readLongsAt(conf, path, 16L, 1, flip)(0)
         val wgtPos = indPos + 8L * ne
-        val ind = readLongsAt(conf, path, indPos + 8L * e0, e1 - e0, flip)
-        val wgt = readLongsAt(conf, path, wgtPos + 8L * e0, e1 - e0, flip)
-        vs.iterator.flatMap { v =>
-          val i = (v - v0).toInt
-          (off(i) until off(i + 1)).iterator.map { k =>
-            (v, ind((k - e0).toInt), wgt((k - e0).toInt))
+        val ind = readLongsAt(conf, path, indPos + 8L * e0, off.last - e0, flip)
+        val wgt = readLongsAt(conf, path, wgtPos + 8L * e0, off.last - e0, flip)
+        new Iterator[InternalRow] {
+          private val row = Csr.unsafeRow(3)
+          private var k = 0 // the slice's vertex of edge j
+          private var j = 0
+          def hasNext: Boolean = j < ind.length
+          def next(): InternalRow = {
+            while (off(k + 1) - e0 <= j) k += 1
+            row.setLong(0, v0 + k); row.setLong(1, ind(j)); row.setLong(2, wgt(j))
+            j += 1
+            row
           }
         }
       }
-    }.toDF("src", "dst", "weight")
-    Graph(edges)
+    }
+    Graph(FrameBridge.unpartitioned(spark,
+      StructType(Seq("src", "dst", "weight").map(StructField(_, LongType, false))),
+      rows, 32L * ne))
   }
 
   /** Distributed actions read → (action_id, src, dst, is_del), decoded to
     * non-negative vertex ids with the reference's ~x delete convention.
+    * Task i reads action slice i of `p` and emits it through one reused
+    * unsafe row.
     */
   def readActions(spark: SparkSession, path: String,
       partitions: Int = 0): DataFrame = {
     val entries = confEntries(spark)
-    val na = {
+    val (na, flip) = {
       val h = readLongsAt(rebuild(entries), path, 0L, 2, flip = false)
-      if (h(0) == EndianCheck) h(1)
+      if (h(0) == EndianCheck) (h(1), false)
       else {
         val f = readLongsAt(rebuild(entries), path, 0L, 2, flip = true)
         require(f(0) == EndianCheck, s"bad magic in $path")
-        f(1)
+        (f(1), true)
       }
-    }
-    val flip = {
-      val h = readLongsAt(rebuild(entries), path, 0L, 1, flip = false)
-      h(0) != EndianCheck
     }
     val p = if (partitions > 0) partitions
       else math.max(1, math.min(spark.sparkContext.defaultParallelism,
         (na / 1000000L + 1L).toInt))
-    import spark.implicits._
-    spark.range(0L, na, 1L, p).as[Long].mapPartitions { it =>
-      val ids = it.toArray
-      if (ids.isEmpty) Iterator.empty
+    val rows = spark.sparkContext.parallelize(0 until p, p).flatMap { i =>
+      val a0 = sliceStart(na, p, i)
+      val a1 = sliceStart(na, p, i + 1)
+      if (a0 == a1) Iterator.empty
       else {
-        val conf = rebuild(entries)
-        val a0 = ids.head
-        val words = readLongsAt(conf, path, 16L + 16L * a0,
-          2L * ids.length, flip)
-        ids.iterator.zipWithIndex.map { case (id, x) =>
+        val words = readLongsAt(rebuild(entries), path, 16L + 16L * a0,
+          2L * (a1 - a0), flip)
+        val row = Csr.unsafeRow(4)
+        Iterator.tabulate[InternalRow]((a1 - a0).toInt) { x =>
           val i = words(2 * x); val j = words(2 * x + 1)
           val del = i < 0
-          (id, if (del) ~i else i, if (del) ~j else j, del)
+          row.setLong(0, a0 + x)
+          row.setLong(1, if (del) ~i else i)
+          row.setLong(2, if (del) ~j else j)
+          row.setBoolean(3, del)
+          row
         }
       }
-    }.toDF("action_id", "src", "dst", "is_del")
+    }
+    FrameBridge.unpartitioned(spark, StructType(Seq(
+      StructField("action_id", LongType, false),
+      StructField("src", LongType, false), StructField("dst", LongType, false),
+      StructField("is_del", BooleanType, false))), rows, 40L * na)
   }
 
   /** Distributed CSR write (r11 judge item: the previous implementation

@@ -64,7 +64,9 @@ object EventStream extends Serializable {
     * fixture graphs build privately, as before.
     */
   private final class MaintainedBase(base: Graph) {
-    lazy val edges: DataFrame = base.edges.localCheckpoint(true)
+    // laid out for the first batch's merge when the base already is
+    lazy val edges: DataFrame = org.apache.spark.sql.graftbridge.FrameBridge
+      .localCheckpoint(base.edges, Seq("src", "dst"))
     // the materialized src-partitioned cache IS the pair view — no copy
     lazy val und: DataFrame = base.cachedUndirected
     lazy val deg: DataFrame = und.groupBy(col("src").as("id"))
@@ -119,34 +121,28 @@ object EventStream extends Serializable {
 
   /** Largest staged-chunk row count per staging dir, read from the staged
     * parquet FOOTERS at staging time (local metadata, zero Spark jobs) —
-    * the SHJ-hint gate for [[mergeIngestBatch]]. A missing entry (ad-hoc
-    * feed not staged by [[stageByChunks]]) conservatively reads as
-    * unbounded, so the hint is only ever asserted for chunks measured
-    * small enough. Keyed by (session, path) and swept with the session
-    * ([[graft.core.SessionCaches.sweep]] contract) so long-lived JVMs
-    * cycling sessions don't accumulate entries, and a path re-staged
-    * under a NEW session can never read the old session's bound.
+    * the action count that sizes [[mergeIngestBatch]]'s partitions. A
+    * missing entry (ad-hoc feed not staged by [[stageByChunks]]) leaves
+    * the merge at its state's partitions. Keyed by (session, path) and
+    * swept with the session ([[graft.core.SessionCaches.sweep]] contract)
+    * so long-lived JVMs cycling sessions don't accumulate entries, and a
+    * path re-staged under a NEW session can never read the old session's
+    * bound.
     */
   private val chunkRowBound = scala.collection.concurrent.TrieMap[
     (org.apache.spark.sql.SparkSession, String), Long]()
 
-  /** One micro-batch of actions merged into the edge state. The SHJ-hint
-    * gate needs no count job — the staged chunk's row count was read from
-    * its parquet footers at staging time ([[chunkRowBound]]), so the gate
-    * enforces the same [[EdgeUpdates.BroadcastableActions]] bound as
-    * [[EdgeUpdates.applyAnnotated]] without paying its per-batch
-    * checkpoint+count. Chunks above the bound (e.g. tier-scale logs driven
-    * through a 2-batch stage) fall through unhinted and let AQE/SMJ decide.
-    * The un-checkpointed batch re-scan behind the merge's window+aggregate
-    * is one staged parquet file.
+  /** One micro-batch of actions merged into the edge state
+    * ([[EdgeUpdates.merge]]). The merge needs no count job — the staged
+    * chunk's row count was read from its parquet footers at staging time
+    * ([[chunkRowBound]]) — and the state, a previous merge's checkpointed
+    * output, is already laid out as the merge lays it out, so only the
+    * batch's actions exchange.
     */
   private def mergeIngestBatch(state: DataFrame, batch: DataFrame,
       staging: String): DataFrame =
-    EdgeUpdates.applyAnnotatedPath(state, batch,
-      broadcastDelta = false,
-      shjHint = chunkRowBound.getOrElse(
-        (state.sparkSession, staging), Long.MaxValue) <=
-        EdgeUpdates.BroadcastableActions)
+    EdgeUpdates.merge(state, batch,
+      chunkRowBound.get((state.sparkSession, staging)))
 
   /** One micro-batch merged into the edge state. `merged` carries every
     * touched-or-present pair's new `weight` and pre-batch `weight_old`
@@ -350,7 +346,7 @@ object EventStream extends Serializable {
             dst.toFile.deleteOnExit()
             pin(dst, i)
             // footer row count: local metadata read, zero Spark jobs —
-            // feeds the SHJ-hint gate (chunkRowBound) for mergeIngestBatch
+            // sizes mergeIngestBatch's partitions (chunkRowBound)
             val rdr = org.apache.parquet.hadoop.ParquetFileReader.open(
               org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
                 new org.apache.hadoop.fs.Path(dst.toUri), hconf))
@@ -2757,7 +2753,7 @@ object EventStream extends Serializable {
     * feed — X22's fixed-k membership generalized to per-vertex core
     * NUMBERS (the r9 judge's named stretch), the streaming twin of G13b.
     *
-    * Per batch only the SHJ-gated edge merge + one insert-count scalar
+    * Per batch only the edge merge + one insert-count scalar
     * run. The ONE drain repair warm-starts the G13b h-operator iteration
     * from the provable upper bound
     *   est0(v) = least(deg_new(v), core_base(v) + B)

@@ -903,26 +903,175 @@ class GraphSpec extends AnyFunSuite {
     assert(out == Map((1L, 2L) -> 6L, (5L, 6L) -> 1L, (7L, 8L) -> 1L))
   }
 
-  test("broadcast-delta update apply equals the full-outer fallback") {
-    // same merge through both physical plans — the fixture above plus the
-    // real TPC-H action log, annotated columns included (weight_old drives
-    // the streaming maintainers' presence flips)
-    val fixtureBase = Seq((1L, 2L, 5L), (3L, 4L, 1L), (5L, 6L, 2L))
-      .toDF("src", "dst", "weight")
-    val fixtureActs = Seq((7L, 8L, false, 1L), (3L, 4L, true, 2L),
-      (5L, 6L, true, 3L), (5L, 6L, false, 4L), (1L, 2L, false, 5L))
-      .toDF("src", "dst", "is_del", "action_id")
-    val g = Graph.fromTpch(spark, TestSpark.sfTiny)
-    val acts = EdgeUpdates.actionsFromEvents(spark, TestSpark.sfTiny)
-    Seq((fixtureBase, fixtureActs), (g.edges, acts)).foreach {
-      case (base, actions) =>
-        val a = EdgeUpdates.applyAnnotatedPath(base, actions,
-          broadcastDelta = true)
-        val b = EdgeUpdates.applyAnnotatedPath(base, actions,
-          broadcastDelta = false)
-        assert(a.exceptAll(b).count() == 0 && b.exceptAll(a).count() == 0,
-          "broadcast-delta apply disagrees with full-outer merge")
+  type BaseRow = (Option[Long], Option[Long], Option[Long])
+  type ActionRow = (Option[Long], Option[Long], Boolean, Long)
+  type MergedRow = (Option[Long], Option[Long], Long, Long)
+
+  /** The update log replayed on the driver: every base row, and every
+    * touched pair no base row has (from weight 0), runs its pair's actions
+    * in action_id order — a delete zeroes the weight, an insert adds one.
+    * A null endpoint matches nothing: such a base row runs no action, and
+    * such actions run on their own pair.
+    */
+  def replayMerge(base: Seq[BaseRow], actions: Seq[ActionRow]): Seq[MergedRow] = {
+    val byPair = actions.groupBy(a => (a._1, a._2))
+      .map { case (k, as) => k -> as.sortBy(_._4) }
+    def replay(w: Long, as: Seq[ActionRow]): Long =
+      as.foldLeft(w)((x, a) => if (a._3) 0L else x + 1L)
+    val keyed: Set[(Option[Long], Option[Long])] =
+      base.collect { case (s @ Some(_), d @ Some(_), _) => (s, d) }.toSet
+    base.map { case (s, d, w) =>
+      val as = if (keyed((s, d))) byPair.getOrElse((s, d), Nil) else Nil
+      (s, d, replay(w.getOrElse(0L), as), w.getOrElse(0L))
+    } ++ byPair.collect { case (k, as) if !keyed(k) => (k._1, k._2, replay(0L, as), 0L) }
+  }
+
+  /** Named merge fixtures, then randomized ones over a small key space
+    * (collisions, duplicate base rows, null endpoints and weights,
+    * action ids out of row order).
+    */
+  def mergeFixtures: Seq[(String, Seq[BaseRow], Seq[ActionRow])] = {
+    def b(s: Long, d: Long, w: Long): BaseRow = (Some(s), Some(d), Some(w))
+    def ins(s: Long, d: Long, id: Long): ActionRow = (Some(s), Some(d), false, id)
+    def del(s: Long, d: Long, id: Long): ActionRow = (Some(s), Some(d), true, id)
+    val named = Seq(
+      ("delete-then-insert", Seq(b(1, 2, 5), b(3, 4, 2)),
+        Seq(del(1, 2, 1), ins(1, 2, 2), ins(3, 4, 4), del(3, 4, 3))),
+      ("insert-then-delete", Seq(b(1, 2, 5)),
+        Seq(del(1, 2, 2), ins(1, 2, 1), ins(5, 6, 3), del(5, 6, 4))),
+      ("duplicate inserts", Seq(b(1, 2, 5)),
+        Seq(ins(1, 2, 1), ins(1, 2, 2), ins(3, 4, 3), ins(3, 4, 4))),
+      ("deletes of absent pairs", Seq(b(1, 2, 5)),
+        Seq(del(7, 8, 1), del(7, 8, 2), del(2, 1, 3))),
+      ("empty log", Seq(b(1, 2, 5), b(3, 4, 1)), Nil),
+      ("empty base", Nil, Seq(ins(1, 2, 1), del(1, 2, 2), ins(3, 4, 3))),
+      ("null endpoints",
+        Seq((None, Some(2L), Some(5L)), (Some(1L), None, Some(1L)),
+          (Some(1L), Some(2L), None), (None, None, Some(4L))),
+        Seq((None, Some(2L), false, 1L), (None, Some(2L), false, 2L),
+          (Some(1L), None, true, 3L), (Some(1L), Some(2L), false, 4L),
+          (None, None, false, 5L))),
+      ("duplicate base rows", Seq(b(1, 2, 5), b(1, 2, 3), (Some(3L), Some(4L), None)),
+        Seq(ins(1, 2, 1), ins(3, 4, 2), del(1, 2, 0))))
+    val rnd = new scala.util.Random(15)
+    def key(nulls: Double): Option[Long] =
+      if (rnd.nextDouble() < nulls) None else Some(rnd.nextInt(5).toLong)
+    val random = (1 to 8).map { i =>
+      val base = Seq.fill(rnd.nextInt(25))((key(0.05), key(0.05),
+        if (rnd.nextDouble() < 0.1) None else Some(rnd.nextInt(9).toLong)))
+      val ids = rnd.shuffle((1 to rnd.nextInt(60)).toList)
+      (s"random $i", base,
+        ids.map(id => (key(0.03), key(0.03), rnd.nextDouble() < 0.4, id.toLong)))
     }
+    named ++ random
+  }
+
+  test("edge updates: the merge kernel equals a driver replay of the log") {
+    // three base layouts: laid out as the merge lays it out (read in
+    // place), unpartitioned, and hash-partitioned on (src, dst) at another
+    // n (read in place at that n); the log in several partitions (each
+    // merge task resolves its own actions) and in one (one task resolves
+    // it and ships per-pair deltas); the count is taken and given in turn
+    val layouts: Seq[(String, DataFrame => DataFrame)] = Seq(
+      ("hash-partitioned on (src, dst)", _.repartition(4, col("src"), col("dst"))),
+      ("unpartitioned", _.repartition(3)),
+      ("hash-partitioned at n = 7", _.repartition(7, col("src"), col("dst"))))
+    val logs: Seq[(String, DataFrame => DataFrame)] = Seq(
+      ("a log in 3 partitions", _.repartition(3)),
+      ("a one-partition log", _.coalesce(1)))
+    def opt(r: org.apache.spark.sql.Row, i: Int): Option[Long] =
+      if (r.isNullAt(i)) None else Some(r.getLong(i))
+    mergeFixtures.zipWithIndex.foreach { case ((name, base, actions), f) =>
+      val want = replayMerge(base, actions).sorted
+      for (((layout, lay), l) <- layouts.zipWithIndex; (log, split) <- logs) {
+        val b = lay(base.toDF("src", "dst", "weight"))
+        val acts = split(actions.toDF("src", "dst", "is_del", "action_id"))
+        val known = if ((f + l) % 2 == 0) None else Some(actions.size.toLong)
+        val got = EdgeUpdates.applyAnnotated(b, acts, known).collect()
+          .map(r => (opt(r, 0), opt(r, 1), r.getLong(2), r.getLong(3))).toSeq
+        assert(got.sorted == want, s"$name, $layout base, $log")
+        val survivors = EdgeUpdates(b, acts, known).collect()
+          .map(r => (opt(r, 0), opt(r, 1), r.getLong(2))).toSeq
+        assert(survivors.sorted == want.filter(_._3 > 0).map(w => (w._1, w._2, w._3)),
+          s"$name, $layout base, $log: survivors")
+      }
+    }
+  }
+
+  test("edge updates: the merge output is hash-partitioned on (src, dst) as it declares") {
+    // every row sits in partition pmod(hash(src, dst), n) — for a base
+    // merged in place and for one the merge exchanged — and an aggregate
+    // on (src, dst) plans no exchange
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val plans = new AdaptiveSparkPlanHelper {}
+    val edges = Graph.fromTpch(spark, TestSpark.sfTiny).edges
+      .select(col("src").cast("long").as("src"),
+        col("dst").cast("long").as("dst"), col("weight"))
+    val acts = EdgeUpdates.actionsFromEvents(spark, TestSpark.sfTiny)
+    // exchanged into the base's 3 partitions; read in place at 5
+    Seq((edges.repartition(3), 3),
+        (edges.repartition(5, col("src"), col("dst")), 5)).foreach {
+      case (base, want) =>
+        val out = EdgeUpdates.applyAnnotated(base, acts)
+        val n = out.rdd.getNumPartitions
+        assert(n == want, s"merged into $n partitions, expected $want")
+        val misplaced = out.filter(spark_partition_id() =!=
+          pmod(hash(col("src"), col("dst")), lit(n))).count()
+        assert(misplaced == 0, s"$misplaced rows off their partition (n = $n)")
+        val q = out.groupBy("src", "dst").count()
+        q.collect()
+        val shuffles = plans.collect(q.queryExecution.executedPlan) {
+          case s: ShuffleExchangeExec => s
+        }
+        assert(shuffles.isEmpty, "an aggregate on (src, dst) exchanged:\n" +
+          q.queryExecution.executedPlan)
+    }
+  }
+
+  test("edge updates: a merge over a checkpointed merge exchanges only its actions") {
+    // the streaming maintainers' shape: the edge state is the previous
+    // merge's checkpointed survivors, so the next merge reads it in place
+    // and only the batch's actions exchange
+    import org.apache.spark.rdd.RDD
+    def shuffles(rdd: RDD[_]): Boolean = rdd.dependencies.exists {
+      case _: org.apache.spark.ShuffleDependency[_, _, _] => true
+      case d => shuffles(d.rdd)
+    }
+    // (base side, action side) of the merge that produced `df`
+    def sides(df: DataFrame): (RDD[_], RDD[_]) = {
+      var r: RDD[_] = df.queryExecution.toRdd
+      while (r.dependencies.size == 1) r = r.dependencies.head.rdd
+      assert(r.dependencies.size == 2, s"no zip in\n${r.toDebugString}")
+      (r.dependencies(0).rdd, r.dependencies(1).rdd)
+    }
+    val base = Seq((1L, 2L, 5L), (3L, 4L, 1L), (5L, 6L, 2L))
+      .toDF("src", "dst", "weight").repartition(3)
+    val batch1 = Seq((7L, 8L, false, 1L), (3L, 4L, true, 2L))
+      .toDF("src", "dst", "is_del", "action_id")
+    val batch2 = Seq((7L, 8L, true, 3L), (5L, 6L, false, 4L))
+      .toDF("src", "dst", "is_del", "action_id")
+    val first = EdgeUpdates.merge(base, batch1, None)
+    assert(shuffles(sides(first)._1), "an unpartitioned base must exchange")
+    val state = first.localCheckpoint(true).filter(col("weight") > 0L)
+      .select(col("src"), col("dst"), col("weight"))
+    val second = EdgeUpdates.merge(state, batch2, None)
+    val (stateSide, actionSide) = sides(second)
+    assert(!shuffles(stateSide), "the checkpointed state exchanged again:\n" +
+      stateSide.toDebugString)
+    assert(shuffles(actionSide), "the actions must exchange")
+    assert(second.filter(col("weight") > 0L).collect()
+      .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap ==
+      Map((1L, 2L) -> 5L, (5L, 6L) -> 3L))
+    // a stream's snapshot of a base cached on (src, dst) keeps that
+    // layout, so the first batch's merge reads it in place too
+    val keyed = graft.core.Partitioning.cachedSizedBy(base, Seq("src", "dst"))
+    val snapshot = org.apache.spark.sql.graftbridge.FrameBridge
+      .localCheckpoint(keyed, Seq("src", "dst"))
+    keyed.unpersist(blocking = true)
+    assert(!shuffles(sides(EdgeUpdates.merge(snapshot, batch1, None))._1),
+      "the snapshot of a keyed cache exchanged")
+    assert(snapshot.collect().toSet == base.collect().toSet)
   }
 
   test("triangles: five 5-cliques have 50 triangles") {

@@ -268,6 +268,15 @@ class OpsSpec extends AnyFunSuite {
     assert(jobs <= 14, s"minhashLshDocs ran $jobs jobs, budget 14")
   }
 
+  test("minhash+LSH evaluates set_jaccard once per candidate pair") {
+    // a filter on the projected Jaccard was pushed into the verify join's
+    // condition, and the projection evaluated set_jaccard a second time
+    val docs = graft.core.Tables.documents(spark, edgeCaseDir)
+    val plan = Dedup.minhashLshDocs(docs, 0.8).queryExecution.executedPlan
+      .toString.split("== Initial Plan ==")(0)
+    assert("set_jaccard\\(".r.findAllMatchIn(plan).length == 1, plan)
+  }
+
   test("minhash+LSH generates no method over the JIT's huge-method limit") {
     // a generated method above the limit is never JIT-compiled: the band
     // table's 21 x 6 xxhash64 expansion was one, and ran interpreted
