@@ -30,12 +30,6 @@ import graft.graph.{ConnectedComponents, EdgeUpdates, Graph, PageRank, RMat, Sho
   */
 object RmatTier {
 
-  /** Vertex-count ceiling for broadcasting iteration state into the
-    * per-round edges join (~100 MB of state; above it the algorithms use
-    * their equivalence-tested shuffle-join fallback).
-    */
-  val BroadcastableVertices = 4000000L
-
   /** tier → (SCALE, action count), ref README.md:72-80. Edge factor 8. */
   val tiers: Map[String, (Int, Long)] = Map(
     "tiny" -> (10, 100000L),
@@ -160,19 +154,9 @@ object RmatTier {
       graph.cachedUndirected.count()
       graph
     }
-    // broadcast the |V|-row iteration state only while it genuinely fits:
-    // at SCALE 24 (16.8M vertices) the per-round broadcast hash relation is
-    // gigabytes and OOMs a bounded-heap driver — that tier exercises the
-    // equivalence-tested shuffle-join fallback, the same switch a
-    // billion-vertex cluster run would flip
     val nv = g.vertices.count()
-    val bc = nv <= BroadcastableVertices
-    if (!bc) System.err.println(
-      s"[bench] nv=$nv > $BroadcastableVertices: shuffle-join state path")
-    val (_, svSec) = timed("sv")(
-      ConnectedComponents(g, broadcastVertices = bc).count())
-    val (_, ssspSec) = timed("sssp")(
-      ShortestPaths.fromMinVertex(g, broadcastState = bc).count())
+    val (_, svSec) = timed("sv")(ConnectedComponents(g).count())
+    val (_, ssspSec) = timed("sssp")(ShortestPaths.fromMinVertex(g).count())
     // update: inputs pre-materialized, the timed step is the action-log
     // application alone (ref: tests/bagel/App.scala:195-203 reads the
     // action file untimed, then times the apply). The base is laid out
@@ -193,20 +177,12 @@ object RmatTier {
     val rate = naActual / updSec
     base.unpersist()
     System.err.println(f"[bench] rmat_update rate: $naActual actions / $updSec%.2f s = $rate%.0f act/s")
-    // pr: PageRank.converged prefers the CSR + broadcast-vector state
-    // path below Csr.MaxVertices vertices (r11 — SURVEY.md §6 at SCALE
-    // 24, same session: conv-csr 159.2 s / ZERO shuffle bytes vs
-    // conv-cheby 640.3 s / 12.3 GB; the per-iteration cost was the
-    // 530M-row probe+agg, not shuffle). Its |V|-double broadcast is the
-    // same memory class as the old bcswap BroadcastExchange; above the
-    // gate converged falls back to the join formulation, where bcPr
-    // picks the state side exactly as before — the same switch a
-    // billion-vertex cluster run flips.
-    val bcPr = bc || (maxHeapGb >= 48 && nv <= 32000000L)
-    if (bcPr && !bc) System.err.println(
-      s"[bench] pr: broadcast swap-role state path (nv=$nv, heap=${maxHeapGb}g)")
-    val (_, prSec) = timed("pr")(
-      PageRank.converged(g, broadcastVertices = bcPr).count())
+    // sv, sssp and pr all take the CSR + broadcast-vector state path: every
+    // tier (2^24 vertices at most) is below Csr.MaxVertices (r11 — SURVEY.md
+    // §6 at SCALE 24, same session: conv-csr 159.2 s / ZERO shuffle bytes
+    // vs conv-cheby 640.3 s / 12.3 GB; the per-iteration cost was the
+    // 530M-row probe+agg, not shuffle)
+    val (_, prSec) = timed("pr")(PageRank.converged(g).count())
 
     val ne = g.cachedUndirected.count()
     // release this run's graph caches: a multi-run session (back-to-back

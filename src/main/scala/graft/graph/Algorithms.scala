@@ -127,7 +127,7 @@ object ConnectedComponents {
     * whose id is the min member id (slot order is id order), the
     * identical labeling the join path converges to (equivalence-tested on
     * every graph-shape fixture and under offset and hashed id maps).
-    * Throws IllegalStateException on the driver when `maxIter` rounds end
+    * Throws [[NotConverged]] on the driver when `maxIter` rounds end
     * short of the fixpoint.
     *
     * None (→ join path) when the graph is empty or has
@@ -138,12 +138,6 @@ object ConnectedComponents {
     Csr.cachedOrBuild(g).flatMap { blocks =>
       val r = CsrLoop.run(blocks, MinLabelKernel,
         new MinLabelState(Array.tabulate(blocks.ids.length)(v => v)), maxIter)
-      if (!r.converged) throw new IllegalStateException(
-        s"ConnectedComponents.csr: fixpoint not reached after $maxIter " +
-          "rounds — non-minimal labels must never be returned (or " +
-          "memoized into the label cache; r11 ADVICE — the coreness " +
-          "contract). Raise maxIter; the path compression makes >50 " +
-          "rounds unreachable on any real graph.")
       Some(CsrLoop.emit(spark, blocks, r.state.lbl, "id", "component") {
         (ids, l, v) => Some(ids(l(v)))
       })
@@ -161,7 +155,9 @@ object ConnectedComponents {
     */
   private object MinLabelKernel extends CsrLoop.Kernel[MinLabelState,
       Array[Int], (Array[Int], Array[Int])] {
+    val name = "ConnectedComponents.csr"
     def pending(s: MinLabelState): Boolean = s.changed > 0
+    def residual(s: MinLabelState): Any = s.changed
     def message(s: MinLabelState): Array[Int] = s.lbl
     def step(l: Array[Int], b: CsrLoop.Block): (Array[Int], Array[Int]) = {
       val (vsA, offA, nbrA) = b
@@ -329,6 +325,7 @@ object ConnectedComponents {
       }
       i += 1
     }
+    if (nFront > 0) throw new NotConverged("ConnectedComponents", i, nFront)
     if (pending != null) {
       // fold the tail overlay into the label table — ONE |V| rewrite for
       // the whole tail phase
@@ -340,10 +337,6 @@ object ConnectedComponents {
             .as("component"))
         .localCheckpoint(true)
     }
-    if (nFront > 0)
-      System.err.println(s"[graft] WARN ConnectedComponents: fixpoint not " +
-        s"reached after $maxIter rounds — labels may be non-minimal " +
-        "(raise maxIter for high-diameter graphs)")
     // edges cache is shared across algorithms (Graph.cachedUndirected) — no unpersist
     labels
   }
@@ -387,25 +380,19 @@ object ConnectedComponents {
         .filter(col("src") =!= col("dst"))
         .distinct()
     }
-    var edges = g.cachedUndirected.filter(col("src") =!= col("dst"))
+    // stable: a round leaves the edge set's signature — a hash of its row
+    // count and of the xor of its rows' hashes — unchanged (coalesce: the
+    // xor over an empty edge table is null)
+    val sig = xxhash64(count(lit(1)),
+      coalesce(bit_xor(xxhash64(col("src"), col("dst"))), lit(0L)))
+    val init = g.cachedUndirected.filter(col("src") =!= col("dst"))
       .localCheckpoint(true)
-    var stable = false
-    var i = 0
-    var sig = (-1L, -1L)
-    while (!stable && i < maxIter) {
-      edges = round(edges).localCheckpoint(true)
-      // coalesce: bit_xor over an empty edge table (fully degenerate
-      // input) aggregates to null
-      val s = edges.agg(count(lit(1)),
-        expr("coalesce(bit_xor(xxhash64(src, dst)), 0L)")).head()
-      val next = (s.getLong(0), s.getLong(1))
-      stable = next == sig
-      sig = next
-      i += 1
+    val ((edges, _), _) = Superstep.run("ConnectedComponents.alternating",
+        maxIter, (init, Option.empty[Long])) { case ((e, last), _) =>
+      Superstep.Round(round(e), sig) { (next, s: Long) =>
+        Superstep.Step((next, Some(s)), last.contains(s), Seq(e))
+      }
     }
-    if (!stable)
-      System.err.println(s"[graft] WARN ConnectedComponents.alternating: " +
-        s"fixpoint not reached after $maxIter rounds")
     // converged: edges are (member → root) stars; roots map to themselves,
     // and isolated-after-dedup vertices (self-loop-only) keep their own id
     val members = edges.select(col("src").as("id"), col("dst").as("component"))
@@ -495,8 +482,8 @@ object ShortestPaths {
     * frontier vertex lists it and no earlier round visited it — the same
     * level sets the join path's anti-join produces; output rows cover
     * exactly the reached vertices (emitted from the partition-unique src
-    * lists). A frontier still non-empty after `maxIter` levels prints a
-    * `[graft] WARN` and returns the levels reached. None (→ join path)
+    * lists). A frontier still non-empty after `maxIter` levels throws
+    * [[NotConverged]]. None (→ join path)
     * when the source has no edge (the join path's seed-only answer needs
     * no adjacency) and under the [[Csr.MaxVertices]] gate like the other
     * broadcast-vector paths.
@@ -509,10 +496,6 @@ object ShortestPaths {
       else {
         val r = CsrLoop.run(blocks, LevelKernel,
           new LevelState(blocks.ids.length, src), maxIter)
-        if (!r.converged)
-          System.err.println(s"[graft] WARN ShortestPaths.csr: frontier " +
-            s"still non-empty after $maxIter hops — distances beyond the " +
-            "cap missing")
         // the source has a slot (an edgeless source took the join path
         // above), so its (source, 0) seed row comes from that slot
         Some(CsrLoop.emit(spark, blocks, r.state.dist, "id", "dist") {
@@ -539,7 +522,9 @@ object ShortestPaths {
     */
   private object LevelKernel extends CsrLoop.Kernel[LevelState,
       (Array[Long], Array[Int]), Array[Long]] {
+    val name = "ShortestPaths.csr"
     def pending(s: LevelState): Boolean = s.frontier.nonEmpty
+    def residual(s: LevelState): Any = s.frontier.length
     def message(s: LevelState): (Array[Long], Array[Int]) =
       (s.visited, s.frontier)
     def step(m: (Array[Long], Array[Int]), b: CsrLoop.Block): Array[Long] = {
@@ -607,38 +592,22 @@ object ShortestPaths {
     def shj(df: DataFrame) =
       if (broadcastState) df else df.hint("SHUFFLE_HASH")
     val seed = Seq((source, 0L)).toDF("id", "dist").localCheckpoint(true)
-    // the distance table is APPEND-ONLY: one checkpointed part per round,
+    // the distance table is APPEND-ONLY: one checkpointed level per hop,
     // read as a lazy union — the visited anti-join scans the same |V|
-    // rows either way, but nothing |V|-sized is ever REWRITTEN per round
-    // (the union depth is bounded by maxIter ≤ 64 parts)
-    var dist: DataFrame = seed
-    var frontier = seed
-    var d = 0L
-    var done = false
-    while (!done && d < maxIter) {
-      d += 1
-      // ONE job per hop (r15): the level's row count rides the
-      // checkpoint's materializing job as an observe() metric, replacing
-      // the separate isEmpty probe job
-      val obs = org.apache.spark.sql.Observation()
-      val next = edges.join(shj(bc(frontier)), frontier("id") === edges("src"))
-        .select(col("dst").as("id")).distinct()
-        .join(shj(bc(dist)), Seq("id"), "left_anti")
-        .withColumn("dist", lit(d))
-        .observe(obs, count(lit(1)).as("n"))
-        .localCheckpoint(true)
-      if (graft.core.Observations.metric(obs, "n").asInstanceOf[Long] == 0L)
-        done = true
-      else {
-        dist = dist.union(next)
-        frontier = next
+    // rows either way, but nothing |V|-sized is ever REWRITTEN per hop
+    // (the union depth is bounded by maxIter ≤ 64 levels)
+    Superstep.run("ShortestPaths", maxIter, Vector(seed)) { (levels, d) =>
+      val frontier = levels.last
+      Superstep.Round(
+        edges.join(shj(bc(frontier)), frontier("id") === edges("src"))
+          .select(col("dst").as("id")).distinct()
+          .join(shj(bc(levels.reduce(_ union _))), Seq("id"), "left_anti")
+          .withColumn("dist", lit(d + 1L)),
+        count(lit(1))) { (next, n: Long) =>
+        if (n == 0L) Superstep.Step(levels, stop = true, Seq(next))
+        else Superstep.Step(levels :+ next)
       }
-    }
-    if (!done)
-      System.err.println(s"[graft] WARN ShortestPaths: frontier still " +
-        s"non-empty after $maxIter hops — distances beyond the cap missing")
-    // edges cache is shared across algorithms (Graph.cachedUndirected) — no unpersist
-    dist
+    }._1.reduce(_ union _)
   }
 
   /** G21: diameter lower bound by DOUBLE-SWEEP BFS (Magnien, Latapy &
@@ -734,50 +703,35 @@ object WeightedShortestPaths {
     val edges = graft.core.Partitioning.cachedSized(
       e.union(e.select(col("dst").as("src"), col("src").as("dst"), col("weight")))
         .groupBy(col("src"), col("dst")).agg(min(col("weight")).as("weight")))
-    var dist = Seq((source, 0L)).toDF("id", "dist").localCheckpoint(true)
-    var frontier = dist
-    var frontierNonEmpty = true // emptiness known from the previous round
-    var i = 0
-    while (i < maxIter && frontierNonEmpty) {
-      i += 1
+    // the state is (id, dist, imp): every reached vertex's distance,
+    // tagged when the last round improved it — the frontier
+    val seed = Seq((source, 0L, true)).toDF("id", "dist", "imp")
+      .localCheckpoint(true)
+    val imp = col("nd").isNotNull &&
+      (col("old").isNull || col("nd") < col("old"))
+    try Superstep.run("WeightedShortestPaths", maxIter, seed) { (upd, _) =>
       // candidate improvements from the frontier only
+      val frontier = upd.filter(col("imp")).select(col("id"), col("dist"))
       val cand = edges.join(bc(frontier), frontier("id") === edges("src"))
         .select(col("dst").as("id"), (col("dist") + col("weight")).as("nd"))
         .groupBy(col("id")).agg(min(col("nd")).as("nd"))
-      // ONE state pass per round (r14): the improved-rows checkpoint and
-      // the anti-join+union dist rewrite were two |reached|-row jobs per
-      // round (plus a full dist broadcast into the candidate probe); the
-      // full-outer merge keeps old rows, folds candidate improvements in,
-      // and tags improved rows so the next frontier is a narrow filter
-      // over the same cached table. On the shuffle path (broadcastState
-      // off, billion-vertex regime) this is also one dist exchange per
-      // round instead of two, and localCheckpoint preserves the hash(id)
-      // partitioning so consecutive rounds reuse it.
-      val imp = col("nd").isNotNull &&
-        (col("old").isNull || col("nd") < col("old"))
-      // ONE job per round (r15): the improved-row count rides the state
-      // checkpoint's own materializing job as an observe() metric — the
-      // separate emptiness probe (a job per round; two under AQE's
-      // staged count) is gone, and the loop condition reads a metric the
-      // checkpoint already computed.
-      val obs = org.apache.spark.sql.Observation()
-      val upd = dist.withColumnRenamed("dist", "old")
-        .join(cand, Seq("id"), "full_outer")
-        .select(col("id"),
-          when(imp, col("nd")).otherwise(col("old")).as("dist"),
-          imp.as("imp"))
-        .observe(obs, sum(when(col("imp"), 1L).otherwise(0L)).as("nimp"))
-        .localCheckpoint(true)
-      frontier = upd.filter(col("imp")).select(col("id"), col("dist"))
-      frontierNonEmpty = Option(graft.core.Observations.metric(obs, "nimp"))
-        .exists(_.asInstanceOf[Long] > 0L)
-      dist = upd.select(col("id"), col("dist"))
-    }
-    if (frontierNonEmpty)
-      System.err.println(s"[graft] WARN WeightedShortestPaths: relaxation " +
-        s"still improving after $maxIter rounds — distances not final")
-    edges.unpersist()
-    dist
+      // ONE state pass per round (r14): the full-outer merge keeps old
+      // rows, folds candidate improvements in, and tags improved rows so
+      // the next frontier is a narrow filter over the same checkpoint. On
+      // the shuffle path (broadcastState off, billion-vertex regime) this
+      // is one dist exchange per round, and localCheckpoint preserves the
+      // hash(id) partitioning so consecutive rounds reuse it.
+      Superstep.Round(
+        upd.select(col("id"), col("dist").as("old"))
+          .join(cand, Seq("id"), "full_outer")
+          .select(col("id"),
+            when(imp, col("nd")).otherwise(col("old")).as("dist"),
+            imp.as("imp")),
+        sum(when(col("imp"), 1L).otherwise(0L))) { (next, nimp: Long) =>
+        Superstep.Step(next, nimp == 0L, Seq(upd))
+      }
+    }._1.select(col("id"), col("dist"))
+    finally edges.unpersist()
   }
 
   /** DuckDB oracle: `hops` Bellman-Ford relaxations unrolled as plain SQL
@@ -859,49 +813,31 @@ object LandmarkDistances {
     // append-only pattern Betweenness.runForward and ShortestPaths use).
     // The anti-join scans the same rows either way; nothing k·|V|-sized
     // is rewritten per level.
-    val levels = scala.collection.mutable.ArrayBuffer(
-      lms.map(l => (l, l, 0L)).toDF("landmark", "id", "dist")
-        .localCheckpoint(true))
-    def dist: DataFrame = levels.reduce(_ union _)
-    var frontier = levels(0)
-    var d = 0L
-    var done = false
-    while (!done && d < maxIter) {
-      d += 1
-      // ONE job per level (r15): the level's row count rides the
-      // checkpoint's materializing job as an observe() metric, replacing
-      // the separate isEmpty probe job
-      val obs = org.apache.spark.sql.Observation()
-      val next = edges.join(bc(frontier), frontier("id") === edges("src"))
-        .select(col("landmark"), col("dst").as("id")).distinct()
-        .join(bc(dist.select(col("landmark"), col("id"))),
-          Seq("landmark", "id"), "left_anti")
-        .withColumn("dist", lit(d))
-        .observe(obs, count(lit(1)).as("n"))
-        .localCheckpoint(true)
-      if (graft.core.Observations.metric(obs, "n").asInstanceOf[Long] == 0L)
-        done = true
-      else {
-        levels += next
-        frontier = next
+    val seed = lms.map(l => (l, l, 0L)).toDF("landmark", "id", "dist")
+      .localCheckpoint(true)
+    Superstep.run("LandmarkDistances", maxIter, Vector(seed)) { (levels, d) =>
+      val frontier = levels.last
+      Superstep.Round(
+        edges.join(bc(frontier), frontier("id") === edges("src"))
+          .select(col("landmark"), col("dst").as("id")).distinct()
+          .join(bc(levels.reduce(_ union _)
+            .select(col("landmark"), col("id"))),
+            Seq("landmark", "id"), "left_anti")
+          .withColumn("dist", lit(d + 1L)),
+        count(lit(1))) { (next, n: Long) =>
+        if (n == 0L) Superstep.Step(levels, stop = true, Seq(next))
         // bound the lazy union's width on deep graphs (ADVICE r14): the
-        // anti-join rebuilds a broadcast of levels.reduce(union) every
+        // anti-join rebuilds a broadcast of the levels' union every
         // round, so plan analysis + broadcast construction grow O(d) per
-        // round, O(d²) over a deep traversal. Folding the buffer into
-        // one checkpoint every 16 levels caps the union at 16 branches;
-        // real diameters here stay under it, so the fold never fires on
-        // the bench path.
-        if (levels.size >= 16) {
-          val folded = levels.reduce(_ union _).localCheckpoint(true)
-          levels.clear()
-          levels += folded
-        }
+        // round, O(d²) over a deep traversal. Folding the levels before
+        // the frontier into one checkpoint every 16 caps the union at 16
+        // branches; real diameters here stay under it, so the fold never
+        // fires on the bench path.
+        else if (levels.size >= 15) Superstep.Step(
+          Vector(levels.reduce(_ union _).localCheckpoint(true), next))
+        else Superstep.Step(levels :+ next)
       }
-    }
-    if (!done)
-      System.err.println(s"[graft] WARN LandmarkDistances: frontier still " +
-        s"non-empty after $maxIter hops — distances beyond the cap missing")
-    dist
+    }._1.reduce(_ union _)
   }
 
   /** DuckDB oracle: one recursive CTE seeded with all k landmarks. */
@@ -934,7 +870,15 @@ object LandmarkDistances {
   */
 object PageRank {
   val Damping = 0.85
-  val DeltaEvery = 5
+
+  /** The Chebyshev weight ω of iteration `i` (0-based) from `prev`, the
+    * weight of iteration i − 1: ω = 1, then 1/(1 − d²/2), then
+    * 1/(1 − ω·d²/4).
+    */
+  private def omega(prev: Double, i: Int): Double =
+    if (i == 0) 1.0
+    else if (i == 1) 1.0 / (1.0 - Damping * Damping / 2.0)
+    else 1.0 / (1.0 - prev * Damping * Damping / 4.0)
 
   /** Fixed-iteration variant (oracle-checkable: the driver's DuckDB oracle
     * unrolls the same 5 iterations in SQL). Returns (id, pr) rounded to 8dp.
@@ -974,10 +918,10 @@ object PageRank {
     * ~113 (the r5 pr-large item: per-iteration cost is shuffle physics;
     * the lever is iteration COUNT). Each iteration is one edge⋈state
     * join + one contribution aggregate + one |V|-row update, identical in
-    * shape to [[fixedIterations]]; convergence is checked on Σ|x_{k+1} −
-    * x_k| every [[DeltaEvery]] rounds. Equivalence with the dense power
-    * iteration is asserted in tests on every graph shape and both state
-    * paths.
+    * shape to [[fixedIterations]]; Σ|x_{k+1} − x_k| is observed in every
+    * iteration's checkpoint job, so the loop stops at the first iteration
+    * within `tol`. Equivalence with the dense power iteration is asserted
+    * in tests on every graph shape and both state paths.
     */
   def convergedCheby(g: Graph, tol: Double = 1e-8, maxIter: Int = 100,
       broadcastVertices: Boolean = true): DataFrame = {
@@ -1000,52 +944,32 @@ object PageRank {
     }
     val teleport = (1.0 - Damping) / nv
     // state carries the current AND previous iterate for the three-term
-    // recurrence: (id, outdeg, x, xp)
-    var state = degrees
+    // recurrence, (id, outdeg, x, xp), and the last iteration's ω
+    val init = degrees
       .select(col("id"), col("outdeg"), lit(1.0 / nv).as("x"),
         lit(1.0 / nv).as("xp"))
       .localCheckpoint(true)
-    var omega = 1.0
-    var delta = Double.MaxValue
-    var i = 0
-    while (i < maxIter && delta > tol) {
-      omega =
-        if (i == 0) 1.0
-        else if (i == 1) 1.0 / (1.0 - Damping * Damping / 2.0)
-        else 1.0 / (1.0 - omega * Damping * Damping / 4.0)
-      val msgs = msgRound(edges,
-        state.select(col("id"), col("outdeg"), col("x")), "x",
-        broadcastVertices)
-      val w = omega
-      // check Σ|x_{k+1} − x_k| every DeltaEvery rounds far from the
-      // fixpoint, every round once within 1e3× of tol: with the 0.56/iter
-      // Chebyshev contraction a 5-round stride overshoots convergence by
-      // up to 4 full iterations — ~1 minute at the large tier
-      val checkDelta = (i + 1) % DeltaEvery == 0 || i + 1 == maxIter ||
-        delta <= tol * 1e3
-      val next = state
-        .select(col("id"), col("outdeg"), col("x").as("xp_new"),
-          col("xp"))
-        .join(shj(msgs), col("id") === col("dst"), "left")
-        .select(col("id"), col("outdeg"),
-          (lit(w) * (lit(teleport) +
-              lit(Damping) * coalesce(col("msg"), lit(0.0)) - col("xp")) +
-            col("xp")).as("x"),
-          col("xp_new").as("xp"))
-        .localCheckpoint(true)
-      if (checkDelta) {
-        delta = next.agg(sum(abs(col("x") - col("xp")))).head().getDouble(0)
-      }
-      // the eager checkpoint above has materialized, so no reader needs
-      // the superseded round's blocks
-      graft.core.Checkpoints.drop(state)
-      state = next
-      i += 1
-    }
-    if (delta > tol)
-      System.err.println(s"[graft] WARN PageRank.cheby: Σ|Δx|=$delta still " +
-        s"above tol=$tol after $maxIter iterations")
-    degrees.unpersist()
+    val ((state, _), _) =
+      try Superstep.run("PageRank.cheby", maxIter, (init, 1.0)) {
+          case ((state, prev), i) =>
+        val w = omega(prev, i)
+        val msgs = msgRound(edges,
+          state.select(col("id"), col("outdeg"), col("x")), "x",
+          broadcastVertices)
+        Superstep.Round(
+          state
+            .select(col("id"), col("outdeg"), col("x").as("xp_new"),
+              col("xp"))
+            .join(shj(msgs), col("id") === col("dst"), "left")
+            .select(col("id"), col("outdeg"),
+              (lit(w) * (lit(teleport) +
+                  lit(Damping) * coalesce(col("msg"), lit(0.0)) - col("xp")) +
+                col("xp")).as("x"),
+              col("xp_new").as("xp")),
+          sum(abs(col("x") - col("xp")))) { (next, delta: Double) =>
+          Superstep.Step((next, w), delta <= tol, Seq(state))
+        }
+      } finally degrees.unpersist()
     state.select(col("id"), round(col("x"), 8).as("pr"))
   }
 
@@ -1082,7 +1006,7 @@ object PageRank {
     * multimodal decoders are: no Catalyst expression can index a
     * primitive state vector, and the kernel is genuinely per-partition
     * imperative. Σ|Δx| still above `tol` after `maxIter` iterations
-    * prints a `[graft] WARN` and returns the last iterate.
+    * throws [[NotConverged]].
     *
     * Returns None when the graph is empty or at the [[Csr.MaxVertices]]
     * gate (caller falls back); arithmetic is msgRound's exactly (sum of
@@ -1099,9 +1023,6 @@ object PageRank {
       val nv = blocks.ids.length.toDouble
       val r = CsrLoop.run(blocks, ChebyshevKernel(tol, (1.0 - Damping) / nv),
         new ChebyshevState(blocks.degree), maxIter)
-      if (!r.converged)
-        System.err.println(s"[graft] WARN PageRank.csr: Σ|Δx|=" +
-          s"${r.state.delta} still above tol=$tol after $maxIter iterations")
       Some(CsrLoop.emit(spark, blocks, r.state.x, "id", "pr") { (_, x, v) =>
         Some(round8(x(v)))
       })
@@ -1148,7 +1069,9 @@ object PageRank {
   private final case class ChebyshevKernel(tol: Double, teleport: Double)
       extends CsrLoop.Kernel[ChebyshevState, Array[Double],
         (Array[Int], Array[Double])] {
+    val name = "PageRank.csr"
     def pending(s: ChebyshevState): Boolean = s.delta > tol
+    def residual(s: ChebyshevState): Any = s.delta
     def message(s: ChebyshevState): Array[Double] = {
       var v = 0
       while (v < s.contrib.length) {
@@ -1174,10 +1097,7 @@ object PageRank {
     def fold(s: ChebyshevState,
         ups: Array[(Array[Int], Array[Double])]): Unit = {
       val (x, xp) = (s.x, s.xp)
-      val w =
-        if (s.i == 0) 1.0
-        else if (s.i == 1) 1.0 / (1.0 - Damping * Damping / 2.0)
-        else 1.0 / (1.0 - s.omega * Damping * Damping / 4.0)
+      val w = omega(s.omega, s.i)
       var dsum = 0.0
       ups.foreach { case (vsA, ms) =>
         var k = 0
@@ -1247,23 +1167,18 @@ object PageRank {
     // single state table (id, outdeg, pr): no ranks⋈degrees join inside the
     // loop — one broadcast, one edges scan, one contribution shuffle, one
     // |V|-row update join per iteration
-    var state = degrees
+    val init = degrees
       .select(col("id"), col("outdeg"), lit(1.0 / nv).as("pr"))
       .localCheckpoint(true)
-    // each round's checkpoint is dropped as soon as the next round's has
-    // materialized, keeping storage at ~2 rounds instead of `iterations`
-    // rounds of dead blocks awaiting a driver full GC
-    (0 until iterations).foreach { _ =>
+    val state = Superstep.fixed(iterations, init) { (state, _) =>
       // broadcast path: zero |E|-row exchange (see [[msgRound]]); shuffle
       // path: probe-side SHJ + map-side-combined contribution aggregate
       val contribs = msgRound(edges, state, "pr", broadcastVertices)
-      val next = state
+      Superstep.Round(state
         .join(shj(contribs), col("id") === contribs("dst"), "left")
         .select(col("id"), col("outdeg"),
           (lit((1.0 - Damping) / nv) + lit(Damping) * coalesce(col("msg"), lit(0.0))).as("pr"))
-        .localCheckpoint(true)
-      graft.core.Checkpoints.drop(state)
-      state = next
+      )(next => Superstep.Step(next, superseded = Seq(state)))
     }
     degrees.unpersist() // edges cache is shared (Graph.cachedUndirected)
     state.select(col("id"), round(col("pr"), 8).as("pr"))
@@ -1286,24 +1201,22 @@ object PageRank {
     val edges = g.cachedUndirected
     val isSource = col("id").isInCollection(sources)
     val teleport = 1.0 / sources.size
-    var state = edges.groupBy(col("src").as("id"))
+    val init = edges.groupBy(col("src").as("id"))
       .agg(count(lit(1)).as("outdeg"))
       .select(col("id"), col("outdeg"),
         when(isSource, lit(teleport)).otherwise(lit(0.0)).as("pr"))
       .localCheckpoint(true)
-    var i = 0
-    while (i < iterations) {
+    val state = Superstep.fixed(iterations, init) { (state, _) =>
       val contribs = edges
         .join(bc(state), col("src") === col("id"))
         .select(col("dst"), (col("pr") / col("outdeg")).as("contrib"))
         .groupBy(col("dst")).agg(sum(col("contrib")).as("msg"))
-      state = state.select(col("id"), col("outdeg"))
+      Superstep.Round(state.select(col("id"), col("outdeg"))
         .join(contribs, col("id") === contribs("dst"), "left")
         .select(col("id"), col("outdeg"),
           (when(isSource, lit((1.0 - Damping) * teleport)).otherwise(lit(0.0)) +
             lit(Damping) * coalesce(col("msg"), lit(0.0))).as("pr"))
-        .localCheckpoint(true)
-      i += 1
+      )(next => Superstep.Step(next, superseded = Seq(state)))
     }
     state.select(col("id"), round(col("pr"), 8).as("pr"))
   }
@@ -1395,14 +1308,7 @@ object PageRank {
   def chebyUnrolledSql(maxIters: Int = 45, tol: Double = 1e-8,
       edgesCte: String = Graph.undirectedCte): String = {
     val omegas = new Array[Double](maxIters + 1)
-    var om = 1.0
-    for (i <- 0 until maxIters) {
-      om =
-        if (i == 0) 1.0
-        else if (i == 1) 1.0 / (1.0 - Damping * Damping / 2.0)
-        else 1.0 / (1.0 - om * Damping * Damping / 4.0)
-      omegas(i + 1) = om
-    }
+    for (i <- 0 until maxIters) omegas(i + 1) = omega(omegas(i), i)
     def lit17(d: Double) = {
       val s = java.lang.Double.toString(d)
       if (s.contains("E")) f"CAST($d%.17e AS DOUBLE)" else s
@@ -1472,22 +1378,19 @@ object PageRank {
       import spark.implicits._
       return Seq.empty[(Long, Double)].toDF("id", "pr")
     }
-    var state = degrees.select(col("id"), col("wdeg"),
-      lit(1.0 / nv).as("pr"))
-    var i = 0
-    while (i < iterations) {
+    val init = degrees.select(col("id"), col("wdeg"), lit(1.0 / nv).as("pr"))
+    val state = Superstep.fixed(iterations, init) { (state, _) =>
       val contribs = wedges
         .join(shj(bc(state)), col("src") === col("id"))
         .select(col("dst"),
           (col("pr") * col("weight") / col("wdeg")).as("contrib"))
         .groupBy(col("dst")).agg(sum(col("contrib")).as("msg"))
-      state = state.select(col("id"), col("wdeg"))
+      Superstep.Round(state.select(col("id"), col("wdeg"))
         .join(shj(contribs), col("id") === col("dst"), "left")
         .select(col("id"), col("wdeg"),
           (lit((1.0 - Damping) / nv) +
             lit(Damping) * coalesce(col("msg"), lit(0.0))).as("pr"))
-        .localCheckpoint(true)
-      i += 1
+      )(next => Superstep.Step(next, superseded = Seq(state)))
     }
     state.select(col("id"), round(col("pr"), 8).as("pr"))
   }
@@ -1537,8 +1440,10 @@ object PageRank {
   * (broadcast by default — disable at billion-vertex scale and the
   * semi-joins shuffle on the pre-partitioned vertex key). The edge table
   * shrinks monotonically and is re-checkpointed per round, so later rounds
-  * scan the already-peeled set, not the original graph. Convergence = edge
-  * count unchanged, a free scalar on the just-materialized checkpoint.
+  * scan the already-peeled set, not the original graph. Convergence = no
+  * vertex below k, counted in the degree table's own checkpoint job; that
+  * last degree table is the result. Throws [[NotConverged]] when `maxIter`
+  * rounds end short of the fixpoint.
   */
 object KCore {
   /** Vertices of the k-core with their induced ("core") degree.
@@ -1549,30 +1454,26 @@ object KCore {
     *   the unrolled oracle fails with a clear message instead of a bare
     *   hash mismatch (the Spark side is exact; the truncated oracle isn't).
     */
-  /** Peeled (id, core_degree) + convergence rounds + converged flag,
-    * memoized per (graph, params) for session-memoized graphs
+  /** Peeled (id, core_degree) + convergence rounds, memoized per (graph, params) for session-memoized graphs
     * ([[ConnectedComponents]] labelCache contract) — the incremental
     * k-core maintainer (X22) seeds its membership state from the same
     * peel the batch query computed.
     */
   private val coreCache = scala.collection.concurrent.TrieMap[
-    (Graph, Int, Int, Boolean), (DataFrame, Int, Boolean)]()
+    (Graph, Int, Int, Boolean), (DataFrame, Int)]()
 
   def apply(g: Graph, k: Int, maxIter: Int = 100,
       broadcastVertices: Boolean = true,
       oracleRounds: Option[Int] = None): DataFrame = {
-    val (res, i, converged) =
+    val (res, i) =
       if (g.memoizeAnalytics) {
         graft.core.SessionCaches.sweep(coreCache)(_._1.edges.sparkSession)
         graft.core.SessionCaches.countingGet(coreCache,
           (g, k, maxIter, broadcastVertices))(
           runPeel(g, k, maxIter, broadcastVertices))
       } else runPeel(g, k, maxIter, broadcastVertices)
-    if (!converged)
-      System.err.println(s"[graft] WARN KCore: fixpoint not reached after " +
-        s"$maxIter rounds — result may contain sub-$k vertices")
     oracleRounds.foreach { r =>
-      if (!converged || i > r) throw new IllegalStateException(
+      if (i > r) throw new IllegalStateException(
         s"k-core peel converged in $i rounds but the unrolled SQL oracle " +
           s"only has $r: raise `rounds` in KCore.unrolledSql for this SF " +
           "(the truncated oracle would hash-mismatch the exact Spark result)")
@@ -1581,31 +1482,31 @@ object KCore {
   }
 
   private def runPeel(g: Graph, k: Int, maxIter: Int,
-      broadcastVertices: Boolean): (DataFrame, Int, Boolean) = {
+      broadcastVertices: Boolean): (DataFrame, Int) = {
     def bc(df: DataFrame) = if (broadcastVertices) broadcast(df) else df
-    var edges = g.cachedUndirected.select(col("src"), col("dst"))
-    var prev = edges.count()
-    var converged = prev == 0L
-    var i = 0
-    while (!converged && i < maxIter) {
-      val keep = edges.groupBy(col("src")).agg(count(lit(1)).as("degree"))
-        .filter(col("degree") >= k)
-        .select(col("src").as("id"))
-      val kept = bc(keep.localCheckpoint(true))
-      val next = edges
-        .join(kept, edges("src") === kept("id"), "left_semi")
-      // symmetric input + symmetric filter ⇒ the edge set stays symmetric,
-      // so per-round degrees remain a plain groupBy(src)
-      val pruned = next.join(kept, next("dst") === kept("id"), "left_semi")
-        .localCheckpoint(true)
-      val n = pruned.count()
-      converged = n == prev
-      prev = n
-      edges = pruned
-      i += 1
+    // state: the edge set and, once no vertex is below k, its degree
+    // table — the result
+    val edges0 = g.cachedUndirected.select(col("src"), col("dst"))
+    val ((_, degrees), i) = Superstep.run("KCore", maxIter,
+        (edges0, Option.empty[DataFrame])) { case ((edges, _), _) =>
+      Superstep.Round(
+        edges.groupBy(col("src").as("id")).agg(count(lit(1)).as("degree")),
+        sum(when(col("degree") < k, 1L).otherwise(0L))) {
+          (degrees, below: Long) =>
+        if (below == 0L) Superstep.Step((edges, Some(degrees)), stop = true)
+        else {
+          val kept = bc(degrees.filter(col("degree") >= k).select(col("id")))
+          // symmetric input + symmetric filter ⇒ the edge set stays
+          // symmetric, so per-round degrees remain a plain groupBy(src)
+          val pruned = edges
+            .join(kept, edges("src") === kept("id"), "left_semi")
+            .join(kept, col("dst") === kept("id"), "left_semi")
+            .localCheckpoint(true)
+          Superstep.Step((pruned, None), superseded = Seq(edges, degrees))
+        }
+      }
     }
-    (edges.groupBy(col("src").as("id")).agg(count(lit(1)).as("core_degree")),
-      i, converged)
+    (degrees.get.select(col("id"), col("degree").as("core_degree")), i)
   }
 
   /** DuckDB oracle: `rounds` unrolled peel steps (idempotent past the
@@ -1652,20 +1553,20 @@ object KCore {
   * (EnsureRequirements sees it satisfied), so row_number + max(least(rn,
   * est)) cost a single shuffle; the |V|-row estimate table broadcasts
   * (disable at billion-vertex scale and the join shuffles on the
-  * pre-partitioned vertex key). Per-round state is lazily checkpointed
-  * and materialized by the convergence-count job. The h computation is
+  * pre-partitioned vertex key). Per-round state is checkpointed with its
+  * changed count observed in the same job. The h computation is
   * sort-based (window), not collect_list-based, so a hub's
   * degree-sized neighbor list never materializes as one array — skew
   * lands on the sort, AQE's case.
   */
 object Coreness {
-  /** Converged (result, rounds, converged) memoized per (graph, params)
+  /** Converged (result, rounds) memoized per (graph, params)
     * for session-memoized graphs ([[KCore]]'s coreCache contract) — the
     * X26 incremental coreness maintainer warm-starts its drain from the
     * same decomposition the batch query computed.
     */
   private val corenessCache = scala.collection.concurrent.TrieMap[
-    (Graph, Int, Boolean), (DataFrame, Int, Boolean)]()
+    (Graph, Int, Boolean), (DataFrame, Int)]()
 
   /** @param oracleRounds assert the observed convergence depth fits the
     *   unrolled oracle ([[KCore.apply]] contract): the iteration is
@@ -1676,7 +1577,10 @@ object Coreness {
   def apply(g: Graph, maxIter: Int = 100,
       broadcastVertices: Boolean = true,
       oracleRounds: Option[Int] = None): DataFrame = {
-    val (res, i, converged) =
+    // run() throws NotConverged (the X26 drain warm-starts from these
+    // labels and its squeeze bound only holds against the TRUE coreness),
+    // so nothing unconverged ever reaches the memo
+    val (res, i) =
       if (g.memoizeAnalytics) {
         graft.core.SessionCaches.sweep(corenessCache)(
           _._1.edges.sparkSession)
@@ -1684,11 +1588,6 @@ object Coreness {
           (g, maxIter, broadcastVertices))(
           run(g, maxIter, broadcastVertices))
       } else run(g, maxIter, broadcastVertices)
-    // run() throws on non-convergence (exactness is the contract — the
-    // X26 drain warm-starts from these labels and its squeeze bound only
-    // holds against the TRUE coreness; r10 ADVICE), so converged is
-    // always true here and nothing unconverged ever reaches the memo.
-    assert(converged)
     oracleRounds.foreach { r =>
       if (i > r) throw new IllegalStateException(
         s"coreness h-iteration converged in $i rounds but the unrolled " +
@@ -1699,7 +1598,7 @@ object Coreness {
   }
 
   private def run(g: Graph, maxIter: Int,
-      broadcastVertices: Boolean): (DataFrame, Int, Boolean) =
+      broadcastVertices: Boolean): (DataFrame, Int) =
     csrCoreness(g, maxIter)
       .getOrElse(runJoin(g, maxIter, broadcastVertices))
 
@@ -1719,24 +1618,20 @@ object Coreness {
     * convergence depth the `oracleRounds` contract checks — are identical
     * to the join path's (equivalence-tested per round count and per final
     * label). The initial estimate is the blocks' degree vector. Throws
-    * IllegalStateException on the driver when `maxIter` rounds end short
-    * of the fixpoint. Gate ([[Csr.MaxVertices]]) and fallback as the other
+    * [[NotConverged]] on the driver when `maxIter` rounds end short of
+    * the fixpoint. Gate ([[Csr.MaxVertices]]) and fallback as the other
     * broadcast-vector paths.
     */
   def csrCoreness(g: Graph,
-      maxIter: Int): Option[(DataFrame, Int, Boolean)] = {
+      maxIter: Int): Option[(DataFrame, Int)] = {
     val spark = g.cachedUndirected.sparkSession
     Csr.cachedOrBuild(g).flatMap { blocks =>
       val r = CsrLoop.run(blocks, HIndexKernel,
         new HIndexState(blocks.degree.clone()), maxIter)
-      if (!r.converged) throw new IllegalStateException(
-        s"Coreness: h-iteration did not converge within $maxIter rounds — " +
-          "an unconverged estimate must never be returned (or memoized): " +
-          "downstream warm starts (X26) assume exact coreness. Raise maxIter.")
       val out = CsrLoop.emit(spark, blocks, r.state.est, "id", "coreness") {
         (_, e, v) => Some(e(v).toLong)
       }
-      Some((out, r.rounds, true))
+      Some((out, r.rounds))
     }
   }
 
@@ -1751,7 +1646,9 @@ object Coreness {
     */
   private object HIndexKernel extends CsrLoop.Kernel[HIndexState, Array[Int],
       (Array[Int], Array[Int])] {
+    val name = "Coreness.csr"
     def pending(s: HIndexState): Boolean = s.changed > 0
+    def residual(s: HIndexState): Any = s.changed
     def message(s: HIndexState): Array[Int] = s.est
     def step(e: Array[Int], b: CsrLoop.Block): (Array[Int], Array[Int]) = {
       val (vsA, offA, nbrA) = b
@@ -1811,31 +1708,28 @@ object Coreness {
     * at the 100× design point).
     */
   def joinCoreness(g: Graph, maxIter: Int = 100,
-      broadcastVertices: Boolean = true): (DataFrame, Int, Boolean) =
+      broadcastVertices: Boolean = true): (DataFrame, Int) =
     runJoin(g, maxIter, broadcastVertices)
 
   private def runJoin(g: Graph, maxIter: Int,
-      broadcastVertices: Boolean): (DataFrame, Int, Boolean) = {
+      broadcastVertices: Boolean): (DataFrame, Int) = {
     def bc(df: DataFrame) = if (broadcastVertices) broadcast(df) else df
     val sym = g.cachedUndirected.select(col("src"), col("dst"))
-    var est = sym.groupBy(col("src").as("id"))
-      .agg(count(lit(1)).as("est")).localCheckpoint(true)
-    var changed = est.limit(1).count() // 0 on an empty graph
-    var i = 0
-    while (changed > 0 && i < maxIter) {
-      val nxt = hPass(sym, bc(est)).localCheckpoint(eager = false)
-      // the change count materializes the round's lazy checkpoint
-      changed = nxt.join(est.select(col("id"), col("est").as("prev")),
-          Seq("id"))
-        .filter(col("est") =!= col("prev")).count()
-      est = nxt
-      i += 1
+    // the state is (id, est, prev): each estimate and the one before it
+    val init = sym.groupBy(col("src").as("id"))
+      .agg(count(lit(1)).as("est")).withColumn("prev", col("est"))
+      .localCheckpoint(true)
+    val (est, i) = Superstep.run("Coreness", maxIter, init) { (est, _) =>
+      val cur = est.select(col("id"), col("est"))
+      Superstep.Round(
+        hPass(sym, bc(cur))
+          .join(cur.select(col("id"), col("est").as("prev")), Seq("id")),
+        sum(when(col("est") =!= col("prev"), 1L).otherwise(0L))) {
+          (next, changed: Long) =>
+        Superstep.Step(next, changed == 0L, Seq(est))
+      }
     }
-    if (changed > 0) throw new IllegalStateException(
-      s"Coreness: h-iteration did not converge within $maxIter rounds — " +
-        "an unconverged estimate must never be returned (or memoized): " +
-        "downstream warm starts (X26) assume exact coreness. Raise maxIter.")
-    (est.select(col("id"), col("est").as("coreness")), i, changed == 0)
+    (est.select(col("id"), col("est").as("coreness")), i)
   }
 
   /** One h-operator application over every src of `sym`: h(v) = the
@@ -1923,7 +1817,8 @@ object Coreness {
   * disable at billion-vertex scale and they shuffle on the
   * pre-partitioned vertex key). The edge set shrinks monotonically and
   * is re-checkpointed per round, so later rounds scan the already-pruned
-  * graph — the k-core peel's cost shape.
+  * graph — the k-core peel's cost shape. Vertices still undecided after
+  * `maxIter` rounds throw [[NotConverged]].
   */
 object MaximalIndependentSet {
   /** @param oracleRounds as [[KCore.apply]] — assert the observed round
@@ -1937,47 +1832,31 @@ object MaximalIndependentSet {
     // includes loop-only vertices — trivially independent, so in the MIS
     val und = g.cachedUndirected.select(col("src"), col("dst"))
       .filter(col("src") =!= col("dst"))
-    val state = g.cachedUndirected.select(col("src").as("id")).distinct()
+    val state0 = g.cachedUndirected.select(col("src").as("id")).distinct()
       .localCheckpoint(true)
-    val res = lubyMis(und, state, "", maxIter, broadcastVertices)
-    if (res.undecided > 0)
-      System.err.println(s"[graft] WARN MaximalIndependentSet: " +
-        s"${res.undecided} vertices still undecided after $maxIter rounds")
+    val (mis, rounds) = lubyMis(und, state0, maxIter, broadcastVertices)
     oracleRounds.foreach { r =>
-      if (res.undecided > 0 || res.rounds > r) throw new IllegalStateException(
-        s"Luby MIS converged in ${res.rounds} rounds but the unrolled SQL " +
+      if (rounds > r) throw new IllegalStateException(
+        s"Luby MIS converged in $rounds rounds but the unrolled SQL " +
           s"oracle only has $r: raise `rounds` in " +
           "MaximalIndependentSet.unrolledSql")
     }
-    res.mis
+    mis
   }
 
-  /** Result of one Luby MIS run: the MIS members (a lazy union of
-    * per-round checkpointed selections — never re-checkpointed whole),
-    * rounds used, vertices still undecided at the cap, plus the
-    * NON-selected removed vertices (neighbors knocked out by a selection)
-    * and their count — [[GraphColoring.apply]]'s residual state for the
-    * next color comes free from these instead of a per-color |V| anti-join
-    * + checkpoint + count (r5 judge item #7).
-    */
-  private[graph] case class LubyResult(mis: DataFrame, rounds: Int,
-      undecided: Long, knockedOut: DataFrame, knockedOutCount: Long)
-
   /** One full Luby MIS run over an explicit undecided-induced edge set and
-    * undecided vertex table — the core [[apply]] and
-    * [[GraphColoring.apply]] share. Per-round priority is
-    * md5(id ':' saltPrefix round).
+    * undecided vertex table: the MIS members (a lazy union of per-round
+    * checkpointed selections — never re-checkpointed whole) and the
+    * rounds used. Per-round priority is md5(id ':' round).
     *
     * Per-round cost is four barrier jobs (selection, knocked-out
-    * neighbors, surviving state, surviving edges) plus two near-free
-    * counts on just-materialized RDDs; the MIS and knocked-out
-    * accumulators stay lazy unions of the per-round checkpoints. Shrinking
-    * rounds coalesce their checkpoints (narrow, no shuffle) so late
-    * rounds don't pay 32 task launches to scan a few hundred rows.
+    * neighbors, surviving state, surviving edges) plus a near-free count
+    * on the just-materialized state. Shrinking rounds coalesce their
+    * checkpoints (narrow, no shuffle) so late rounds don't pay 32 task
+    * launches to scan a few hundred rows.
     */
-  private[graph] def lubyMis(und0: DataFrame, state0: DataFrame,
-      saltPrefix: String, maxIter: Int,
-      broadcastVertices: Boolean): LubyResult = {
+  private def lubyMis(und0: DataFrame, state0: DataFrame, maxIter: Int,
+      broadcastVertices: Boolean): (DataFrame, Int) = {
     def bc(df: DataFrame) = if (broadcastVertices) broadcast(df) else df
     val spark = und0.sparkSession
     import spark.implicits._
@@ -1985,8 +1864,6 @@ object MaximalIndependentSet {
     var state = state0
     val empty = Seq.empty[Long].toDF("id").localCheckpoint(true)
     var misParts = List.empty[DataFrame]
-    var koParts = List.empty[DataFrame]
-    var koCount = 0L
     var n = state.count()
     var i = 0
     // partition target for this round's checkpoints: proportional to the
@@ -2000,8 +1877,7 @@ object MaximalIndependentSet {
       // dependency-chain length, not O(log n); measured a 250-vertex
       // R-MAT still undecided after 30 fixed-priority rounds)
       val withPri = state
-        .withColumn("pri",
-          md5(concat(col("id").cast("string"), lit(s":$saltPrefix$i"))))
+        .withColumn("pri", md5(concat(col("id").cast("string"), lit(s":$i"))))
       // min undecided-neighbor priority per vertex (und is already
       // undecided-induced, so no per-round edge filter is needed here)
       val nbrMin = und
@@ -2023,8 +1899,6 @@ object MaximalIndependentSet {
           col("src") === col("sid"))
         .select(col("dst").as("id")).distinct()
         .coalesce(parts).localCheckpoint(true)
-      koParts ::= nbrsD
-      koCount += nbrsD.count()
       state = state
         .join(sel.union(nbrsD), Seq("id"), "left_anti")
         .select(col("id"))
@@ -2038,6 +1912,7 @@ object MaximalIndependentSet {
       n = state.count()
       i += 1
     }
+    if (n > 0) throw new NotConverged("MaximalIndependentSet", i, n)
     // the per-round checkpoints all carry the SAME output exprId (each
     // round's state derives from the last by select/join), and a Union
     // whose branches share attribute ids trips Catalyst's constraint
@@ -2045,9 +1920,7 @@ object MaximalIndependentSet {
     // no recompute, fresh attributes)
     def fresh(df: DataFrame): DataFrame =
       spark.createDataFrame(df.rdd, df.schema)
-    val mis = misParts.map(fresh).foldLeft(empty)(_.union(_)).select(col("id"))
-    val ko = koParts.map(fresh).foldLeft(empty)(_.union(_)).select(col("id"))
-    LubyResult(mis, i, n, ko, koCount)
+    (misParts.map(fresh).foldLeft(empty)(_.union(_)).select(col("id")), i)
   }
 
   /** DuckDB oracle: `rounds` unrolled Luby steps with the same per-round
@@ -2108,7 +1981,8 @@ object MaximalIndependentSet {
   *
   * Deterministic end-to-end (mex and priorities are pure functions of
   * the graph), so an unrolled SQL oracle reproduces the exact
-  * assignment. Colors used \u2264 \u0394+1, data-dependent; the runtime guard
+  * assignment. Vertices still uncolored after `maxIter` rounds throw
+  * [[NotConverged]]. Colors used \u2264 \u0394+1, data-dependent; the runtime guard
   * asserts the round count and color bound fit the oracle unroll at the
   * hash-checked SF, so an SF change fails loudly instead of as a bare
   * hash mismatch.
@@ -2239,61 +2113,16 @@ object GraphColoring {
       n = u.count()
       i += 1
     }
-    if (n > 0)
-      System.err.println(s"[graft] WARN GraphColoring: $n vertices " +
-        s"uncolored after $maxIter rounds")
+    if (n > 0) throw new NotConverged("GraphColoring", i, n)
     oracleRounds.foreach { r =>
       val maxColor = colored.agg(max(col("color"))).head().getLong(0)
-      if (n > 0 || i > r || maxColor >= OracleColorCap)
+      if (i > r || maxColor >= OracleColorCap)
         throw new IllegalStateException(
           s"coloring used $i rounds / max color $maxColor but the unrolled " +
             s"SQL oracle has $r rounds \u00d7 $OracleColorCap colors: raise the " +
             "unroll in GraphColoring.unrolledSql")
     }
     colored
-  }
-
-/** The iterated-MIS formulation (Luby 1986): color c is a maximal
-    * independent set of the residual graph, removed before color c+1.
-    * Kept as the equivalence-tested alternative — also proper, complete,
-    * and deterministic, but serial across colors (colors × O(log n)
-    * barriers vs [[apply]]'s O(log n) total), so [[apply]] is what runs
-    * at scale.
-    */
-  def iteratedMis(g: Graph, maxColors: Int = 64, lubyIter: Int = 30,
-      broadcastVertices: Boolean = true): DataFrame = {
-    val spark = g.edges.sparkSession
-    import spark.implicits._
-    var und = g.cachedUndirected.select(col("src"), col("dst"))
-      .filter(col("src") =!= col("dst")).localCheckpoint(true)
-    var state = g.cachedUndirected.select(col("src").as("id")).distinct()
-      .localCheckpoint(true)
-    var coloredParts = List.empty[DataFrame]
-    var c = 0
-    var n = state.count()
-    while (n > 0 && c < maxColors) {
-      val res = MaximalIndependentSet.lubyMis(
-        und, state, s"$c:", lubyIter, broadcastVertices)
-      if (res.undecided > 0) throw new IllegalStateException(
-        s"GraphColoring: inner Luby hit its $lubyIter-round cap at color $c")
-      coloredParts ::= res.mis.select(col("id"), lit(c.toLong).as("color"))
-      state = res.knockedOut
-      n = res.knockedOutCount
-      if (n > 0) {
-        und = und
-          .join(state.select(col("id").as("ks")),
-            col("src") === col("ks"), "left_semi")
-          .join(state.select(col("id").as("kd")),
-            col("dst") === col("kd"), "left_semi")
-          .localCheckpoint(true)
-      }
-      c += 1
-    }
-    if (n > 0)
-      System.err.println(s"[graft] WARN GraphColoring.iteratedMis: $n " +
-        s"vertices uncolored after $maxColors colors")
-    coloredParts.foldLeft(
-      Seq.empty[(Long, Long)].toDF("id", "color"))(_.union(_))
   }
 
   /** DuckDB oracle for [[apply]]: `rounds` unrolled speculative-coloring
@@ -2398,20 +2227,17 @@ object LabelPropagation {
       broadcastVertices: Boolean): Seq[DataFrame] = {
     def bc(df: DataFrame) = if (broadcastVertices) broadcast(df) else df
     val edges = g.cachedUndirected.select(col("src"), col("dst"))
-    var labels = edges.select(col("src").as("id")).distinct()
+    val labels0 = edges.select(col("src").as("id")).distinct()
       .select(col("id"), col("id").as("lbl"))
       .localCheckpoint(true)
-    val acc = scala.collection.mutable.ArrayBuffer(labels)
-    for (_ <- 1 to rounds) {
-      labels = edges.join(bc(labels), col("src") === col("id"))
+    Superstep.fixed(rounds, Vector(labels0)) { (tables, _) =>
+      Superstep.Round(edges.join(bc(tables.last), col("src") === col("id"))
         .groupBy(col("dst"), col("lbl")).agg(count(lit(1)).as("c"))
         // deterministic argmax without a window: max count, then min label
         .groupBy(col("dst").as("id"))
         .agg(expr("max_by(lbl, struct(c, -lbl))").as("lbl"))
-        .localCheckpoint(true)
-      acc += labels
+      )(labels => Superstep.Step(tables :+ labels))
     }
-    acc.toSeq
   }
 
   /** DuckDB oracle: the same synchronous rounds unrolled; the argmax is a
@@ -2523,43 +2349,26 @@ object Betweenness {
     val spark = edges.sparkSession
     import spark.implicits._
     def bc(df: DataFrame) = if (broadcastState) broadcast(df) else df
-    val levels = scala.collection.mutable.ArrayBuffer(
-      lms.map(l => (l, l, 1L)).toDF("lm", "id", "sigma")
-        .localCheckpoint(true))
+    val seed = lms.map(l => (l, l, 1L)).toDF("lm", "id", "sigma")
+      .localCheckpoint(true)
     // the visited set is the union of the per-level (lm, id) parts already
-    // checkpointed in `levels`, assembled LAZILY each round — G6's
-    // append-only per-hop pattern. The anti-join scans the same ≤ k·|V|
-    // rows either way, but nothing k·|V|-sized is ever REWRITTEN per
-    // level (the r7 review's visited.union(...).localCheckpoint nit).
-    def visited: DataFrame =
-      levels.map(_.select(col("lm"), col("id"))).reduce(_ union _)
-    var frontier = levels(0)
-    var depth = 0
-    var frontierNonEmpty = true
-    while (depth < maxIter && frontierNonEmpty) {
-      depth += 1
-      // ONE job per level (r15): the σ level's row count rides the
-      // checkpoint's materializing job as an observe() metric, replacing
-      // the separate isEmpty probe job
-      val obs = org.apache.spark.sql.Observation()
-      val next = edges
-        .join(bc(frontier.select(col("lm"), col("id").as("fid"),
+    // checkpointed, assembled LAZILY each round — G6's append-only
+    // per-hop pattern. The anti-join scans the same ≤ k·|V| rows either
+    // way, but nothing k·|V|-sized is ever REWRITTEN per level.
+    Superstep.run("Betweenness", maxIter, Vector(seed)) { (levels, _) =>
+      Superstep.Round(edges
+        .join(bc(levels.last.select(col("lm"), col("id").as("fid"),
             col("sigma").as("fsig"))),
           col("src") === col("fid"))
         .groupBy(col("lm"), col("dst").as("id"))
         .agg(sum(col("fsig")).as("sigma"))
-        .join(bc(visited), Seq("lm", "id"), "left_anti")
-        .observe(obs, count(lit(1)).as("n"))
-        .localCheckpoint(true)
-      frontierNonEmpty =
-        graft.core.Observations.metric(obs, "n").asInstanceOf[Long] > 0L
-      if (frontierNonEmpty) levels += next
-      frontier = next
-    }
-    if (depth >= maxIter)
-      System.err.println(s"[graft] WARN Betweenness: frontier still " +
-        s"non-empty after $maxIter hops — dependencies beyond the cap missing")
-    levels.toSeq
+        .join(bc(levels.map(_.select(col("lm"), col("id"))).reduce(_ union _)),
+          Seq("lm", "id"), "left_anti"),
+        count(lit(1))) { (next, n: Long) =>
+        if (n == 0L) Superstep.Step(levels, stop = true, Seq(next))
+        else Superstep.Step(levels :+ next)
+      }
+    }._1
   }
 
   /** Backward pass: δ per level, deepest first; δ(v) sums over successors

@@ -24,7 +24,8 @@ import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType
   *
   * Both paths call the same step and fold in the same order (the fold
   * sees the blocks' updates in partition order), so their states are
-  * identical round by round.
+  * identical round by round. A stop rule still pending after `maxIter`
+  * rounds throws [[NotConverged]] on the driver, on either path.
   */
 private[graph] object CsrLoop {
   type Block = (Array[Int], Array[Int], Array[Int])
@@ -35,8 +36,12 @@ private[graph] object CsrLoop {
     * what a block step reads of the state, `U` one block's update.
     */
   trait Kernel[S, M, U] extends Serializable {
+    /** The algorithm, as [[NotConverged]] names it. */
+    def name: String
     /** Whether another round is needed; checked before every round. */
     def pending(s: S): Boolean
+    /** What [[pending]] reads, as [[NotConverged]] reports it. */
+    def residual(s: S): Any
     /** What the round's block steps read (the round's broadcast). */
     def message(s: S): M
     /** One block's update. Reads `m` only, so every block of a round
@@ -47,29 +52,35 @@ private[graph] object CsrLoop {
     def fold(s: S, ups: Array[U]): Unit
   }
 
-  /** The final state, the rounds run and whether the stop rule held. */
-  final case class Result[S](state: S, rounds: Int, converged: Boolean)
+  /** The final state and the rounds run. */
+  final case class Result[S](state: S, rounds: Int)
 
-  /** Run `k` from `init` for at most `maxIter` rounds. `init` travels
-    * in the one-task path's closure, which each task attempt
-    * deserializes afresh, so a retried task restarts from `init`.
+  /** Run `k` from `init` until its stop rule holds. `init` travels in
+    * the one-task path's closure, which each task attempt deserializes
+    * afresh, so a retried task restarts from `init`. Throws
+    * [[NotConverged]] when the rule is still pending after `maxIter`
+    * rounds.
     */
   def run[S, M: ClassTag, U: ClassTag](blocks: Csr.Blocks,
       k: Kernel[S, M, U], init: S, maxIter: Int): Result[S] = {
     val csr = blocks.rdd
-    if (csr.getNumPartitions == 1)
-      csr.mapPartitions { it =>
-        val local = it.toArray
-        Iterator(loop(k, init, maxIter)(m => local.map(k.step(m, _))))
-      }.collect().head
-    else {
-      val sc = csr.sparkContext
-      loop(k, init, maxIter) { m =>
-        val bc = sc.broadcast(m)
-        try csr.map(b => k.step(bc.value, b)).collect()
-        finally bc.destroy()
+    val r =
+      if (csr.getNumPartitions == 1)
+        csr.mapPartitions { it =>
+          val local = it.toArray
+          Iterator(loop(k, init, maxIter)(m => local.map(k.step(m, _))))
+        }.collect().head
+      else {
+        val sc = csr.sparkContext
+        loop(k, init, maxIter) { m =>
+          val bc = sc.broadcast(m)
+          try csr.map(b => k.step(bc.value, b)).collect()
+          finally bc.destroy()
+        }
       }
-    }
+    if (k.pending(r.state))
+      throw new NotConverged(k.name, r.rounds, k.residual(r.state))
+    r
   }
 
   private def loop[S, M, U](k: Kernel[S, M, U], s: S, maxIter: Int)(
@@ -79,7 +90,7 @@ private[graph] object CsrLoop {
       k.fold(s, steps(k.message(s)))
       rounds += 1
     }
-    Result(s, rounds, !k.pending(s))
+    Result(s, rounds)
   }
 
   /** The loop's output as `(idCol, valueCol)` rows, `valueCol` a long or

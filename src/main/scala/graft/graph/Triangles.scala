@@ -174,8 +174,9 @@ object Triangles {
     * graph's. Support-passing pairs ARE the next edge set (every pair in
     * the list is an edge; edges in no triangle have support 0 < k−2 and
     * drop in round 1). Convergence = edge count unchanged, a free scalar
-    * on the just-checkpointed round. All joins shuffle on the canonical
-    * (u, v) pair key — no broadcast of anything corpus-sized.
+    * on the just-checkpointed round; a peel still dropping edges after
+    * `maxIter` rounds throws [[NotConverged]]. All joins shuffle on the
+    * canonical (u, v) pair key — no broadcast of anything corpus-sized.
     *
     * Returns (u, v, support) of the truss with each edge's within-truss
     * triangle count — at the fixpoint one extra support pass over the
@@ -231,6 +232,7 @@ object Triangles {
       .localCheckpoint(true)
     var converged = false
     var liveN = -1L
+    var nDropped = -1L
     var i = 0
     while (!converged && i < maxIter) {
       // lazy: a map-only filter over the in-memory sup checkpoint — its
@@ -238,7 +240,7 @@ object Triangles {
       // materialization per round (the count below is the only action)
       val dropped = sup.filter(col("support") < k - 2)
         .select(col("u"), col("v"))
-      val nDropped = dropped.count()
+      nDropped = dropped.count()
       if (nDropped == 0) converged = true
       else if (nDropped <= wedgeThreshold && {
           // the live set only shrinks — one count decides the gate
@@ -372,14 +374,12 @@ object Triangles {
       }
       i += 1
     }
-    if (!converged)
-      System.err.println(s"[graft] WARN KTruss: fixpoint not reached after " +
-        s"$maxIter rounds — result may contain sub-$k edges")
+    if (!converged) throw new NotConverged("KTruss", i, nDropped)
     // an SF change that outgrows the unrolled oracle must fail loudly, not
     // as a bare hash mismatch: the Spark peel is exact at any depth, the
     // truncated oracle is not
     oracleRounds.foreach { r =>
-      if (!converged || i > r) throw new IllegalStateException(
+      if (i > r) throw new IllegalStateException(
         s"k-truss peel converged in $i rounds but the unrolled SQL oracle " +
           s"only has $r: raise `rounds` in Triangles.kTrussSql for this SF")
     }

@@ -100,14 +100,15 @@ object GraphReferences {
     * equivalence reference for `PageRank.converged`'s paths. Every round
     * joins the FULL edge set and rewrites the FULL rank state, even when
     * almost no rank still moves materially. Stops once Σ|Δpr| ≤ tol,
-    * checked every `PageRank.DeltaEvery` rounds (deltas shrink
-    * monotonically, so that stops at most DeltaEvery − 1 rounds late,
-    * never early), or after maxIter rounds. Returns (id, pr) rounded to
+    * checked every `deltaEvery` rounds (deltas shrink monotonically, so
+    * that stops at most deltaEvery − 1 rounds late, never early), or
+    * after maxIter rounds. Returns (id, pr) rounded to
     * 8 dp, like the library paths.
     */
   def densePagerank(g: Graph, tol: Double = 1e-8, maxIter: Int = 100,
       broadcastVertices: Boolean = true): DataFrame = {
     def bc(df: DataFrame) = if (broadcastVertices) broadcast(df) else df
+    val deltaEvery = 5
     val d = PageRank.Damping
     val edges = g.cachedUndirected
     val degrees = edges.groupBy(col("src").as("id"))
@@ -126,7 +127,7 @@ object GraphReferences {
           (lit((1.0 - d) / nv) + lit(d) * coalesce(col("msg"), lit(0.0)))
             .as("pr"))
         .localCheckpoint(true)
-      if ((i + 1) % PageRank.DeltaEvery == 0 || i + 1 == maxIter)
+      if ((i + 1) % deltaEvery == 0 || i + 1 == maxIter)
         delta = next.agg(sum(abs(col("pr") - col("pr_old")))).head()
           .getDouble(0)
       state = next.drop("pr_old")

@@ -113,19 +113,6 @@ class GraphSpec extends AnyFunSuite {
       val again = GraphColoring(g)
       assert(colored.exceptAll(again).count() == 0 &&
         again.exceptAll(colored).count() == 0)
-      // the iterated-MIS formulation is also proper and complete (it
-      // yields a DIFFERENT proper assignment — serial across colors, kept
-      // as the equivalence-tested alternative shape)
-      val alt = GraphColoring.iteratedMis(g).localCheckpoint(true)
-      assert(alt.count() == verts.count())
-      assert(alt.select("id").distinct().count() == verts.count())
-      val monoAlt = e
-        .join(alt.select(col("id").as("src"), col("color").as("cs")),
-          Seq("src"))
-        .join(alt.select(col("id").as("dst"), col("color").as("cd")),
-          Seq("dst"))
-        .filter(col("cs") === col("cd"))
-      assert(monoAlt.count() == 0, "monochrome edge in iterated-MIS coloring")
     }
   }
 
@@ -165,10 +152,9 @@ class GraphSpec extends AnyFunSuite {
             .getOrElse(fail(s"$what: csrBfs declined")),
           ShortestPaths.joinDistances(g, src),
           s"$what: CSR BFS differs from join BFS")
-        val (ck, cr, cc) = Coreness.csrCoreness(g, 100)
+        val (ck, cr) = Coreness.csrCoreness(g, 100)
           .getOrElse(fail(s"$what: csrCoreness declined"))
-        val (jk, jr, jc) = Coreness.joinCoreness(g)
-        assert(cc && jc)
+        val (jk, jr) = Coreness.joinCoreness(g)
         assert(cr == jr, s"$what: round count differs: csr $cr vs join $jr")
         same(ck, jk, s"$what: CSR coreness differs from join coreness")
         val pr = PageRank.convergedCsr(g)
@@ -227,8 +213,8 @@ class GraphSpec extends AnyFunSuite {
       same(ShortestPaths.csrBfs(one, src, 64).get,
         ShortestPaths.csrBfs(many, src, 64).get,
         s"$shape: BFS distances differ")
-      val (k1, r1, _) = Coreness.csrCoreness(one, 100).get
-      val (km, rm, _) = Coreness.csrCoreness(many, 100).get
+      val (k1, r1) = Coreness.csrCoreness(one, 100).get
+      val (km, rm) = Coreness.csrCoreness(many, 100).get
       assert(r1 == rm, s"$shape: coreness rounds differ: $r1 vs $rm")
       same(k1, km, s"$shape: coreness labels differ")
       same(PageRank.convergedCsr(one).get, PageRank.convergedCsr(many).get,
@@ -254,7 +240,7 @@ class GraphSpec extends AnyFunSuite {
       "bfs" -> jobsOf(ShortestPaths.csrBfs(g, src, 64).get.count()),
       "pagerank" -> jobsOf(PageRank.convergedCsr(g).get.count()),
       "pagerank/3" ->
-        jobsOf(PageRank.convergedCsr(g, maxIter = 3).get.count()),
+        jobsOf(intercept[NotConverged](PageRank.convergedCsr(g, maxIter = 3))),
       "coreness" -> jobsOf(Coreness.csrCoreness(g, 100).get._1.count()),
       "coreness/1" -> jobsOf(intercept[IllegalStateException](
         Coreness.csrCoreness(g, 1))))
@@ -262,8 +248,8 @@ class GraphSpec extends AnyFunSuite {
       assert(n <= budget, s"$call ran $n jobs, budget $budget: $counts")
     }
     val m = counts.toMap
-    assert(m("pagerank") == m("pagerank/3"),
-      s"pagerank's job count depends on its round count: $counts")
+    assert(m("pagerank/3") == 1 && m("coreness/1") == 1,
+      s"a capped csr call ran more than its one loop job: $counts")
     Csr.release(g)
   }
 
@@ -383,13 +369,8 @@ class GraphSpec extends AnyFunSuite {
       assert(cc.getMessage.contains("fixpoint not reached"), cc.getMessage)
       val core = intercept[IllegalStateException](Coreness.csrCoreness(g, 1))
       assert(core.getMessage.contains("did not converge"), core.getMessage)
-      val near = ShortestPaths.csrBfs(g, 1L, 2).get.collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(near == Map(1L -> 0L, 2L -> 1L, 3L -> 2L),
-        s"$parts blocks: csrBfs(maxIter = 2) returned $near")
-      val pr = PageRank.convergedCsr(g, maxIter = 3).get
-      assert(pr.count() == 40L && pr.select("id").distinct().count() == 40L,
-        s"$parts blocks: unconverged PageRank is not one row per vertex")
+      intercept[NotConverged](ShortestPaths.csrBfs(g, 1L, 2))
+      intercept[NotConverged](PageRank.convergedCsr(g, maxIter = 3))
     }
   }
 
@@ -1342,9 +1323,8 @@ class GraphSpec extends AnyFunSuite {
     val planted = mkGraph((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L), (4L, 5L))
     val rmat = RMat.graph(spark, RMat.Params(scale = 8))
     Seq(planted, rmat, Graph.fromTpch(spark, TestSpark.sfTiny)).foreach { g =>
-      val (a, ra, ca) = Coreness.csrCoreness(g, 100).get
-      val (b, rb, cb) = Coreness.joinCoreness(g)
-      assert(ca && cb)
+      val (a, ra) = Coreness.csrCoreness(g, 100).get
+      val (b, rb) = Coreness.joinCoreness(g)
       assert(ra == rb, s"round count differs: csr $ra vs join $rb")
       assert(a.exceptAll(b).count() == 0 && b.exceptAll(a).count() == 0,
         "CSR coreness disagrees with the window-sort h-iteration")
@@ -1353,9 +1333,9 @@ class GraphSpec extends AnyFunSuite {
     // join path
     val off = (1L << 25) + 11L
     val g3 = mkGraph((off, off + 1L), (off + 1L, off + 2L), (off, off + 2L))
-    val (c3, cr3, _) = Coreness.csrCoreness(g3, 100)
+    val (c3, cr3) = Coreness.csrCoreness(g3, 100)
       .getOrElse(fail("CSR coreness declined sparse ids"))
-    val (j3, jr3, _) = Coreness.joinCoreness(g3)
+    val (j3, jr3) = Coreness.joinCoreness(g3)
     assert(cr3 == jr3, s"round count differs: csr $cr3 vs join $jr3")
     assert(c3.exceptAll(j3).count() == 0 && j3.exceptAll(c3).count() == 0)
     val out3 = Coreness(g3).collect()
@@ -1478,5 +1458,84 @@ class GraphSpec extends AnyFunSuite {
     assert(ex.getMessage.contains("did not converge"), ex.getMessage)
     // and the converged run still succeeds afterwards (no poisoned memo)
     assert(Coreness(gt).count() > 0)
+  }
+
+  test("a path of length L converges in L + 1 rounds: the stop rule decides") {
+    // the round that finds no new vertex is the one that proves the
+    // fixpoint, so L + 1 rounds return the exact levels and L rounds throw
+    val L = 6
+    val g = mkGraph((1L to L.toLong).map(i => (i, i + 1)): _*)
+    val exact = (1L to L + 1L).map(v => v -> (v - 1L)).toMap
+    def levels(df: DataFrame): Map[Long, Long] = df.select("id", "dist")
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val loops = Seq[(String, Int => Map[Long, Long])](
+      "join bfs" -> (n => levels(ShortestPaths.joinDistances(g, 1L, n))),
+      "csr bfs" -> (n => levels(ShortestPaths.csrBfs(g, 1L, n).get)),
+      "unit-weight wsssp" -> (n => levels(WeightedShortestPaths(g, 1L, n))),
+      "landmark" -> (n => levels(LandmarkDistances(g, k = 1, maxIter = n))),
+      "betweenness forward" -> (n =>
+        Betweenness.forward(g, Seq(1L), 1, n).zipWithIndex.flatMap {
+          case (level, d) => level.collect().map(_.getAs[Long]("id") -> d.toLong)
+        }.toMap))
+    loops.foreach { case (name, run) =>
+      assert(run(L + 1) == exact, s"$name: maxIter = L + 1")
+      val ex = intercept[NotConverged](run(L))
+      assert(ex.rounds == L, s"$name: ${ex.getMessage}")
+    }
+  }
+
+  test("non-convergence: every capped loop throws NotConverged, and a " +
+      "memoized graph's default call still returns the converged result") {
+    val gt = Graph.fromTpch(spark, TestSpark.sfTiny)
+    assert(gt.memoizeAnalytics)
+    val adhoc = Graph(gt.edges)
+    val src = gt.cachedUndirected.agg(min(col("src"))).head().getLong(0)
+    val lms = gt.cachedUndirected.select("src").distinct().orderBy("src")
+      .limit(2).collect().map(_.getLong(0)).toSeq
+    def same(a: DataFrame, b: DataFrame, msg: String) =
+      assert(a.exceptAll(b).count() == 0 && b.exceptAll(a).count() == 0, msg)
+    // memoized analytics: (name, call with a cap on graph g)
+    val memoized = Seq[(String, (Graph, Option[Int]) => DataFrame)](
+      "sssp" -> ((g, n) => n.fold(ShortestPaths(g, src))(ShortestPaths(g, src, _))),
+      "wsssp" -> ((g, n) =>
+        n.fold(WeightedShortestPaths(g, src))(WeightedShortestPaths(g, src, _))),
+      "landmark" -> ((g, n) => n.fold(LandmarkDistances(g, k = 2))(
+        m => LandmarkDistances(g, k = 2, maxIter = m))),
+      "betweenness" -> ((g, n) => Betweenness.perLmDeltas(g, lms, 2,
+        n.getOrElse(64))),
+      "cc (csr)" -> ((g, n) =>
+        n.fold(ConnectedComponents(g))(ConnectedComponents(g, _))),
+      "k-core" -> ((g, n) => KCore(g, 16, n.getOrElse(100))),
+      "coreness" -> ((g, n) => n.fold(Coreness(g))(Coreness(g, _))))
+    memoized.foreach { case (name, call) =>
+      // twice: the throw stored nothing under the capped call's key
+      Seq(1, 2).foreach { _ =>
+        val ex = intercept[NotConverged](call(gt, Some(1)).collect())
+        assert(ex.rounds == 1, s"$name: ${ex.getMessage}")
+      }
+      same(call(gt, None), call(adhoc, None),
+        s"$name: the memoized default call is not the converged result")
+    }
+    val ktrussEdges = Seq((1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L),
+      (3L, 4L), (1L, 5L), (2L, 5L)).toDF("u", "v")
+    val capped = Seq[(String, () => Any)](
+      "sssp (join)" -> (() => ShortestPaths.joinDistances(gt, src, 1)),
+      "cc (join)" -> (() => ConnectedComponents.joinLabels(gt, 1)),
+      "cc (alternating)" -> (() => ConnectedComponents.alternating(gt, 1)),
+      "pagerank (csr)" -> (() => PageRank.converged(gt, maxIter = 1)),
+      "pagerank (join)" -> (() => PageRank.convergedCheby(gt, maxIter = 1)),
+      "coreness (join)" -> (() => Coreness.joinCoreness(gt, 1)),
+      "mis" -> (() => MaximalIndependentSet(gt, maxIter = 1)),
+      "coloring" -> (() => GraphColoring(gt, maxIter = 1)),
+      "k-truss" -> (() => Triangles.kTrussFrom(
+        Triangles.canonicalTriangleList(ktrussEdges), k = 4, maxIter = 1,
+        wedgeThreshold = 0L)))
+    capped.foreach { case (name, call) =>
+      val ex = intercept[NotConverged](call())
+      assert(ex.getMessage.contains("did not converge"), s"$name: $ex")
+    }
+    // the k-truss fixture does converge with a second round
+    assert(Triangles.kTrussFrom(Triangles.canonicalTriangleList(ktrussEdges),
+      k = 4, maxIter = 2, wedgeThreshold = 0L).count() == 6L)
   }
 }
