@@ -1493,7 +1493,8 @@ object KCore {
         edges.groupBy(col("src").as("id")).agg(count(lit(1)).as("degree")),
         sum(when(col("degree") < k, 1L).otherwise(0L))) {
           (degrees, below: Long) =>
-        if (below == 0L) Superstep.Step((edges, Some(degrees)), stop = true)
+        if (below == 0L)
+          Superstep.Step((edges, Some(degrees)), stop = true, Seq(edges))
         else {
           val kept = bc(degrees.filter(col("degree") >= k).select(col("id")))
           // symmetric input + symmetric filter ⇒ the edge set stays
